@@ -7,9 +7,15 @@ Prints ONE JSON line:
    "queries": {"q01...": sec, ...}, "sf": 0.1,
    "ingest_sec": <lake layout cost>, "total_with_ingest_sec": ...}
 
-Each query is forced end-to-end with the noop sink (full computation, no
-driver collect cost).  A tiny warmup query absorbs JVM/codegen JIT so
-per-query numbers reflect steady-state throughput.
+The suite is every registry query in registry order, then the three
+bench-only scale variants (`tools.harness.EXTRA_BENCH`).  Each entry runs
+through `tools.harness.run_query`, forced end-to-end with the noop sink
+(full computation, no driver collect cost): once untimed, then
+`tools.harness.SAMPLES` (3) timed samples, recorded as their minimum with
+that sample's build/exec split.  A tiny warmup query absorbs JVM/codegen
+JIT so per-query numbers reflect steady-state throughput.  `cpus` is the
+session's `defaultParallelism`; the file record adds `nproc` and the load
+average taken before the timed pass.
 
 Lake ingest phase (timed separately, reported in the JSON): the driver's
 source tables are single-row-group parquet files, and a parquet row
@@ -32,427 +38,12 @@ import json
 import os
 import re
 import sys
-import time
 
-from occupation_wage_etl_spark.operators._cache import (
-    release_cached,
-    release_checkpoints,
-)
 from occupation_wage_etl_spark.queries import SPARK_QUERIES
 from occupation_wage_etl_spark.session import get_spark
+from tools.harness import EXTRA_BENCH, SAMPLES, force, ingest_lake, run_query
 
-# Headline set: reference-parity lifecycle (scan/clean/join/agg/topk/window)
-# + the training-data extension operators at their scale path.
-BENCH_QUERIES = [
-    "q01_pricing_summary",
-    "q02_top_parts_by_avg_price",
-    "q03_prefix_join",
-    "q04_avg_by_prefix",
-    "q05_cleaning_grammar",
-    "q06_month_parse",
-    "q07_filter_projection",
-    "q08_top3_orders_per_priority",
-    "q09_customers_without_orders",
-    "q10_sessionize",
-    "q11_windowed_counts",
-    "q12_dedup_stats",
-    "q13_minhash_lsh_pairs",
-    "q14_ngram_jaccard_pairs",
-    "q15_knn_cosine",
-    "q16_token_stats",
-    "q17_quality_scores",
-    "q18_lang_id",
-    "q19_fingerprints",
-    "q20_rolling_overlap",
-    "q21_embedding_near_dup",
-    "q22_simhash_pairs",
-    "q23_lsh_knn",
-    "q24_ivf_knn",
-    "q25_multimodal_sniff",
-    "q26_multimodal_features",
-    "q27_asof_join",
-    "q28_time_rollup",
-    "q29_json_props",
-    "q30_sql_view_cte",
-    "q31_set_ops",
-    "q32_running_totals",
-    "q33_price_distribution",
-    "q34_curate_corpus",
-    "q35_train_split",
-    "q36_pii_redaction",
-    "q37_chunk_documents",
-    "q38_vocab",
-    "q39_dup_clusters",
-    "q40_pack_sequences",
-    "q41_embedding_centroids",
-    "q42_tfidf_top_tokens",
-    "q43_region_rollup",
-    "q44_price_band_join",
-    "q45_returns_pivot",
-    "q46_measure_melt",
-    "q47_profile_lineitem",
-    "q48_status_cube",
-    "q49_stat_aggregates",
-    "q50_decode_image",
-    "q51_audio_stats",
-    "q52_decontaminate",
-    "q53_repetition_quality",
-    "q54_domain_caps",
-    "q55_bm25_topk",
-    "q56_bigram_familiarity",
-    "q57_pq_adc_knn",
-    "q58_snapshot_diff",
-    "q59_encode_corpus",
-    "q60_sample_to_budget",
-    "q61_trailing_window",
-    "q62_key_skew",
-    "q63_quality_classifier",
-    "q64_training_batches",
-    "q65_snapshot_drift",
-    "q66_contrastive_pairs",
-    "q67_funnel",
-    "q68_cohort_retention",
-    "q69_substring_dup_spans",
-    "q70_semantic_dedup",
-    "q71_incremental_agg",
-    "q72_fuzzy_join",
-    "q73_interval_overlap",
-    "q74_equi_depth_hist",
-    "q75_resample_ffill",
-    "q76_phrase_search",
-    "q77_shipping_priority",
-    "q78_local_supplier_volume",
-    "q79_returned_items",
-    "q80_triangles",
-    "q81_zscore_normalize",
-    "q82_scd2_history",
-    "q83_activity_streaks",
-    "q84_event_transitions",
-    "q85_weighted_sample",
-    "q86_big_orders",
-    "q87_sole_return_supplier",
-    "q88_winsorize",
-    "q89_rolling_anomalies",
-    "q90_char_entropy",
-    "q91_bucketize",
-    "q92_pagerank",
-    "q93_cooccurrence",
-    "q94_mad_outliers",
-    "q95_benford",
-    "q96_rrf_hybrid",
-    "q97_constraints",
-    "q98_user_mode",
-    "q99_skyline",
-    "q100_mutual_match",
-    "q101_incremental_dedup",
-    "q102_attribution",
-    "q103_lang_bigrams",
-    "q104_ewma",
-    "q105_score_calibration",
-    "q106_dup_ngram_coverage",
-    "q107_vocab_novelty",
-    "q108_trend_ols",
-    "q109_cluster_reps",
-    "q110_twa",
-    "q111_session_paths",
-    "q112_rfm",
-    "q113_cusum",
-    "q114_weighted_median",
-    "q115_leak_safe_split",
-    "q116_late_shipments",
-    "q117_promo_revenue",
-    "q118_small_quantity_revenue",
-    "q119_disjunctive_revenue",
-    "q120_rich_inactive_customers",
-    "q121_denoising_pairs",
-    "q122_temperature_mix",
-    "q123_containment_pairs",
-    "q124_dedup_eval",
-    "q125_windowed_funnel",
-    "q126_out_of_order",
-    "q127_int8_quantize",
-    "q128_compaction_plan",
-    "q129_exists_late_orders",
-    "q130_rollup",
-    "q131_ab_test",
-    "q132_gini",
-    "q133_ri_audit",
-    "q134_mutual_info",
-    "q135_resample_lerp",
-    "q136_heavy_hitters",
-    "q137_event_dedup",
-    "q138_user_totals",
-    "q139_k_core",
-    "q140_stratified_exact",
-    "q141_record_linkage",
-    "q142_survival",
-    "q143_winnowing_pairs",
-    "q144_bpe_merges",
-    "q145_roc_auc",
-    "q146_calibration",
-    "q147_js_divergence",
-    "q148_psi",
-    "q149_mmr_rerank",
-    "q150_ndcg",
-    "q151_entity_resolution",
-    "q152_ngram_prefix_pairs",
-    "q153_average_precision",
-    "q154_confusion",
-    "q155_cohens_kappa",
-    "q156_gini_tokens",
-    "q157_chao1",
-    "q158_zipf_fit",
-    "q159_hll_distinct",
-    "q160_cms_heavy",
-    "q161_cross_entropy",
-    "q162_repetition",
-    "q163_bpe_encode",
-    "q164_brier",
-    "q165_ece",
-    "q166_spearman",
-    "q167_ks_test",
-    "q168_chi_square",
-    "q169_welch_t",
-    "q170_kruskal_wallis",
-    "q171_acf",
-    "q172_adamic_adar",
-    "q173_label_prop",
-    "q174_mrr_recall",
-    "q175_fleiss_kappa",
-    "q176_mcnemar",
-    "q177_epoch_batches",
-    "q178_curriculum",
-    "q179_cov_matrix",
-    "q180_multi_ols",
-    "q181_target_encode",
-    "q182_kfold_encode",
-    "q183_volume_shipping",
-    "q184_market_share",
-    "q185_theta_overlap",
-    "q186_seasonal",
-    "q187_bootstrap_ci",
-    "q188_train_logreg",
-    "q189_best_threshold",
-    "q190_bfs_hops",
-    "q191_golden_records",
-    "q192_assoc_rules",
-    "q193_item_cf",
-    "q194_clustering_coeff",
-    "q195_stump",
-    "q196_min_cost_supplier",
-    "q197_product_profit",
-    "q198_important_parts",
-    "q199_order_count_distribution",
-    "q200_top_supplier",
-    "q201_supplier_part_counts",
-    "q202_dominant_suppliers",
-    "q203_sorted_neighborhood",
-    "q204_personalized_pagerank",
-    "q205_seasonal_even",
-    "q206_hits",
-    "q207_assortativity",
-    "q208_record_days",
-    "q209_pmi",
-    "q210_mixing_weights",
-    "q211_pca_top_component",
-    "q212_isotonic",
-    "q213_woe_iv",
-    "q214_kmeans",
-    "q215_value_percentiles_fg",
-    "q216_quantile_sketch",
-    "q217_jpeg_decode",
-    "q218_grouped_hll",
-    "q219_theil_sen",
-    "q220_readability",
-    "q221_conformal",
-    "q222_bh_fdr",
-    "q223_kneser_ney",
-    "q224_jaro_winkler",
-    "q225_sequential_pairs",
-    "q226_bcubed",
-    "q227_stratified_ate",
-    "q228_wasserstein",
-    "q229_logo_ols",
-    "q230_forecast_backtest",
-    "q231_cross_correlation",
-    "q232_mp4_demux",
-    "q233_mp4_keyframes",
-    "q234_jpeg_rgb",
-    "q235_near_dup_recall",
-    "q236_lsh_knn_recall",
-    "q237_snb_recall",
-    "q238_html_parse",
-    "q239_token_f1",
-    "q240_jpeg_progressive",
-    "q241_jpeg_progressive_rgb",
-    "q242_planted_near_dup_recall",
-    "q243_planted_near_dup_recall_mp",
-    "q244_planted_snb_recall",
-    "q245_planted_minhash_recall",
-    "q246_mp4_sps_params",
-    "q247_audio_frame_stats",
-    "q248_multipass_snb",
-    "q249_flac_streaminfo",
-    "q250_id3_tags",
-    "q251_h264_idr_decode",
-    "q252_h264_pred_chain",
-    "q253_h264_i4x4",
-    "q254_mp4_vui",
-    "q255_h264_multislice",
-    "q256_keyframe_dup_groups",
-    "q257_pdf_text",
-    "q258_pdf_dup_pages",
-    "q259_docx_text",
-    "q260_warc_records",
-    "q261_wet_text",
-    "q262_wet_curation",
-    "q263_html_main_text",
-    "q264_html_boilerplate_collapse",
-    "q265_charset_sniff",
-    "q266_pdf_cid_text",
-    "q267_docx_parts",
-    "q268_web_ingest_chain",
-    "q269_url_canonicalize",
-    "q270_repeated_spans",
-    "q271_robots_rules",
-    "q272_robots_allowed",
-    "q273_span_cut",
-    "q274_sentence_chunks",
-    "q275_link_graph_edges",
-    "q276_jsonld_metadata",
-    "q277_sitemap_entries",
-    "q278_image_dhash",
-    "q279_image_near_dup",
-    "q280_nfc_dedup",
-    "q281_canonical_urls",
-    "q282_charset_declared",
-    "q283_links_resolved",
-    "q284_canonical_resolved",
-    "q285_sitemap_gz_chase",
-    "q286_robots_wildcards",
-    "q287_span_dedup_fixed_point",
-    "q288_revisit_resolve",
-    "q289_redirect_chains",
-    "q290_digest_check",
-    "q291_domain_rollup",
-    "q292_page_meta",
-    "q293_anchor_rollup",
-    "q294_url_mixed_encoding_collapse",
-    "q295_cdx_lookup_fetch",
-    "q296_crawl_budget",
-    "q297_sitemap_extensions",
-    "q298_pdf_font_encodings",
-    "q299_langid_audit",
-    "q300_cdx_build_roundtrip",
-    "q301_cdx_latest_capture",
-    "q302_feed_entries",
-    "q303_pdf_encrypted",
-    "q304_discovery_funnel",
-    "q305_recrawl_schedule",
-    "q306_cdx_change_rate",
-    "q307_adaptive_recrawl",
-    "q308_wat_catalog",
-    "q309_nb_quality_classifier",
-    "q310_politeness_gate",
-    "q311_nb_train_apply",
-    "q312_crawl_cycle",
-]
-
-
-def force(df) -> None:
-    df.write.mode("overwrite").format("noop").save()
-
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-# Tables whose queries explode rows (shingles, n-grams, chunk windows,
-# vector elements): file count = core count regardless of byte size, so
-# the fan-out work distributes.  Everything else splits by row count.
-EXPLODE_HEAVY = {"documents", "embeddings"}
-
-
-def ingest_lake(spark, sf_dir: str, cpus: int) -> tuple[str, float]:
-    """Rewrite the raw single-row-group drop into the engine's lake
-    layout (see module docstring).  Returns (lake_dir, seconds)."""
-    import pyarrow.parquet as pq
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    dst = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                       ".scratch", f"bench_lake_{tag}")
-    t0 = time.perf_counter()
-
-    def _one(t: str) -> None:
-        src = f"{sf_dir}/{t}.parquet"
-        rows = pq.ParquetFile(src).metadata.num_rows if os.path.isfile(src) \
-            else spark.read.parquet(src).count()
-        n = cpus if (rows >= 50_000 or t in EXPLODE_HEAVY) else 1
-        (spark.read.parquet(src).repartition(n)
-         .write.mode("overwrite").parquet(f"{dst}/{t}.parquet"))
-
-    # one Spark job per table, submitted concurrently: each source read
-    # is a single task (one row group), so serial ingest would idle 31
-    # cores; the scheduler interleaves the jobs instead.
-    with ThreadPoolExecutor(max_workers=len(TABLES)) as ex:
-        list(ex.map(_one, TABLES))
-    return dst, round(time.perf_counter() - t0, 3)
-
-
-def _x33_approx_percentiles(spark, sf_dir):
-    """q33's 100 TB path: one-pass percentile_approx (GK sketch, bounded
-    memory per group) instead of the exact distributed histogram."""
-    from pyspark.sql import functions as F
-
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    return o.groupBy("o_orderpriority").agg(
-        F.percentile_approx("o_totalprice", [0.5, 0.9, 0.99], 10000).alias("q"),
-        F.min("o_totalprice").alias("min_price"),
-        F.max("o_totalprice").alias("max_price"),
-        F.approx_count_distinct("o_custkey").alias("n_customers"),
-    )
-
-
-def _x47_profile_hll(spark, sf_dir):
-    """q47's 100 TB path: HyperLogLog++ distinct counts fold into one
-    Expand-free hash aggregate (single scan, constant memory)."""
-    from occupation_wage_etl_spark.operators import profile
-    from occupation_wage_etl_spark.queries import PROFILE_COLUMNS
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return profile.profile_numeric(li, PROFILE_COLUMNS, exact=False)
-
-
-# Approximate/scale-path variants of registry queries: benched (so the
-# 100 TB path has numbers) but not oracle-gated — the sketches
-# (GK quantile, HLL++) are engine-specific by design; their exact
-# siblings q33/q47 carry the correctness proof.
-def _x100_mutual_dense(spark, sf_dir):
-    """q100's dense verification tier: the Arrow-matmul all-pairs scorer
-    (mutual_top1_match) — exact, but collects b to the driver so it is
-    capped to verification-scale inputs.  Benched so the recall sibling
-    of the registry's bucketed LSH path keeps numbers."""
-    from pyspark.sql import functions as F
-
-    from occupation_wage_etl_spark.operators import similarity
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return similarity.mutual_top1_match(
-        emb.filter(F.col("label") <= 4), emb.filter(F.col("label") >= 5)
-    )
-
-
-# x14_ngram_prefix was promoted to the oracle-gated registry entry
-# q152_ngram_prefix_pairs (the prefix tier is lossless, so the plain
-# Jaccard SQL at t=0.8 oracles it exactly); x33/x47 stay bench-only —
-# GK-quantile and HLL++ sketches are engine-specific by design.
-EXTRA_BENCH = {
-    "x33_approx_percentiles": _x33_approx_percentiles,
-    "x47_profile_hll": _x47_profile_hll,
-    "x100_mutual_dense": _x100_mutual_dense,
-}
+TIMING = f"min_of_{SAMPLES}"
 
 
 def main() -> None:
@@ -461,7 +52,7 @@ def main() -> None:
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = spark.sparkContext.defaultParallelism
     ingest_sec = 0.0
     if os.environ.get("SPARK_GRAFT_LAKE", "1") != "0":
         sf_dir, ingest_sec = ingest_lake(spark, sf_dir, cpus)
@@ -502,10 +93,9 @@ def main() -> None:
     sample = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(50)
     force(dedup.minhash_lsh_pairs(sample, jaccard_threshold=0.99))
     force(dedup.simhash_pairs(sample, max_hamming=0))
-    spark.catalog.clearCache()  # drop the warmup persists
+    # (the warmup's persists are dropped by the first run_query below)
 
-    runs = [(n, SPARK_QUERIES[n]) for n in BENCH_QUERIES]
-    runs += sorted(EXTRA_BENCH.items())
+    runs = list(SPARK_QUERIES) + sorted(EXTRA_BENCH)
 
     # SPARK_GRAFT_ONLY: comma-separated query names, or @file with one
     # name per line — the controlled-subset mode used to adjudicate
@@ -521,35 +111,19 @@ def main() -> None:
                 only = {ln.strip() for ln in f if ln.strip()}
         else:
             only = {n.strip() for n in only_spec.split(",") if n.strip()}
-        missing = sorted(only - {n for n, _ in runs})
+        missing = sorted(only - set(runs))
         if missing:
             print(f"  SPARK_GRAFT_ONLY unknown: {missing}", file=sys.stderr)
-        runs = [(n, fn) for n, fn in runs if n in only]
+        runs = [n for n in runs if n in only]
 
     # pass 1 (untimed): each query once, absorbing its query-specific
     # codegen compilation and Python-worker spin-up.  pass 2 (timed):
     # steady-state execution — the number that scales to a long-running
     # cluster job, and the one BENCH records.  The host is shared/noisy,
     # so steady-state is also far less variance-prone than cold numbers.
-    for name, fn in runs:
-        force(fn(spark, sf_dir))
-        release_cached()  # drop tracked operator-internal persists
-        release_checkpoints(spark)  # drop iterative ops' localCheckpoints
-        spark.catalog.clearCache()  # operator-internal persists must not
-        # carry into the timed pass — each timed query recomputes fully
+    for name in runs:
+        run_query(spark, name, sf_dir)
 
-    # per-query time = MIN of two timed executions: on a shared host a
-    # single sample carries scheduler/CPU-contention noise of ±15%; the
-    # minimum is the reproducible steady-state cost (standard
-    # microbenchmark practice), recorded as "timing": "min_of_2".
-    # Every query at ≥1 s in the previous round's committed record gets
-    # a third run (round 8, extending round 7's top-10 rule): the ≥2 s
-    # entries dominate the suite wall, and the 1–2 s band is where the
-    # measured same-code envelope still showed p90 ×1.23 / max ×1.34 —
-    # exactly where boundary cases like q92_pagerank could not be told
-    # from jitter.  min-of-3 halves that tail for ~90 s of extra bench
-    # time.  The measured envelope lives in BENCH_SCALE.md ("Bench
-    # noise envelope").
     prev: dict[str, float] = {}
     repo_dir = os.path.dirname(os.path.abspath(__file__))
     out_path = os.path.join(
@@ -586,54 +160,25 @@ def main() -> None:
                 last_round = json.load(f).get("queries", {})
     except Exception:
         pass
-    heavy = set(sorted(prev, key=lambda n: -prev[n])[:10])
-    heavy |= {n for n, t in prev.items() if t >= 1.0}
+    # per-query time = MIN of SAMPLES timed executions, the same count
+    # for every query: on a shared host a single sample carries
+    # scheduler/CPU-contention noise of ±15%; the minimum is the
+    # reproducible steady-state cost (standard microbenchmark practice).
+    # The measured envelope lives in BENCH_SCALE.md ("Bench noise
+    # envelope").  build_s/exec_s are the split of that minimum sample.
+    loadavg = [round(x, 2) for x in os.getloadavg()]
     timings: dict[str, float] = {}
+    build: dict[str, float] = {}
+    execute: dict[str, float] = {}
     spreads: dict[str, float] = {}  # max/min across this run's samples
-    for name, fn in runs:
-        samples = []
-        for _ in range(3 if name in heavy else 2):
-            t0 = time.perf_counter()
-            force(fn(spark, sf_dir))
-            samples.append(time.perf_counter() - t0)
-            release_cached()
-            release_checkpoints(spark)
-            spark.catalog.clearCache()
-        timings[name] = round(min(samples), 3)
-        spreads[name] = round(max(samples) / min(samples), 3)
+    for name in runs:
+        samples = [run_query(spark, name, sf_dir)[1:] for _ in range(SAMPLES)]
+        walls = [sum(s) for s in samples]
+        build_s, exec_s = min(samples, key=sum)
+        timings[name] = round(min(walls), 3)
+        build[name], execute[name] = round(build_s, 3), round(exec_s, 3)
+        spreads[name] = round(max(walls) / min(walls), 3)
         print(f"  {name}: {timings[name]:.3f}s", file=sys.stderr)
-
-    # Attribution stabilizer: a query whose min-of-2 moved >1.5x vs the
-    # PREVIOUS round's committed bench_out.json gets two extra timed
-    # runs (min-of-4 total).  Suite-position jitter — GC pauses, JIT
-    # recompilation, OS page-cache state — produces 2x+ swings on
-    # untouched plans; the min over more runs converges to steady
-    # state, while a genuine plan regression survives re-timing.
-    # Sub-150ms entries are skipped (ratio of noise over noise).
-    by_name = dict(runs)
-    retimed = sorted(
-        n
-        for n, t in timings.items()
-        if n in prev
-        and prev[n] > 0.15
-        and t > 0.15
-        and (t > 1.5 * prev[n] or prev[n] > 1.5 * t)
-    )
-    for name in retimed:
-        best = timings[name]
-        for _ in range(2):
-            t0 = time.perf_counter()
-            force(by_name[name](spark, sf_dir))
-            best = min(best, time.perf_counter() - t0)
-            release_cached()
-            release_checkpoints(spark)
-            spark.catalog.clearCache()
-        print(
-            f"  retime {name}: {timings[name]:.3f}s -> {best:.3f}s "
-            f"(prev round {prev[name]:.3f}s)",
-            file=sys.stderr,
-        )
-        timings[name] = round(best, 3)
 
     total = round(sum(timings.values()), 3)
     # First-class suite-wall gate (vs the previous round's committed
@@ -665,7 +210,12 @@ def main() -> None:
         "sf": sf,
         "ingest_sec": ingest_sec,
         "total_with_ingest_sec": round(total + ingest_sec, 3),
-        "timing": "min_of_2_heavy_min_of_3_retime_gt1.5x",
+        "timing": TIMING,
+        "build_s": build,
+        "exec_s": execute,
+        "cpus": cpus,
+        "nproc": len(os.sched_getaffinity(0)),
+        "loadavg": loadavg,
         "suite_wall_vs_prev": suite_wall_vs_prev,
         "suite_wall_common_sec": cur_common,
         "suite_wall_prev_common_sec": prev_common,
@@ -674,8 +224,6 @@ def main() -> None:
         "last_round_common_sec": lr_cur_sum,
         "last_round_prev_sec": lr_prev_sum,
         "subset_mode": subset_mode,
-        "retimed": retimed,
-        "heavy_min3": sorted(heavy),
         "sample_spread": {
             "p50": sorted(spreads.values())[len(spreads) // 2],
             "p95": sorted(spreads.values())[int(len(spreads) * 0.95)],
@@ -706,10 +254,9 @@ def main() -> None:
                 "sf": sf,
                 "ingest_sec": ingest_sec,
                 "total_with_ingest_sec": round(total + ingest_sec, 3),
-                "timing": "min_of_2_retime_gt1.5x",
+                "timing": TIMING,
                 "suite_wall_vs_prev": suite_wall_vs_prev,
                 "suite_wall_vs_last_round": suite_wall_vs_last_round,
-                "n_retimed": len(retimed),
             }
         )
     )

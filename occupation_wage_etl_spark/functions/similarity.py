@@ -99,73 +99,12 @@ def minhash_signature(shingles: Column, num_hashes: int) -> Column:
     return F.array(*slots)
 
 
-def minhash_bands(signature: Column, bands: int, rows_per_band: int) -> Column:
-    """LSH banding: md5 of each band's concatenated slots →
-    array of ``(band_id, band_hash)`` structs ready to ``explode`` into
-    a bucket-join.  Two docs sharing any band hash are near-dup candidates.
-    """
-    out = []
-    for b in range(bands):
-        band_slice = F.slice(signature, b * rows_per_band + 1, rows_per_band)
-        out.append(
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(F.array_join(band_slice, "|")).alias("bucket"),
-            )
-        )
-    return F.array(*out)
-
-
 def jaccard(a: Column, b: Column) -> Column:
     """Jaccard similarity of two array columns (as sets)."""
     ad, bd = F.array_distinct(a), F.array_distinct(b)
     inter = F.size(F.array_intersect(ad, bd)).cast("double")
     union = F.size(F.array_union(ad, bd)).cast("double")
     return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-
-
-def simhash64(token_col: Column) -> Column:
-    """64-bit SimHash of a token array, JVM-side.
-
-    Per token take ``xxhash64`` (fast, JVM-native); for each of 64 bits
-    add +1/-1 weighted by bit value; the sign of each accumulated bit
-    forms the fingerprint.  Expressed as a fold over the token array with
-    a 64-slot int array accumulator — no UDF.
-
-    Not oracle-portable (xxhash64 is Spark-specific); verified by
-    metamorphic tests instead (hamming(simhash(x), simhash(x')) small for
-    near-identical x').
-
-    NB: higher-order folds are interpreted per element — for whole-table
-    fingerprinting use ``operators.dedup.simhash_fingerprints`` (explode +
-    codegen hash-aggregate, bit-identical output, ~6× faster); this
-    expression form exists for single-column / ad-hoc use.
-    """
-    nbits = 64
-
-    def bit_contrib(acc: Column, tok: Column) -> Column:
-        # shiftright requires a literal bit count → unroll the 64 bits
-        h = F.xxhash64(tok)
-        return F.array(
-            *[
-                acc[i]
-                + F.when(
-                    F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, F.lit(1)
-                ).otherwise(F.lit(-1))
-                for i in range(nbits)
-            ]
-        )
-
-    zeros = F.array_repeat(F.lit(0).cast("long"), nbits)
-    acc = F.aggregate(F.array_distinct(token_col), zeros, bit_contrib)
-    fp = F.lit(0).cast("long")
-    for i in range(nbits):
-        fp = fp.bitwiseOR(
-            F.when(acc[i] > 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    return fp
 
 
 MINHASH_P = 2147483647  # 2^31 - 1 (Mersenne prime)

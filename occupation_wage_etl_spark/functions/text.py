@@ -7,7 +7,7 @@ whole-stage codegen).  Designed for the ``documents`` table shape
 Operators covered (BASELINE.json north-star extensions):
 - tokenization (whitespace + BPE-ish regex), token counting
 - n-gram / shingle generation
-- quality scoring (length / punctuation / stopword / uniqueness ratios)
+- quality scoring (length / punctuation / uniqueness ratios)
 - language-ID (stopword-hit n-gram heuristic)
 - document fingerprinting (md5 content hash of the normalized text —
   md5 is portable across engines, which the DuckDB oracle relies on)
@@ -78,32 +78,12 @@ def word_ngrams_from_tokens(toks: Column, n: int) -> Column:
     )
 
 
-def char_ngrams(col: Column, n: int) -> Column:
-    """Character n-grams of the normalized text as array<string>."""
-    s = normalize_text(col)
-    k = F.greatest(F.length(s) - F.lit(n - 1), F.lit(1))
-    return F.transform(
-        F.sequence(F.lit(1), k),
-        lambda i: F.substring(s, i, n),
-    )
-
-
 def punct_ratio(col: Column) -> Column:
     """Fraction of non-space characters that are punctuation/symbols."""
     nonspace = F.regexp_replace(col, r"\s+", "")
     alnum = F.regexp_replace(nonspace, r"[A-Za-z0-9]", "")
     return F.when(F.length(nonspace) == 0, F.lit(0.0)).otherwise(
         F.length(alnum).cast("double") / F.length(nonspace).cast("double")
-    )
-
-
-def stopword_ratio(col: Column, lang: str = "en") -> Column:
-    """Fraction of tokens that are (language-specific) stopwords."""
-    toks = tokens(col)
-    stop = F.array(*[F.lit(w) for w in LANG_STOPWORDS[lang]])
-    hits = F.size(F.filter(toks, lambda t: F.array_contains(stop, t)))
-    return F.when(F.size(toks) == 0, F.lit(0.0)).otherwise(
-        hits.cast("double") / F.size(toks).cast("double")
     )
 
 

@@ -62,22 +62,6 @@ def exact_dedup(
     return df.join(keep, id_col, "left_semi")
 
 
-def duplicate_groups(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Exact-dup cluster summary: one row per duplicated fingerprint with
-    group size and representative (min) id."""
-    return (
-        df.select(F.col(id_col), T.fingerprint(F.col(text_col)).alias("fingerprint"))
-        .groupBy("fingerprint")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.min(id_col).alias("keep_id"),
-        )
-        .filter(F.col("n_docs") > 1)
-    )
-
-
 def substring_dup_spans(
     df: DataFrame,
     text_col: str = "text",
@@ -668,7 +652,6 @@ def ngram_jaccard_pairs(
     ngram_n: int = 3,
     threshold: float = 0.5,
     block_col: str | None = None,
-    brute_force: bool = False,
     prefix_filter: bool = False,
     gram_table: DataFrame | None = None,
 ) -> DataFrame:
@@ -695,8 +678,7 @@ def ngram_jaccard_pairs(
     most-frequent grams before the join; lossless for candidate
     *generation*, then verify counted intersections against full sets)
     or cap df.  ``block_col`` (lang, source, length bucket) composes
-    for additional pruning.  ``brute_force=True`` keeps the O(n²)
-    blocked self-join as a tiny-input verification tier.
+    for additional pruning.
     """
     if gram_table is not None:
         # caller supplies an ALREADY-PERSISTED (id, grams, block) frame
@@ -711,20 +693,6 @@ def ngram_jaccard_pairs(
                 *( [F.col(block_col).alias("block")] if block_col else [F.lit(0).alias("block")] ),
             )
         )
-    if brute_force:
-        if gram_table is None:
-            base = base.transform(cached)
-        l, r = base.alias("l"), base.alias("r")
-        return (
-            l.join(r, (F.col("l.block") == F.col("r.block")) & (F.col("l.id") < F.col("r.id")))
-            .select(
-                F.col("l.id").alias("id_a"),
-                F.col("r.id").alias("id_b"),
-                S.jaccard(F.col("l.grams"), F.col("r.grams")).alias("jaccard"),
-            )
-            .filter(F.col("jaccard") >= threshold)
-        )
-
     # Inverted index: one row per (block, gram, id); n = |gram set| rides
     # along so the final jaccard needs no join back to the doc table.
     tok = base.select(

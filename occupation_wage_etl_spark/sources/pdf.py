@@ -1265,12 +1265,6 @@ def _escape_literal_bytes(bs: bytes) -> bytes:
     return bytes(out)
 
 
-def _escape_literal(s: str) -> bytes:
-    """Literal-string encoder: backslash-escapes the specials, octal-
-    escapes non-Latin-1-printables — exercises both decode paths."""
-    return _escape_literal_bytes(s.encode("latin-1"))
-
-
 def encode_pdf_fixture(
     pages: list[list[str]],
     compress_page=lambda p: False,

@@ -13,20 +13,13 @@ import duckdb
 import pytest
 
 from occupation_wage_etl_spark.queries import ORACLE_SQL, SPARK_QUERIES
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from tools.harness import register_views
 
 
 @pytest.fixture(scope="module")
 def oracle(sf_tiny):
     con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_tiny}/{t}.parquet')"
-        )
+    register_views(con, sf_tiny)
     yield con
     con.close()
 

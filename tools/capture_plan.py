@@ -13,15 +13,13 @@ file counts, not operators).
 
 from __future__ import annotations
 
-import io
 import os
 import sys
-from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from occupation_wage_etl_spark.queries import SPARK_QUERIES  # noqa: E402
 from occupation_wage_etl_spark.session import get_spark  # noqa: E402
+from tools.harness import explain, run_query  # noqa: E402
 
 
 def main() -> int:
@@ -43,22 +41,12 @@ def main() -> int:
     spark = get_spark("capture-plan")
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
-        df = SPARK_QUERIES[name](spark, sf_dir)
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
+        plan, _, _ = run_query(spark, name, sf_dir, explain)
         path = os.path.join(out_dir, f"{name}_{tag}.txt")
         with open(path, "w") as f:
             f.write(f"# {name} — explain('formatted') @ {sf_dir} [{tag}]\n")
-            f.write(buf.getvalue())
+            f.write(plan)
         print(f"wrote {path}")
-        from occupation_wage_etl_spark.operators._cache import (
-            release_cached,
-            release_checkpoints,
-        )
-        release_cached()
-        release_checkpoints(spark)
-        spark.catalog.clearCache()
     spark.stop()
     return 0
 

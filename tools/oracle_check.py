@@ -16,43 +16,21 @@ Prints one line per query and a JSON summary; exit 1 on any mismatch.
 
 from __future__ import annotations
 
-import hashlib
 import json
-import math
 import os
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-
-def _canon_cell(v):
-    if v is None:
-        return "\x00"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "nan"
-        return repr(v)
-    if isinstance(v, bytes):
-        return v.hex()
-    return str(v)
-
-
-def _value_hash(rows, columns):
-    idx = sorted(range(len(columns)), key=lambda i: columns[i])
-    canon = sorted(
-        tuple(_canon_cell(row[i]) for i in idx) for row in rows
-    )
-    h = hashlib.sha256()
-    for row in canon:
-        h.update("\x1f".join(row).encode())
-        h.update(b"\x1e")
-    return h.hexdigest()
+# TABLES and _value_hash are imported from here by perfbench/
+from tools.harness import (  # noqa: E402, F401
+    TABLES,
+    collect,
+    register_views,
+    run_query,
+    value_hash as _value_hash,
+)
 
 
 def main() -> int:
@@ -60,11 +38,6 @@ def main() -> int:
 
     from occupation_wage_etl_spark.queries import ORACLE_SQL, SPARK_QUERIES
     from occupation_wage_etl_spark.session import get_spark
-
-    from occupation_wage_etl_spark.operators._cache import (
-        release_cached,
-        release_checkpoints,
-    )
 
     argv = list(sys.argv[1:])
     json_out = None
@@ -77,13 +50,7 @@ def main() -> int:
 
     spark = get_spark()
     con = duckdb.connect()
-    for t in TABLES:
-        path = f"{sf_dir}/{t}.parquet"
-        if os.path.isdir(path):  # engine lake layout: directory of files
-            path = f"{path}/*.parquet"
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
-        )
+    register_views(con, sf_dir)
 
     results, bad = {}, []
     names = sorted(n for n in SPARK_QUERIES if not only or n in only)
@@ -92,32 +59,22 @@ def main() -> int:
         entry = {"rows_match": None, "schema_match": None,
                  "hash_match": None, "err": None}
         try:
-            sdf = SPARK_QUERIES[name](spark, sf_dir)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
-            if name not in ORACLE_SQL:
-                entry["err"] = "no_oracle"
-                entry["spark_rows"] = len(srows)
-            else:
-                cur = con.execute(ORACLE_SQL[name])
-                ocols = [d[0] for d in cur.description]
-                orows = [tuple(r) for r in cur.fetchall()]
-                entry["rows_match"] = len(srows) == len(orows)
-                entry["schema_match"] = sorted(scols) == sorted(ocols)
-                entry["hash_match"] = (
-                    entry["rows_match"] and entry["schema_match"]
-                    and _value_hash(srows, scols) == _value_hash(orows, ocols)
-                )
-                entry["spark_rows"] = len(srows)
-                entry["oracle_rows"] = len(orows)
+            (srows, scols), _, _ = run_query(spark, name, sf_dir, collect)
+            cur = con.execute(ORACLE_SQL[name])
+            ocols = [d[0] for d in cur.description]
+            orows = [tuple(r) for r in cur.fetchall()]
+            entry["rows_match"] = len(srows) == len(orows)
+            entry["schema_match"] = sorted(scols) == sorted(ocols)
+            entry["hash_match"] = (
+                entry["rows_match"] and entry["schema_match"]
+                and _value_hash(srows, scols) == _value_hash(orows, ocols)
+            )
+            entry["spark_rows"] = len(srows)
+            entry["oracle_rows"] = len(orows)
         except Exception as exc:  # noqa: BLE001
             entry["err"] = f"{type(exc).__name__}: {exc}"[:200]
-        release_cached()  # operator-internal persists die with the query
-        release_checkpoints(spark)  # and so do iterative localCheckpoints
         dt = time.time() - t0
-        ok = entry["hash_match"] is True or (
-            entry["err"] == "no_oracle" and entry.get("spark_rows", 0) >= 0
-        )
+        ok = entry["hash_match"] is True
         if not ok:
             bad.append(name)
         print(f"{'PASS' if ok else 'FAIL':4s} {name:32s} {dt:6.2f}s "

@@ -27,13 +27,13 @@ reviewable per round without re-running Spark.  Usage:
 
 from __future__ import annotations
 
-import io
 import os
 import re
 import sys
-from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools.harness import explain, run_query  # noqa: E402
 
 TABLE_WIDTHS = {
     "region": 3, "nation": 4, "customer": 8, "supplier": 7, "part": 9,
@@ -45,12 +45,7 @@ TABLE_WIDTHS = {
 def plans(df) -> tuple[str, str]:
     """(formatted, simple) explain outputs.  Formatted carries scans /
     PushedFilters; simple carries the `*(N)` whole-stage-codegen markers."""
-    buf_f, buf_s = io.StringIO(), io.StringIO()
-    with redirect_stdout(buf_f):
-        df.explain("formatted")
-    with redirect_stdout(buf_s):
-        df.explain()
-    return buf_f.getvalue(), buf_s.getvalue()
+    return explain(df, "formatted"), explain(df, "simple")
 
 
 def _global_exchange_audit(plan: str) -> tuple[int, int, list[str]]:
@@ -216,9 +211,9 @@ def main() -> None:
         "plan-audit", extra_conf={"spark.sql.adaptive.enabled": "false"}
     )
     rows = []
-    for name, fn in sorted(SPARK_QUERIES.items()):
+    for name in sorted(SPARK_QUERIES):
         try:
-            fmt, simple = plans(fn(spark, sf_dir))
+            (fmt, simple), _, _ = run_query(spark, name, sf_dir, plans)
             rows.append(audit_one(name, fmt, simple))
         except Exception as exc:  # audit everything even if one breaks
             rows.append({"name": name, "error": f"{type(exc).__name__}: {exc}"})

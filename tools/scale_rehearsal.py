@@ -29,7 +29,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql import DataFrame  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
+
+from tools.harness import run_query  # noqa: E402
 
 SRC = "/root/testdata/sf0.1"
 DST = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -135,9 +138,8 @@ def main() -> int:
         for label, d in (("sf0.1", SRC), ("sf1", DST)):
             t0 = time.time()
             try:
-                df = SPARK_QUERIES[name](spark, d)
-                n = df.count()
-                per[label] = (time.time() - t0, n, None)
+                n, build_s, exec_s = run_query(spark, name, d, DataFrame.count)
+                per[label] = (build_s + exec_s, n, None)
             except Exception as exc:  # noqa: BLE001
                 per[label] = (time.time() - t0,
                               None, f"{type(exc).__name__}: {exc}"[:120])

@@ -47,6 +47,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 # memory sizing; locally one JVM holds all 32 "executors".
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
 
+from pyspark.sql import DataFrame  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 SRC = "/root/testdata/sf0.1"
@@ -209,13 +210,9 @@ def build(spark) -> None:
 
 
 def main() -> int:
-    from occupation_wage_etl_spark.operators._cache import (
-        release_cached,
-        release_checkpoints,
-    )
-    from occupation_wage_etl_spark.queries import SPARK_QUERIES
     from occupation_wage_etl_spark.session import get_spark
     import tools.scale_rehearsal as r10
+    from tools.harness import run_query
 
     rebuild = "--rebuild" in sys.argv
     names = [a for a in sys.argv[1:] if a.startswith("q")]
@@ -237,12 +234,8 @@ def main() -> int:
     for name in names or HEAVY:
         per = {}
         for label, d in (("sf0.1", SRC), ("10x", DST10), ("100x", DST100)):
-            t0 = time.time()
-            n = SPARK_QUERIES[name](spark, d).count()
-            per[label] = (time.time() - t0, n)
-            release_cached()
-            release_checkpoints(spark)
-            spark.catalog.clearCache()
+            n, build_s, exec_s = run_query(spark, name, d, DataFrame.count)
+            per[label] = (build_s + exec_s, n)
             # shuffle files outlive their stages until the JVM
             # ContextCleaner GCs the RDDs; at 100x one session's
             # accumulated spill fills the disk (observed: ENOSPC after
