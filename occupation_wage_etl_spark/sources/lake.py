@@ -15,6 +15,8 @@ Here the date is a real hive partition column (``snapshot_date``), so
 from __future__ import annotations
 
 import datetime as _dt
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -98,6 +100,25 @@ def write_bucketed(
     writer.saveAsTable(table)
 
 
+@contextmanager
+def _checkpoints() -> Iterator[Callable[[DataFrame], DataFrame]]:
+    """Yield ``checkpoint(df)`` = ``df.localCheckpoint()``; every block
+    checkpointed inside the ``with`` is unpersisted on exit, even on
+    error.  For rewrites whose checkpoints are consumed before they
+    return (their callers get counts, not frames)."""
+    held: list[DataFrame] = []
+
+    def checkpoint(df: DataFrame) -> DataFrame:
+        held.append(df.localCheckpoint())
+        return held[-1]
+
+    try:
+        yield checkpoint
+    finally:
+        for cp in held:
+            cp._jdf.queryExecution().logical().rdd().unpersist(False)  # noqa: SLF001
+
+
 def delete_by_key(
     spark: SparkSession,
     root: str,
@@ -119,36 +140,40 @@ def delete_by_key(
       3. dynamic-partition-overwrite the survivors back — untouched
          partitions are never read or written.
 
+    ``keys_df`` is evaluated exactly once (its distinct keys are
+    checkpointed before both joins read them), and every block the
+    function checkpoints is released before it returns.
+
     Returns the number of partitions rewritten.  (Table formats with
     delete files — Iceberg/Delta — replace step 3 at the metadata layer;
     the plan shape of steps 1-2 is identical.)
     """
     path = f"{root}/{dataset}"
-    keys = keys_df.select(F.col(key_col)).distinct()
-    df = spark.read.parquet(path)
-    hit_parts = [
-        r["p"]
-        for r in df.join(F.broadcast(keys), key_col, "semi")
-        .select(F.col(PARTITION_COL).alias("p"))
-        .distinct()
-        .collect()
-    ]
-    if not hit_parts:
-        return 0
-    # materialize survivors before overwriting the path they were read
-    # from (Spark rejects lazy self-overwrite); cluster variant: stage to
-    # a temp prefix and swap.
-    survivors = (
-        df.filter(F.col(PARTITION_COL).isin(hit_parts))
-        .join(F.broadcast(keys), key_col, "anti")
-        .localCheckpoint()
-    )
-    (
-        survivors.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(PARTITION_COL)
-        .parquet(path)
-    )
+    with _checkpoints() as checkpoint:
+        keys = checkpoint(keys_df.select(F.col(key_col)).distinct())
+        df = spark.read.parquet(path)
+        hit_parts = [
+            r["p"]
+            for r in df.join(F.broadcast(keys), key_col, "semi")
+            .select(F.col(PARTITION_COL).alias("p"))
+            .distinct()
+            .collect()
+        ]
+        if not hit_parts:
+            return 0
+        # materialize survivors before overwriting the path they were
+        # read from (Spark rejects lazy self-overwrite); cluster variant:
+        # stage to a temp prefix and swap.
+        survivors = checkpoint(
+            df.filter(F.col(PARTITION_COL).isin(hit_parts))
+            .join(F.broadcast(keys), key_col, "anti")
+        )
+        (
+            survivors.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(PARTITION_COL)
+            .parquet(path)
+        )
     return len(hit_parts)
 
 
@@ -173,6 +198,11 @@ def merge_upsert(
       3. unmatched update rows are appended to the ``insert_snapshot``
          partition (default: today).
 
+    ``updates_df`` is evaluated exactly once: the de-duplicated batch
+    and the key → owning-partition map are each checkpointed, and every
+    later step reads those two.  Every block the function checkpoints
+    is released before it returns.
+
     Returns ``(n_partitions_rewritten, n_inserted)``.  Untouched
     partitions are never read or written — the same partition-pruned
     rewrite shape as :func:`delete_by_key`; Iceberg/Delta replace step 2
@@ -181,45 +211,48 @@ def merge_upsert(
     path = f"{root}/{dataset}"
     date = insert_snapshot or today()
     lake = spark.read.parquet(path)
-    # key → owning partition map; distinct keys only (latest-wins within
-    # a batch is the caller's contract, enforced here defensively).
-    updates = updates_df.dropDuplicates([key_col])
-    owner = (
-        lake.join(F.broadcast(updates.select(key_col)), key_col, "semi")
-        .select(key_col, F.col(PARTITION_COL).alias("_owner_part"))
-        .distinct()
-    )
-    matched = updates.join(F.broadcast(owner), key_col, "inner")
-    # materialize inserts up front: their plan reads the lake (for the
-    # anti-join) and must not re-read it after the overwrite below.
-    inserts = (
-        updates.join(F.broadcast(owner.select(key_col)), key_col, "anti")
-        .withColumn(PARTITION_COL, F.lit(date))
-        .localCheckpoint()
-    )
-    hit_parts = [
-        r["_owner_part"]
-        for r in matched.select("_owner_part").distinct().collect()
-    ]
-    n_inserted = inserts.count()
-    if hit_parts:
-        keep = (
-            lake.filter(F.col(PARTITION_COL).isin(hit_parts))
-            .join(F.broadcast(updates.select(key_col)), key_col, "anti")
+    with _checkpoints() as checkpoint:
+        # distinct keys only (latest-wins within a batch is the caller's
+        # contract, enforced here defensively).
+        updates = checkpoint(updates_df.dropDuplicates([key_col]))
+        owner = checkpoint(
+            lake.join(F.broadcast(updates.select(key_col)), key_col, "semi")
+            .select(key_col, F.col(PARTITION_COL).alias("_owner_part"))
+            .distinct()
         )
-        replaced = matched.withColumn(
-            PARTITION_COL, F.col("_owner_part")
-        ).drop("_owner_part")
-        # materialize before overwriting the source path (see delete_by_key)
-        merged = keep.unionByName(replaced).localCheckpoint()
-        (
-            merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(PARTITION_COL)
-            .parquet(path)
-        )
-    if n_inserted:
-        inserts.write.mode("append").partitionBy(PARTITION_COL).parquet(path)
+        hit_parts = [
+            r["_owner_part"]
+            for r in owner.select("_owner_part").distinct().collect()
+        ]
+        # reads only the two checkpoints, never the lake, so it is still
+        # valid after the overwrite below.
+        inserts = updates.join(
+            F.broadcast(owner.select(key_col)), key_col, "anti"
+        ).withColumn(PARTITION_COL, F.lit(date))
+        n_inserted = inserts.count()
+        if hit_parts:
+            keep = (
+                lake.filter(F.col(PARTITION_COL).isin(hit_parts))
+                .join(F.broadcast(updates.select(key_col)), key_col, "anti")
+            )
+            replaced = (
+                updates.join(F.broadcast(owner), key_col, "inner")
+                .withColumn(PARTITION_COL, F.col("_owner_part"))
+                .drop("_owner_part")
+            )
+            # materialize before overwriting the source path (see
+            # delete_by_key)
+            merged = checkpoint(keep.unionByName(replaced))
+            (
+                merged.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy(PARTITION_COL)
+                .parquet(path)
+            )
+        if n_inserted:
+            inserts.write.mode("append").partitionBy(PARTITION_COL).parquet(
+                path
+            )
     return len(hit_parts), n_inserted
 
 
@@ -249,16 +282,16 @@ def compact_partition(
         if s.getPath().getName().endswith(".parquet")
     )
     n_files = max(1, -(-total_bytes // target_file_bytes))
-    # localCheckpoint materializes the partition BEFORE the overwrite —
+    # the checkpoint materializes the partition BEFORE the overwrite —
     # Spark refuses (or corrupts) a lazy read-then-overwrite of the same
     # path.  On a cluster, write-to-temp + rename is the durable variant.
-    compacted = (
-        read_snapshot(spark, root, dataset, snapshot_date)
-        .drop(PARTITION_COL)
-        .coalesce(int(n_files))
-        .localCheckpoint()
-    )
-    compacted.write.mode("overwrite").parquet(part_dir)
+    with _checkpoints() as checkpoint:
+        compacted = checkpoint(
+            read_snapshot(spark, root, dataset, snapshot_date)
+            .drop(PARTITION_COL)
+            .coalesce(int(n_files))
+        )
+        compacted.write.mode("overwrite").parquet(part_dir)
     return int(n_files)
 
 

@@ -78,10 +78,10 @@ def stream_apply_cdc(
             F.col("change_type").isin("insert", "update")
         ).drop("change_type")
         deletes = batch_df.filter(F.col("change_type") == "delete")
-        if upserts.limit(1).count() > 0:
+        if not upserts.isEmpty():
             lake.merge_upsert(spark, root, dataset, key_col, upserts)
         del_keys = deletes.select(key_col).distinct()
-        if del_keys.limit(1).count() > 0:
+        if not del_keys.isEmpty():
             lake.delete_by_key(spark, root, dataset, key_col, del_keys)
 
     writer = changes.writeStream.foreachBatch(apply_batch).option(

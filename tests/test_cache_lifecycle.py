@@ -78,6 +78,38 @@ def test_cached_scope_releases_on_error(spark):
     assert _n_persisted(spark) == 0
 
 
+def test_lake_rewrites_release_their_checkpoints(spark, tmp_path):
+    from occupation_wage_etl_spark.sources import lake
+
+    root = str(tmp_path / "lake")
+    rows = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
+    lake.write_snapshot(rows, root, "ds", "2026-01-01")
+    before = _n_persisted(spark)
+    calls = {
+        "merge": lambda: lake.merge_upsert(
+            spark, root, "ds", "k",
+            spark.createDataFrame([(1, "A2"), (9, "n")], "k long, v string"),
+            insert_snapshot="2026-01-02",
+        ),
+        "empty merge": lambda: lake.merge_upsert(
+            spark, root, "ds", "k",
+            spark.createDataFrame([], "k long, v string"),
+        ),
+        "delete": lambda: lake.delete_by_key(
+            spark, root, "ds", "k", spark.createDataFrame([(2,)], "k long")
+        ),
+        "compact": lambda: lake.compact_partition(
+            spark, root, "ds", "2026-01-01"
+        ),
+    }
+    for name, call in calls.items():
+        call()
+        assert _n_persisted(spark) == before, name
+    assert sorted(
+        (r["k"], r["v"]) for r in spark.read.parquet(f"{root}/ds").collect()
+    ) == [(1, "A2"), (9, "n")]
+
+
 def test_release_checkpoints_clears_iterative_blocks(spark):
     from occupation_wage_etl_spark.operators import graph
     from occupation_wage_etl_spark.operators._cache import (

@@ -345,6 +345,118 @@ def test_merge_upsert_updates_in_place_and_appends_inserts(spark, tmp_path):
     assert (n_parts, n_ins) == (0, 1)
 
 
+def _two_day_lake(spark, root, day1, day2):
+    for date, rows in (("2026-01-01", day1), ("2026-01-02", day2)):
+        lake.write_snapshot(
+            spark.createDataFrame(rows, "k long, v string"), root, "ds", date
+        )
+
+
+def _mtimes(root):
+    import os
+
+    return {
+        (d, f): os.path.getmtime(f"{root}/ds/{d}/{f}")
+        for d in os.listdir(f"{root}/ds")
+        for f in os.listdir(f"{root}/ds/{d}")
+    }
+
+
+def _lake_rows(spark, root):
+    return sorted(
+        (r["k"], r["v"], str(r["snapshot_date"]))
+        for r in spark.read.parquet(f"{root}/ds").collect()
+    )
+
+
+def test_merge_upsert_empty_batch_rewrites_nothing(spark, tmp_path):
+    root = str(tmp_path / "lake")
+    _two_day_lake(spark, root, [(1, "a")], [(2, "b")])
+    before = _mtimes(root)
+    got = lake.merge_upsert(
+        spark, root, "ds", "k",
+        spark.createDataFrame([], "k long, v string"),
+        insert_snapshot="2026-01-03",
+    )
+    assert got == (0, 0)
+    assert _mtimes(root) == before  # no partition rewritten or added
+
+
+def test_merge_upsert_duplicate_keys_yield_one_row(spark, tmp_path):
+    root = str(tmp_path / "lake")
+    _two_day_lake(spark, root, [(1, "a")], [(2, "b")])
+    updates = spark.createDataFrame(
+        [(1, "A2"), (1, "A2"), (9, "new"), (9, "new")], "k long, v string"
+    )
+    got = lake.merge_upsert(
+        spark, root, "ds", "k", updates, insert_snapshot="2026-01-03"
+    )
+    assert got == (1, 1)
+    assert _lake_rows(spark, root) == [
+        (1, "A2", "2026-01-01"),
+        (2, "b", "2026-01-02"),
+        (9, "new", "2026-01-03"),
+    ]
+
+
+def test_merge_upsert_key_in_two_partitions_updates_both(spark, tmp_path):
+    root = str(tmp_path / "lake")
+    _two_day_lake(spark, root, [(1, "a"), (2, "b")], [(1, "c"), (3, "d")])
+    updates = spark.createDataFrame(
+        [(1, "A2"), (9, "new")], "k long, v string"
+    )
+    got = lake.merge_upsert(
+        spark, root, "ds", "k", updates, insert_snapshot="2026-01-03"
+    )
+    assert got == (2, 1)
+    assert _lake_rows(spark, root) == [
+        (1, "A2", "2026-01-01"),
+        (1, "A2", "2026-01-02"),
+        (2, "b", "2026-01-01"),
+        (3, "d", "2026-01-02"),
+        (9, "new", "2026-01-03"),
+    ]
+
+
+def _counted_frame(spark, rows, schema):
+    """``rows`` as a frame whose key column goes through a Python UDF
+    that bumps an accumulator once per row it evaluates."""
+    evaluated = spark.sparkContext.accumulator(0)
+
+    def tick(k):
+        evaluated.add(1)
+        return k
+
+    df = spark.createDataFrame(rows, schema)
+    tick_udf = F.udf(tick, "long").asNondeterministic()
+    return df.withColumn("k", tick_udf("k")), evaluated
+
+
+def test_merge_upsert_evaluates_updates_once(spark, tmp_path):
+    root = str(tmp_path / "lake")
+    _two_day_lake(spark, root, [(1, "a"), (2, "b")], [(3, "c")])
+    rows = [(1, "A2"), (3, "C2"), (9, "new")]
+    updates, evaluated = _counted_frame(spark, rows, "k long, v string")
+    got = lake.merge_upsert(
+        spark, root, "ds", "k", updates, insert_snapshot="2026-01-03"
+    )
+    assert got == (2, 1)
+    assert evaluated.value == len(rows)
+
+
+def test_delete_by_key_evaluates_keys_once(spark, tmp_path):
+    root = str(tmp_path / "lake")
+    _two_day_lake(spark, root, [(1, "a"), (2, "b")], [(3, "c")])
+    rows = [(1,), (7,)]
+    keys, evaluated = _counted_frame(spark, rows, "k long")
+    assert lake.delete_by_key(spark, root, "ds", "k", keys) == 1
+    assert evaluated.value == len(rows)
+    assert _lake_rows(spark, root) == [
+        (2, "b", "2026-01-01"),
+        (3, "c", "2026-01-02"),
+    ]
+
+
 class TestZOrderWrite:
     def test_files_cover_hyperrectangles_and_skip(self, spark, tmp_path):
         """A Z-ordered layout must let a 2-D range predicate prune most
