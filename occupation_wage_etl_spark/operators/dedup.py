@@ -1158,7 +1158,6 @@ def containment_pairs(
     id_col: str = "doc_id",
     shingle_n: int = 3,
     threshold: float = 0.6,
-    prefix_probe: bool = False,
 ) -> DataFrame:
     """Directional containment join: (a, b) pairs where
     ``|grams(a) ∩ grams(b)| / |grams(a)| ≥ threshold`` — the
@@ -1183,19 +1182,8 @@ def containment_pairs(
     :func:`ngram_jaccard_pairs` (df=1 grams self-join to nothing; AQE
     splits residual hot grams).
 
-    ``prefix_probe=True`` keeps the asymmetric-prefix candidate tier
-    for corpora with pathological stop-grams (the PPJoin bound: if a's
-    containment in any b reaches t, one of a's ``⌊(1-t)·|a|⌋ + 1``
-    RAREST grams — global df asc, gram asc — must be in b; only probe
-    grams hit the posting index, so stop-grams never fan out).  Both
-    paths return identical rows (tests pin equality).
-
     Returns (id_a, id_b, containment), id_a ≠ id_b, directional.
     """
-    if prefix_probe:
-        return _containment_pairs_probe(
-            df, text_col, id_col, shingle_n, threshold
-        )
     # cached: the exploded gram index feeds both self-join sides (the
     # ngram_jaccard_pairs convention — one parse+explode pass)
     ex = cached(
@@ -1241,75 +1229,6 @@ def containment_pairs(
         )
     )
     return both.filter(F.col("containment") >= threshold)
-
-
-def _containment_pairs_probe(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    shingle_n: int,
-    threshold: float,
-) -> DataFrame:
-    """The asymmetric-prefix (PPJoin-bound) tier of
-    :func:`containment_pairs` — candidates from each doc's rarest
-    ``⌊(1-t)·n⌋+1`` grams probing the full posting index, verified by
-    exact ``array_intersect`` containment.  Kept for pathological
-    stop-gram corpora where the count join's Σ df² fan-out bites."""
-    shingled = (
-        _spread(df)
-        .select(
-            F.col(id_col).alias("id"),
-            F.array_distinct(
-                T.word_ngrams(F.col(text_col), shingle_n)
-            ).alias("grams"),
-        )
-        .transform(cached)
-    )
-    ex = shingled.select(
-        "id", F.size("grams").alias("n"), F.explode("grams").alias("gram")
-    )
-    gdf = ex.groupBy("gram").agg(F.count(F.lit(1)).alias("__df"))
-    w = Window.partitionBy("id").orderBy(F.asc("__df"), F.asc("gram"))
-    ranked = ex.join(gdf, "gram").withColumn(
-        "__rn", F.row_number().over(w)
-    )
-    # Probe length ⌊(1-t)·n⌋+1 must round the EXACT rational value, not
-    # the IEEE product: for t=0.9, (1-t) is 0.09999999999999998, so
-    # (1-t)*10 = 0.9999999999999998 and a bare floor() gives 0 instead
-    # of 1 — one probe gram too few, silently breaking losslessness.
-    # A +1e-9 nudge inside the floor restores the exact-arithmetic
-    # bound for any threshold expressible to <9 decimal places; when it
-    # fires spuriously it only widens the probe (still lossless).
-    probe = ranked.filter(
-        F.col("__rn")
-        <= F.floor(
-            F.lit(1.0 - threshold) * F.col("n") + F.lit(1e-9)
-        ).cast("int")
-        + 1
-    ).select(F.col("id").alias("id_a"), "gram")
-    postings = ex.select(F.col("id").alias("id_b"), "gram")
-    cand = (
-        probe.join(postings, "gram")
-        .filter(F.col("id_a") != F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    ga = shingled.select(F.col("id").alias("id_a"), F.col("grams").alias("__ga"))
-    gb = shingled.select(F.col("id").alias("id_b"), F.col("grams").alias("__gb"))
-    return (
-        cand.join(ga, "id_a")
-        .join(gb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.size(F.array_intersect(F.col("__ga"), F.col("__gb")))
-                .cast("double")
-                / F.size(F.col("__ga")).cast("double")
-            ).alias("containment"),
-        )
-        .filter(F.col("containment") >= threshold)
-    )
 
 
 def winnowing_pairs(

@@ -36,13 +36,6 @@ from pyspark.sql import functions as F
 from occupation_wage_etl_spark.operators._cache import cached
 from occupation_wage_etl_spark.operators._conf import shuffle_partitions
 
-# Memoized AUTO resolutions for the prefix scans' small-input flip,
-# keyed by (analyzed-plan semanticHash, max-rows conf) — the same
-# pattern (and staleness argument) as stats._FG_MEMO: the flag selects
-# between two BIT-IDENTICAL plans, so a stale hit can only pick the
-# less optimal of two correct shapes.
-_SMALL_MEMO: dict[tuple[int, int], bool] = {}
-
 
 def _resolve_small_scan(df: DataFrame) -> bool:
     """AUTO flip for the prefix scans: True when ``df`` is small enough
@@ -54,10 +47,12 @@ def _resolve_small_scan(df: DataFrame) -> bool:
     on histogram-sized input; the two-level form wins exactly when the
     input stops fitting one task's sort).  Mirrors
     ``stats._resolve_few_groups``: eager by design — resolving runs one
-    COUNT job at plan-construction time, memoized per semantic plan
-    hash so repeated constructions (bench loops, retries) re-estimate
-    nothing.  Set the conf to 0 to force the two-level scan (plan
-    audits of the 100 TB shape, tests).
+    COUNT job at plan-construction time, on every construction.  Nothing
+    is remembered across builds: a lake path re-read after its files
+    grew analyzes to the same plan hash, so a remembered answer would
+    pin the one-task window onto data past the cliff.  Set the conf to
+    0 to force the two-level scan (plan audits of the 100 TB shape,
+    tests).
     """
     sp = df.sparkSession
     try:
@@ -66,18 +61,8 @@ def _resolve_small_scan(df: DataFrame) -> bool:
         max_rows = 8_000_000
     if max_rows <= 0:
         return False
-    try:  # classic-mode internal API; memo silently off elsewhere
-        h = df._jdf.queryExecution().analyzed().semanticHash()
-        key = (int(h), max_rows)
-    except Exception:
-        key = None
-    if key is not None and key in _SMALL_MEMO:
-        return _SMALL_MEMO[key]
     n = df.agg(F.count(F.lit(1)).alias("__n")).first()["__n"]
-    out = bool(n < max_rows)
-    if key is not None:
-        _SMALL_MEMO[key] = out
-    return out
+    return bool(n < max_rows)
 
 
 def _dist_cum_before(

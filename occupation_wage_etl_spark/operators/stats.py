@@ -34,28 +34,6 @@ from occupation_wage_etl_spark.operators._cache import cached
 from occupation_wage_etl_spark.operators._conf import shuffle_partitions
 
 
-# Memoized AUTO resolutions, keyed by (analyzed-plan semanticHash,
-# group column, min-hist-rows conf, shuffle partitions) — the conf
-# values are part of the key so a mid-session retune re-resolves.
-# The semantic hash is stable across independent
-# rebuilds of the same logical plan (same source paths, same
-# expressions), so a suite that constructs the same operator twice —
-# bench.py's min-of-N timed loop, grouped_mad's two percentile passes
-# over one histogram — pays for exactly one estimate job.  Staleness is
-# harmless by construction: the flag selects between two BIT-IDENTICAL
-# plans (q215's registry proof), so a memo hit against since-rewritten
-# data can only pick the less optimal of two correct shapes.
-_FG_MEMO: dict[tuple[int, str, int, int], bool] = {}
-
-
-def _fg_memo_key(df: DataFrame, group_col: str) -> tuple[int, str] | None:
-    try:  # classic-mode internal API; memo silently off elsewhere
-        h = df._jdf.queryExecution().analyzed().semanticHash()
-        return (int(h), group_col.lower())
-    except Exception:
-        return None
-
-
 def _resolve_few_groups(
     hist: DataFrame,
     group_col: str,
@@ -89,8 +67,9 @@ def _resolve_few_groups(
       materialization those passes need — the extra cost is one HLL
       pass over already-cached histogram rows.
 
-    Resolutions are memoized per (semantic plan hash, group) — see
-    ``_FG_MEMO`` — so re-running the same query re-estimates nothing.
+    Every AUTO call runs its estimate job; nothing is remembered across
+    builds, because a histogram re-read from a lake path whose files
+    grew analyzes to the same plan hash as before the growth.
 
     The flip itself requires BOTH cliffs:
 
@@ -118,12 +97,6 @@ def _resolve_few_groups(
     except Exception:
         min_rows = 8_000_000
     n_parts = shuffle_partitions(sp)
-    base_key = _fg_memo_key(src, group_col)
-    key = (
-        None if base_key is None else base_key + (min_rows, n_parts)
-    )
-    if key is not None and key in _FG_MEMO:
-        return _FG_MEMO[key]
     if rows is not None:
         n_est = (
             F.approx_count_distinct(F.struct(group_col, value_col))
@@ -139,10 +112,7 @@ def _resolve_few_groups(
             F.count(F.lit(1)).alias("__n"),
             F.approx_count_distinct(group_col).alias("__g"),
         ).first()
-    out = bool(est["__g"] < n_parts and est["__n"] >= min_rows)
-    if key is not None:
-        _FG_MEMO[key] = out
-    return out
+    return bool(est["__g"] < n_parts and est["__n"] >= min_rows)
 
 
 def _grouped_cum(

@@ -2123,6 +2123,27 @@ FROM s
 """
 
 
+def _doc_blobs(docs: DataFrame, make: Callable[[int], bytes]) -> DataFrame:
+    """(doc_id, content binary): ``make(doc_id)`` for every document —
+    the one shape of the per-document binary fixtures below, built on
+    the Python workers in Arrow batches.  Each fixture nests its
+    ``make`` inside its builder so it is pickled by value; a
+    module-level function would be pickled by reference and make every
+    worker import this module."""
+
+    def _make(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            ids = pdf["doc_id"]
+            out = [make(int(did)) for did in ids]
+            yield pd.DataFrame({"doc_id": ids.to_numpy(), "content": out})
+
+    return docs.select("doc_id").mapInPandas(
+        _make, schema="doc_id long, content binary"
+    )
+
+
 # ---------------------------------------------------------------------------
 # q50 — REAL image decode: synthesize an 8×8 grayscale PNG per document
 # (pixel k = (doc_id*31 + (k%8)*7 + (k//8)*13) % 256), push it through the
@@ -2132,31 +2153,23 @@ FROM s
 # round-trip reproduced every pixel bit-exactly through real compression.
 # ---------------------------------------------------------------------------
 
-def _synth_png(docs: DataFrame) -> DataFrame:
-    """(doc_id, content): deterministic 8×8 grayscale PNG per doc."""
-    import pandas as _pd  # noqa: F401 — pandas_udf hint resolution
+def _synth_png(docs: DataFrame, n: int) -> DataFrame:
+    """(doc_id, content): deterministic n×n grayscale gradient PNG per
+    doc, pixel k = (doc_id*31 + (k%n)*7 + (k//n)*13) % 256."""
 
-    def _make(batches):
-        import pandas as pd
+    def _png(did):
+        px = bytes(
+            (did * 31 + (k % n) * 7 + (k // n) * 13) % 256
+            for k in range(n * n)
+        )
+        return multimodal.encode_png_gray(n, n, px)
 
-        for pdf in batches:
-            out = []
-            for did in pdf["doc_id"]:
-                px = bytes(
-                    (int(did) * 31 + (k % 8) * 7 + (k // 8) * 13) % 256
-                    for k in range(64)
-                )
-                out.append(multimodal.encode_png_gray(8, 8, px))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].to_numpy(), "content": out})
-
-    return docs.select("doc_id").mapInPandas(
-        _make, schema="doc_id long, content binary"
-    )
+    return _doc_blobs(docs, _png)
 
 
 def q50_decode_image(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    decoded = multimodal.decode_image(_synth_png(docs), mode="real", thumb=8)
+    decoded = multimodal.decode_image(_synth_png(docs, 8), mode="real", thumb=8)
     px = F.col("pixels")
     return decoded.select(
         "doc_id",
@@ -2193,26 +2206,18 @@ _WAV_RATE, _WAV_N = 8000, 64
 
 
 def _synth_wav(docs: DataFrame) -> DataFrame:
-    def _make(batches):
-        import pandas as pd
-        import struct as _s
+    import struct as _s
 
-        fmt = _s.pack("<HHIIHH", 1, 1, _WAV_RATE, _WAV_RATE * 2, 2, 16)
-        for pdf in batches:
-            out = []
-            for did in pdf["doc_id"]:
-                samples = [
-                    (int(did) * 37 + k * 115) % 4001 - 2000 for k in range(_WAV_N)
-                ]
-                data = _s.pack(f"<{_WAV_N}h", *samples)
-                body = b"WAVE" + b"fmt " + _s.pack("<I", len(fmt)) + fmt
-                body += b"data" + _s.pack("<I", len(data)) + data
-                out.append(b"RIFF" + _s.pack("<I", len(body)) + body)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].to_numpy(), "content": out})
+    fmt = _s.pack("<HHIIHH", 1, 1, _WAV_RATE, _WAV_RATE * 2, 2, 16)
 
-    return docs.select("doc_id").mapInPandas(
-        _make, schema="doc_id long, content binary"
-    )
+    def _wav(did):
+        samples = [(did * 37 + k * 115) % 4001 - 2000 for k in range(_WAV_N)]
+        data = _s.pack(f"<{_WAV_N}h", *samples)
+        body = b"WAVE" + b"fmt " + _s.pack("<I", len(fmt)) + fmt
+        body += b"data" + _s.pack("<I", len(data)) + data
+        return b"RIFF" + _s.pack("<I", len(body)) + body
+
+    return _doc_blobs(docs, _wav)
 
 
 def q51_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10998,33 +11003,26 @@ WHERE jw >= 0.9 ORDER BY jw DESC, id_a, id_b LIMIT 100
 # ---------------------------------------------------------------------------
 
 
-def _synth_jpeg(docs: DataFrame) -> DataFrame:
-    """(doc_id, content): deterministic 8×8 baseline JPEG per doc."""
+def _synth_jpeg(
+    docs: DataFrame, encode: Callable[..., bytes]
+) -> DataFrame:
+    """(doc_id, content): deterministic 8×8 JPEG per doc from q217's
+    chosen coefficients, through ``encode`` (baseline SOF0 or
+    progressive SOF2)."""
 
-    def _make(batches):
-        import pandas as pd
+    def _jpeg(did):
+        blk = [0] * 64
+        blk[0] = (did % 201) - 100
+        blk[1] = (did % 7) - 3
+        blk[8] = (did % 5) - 2
+        return encode(8, 8, [blk])
 
-        for pdf in batches:
-            out = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                blk = [0] * 64
-                blk[0] = (did % 201) - 100
-                blk[1] = (did % 7) - 3
-                blk[8] = (did % 5) - 2
-                out.append(multimodal.encode_jpeg_gray_coeffs(8, 8, [blk]))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].to_numpy(), "content": out}
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        _make, schema="doc_id long, content binary"
-    )
+    return _doc_blobs(docs, _jpeg)
 
 
-def q217_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    decoded = multimodal.decode_image(_synth_jpeg(docs), mode="real", thumb=8)
+def _jpeg_pixel_stats(jpegs: DataFrame) -> DataFrame:
+    """q217/q240's per-doc stats of the decoded 8×8 raster."""
+    decoded = multimodal.decode_image(jpegs, mode="real", thumb=8)
     px = F.col("pixels")
     return decoded.select(
         "doc_id",
@@ -11044,6 +11042,13 @@ def q217_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0).cast("long"),
             lambda a, v: a + v,
         ).alias("px_xmoment"),
+    )
+
+
+def q217_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = _t(spark, sf_dir, "documents")
+    return _jpeg_pixel_stats(
+        _synth_jpeg(docs, multimodal.encode_jpeg_gray_coeffs)
     )
 
 
@@ -11167,48 +11172,35 @@ Q216_SQL = _kq_oracle_sql()
 def _synth_mp4(docs: DataFrame) -> DataFrame:
     """(doc_id, content): deterministic MP4 fixture per doc."""
 
-    def _make(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n = 3 + did % 5
-                tracks = [
-                    {
-                        "handler": "vide",
-                        "codec": "avc1",
-                        "timescale": 600,
-                        "sample_delta": 100,
-                        "sizes": [20 + ((did + 7 * i) % 13) for i in range(n)],
-                        "sync": list(range(1, n + 1, 2)),
-                        "width": 64,
-                        "height": 48,
-                    }
-                ]
-                if did % 3 == 0:
-                    m = 2 + (did // 3) % 3
-                    tracks.append(
-                        {
-                            "handler": "soun",
-                            "codec": "mp4a",
-                            "timescale": 8000,
-                            "sample_delta": 1024,
-                            "sizes": [
-                                10 + ((did + 5 * j) % 7) for j in range(m)
-                            ],
-                            "sync": None,
-                        }
-                    )
-                out.append(video.encode_mp4_fixture(tracks))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].to_numpy(), "content": out}
+    def _mp4(did):
+        n = 3 + did % 5
+        tracks = [
+            {
+                "handler": "vide",
+                "codec": "avc1",
+                "timescale": 600,
+                "sample_delta": 100,
+                "sizes": [20 + ((did + 7 * i) % 13) for i in range(n)],
+                "sync": list(range(1, n + 1, 2)),
+                "width": 64,
+                "height": 48,
+            }
+        ]
+        if did % 3 == 0:
+            m = 2 + (did // 3) % 3
+            tracks.append(
+                {
+                    "handler": "soun",
+                    "codec": "mp4a",
+                    "timescale": 8000,
+                    "sample_delta": 1024,
+                    "sizes": [10 + ((did + 5 * j) % 7) for j in range(m)],
+                    "sync": None,
+                }
             )
+        return video.encode_mp4_fixture(tracks)
 
-    return docs.select("doc_id").mapInPandas(
-        _make, schema="doc_id long, content binary"
-    )
+    return _doc_blobs(docs, _mp4)
 
 
 def q232_mp4_demux(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11295,44 +11287,35 @@ FROM ks
 # ---------------------------------------------------------------------------
 
 
-def _synth_jpeg_color(docs: DataFrame) -> DataFrame:
-    """(doc_id, content): deterministic 16×16 4:2:0 color JPEG."""
+def _synth_jpeg_color(
+    docs: DataFrame, encode: Callable[..., bytes]
+) -> DataFrame:
+    """(doc_id, content): deterministic 16×16 4:2:0 color JPEG per doc
+    from q234's chosen coefficients, through ``encode`` (baseline SOF0
+    or progressive SOF2)."""
 
-    def _make(batches):
-        import pandas as pd
+    def _jpeg(did):
+        ys = []
+        for j in range(4):
+            blk = [0] * 64
+            blk[0] = ((did + 53 * j) % 201) - 100
+            if j == 0:
+                blk[1] = (did % 7) - 3
+            ys.append(blk)
+        cb = [0] * 64
+        cb[0] = (did % 41) - 20
+        cr = [0] * 64
+        cr[0] = (did % 37) - 18
+        return encode(16, 16, ys, cb_blocks=[cb], cr_blocks=[cr])
 
-        for pdf in batches:
-            out = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                ys = []
-                for j in range(4):
-                    blk = [0] * 64
-                    blk[0] = ((did + 53 * j) % 201) - 100
-                    if j == 0:
-                        blk[1] = (did % 7) - 3
-                    ys.append(blk)
-                cb = [0] * 64
-                cb[0] = (did % 41) - 20
-                cr = [0] * 64
-                cr[0] = (did % 37) - 18
-                out.append(
-                    multimodal.encode_jpeg_ycbcr420_coeffs(
-                        16, 16, ys, cb_blocks=[cb], cr_blocks=[cr]
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].to_numpy(), "content": out}
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        _make, schema="doc_id long, content binary"
-    )
+    return _doc_blobs(docs, _jpeg)
 
 
 def q234_jpeg_rgb(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    return multimodal.jpeg_rgb_stats(_synth_jpeg_color(docs))
+    return multimodal.jpeg_rgb_stats(
+        _synth_jpeg_color(docs, multimodal.encode_jpeg_ycbcr420_coeffs)
+    )
 
 
 def _jpeg_rgb_oracle_sql() -> str:
@@ -11715,58 +11698,10 @@ Q239_SQL = _token_f1_oracle_sql()
 # ---------------------------------------------------------------------------
 
 
-def _synth_jpeg_prog(docs: DataFrame) -> DataFrame:
-    """(doc_id, content): q217's deterministic coefficients, SOF2."""
-
-    def _make(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                blk = [0] * 64
-                blk[0] = (did % 201) - 100
-                blk[1] = (did % 7) - 3
-                blk[8] = (did % 5) - 2
-                out.append(
-                    multimodal.encode_jpeg_progressive_gray_coeffs(
-                        8, 8, [blk]
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].to_numpy(), "content": out}
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        _make, schema="doc_id long, content binary"
-    )
-
-
 def q240_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    decoded = multimodal.decode_image(
-        _synth_jpeg_prog(docs), mode="real", thumb=8
-    )
-    px = F.col("pixels")
-    return decoded.select(
-        "doc_id",
-        "width",
-        "height",
-        F.aggregate(px, F.lit(0).cast("long"), lambda a, v: a + v).alias(
-            "px_sum"
-        ),
-        F.array_min(px).cast("long").alias("px_min"),
-        F.array_max(px).cast("long").alias("px_max"),
-        F.aggregate(
-            F.zip_with(
-                px,
-                F.sequence(F.lit(0), F.lit(63)),
-                lambda v, k: v * (k % 8),
-            ),
-            F.lit(0).cast("long"),
-            lambda a, v: a + v,
-        ).alias("px_xmoment"),
+    return _jpeg_pixel_stats(
+        _synth_jpeg(docs, multimodal.encode_jpeg_progressive_gray_coeffs)
     )
 
 
@@ -11785,44 +11720,13 @@ Q240_SQL = _jpeg_oracle_sql()  # identical closed form to q217 — by design
 # ---------------------------------------------------------------------------
 
 
-def _synth_jpeg_color_prog(docs: DataFrame) -> DataFrame:
-    """(doc_id, content): q234's color coefficients, SOF2."""
-
-    def _make(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                ys = []
-                for j in range(4):
-                    blk = [0] * 64
-                    blk[0] = ((did + 53 * j) % 201) - 100
-                    if j == 0:
-                        blk[1] = (did % 7) - 3
-                    ys.append(blk)
-                cb = [0] * 64
-                cb[0] = (did % 41) - 20
-                cr = [0] * 64
-                cr[0] = (did % 37) - 18
-                out.append(
-                    multimodal.encode_jpeg_progressive_ycbcr420_coeffs(
-                        16, 16, ys, cb_blocks=[cb], cr_blocks=[cr]
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].to_numpy(), "content": out}
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        _make, schema="doc_id long, content binary"
-    )
-
-
 def q241_jpeg_progressive_rgb(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    return multimodal.jpeg_rgb_stats(_synth_jpeg_color_prog(docs))
+    return multimodal.jpeg_rgb_stats(
+        _synth_jpeg_color(
+            docs, multimodal.encode_jpeg_progressive_ycbcr420_coeffs
+        )
+    )
 
 
 Q241_SQL = _jpeg_rgb_oracle_sql()  # q234's closed form — by design
@@ -12162,42 +12066,31 @@ Q245_SQL = _planted_minhash_oracle_sql()
 def _synth_mp4_sps(docs: DataFrame) -> DataFrame:
     """(doc_id, content): avc1 fixture with doc-chosen SPS per doc."""
 
-    def _make(batches):
-        import pandas as pd
+    def _mp4(did):
+        sps = dict(
+            profile_idc=[66, 77, 100][did % 3],
+            level_idc=10 * (1 + did % 5),
+            width_mbs=2 + did % 9,
+            height_units=2 + did % 7,
+            crop=(0, did % 2, 0, 1 if did % 3 == 0 else 0),
+            max_num_ref_frames=1 + did % 4,
+            log2_max_frame_num=4 + did % 3,
+            pic_order_cnt_type=0 if did % 2 == 0 else 2,
+        )
+        track = {
+            "handler": "vide",
+            "codec": "avc1",
+            "timescale": 600,
+            "sample_delta": 100,
+            "sizes": [20 + did % 11],
+            "sync": [1],
+            "width": 32,
+            "height": 24,
+            "sps": sps,
+        }
+        return video.encode_mp4_fixture([track])
 
-        for pdf in batches:
-            out = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                sps = dict(
-                    profile_idc=[66, 77, 100][did % 3],
-                    level_idc=10 * (1 + did % 5),
-                    width_mbs=2 + did % 9,
-                    height_units=2 + did % 7,
-                    crop=(0, did % 2, 0, 1 if did % 3 == 0 else 0),
-                    max_num_ref_frames=1 + did % 4,
-                    log2_max_frame_num=4 + did % 3,
-                    pic_order_cnt_type=0 if did % 2 == 0 else 2,
-                )
-                track = {
-                    "handler": "vide",
-                    "codec": "avc1",
-                    "timescale": 600,
-                    "sample_delta": 100,
-                    "sizes": [20 + did % 11],
-                    "sync": [1],
-                    "width": 32,
-                    "height": 24,
-                    "sps": sps,
-                }
-                out.append(video.encode_mp4_fixture([track]))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].to_numpy(), "content": out}
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        _make, schema="doc_id long, content binary"
-    )
+    return _doc_blobs(docs, _mp4)
 
 
 def q246_mp4_sps_params(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12240,34 +12133,21 @@ FROM documents
 
 
 def _synth_flac(docs: DataFrame) -> DataFrame:
-    def _make(batches):
-        import hashlib
+    import hashlib
 
-        import pandas as pd
+    def _flac(did):
+        return audio.encode_flac_fixture(
+            sample_rate=[44100, 48000, 96000, 22050][did % 4],
+            channels=1 + did % 2,
+            bits_per_sample=16 if did % 2 == 0 else 24,
+            total_samples=44100 + did * 7,
+            min_frame=1000 + did % 50,
+            max_frame=5000 + did % 100,
+            md5=hashlib.md5(str(did).encode()).digest(),
+            padding=(did % 32) if did % 3 == 0 else None,
+        )
 
-        for pdf in batches:
-            out = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                out.append(
-                    audio.encode_flac_fixture(
-                        sample_rate=[44100, 48000, 96000, 22050][did % 4],
-                        channels=1 + did % 2,
-                        bits_per_sample=16 if did % 2 == 0 else 24,
-                        total_samples=44100 + did * 7,
-                        min_frame=1000 + did % 50,
-                        max_frame=5000 + did % 100,
-                        md5=hashlib.md5(str(did).encode()).digest(),
-                        padding=(did % 32) if did % 3 == 0 else None,
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].to_numpy(), "content": out}
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        _make, schema="doc_id long, content binary"
-    )
+    return _doc_blobs(docs, _flac)
 
 
 def q249_flac_streaminfo(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12309,30 +12189,17 @@ FROM documents
 
 
 def _synth_id3(docs: DataFrame) -> DataFrame:
-    def _make(batches):
-        import pandas as pd
+    def _id3(did):
+        frames = {
+            "TIT2": f"title {did}",
+            "TPE1": f"artist {did % 7}",
+            "TRCK": str(1 + did % 20),
+        }
+        if did % 5 != 0:
+            frames["TALB"] = f"album {did % 13}"
+        return audio.encode_id3v2_fixture(frames, padding=did % 11)
 
-        for pdf in batches:
-            out = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                frames = {
-                    "TIT2": f"title {did}",
-                    "TPE1": f"artist {did % 7}",
-                    "TRCK": str(1 + did % 20),
-                }
-                if did % 5 != 0:
-                    frames["TALB"] = f"album {did % 13}"
-                out.append(
-                    audio.encode_id3v2_fixture(frames, padding=did % 11)
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].to_numpy(), "content": out}
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        _make, schema="doc_id long, content binary"
-    )
+    return _doc_blobs(docs, _id3)
 
 
 def q250_id3_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12381,28 +12248,17 @@ FROM documents
 def _synth_h264_coeffs(docs: DataFrame) -> DataFrame:
     """(doc_id, content): single-MB IDR MP4 from chosen levels."""
 
-    def _make(batches):
-        import pandas as pd
+    def _mp4(did):
+        mb = {
+            "mode": 2,
+            "luma_dc": {0: did % 39 - 19, 1: did % 11 - 5},
+            "luma_ac": {0: {0: did % 9 - 4}},
+            "cb_dc": {0: did % 21 - 10},
+            "cr_dc": {0: did % 17 - 8},
+        }
+        return h264.encode_avc_mp4_fixture(1, 1, [mb], qp=28)
 
-        for pdf in batches:
-            out = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                mb = {
-                    "mode": 2,
-                    "luma_dc": {0: did % 39 - 19, 1: did % 11 - 5},
-                    "luma_ac": {0: {0: did % 9 - 4}},
-                    "cb_dc": {0: did % 21 - 10},
-                    "cr_dc": {0: did % 17 - 8},
-                }
-                out.append(h264.encode_avc_mp4_fixture(1, 1, [mb], qp=28))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].to_numpy(), "content": out}
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        _make, schema="doc_id long, content binary"
-    )
+    return _doc_blobs(docs, _mp4)
 
 
 def q251_h264_idr_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12449,44 +12305,28 @@ FROM w
 """
 
 
-def _synth_h264_chain(docs: DataFrame) -> DataFrame:
-    """(doc_id, content): 2x2-MB IDR MP4 — pred chain + I_PCM."""
+def _synth_h264_chain(docs: DataFrame, groups: int = 0) -> DataFrame:
+    """(doc_id, content): 2x2-MB IDR MP4 — pred chain + I_PCM — keyed
+    on doc_id, or on doc_id % ``groups`` when set (every doc of one
+    group then carries a byte-identical stream)."""
 
-    def _make(batches):
-        import pandas as pd
+    def _mp4(did):
+        g = did % groups if groups else did
+        mbs = [
+            {"mode": 2, "luma_dc": {0: 7 + g % 5}},
+            {"mode": 1, "chroma_mode": 1, "luma_dc": {0: g % 7 - 3}},
+            {"mode": 0, "chroma_mode": 2, "luma_dc": {0: g % 9 - 4}},
+            {
+                "pcm": {
+                    "y": [(g * 7 + 13 * j) % 256 for j in range(256)],
+                    "cb": [(g * 5 + 11 * j) % 256 for j in range(64)],
+                    "cr": [(g * 3 + 17 * j) % 256 for j in range(64)],
+                }
+            },
+        ]
+        return h264.encode_avc_mp4_fixture(2, 2, mbs, qp=28)
 
-        for pdf in batches:
-            out = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                mbs = [
-                    {"mode": 2, "luma_dc": {0: 7 + did % 5}},
-                    {
-                        "mode": 1,
-                        "chroma_mode": 1,
-                        "luma_dc": {0: did % 7 - 3},
-                    },
-                    {
-                        "mode": 0,
-                        "chroma_mode": 2,
-                        "luma_dc": {0: did % 9 - 4},
-                    },
-                    {
-                        "pcm": {
-                            "y": [(did * 7 + 13 * j) % 256 for j in range(256)],
-                            "cb": [(did * 5 + 11 * j) % 256 for j in range(64)],
-                            "cr": [(did * 3 + 17 * j) % 256 for j in range(64)],
-                        }
-                    },
-                ]
-                out.append(h264.encode_avc_mp4_fixture(2, 2, mbs, qp=28))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].to_numpy(), "content": out}
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        _make, schema="doc_id long, content binary"
-    )
+    return _doc_blobs(docs, _mp4)
 
 
 def q252_h264_pred_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12543,37 +12383,25 @@ FROM s
 
 def _synth_h264_i4x4(docs: DataFrame) -> DataFrame:
     """(doc_id, content): single-MB I_4x4 IDR MP4 from chosen levels."""
+    modes = []
+    for b in range(16):
+        x, y = h264._BLK_OFF[b]
+        c, r = x >> 2, y >> 2
+        modes.append(2 if c == 0 else (1 if r == 0 else 0))
 
-    def _make(batches):
-        import pandas as pd
+    def _mp4(did):
+        lvl = did % 9 - 4
+        mb = {
+            "i4x4": {
+                "modes": modes,
+                "luma": {b: {0: lvl} for b in range(16)},
+            },
+            "cb_dc": {0: did % 21 - 10},
+            "cr_dc": {0: did % 17 - 8},
+        }
+        return h264.encode_avc_mp4_fixture(1, 1, [mb], qp=28)
 
-        blk_off = h264._BLK_OFF
-        modes = []
-        for b in range(16):
-            x, y = blk_off[b]
-            c, r = x >> 2, y >> 2
-            modes.append(2 if c == 0 else (1 if r == 0 else 0))
-        for pdf in batches:
-            out = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                lvl = did % 9 - 4
-                mb = {
-                    "i4x4": {
-                        "modes": modes,
-                        "luma": {b: {0: lvl} for b in range(16)},
-                    },
-                    "cb_dc": {0: did % 21 - 10},
-                    "cr_dc": {0: did % 17 - 8},
-                }
-                out.append(h264.encode_avc_mp4_fixture(1, 1, [mb], qp=28))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].to_numpy(), "content": out}
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        _make, schema="doc_id long, content binary"
-    )
+    return _doc_blobs(docs, _mp4)
 
 
 def q253_h264_i4x4(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12623,55 +12451,42 @@ FROM s
 
 
 def _synth_mp4_vui(docs: DataFrame) -> DataFrame:
-    def _make(batches):
-        import pandas as pd
+    def _mp4(did):
+        vui: dict = {}
+        m4, m3, m5 = did % 4, did % 3, did % 5
+        if m4 == 0:
+            vui["sar"] = (1 + did % 50, 1 + did % 30)
+        elif m4 != 2:
+            vui["sar"] = 1 + did % 16
+        if m3 != 2:
+            vui["num_units_in_tick"] = 1000 + did % 7
+            vui["time_scale"] = 24000 + 1000 * (did % 5)
+            vui["fixed_frame_rate"] = did % 2
+        if m5 <= 3:
+            vui["video_full_range"] = did % 2
+        if m5 <= 1:
+            vui["colour_primaries"] = 1 + did % 9
+        return video.encode_mp4_fixture(
+            [
+                {
+                    "handler": "vide",
+                    "codec": "avc1",
+                    "timescale": 600,
+                    "sample_delta": 100,
+                    "sizes": [8],
+                    "sync": [1],
+                    "width": 64,
+                    "height": 48,
+                    "sps": {
+                        "width_mbs": 4,
+                        "height_units": 3,
+                        "vui": vui or None,
+                    },
+                }
+            ]
+        )
 
-        for pdf in batches:
-            out = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                vui: dict = {}
-                m4, m3, m5 = did % 4, did % 3, did % 5
-                if m4 == 0:
-                    vui["sar"] = (1 + did % 50, 1 + did % 30)
-                elif m4 != 2:
-                    vui["sar"] = 1 + did % 16
-                if m3 != 2:
-                    vui["num_units_in_tick"] = 1000 + did % 7
-                    vui["time_scale"] = 24000 + 1000 * (did % 5)
-                    vui["fixed_frame_rate"] = did % 2
-                if m5 <= 3:
-                    vui["video_full_range"] = did % 2
-                if m5 <= 1:
-                    vui["colour_primaries"] = 1 + did % 9
-                out.append(
-                    video.encode_mp4_fixture(
-                        [
-                            {
-                                "handler": "vide",
-                                "codec": "avc1",
-                                "timescale": 600,
-                                "sample_delta": 100,
-                                "sizes": [8],
-                                "sync": [1],
-                                "width": 64,
-                                "height": 48,
-                                "sps": {
-                                    "width_mbs": 4,
-                                    "height_units": 3,
-                                    "vui": vui or None,
-                                },
-                            }
-                        ]
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].to_numpy(), "content": out}
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        _make, schema="doc_id long, content binary"
-    )
+    return _doc_blobs(docs, _mp4)
 
 
 def q254_mp4_vui(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12722,56 +12537,35 @@ FROM p
 
 
 def _synth_h264_slices(docs: DataFrame) -> DataFrame:
-    def _make(batches):
-        import pandas as pd
+    def _mp4(did):
+        mbs = [
+            {"mode": 2, "luma_dc": {0: 7 + did % 5}},
+            {"mode": 1, "chroma_mode": 1, "luma_dc": {0: did % 7 - 3}},
+            {"mode": 2, "luma_dc": {0: did % 9 - 4}},
+            {"mode": 1, "chroma_mode": 1, "luma_dc": {0: did % 11 - 5}},
+        ]
+        sample, sps_nal, pps_nal = h264.encode_idr_access_unit(
+            2, 2, mbs, qp=28, slices=[2, 2]
+        )
+        return video.encode_mp4_fixture(
+            [
+                {
+                    "handler": "vide",
+                    "codec": "avc1",
+                    "timescale": 12800,
+                    "sample_delta": 512,
+                    "sizes": [len(sample)],
+                    "sync": [1],
+                    "width": 32,
+                    "height": 32,
+                    "sps": sps_nal,
+                    "pps_nal": pps_nal,
+                    "payloads": [sample],
+                }
+            ]
+        )
 
-        for pdf in batches:
-            out = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                mbs = [
-                    {"mode": 2, "luma_dc": {0: 7 + did % 5}},
-                    {
-                        "mode": 1,
-                        "chroma_mode": 1,
-                        "luma_dc": {0: did % 7 - 3},
-                    },
-                    {"mode": 2, "luma_dc": {0: did % 9 - 4}},
-                    {
-                        "mode": 1,
-                        "chroma_mode": 1,
-                        "luma_dc": {0: did % 11 - 5},
-                    },
-                ]
-                sample, sps_nal, pps_nal = h264.encode_idr_access_unit(
-                    2, 2, mbs, qp=28, slices=[2, 2]
-                )
-                out.append(
-                    video.encode_mp4_fixture(
-                        [
-                            {
-                                "handler": "vide",
-                                "codec": "avc1",
-                                "timescale": 12800,
-                                "sample_delta": 512,
-                                "sizes": [len(sample)],
-                                "sync": [1],
-                                "width": 32,
-                                "height": 32,
-                                "sps": sps_nal,
-                                "pps_nal": pps_nal,
-                                "payloads": [sample],
-                            }
-                        ]
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].to_numpy(), "content": out}
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        _make, schema="doc_id long, content binary"
-    )
+    return _doc_blobs(docs, _mp4)
 
 
 def q255_h264_multislice(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12809,54 +12603,17 @@ FROM s
 # (h264.keyframe_luma_thumbs): the codec→curation bridge — MP4 demux →
 # IDR intra decode → 8×8 luma thumbnail → group-by-raster exact dedup,
 # i.e. the q12 pattern running on pixels the engine itself decoded.
-# Fixtures are keyed on g = doc_id % 37 (docs sharing g byte-identical;
-# distinct g provably distinct: the flat values separate g mod
-# lcm(5,7,9)=315 and the I_PCM bytes mod 256, both > 37), so the
-# oracle replays the grouping arithmetically without touching pixels.
+# Fixtures are q252's pred-chain streams keyed on g = doc_id % 37 (docs
+# sharing g byte-identical; distinct g provably distinct: the flat
+# values separate g mod lcm(5,7,9)=315 and the I_PCM bytes mod 256,
+# both > 37), so the oracle replays the grouping arithmetically
+# without touching pixels.
 # ---------------------------------------------------------------------------
-
-
-def _synth_h264_groups(docs: DataFrame) -> DataFrame:
-    def _make(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for did in pdf["doc_id"]:
-                g = int(did) % 37
-                mbs = [
-                    {"mode": 2, "luma_dc": {0: 7 + g % 5}},
-                    {
-                        "mode": 1,
-                        "chroma_mode": 1,
-                        "luma_dc": {0: g % 7 - 3},
-                    },
-                    {
-                        "mode": 0,
-                        "chroma_mode": 2,
-                        "luma_dc": {0: g % 9 - 4},
-                    },
-                    {
-                        "pcm": {
-                            "y": [(g * 7 + 13 * j) % 256 for j in range(256)],
-                            "cb": [(g * 5 + 11 * j) % 256 for j in range(64)],
-                            "cr": [(g * 3 + 17 * j) % 256 for j in range(64)],
-                        }
-                    },
-                ]
-                out.append(h264.encode_avc_mp4_fixture(2, 2, mbs, qp=28))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].to_numpy(), "content": out}
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        _make, schema="doc_id long, content binary"
-    )
 
 
 def q256_keyframe_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    thumbs = h264.keyframe_luma_thumbs(_synth_h264_groups(docs))
+    thumbs = h264.keyframe_luma_thumbs(_synth_h264_chain(docs, groups=37))
     return (
         thumbs.groupBy("pixels")
         .agg(
@@ -12891,42 +12648,28 @@ FROM documents GROUP BY doc_id % 37
 def _synth_pdf(docs: DataFrame) -> DataFrame:
     from occupation_wage_etl_spark.sources import pdf as pdfmod
 
-    def _make(batches):
-        import pandas as pd
+    def _pdf(did):
+        pages = [
+            [
+                f"doc {did} pg {p + 1} ln {k} (ok)"
+                for k in range(1 + (did + p) % 4)
+            ]
+            for p in range(1 + did % 3)
+        ]
+        return pdfmod.encode_pdf_fixture(
+            pages,
+            # rotate stream filters: plain / Flate / LZW / ASCII85 /
+            # ASCIIHex — every decode path runs under the oracle gate
+            # (text is filter-invariant); doc_id%3==0 docs use the PDF
+            # 1.5 ObjStm + XRef-stream layout
+            compress_page=lambda p: (
+                [None, "flate", "lzw", "a85", "ahx"][(did + p) % 5]
+            ),
+            use_tj_array_every=2,
+            use_objstm=(did % 3 == 0),
+        )
 
-        for pdf_batch in batches:
-            out = []
-            for did in pdf_batch["doc_id"]:
-                did = int(did)
-                pages = [
-                    [
-                        f"doc {did} pg {p + 1} ln {k} (ok)"
-                        for k in range(1 + (did + p) % 4)
-                    ]
-                    for p in range(1 + did % 3)
-                ]
-                out.append(
-                    pdfmod.encode_pdf_fixture(
-                        pages,
-                        # rotate stream filters: plain / Flate / LZW /
-                        # ASCII85 / ASCIIHex — every decode path runs
-                        # under the oracle gate (text is
-                        # filter-invariant); doc_id%3==0 docs use the
-                        # PDF 1.5 ObjStm + XRef-stream layout
-                        compress_page=lambda p, d=did: (
-                            [None, "flate", "lzw", "a85", "ahx"][(d + p) % 5]
-                        ),
-                        use_tj_array_every=2,
-                        use_objstm=(did % 3 == 0),
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf_batch["doc_id"].to_numpy(), "content": out}
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        _make, schema="doc_id long, content binary"
-    )
+    return _doc_blobs(docs, _pdf)
 
 
 def q257_pdf_text(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12958,29 +12701,15 @@ FROM t
 def _synth_pdf_groups(docs: DataFrame) -> DataFrame:
     from occupation_wage_etl_spark.sources import pdf as pdfmod
 
-    def _make(batches):
-        import pandas as pd
+    def _pdf(did):
+        g = did % 23
+        pages = [
+            [f"group {g} page {p} line {k}" for k in range(3)]
+            for p in range(1 + g % 2)
+        ]
+        return pdfmod.encode_pdf_fixture(pages, compress_page=lambda p: p == 0)
 
-        for pdf_batch in batches:
-            out = []
-            for did in pdf_batch["doc_id"]:
-                g = int(did) % 23
-                pages = [
-                    [f"group {g} page {p} line {k}" for k in range(3)]
-                    for p in range(1 + g % 2)
-                ]
-                out.append(
-                    pdfmod.encode_pdf_fixture(
-                        pages, compress_page=lambda p: p == 0
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf_batch["doc_id"].to_numpy(), "content": out}
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        _make, schema="doc_id long, content binary"
-    )
+    return _doc_blobs(docs, _pdf)
 
 
 def q258_pdf_dup_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13021,29 +12750,16 @@ FROM e GROUP BY g, pg
 def _synth_docx(docs: DataFrame) -> DataFrame:
     from occupation_wage_etl_spark.sources import docx as docxmod
 
-    def _make(batches):
-        import pandas as pd
+    def _docx(did):
+        paras = [
+            f"doc {did} para {k}\tA&B <x{(did + k) % 7}>"
+            for k in range(2 + did % 3)
+        ]
+        return docxmod.encode_docx_fixture(
+            paras, runs_per_paragraph=1 + did % 4
+        )
 
-        for batch in batches:
-            out = []
-            for did in batch["doc_id"]:
-                did = int(did)
-                paras = [
-                    f"doc {did} para {k}\tA&B <x{(did + k) % 7}>"
-                    for k in range(2 + did % 3)
-                ]
-                out.append(
-                    docxmod.encode_docx_fixture(
-                        paras, runs_per_paragraph=1 + did % 4
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].to_numpy(), "content": out}
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        _make, schema="doc_id long, content binary"
-    )
+    return _doc_blobs(docs, _docx)
 
 
 def q259_docx_text(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13124,45 +12840,29 @@ SELECT DISTINCT id_a, id_b FROM (
 def _synth_audio(docs: DataFrame) -> DataFrame:
     """(doc_id, content): deterministic MP3/ADTS fixture per doc."""
 
-    def _make(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                if did % 2 == 0:
-                    n = 3 + did % 6
-                    if did % 5 == 0:
-                        bis = [1 + did % 14] * n
-                    else:
-                        bis = [1 + (did + i) % 14 for i in range(n)]
-                    out.append(
-                        audio.encode_mp3_fixture(
-                            bis,
-                            sr_idx=did % 3,
-                            paddings=[(did + i) % 2 for i in range(n)],
-                            mode=did % 4,
-                            id3_bytes=did % 9,
-                        )
-                    )
-                else:
-                    n = 2 + did % 5
-                    out.append(
-                        audio.encode_adts_fixture(
-                            [20 + ((did + 3 * i) % 30) for i in range(n)],
-                            profile=did % 4,
-                            sfi=3 + did % 5,
-                            channels=1 + did % 2,
-                        )
-                    )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].to_numpy(), "content": out}
+    def _audio(did):
+        if did % 2 == 0:
+            n = 3 + did % 6
+            if did % 5 == 0:
+                bis = [1 + did % 14] * n
+            else:
+                bis = [1 + (did + i) % 14 for i in range(n)]
+            return audio.encode_mp3_fixture(
+                bis,
+                sr_idx=did % 3,
+                paddings=[(did + i) % 2 for i in range(n)],
+                mode=did % 4,
+                id3_bytes=did % 9,
             )
+        n = 2 + did % 5
+        return audio.encode_adts_fixture(
+            [20 + ((did + 3 * i) % 30) for i in range(n)],
+            profile=did % 4,
+            sfi=3 + did % 5,
+            channels=1 + did % 2,
+        )
 
-    return docs.select("doc_id").mapInPandas(
-        _make, schema="doc_id long, content binary"
-    )
+    return _doc_blobs(docs, _audio)
 
 
 def q247_audio_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13234,51 +12934,32 @@ FROM af
 def _synth_warc(docs: DataFrame) -> DataFrame:
     from occupation_wage_etl_spark.sources import warc as warcmod
 
-    def _make(batches):
-        import pandas as pd
+    def _warc(did):
+        recs = [
+            {
+                "type": "response",
+                "uri": f"http://site{did % 7}.example/{did}/{r}",
+                "status": 404 if (did + r) % 4 == 0 else 200,
+                "http_content_type": "text/html",
+                "payload": (
+                    f"payload doc {did} rec {r} " + "x" * ((did + r) % 17)
+                ).encode(),
+                # every third response rides chunked transfer-encoding,
+                # and Content-Encoding rotates identity/gzip/deflate/
+                # raw-deflate on an independent stride: payload_len
+                # gates the fully DECODED length, so the dechunker AND
+                # the RFC 9110 content-decoder are under the oracle
+                # (incl. the chunked+gzip composition)
+                "chunked": (did + r) % 3 == 0,
+                "content_encoding": (
+                    None, "gzip", "deflate", "deflate-raw"
+                )[(did + 2 * r) % 4],
+            }
+            for r in range(1 + did % 3)
+        ]
+        return warcmod.encode_warc_fixture(recs, gzip_records=(did % 2 == 0))
 
-        for batch in batches:
-            out = []
-            for did in batch["doc_id"]:
-                did = int(did)
-                recs = [
-                    {
-                        "type": "response",
-                        "uri": (
-                            f"http://site{did % 7}.example/{did}/{r}"
-                        ),
-                        "status": 404 if (did + r) % 4 == 0 else 200,
-                        "http_content_type": "text/html",
-                        "payload": (
-                            f"payload doc {did} rec {r} "
-                            + "x" * ((did + r) % 17)
-                        ).encode(),
-                        # every third response rides chunked
-                        # transfer-encoding, and Content-Encoding
-                        # rotates identity/gzip/deflate/raw-deflate on
-                        # an independent stride: payload_len gates the
-                        # fully DECODED length, so the dechunker AND
-                        # the RFC 9110 content-decoder are under the
-                        # oracle (incl. the chunked+gzip composition)
-                        "chunked": (did + r) % 3 == 0,
-                        "content_encoding": (
-                            None, "gzip", "deflate", "deflate-raw"
-                        )[(did + 2 * r) % 4],
-                    }
-                    for r in range(1 + did % 3)
-                ]
-                out.append(
-                    warcmod.encode_warc_fixture(
-                        recs, gzip_records=(did % 2 == 0)
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].to_numpy(), "content": out}
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        _make, schema="doc_id long, content binary"
-    )
+    return _doc_blobs(docs, _warc)
 
 
 def q260_warc_records(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13318,38 +12999,23 @@ SELECT * FROM info UNION ALL SELECT * FROM r2
 def _synth_wet(docs: DataFrame) -> DataFrame:
     from occupation_wage_etl_spark.sources import warc as warcmod
 
-    def _make(batches):
-        import pandas as pd
+    def _wet(did):
+        recs = [
+            {
+                "type": "conversion",
+                "uri": f"http://w{did % 5}.example/{did}/{r}",
+                "text": "\n".join(
+                    f"doc {did} seg {r} ln {j}"
+                    for j in range(1 + (did + r) % 3)
+                ),
+            }
+            for r in range(1 + did % 4)
+        ]
+        return warcmod.encode_warc_fixture(
+            recs, gzip_records=(did % 3 == 0), warcinfo=False
+        )
 
-        for batch in batches:
-            out = []
-            for did in batch["doc_id"]:
-                did = int(did)
-                recs = [
-                    {
-                        "type": "conversion",
-                        "uri": f"http://w{did % 5}.example/{did}/{r}",
-                        "text": "\n".join(
-                            f"doc {did} seg {r} ln {j}"
-                            for j in range(1 + (did + r) % 3)
-                        ),
-                    }
-                    for r in range(1 + did % 4)
-                ]
-                out.append(
-                    warcmod.encode_warc_fixture(
-                        recs,
-                        gzip_records=(did % 3 == 0),
-                        warcinfo=False,
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].to_numpy(), "content": out}
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        _make, schema="doc_id long, content binary"
-    )
+    return _doc_blobs(docs, _wet)
 
 
 def q261_wet_text(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13584,46 +13250,27 @@ GROUP BY doc_id % 19
 def _synth_charset_bytes(docs: DataFrame) -> DataFrame:
     import codecs
 
-    def _make(batches):
-        import pandas as pd
-
-        for batch in batches:
-            out = []
-            for did in batch["doc_id"]:
-                did = int(did)
-                m = did % 7
-                if m == 0:
-                    raw = f"doc {did} plain ascii".encode("utf-8")
-                elif m == 1:
-                    raw = codecs.BOM_UTF8 + (
-                        f"doc {did} café ünïcode".encode()
-                    )
-                elif m == 2:
-                    raw = codecs.BOM_UTF16_LE + (
-                        f"doc {did} wide le".encode("utf-16-le")
-                    )
-                elif m == 3:
-                    raw = codecs.BOM_UTF16_BE + (
-                        f"doc {did} wide be".encode("utf-16-be")
-                    )
-                elif m == 4:
-                    raw = f"café {did} à la carte".encode(
-                        "latin-1"
-                    )
-                elif m == 5:
-                    raw = f"doc {did} bare wide".encode("utf-16-le")
-                else:
-                    raw = f"doc {did} “smart” price €9".encode(
-                        "cp1252"
-                    )
-                out.append(raw)
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].to_numpy(), "content": out}
+    def _raw(did):
+        m = did % 7
+        if m == 0:
+            return f"doc {did} plain ascii".encode("utf-8")
+        if m == 1:
+            return codecs.BOM_UTF8 + f"doc {did} café ünïcode".encode()
+        if m == 2:
+            return codecs.BOM_UTF16_LE + (
+                f"doc {did} wide le".encode("utf-16-le")
             )
+        if m == 3:
+            return codecs.BOM_UTF16_BE + (
+                f"doc {did} wide be".encode("utf-16-be")
+            )
+        if m == 4:
+            return f"café {did} à la carte".encode("latin-1")
+        if m == 5:
+            return f"doc {did} bare wide".encode("utf-16-le")
+        return f"doc {did} “smart” price €9".encode("cp1252")
 
-    return docs.select("doc_id").mapInPandas(
-        _make, schema="doc_id long, content binary"
-    )
+    return _doc_blobs(docs, _raw)
 
 
 def q265_charset_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13683,38 +13330,23 @@ FROM t
 def _synth_pdf_cid(docs: DataFrame) -> DataFrame:
     from occupation_wage_etl_spark.sources import pdf as pdfmod
 
-    def _make(batches):
-        import pandas as pd
+    def _pdf(did):
+        pages = [
+            [
+                f"doc {did} pg {p + 1} ln {k} (ok)"
+                for k in range(1 + (did + p) % 4)
+            ]
+            for p in range(1 + did % 3)
+        ]
+        return pdfmod.encode_pdf_fixture(
+            pages,
+            cid_font=True,
+            compress_page=lambda p: [None, "flate"][(did + p) % 2],
+            use_tj_array_every=3,
+            use_objstm=(did % 3 == 1),
+        )
 
-        for pdf_batch in batches:
-            out = []
-            for did in pdf_batch["doc_id"]:
-                did = int(did)
-                pages = [
-                    [
-                        f"doc {did} pg {p + 1} ln {k} (ok)"
-                        for k in range(1 + (did + p) % 4)
-                    ]
-                    for p in range(1 + did % 3)
-                ]
-                out.append(
-                    pdfmod.encode_pdf_fixture(
-                        pages,
-                        cid_font=True,
-                        compress_page=lambda p, d=did: (
-                            [None, "flate"][(d + p) % 2]
-                        ),
-                        use_tj_array_every=3,
-                        use_objstm=(did % 3 == 1),
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf_batch["doc_id"].to_numpy(), "content": out}
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        _make, schema="doc_id long, content binary"
-    )
+    return _doc_blobs(docs, _pdf)
 
 
 def q266_pdf_cid_text(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13737,41 +13369,21 @@ def q266_pdf_cid_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _synth_docx_parts(docs: DataFrame) -> DataFrame:
     from occupation_wage_etl_spark.sources import docx as docxmod
 
-    def _make(batches):
-        import pandas as pd
+    def _docx(did):
+        paras = [
+            f"doc {did} para {k}\tA&B <x{(did + k) % 7}>"
+            for k in range(2 + did % 3)
+        ]
+        return docxmod.encode_docx_fixture(
+            paras,
+            runs_per_paragraph=1 + did % 4,
+            headers=[[f"doc {did} header"]],
+            footers=[[f"doc {did} footer"]],
+            footnotes=[[f"doc {did} note {n}"] for n in range(1 + did % 2)],
+            endnotes=[[f"doc {did} endnote"]] if did % 2 == 0 else None,
+        )
 
-        for batch in batches:
-            out = []
-            for did in batch["doc_id"]:
-                did = int(did)
-                paras = [
-                    f"doc {did} para {k}\tA&B <x{(did + k) % 7}>"
-                    for k in range(2 + did % 3)
-                ]
-                out.append(
-                    docxmod.encode_docx_fixture(
-                        paras,
-                        runs_per_paragraph=1 + did % 4,
-                        headers=[[f"doc {did} header"]],
-                        footers=[[f"doc {did} footer"]],
-                        footnotes=[
-                            [f"doc {did} note {n}"]
-                            for n in range(1 + did % 2)
-                        ],
-                        endnotes=(
-                            [[f"doc {did} endnote"]]
-                            if did % 2 == 0
-                            else None
-                        ),
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].to_numpy(), "content": out}
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        _make, schema="doc_id long, content binary"
-    )
+    return _doc_blobs(docs, _docx)
 
 
 def q267_docx_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13840,52 +13452,37 @@ def _synth_web_archives(docs: DataFrame) -> DataFrame:
 
     from occupation_wage_etl_spark.sources import warc as warcmod
 
-    def _make(batches):
-        import pandas as pd
+    def _warc(did):
+        g = did % 19
+        paras = "".join(f"<p>group {g} café para {k}</p>" for k in range(3))
+        html = (
+            "<html><head><title>t</title></head><body>"
+            f"<nav><a href='/'>home {did}</a></nav>"
+            f"<article>{paras}</article>"
+            f"<footer><p>(c) {did} corp</p></footer>"
+            "</body></html>"
+        )
+        m = did % 3
+        if m == 0:
+            raw = html.encode("utf-8")
+        elif m == 1:
+            raw = codecs.BOM_UTF8 + html.encode("utf-8")
+        else:
+            raw = html.encode("latin-1")
+        return warcmod.encode_warc_fixture(
+            [
+                {
+                    "type": "response",
+                    "uri": f"http://g{g}.example/{did}",
+                    "status": 200,
+                    "http_content_type": "text/html",
+                    "payload": raw,
+                }
+            ],
+            gzip_records=(did % 2 == 0),
+        )
 
-        for batch in batches:
-            out = []
-            for did in batch["doc_id"]:
-                did = int(did)
-                g = did % 19
-                paras = "".join(
-                    f"<p>group {g} café para {k}</p>" for k in range(3)
-                )
-                html = (
-                    "<html><head><title>t</title></head><body>"
-                    f"<nav><a href='/'>home {did}</a></nav>"
-                    f"<article>{paras}</article>"
-                    f"<footer><p>(c) {did} corp</p></footer>"
-                    "</body></html>"
-                )
-                m = did % 3
-                if m == 0:
-                    raw = html.encode("utf-8")
-                elif m == 1:
-                    raw = codecs.BOM_UTF8 + html.encode("utf-8")
-                else:
-                    raw = html.encode("latin-1")
-                out.append(
-                    warcmod.encode_warc_fixture(
-                        [
-                            {
-                                "type": "response",
-                                "uri": f"http://g{g}.example/{did}",
-                                "status": 200,
-                                "http_content_type": "text/html",
-                                "payload": raw,
-                            }
-                        ],
-                        gzip_records=(did % 2 == 0),
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].to_numpy(), "content": out}
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        _make, schema="doc_id long, content binary"
-    )
+    return _doc_blobs(docs, _warc)
 
 
 def q268_web_ingest_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -14491,31 +14088,10 @@ SELECT * FROM urls UNION ALL SELECT * FROM idx
 # ---------------------------------------------------------------------------
 
 
-def _synth_png9(docs: DataFrame) -> DataFrame:
-    def _make(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for did in pdf["doc_id"]:
-                px = bytes(
-                    (int(did) * 31 + (k % 9) * 7 + (k // 9) * 13) % 256
-                    for k in range(81)
-                )
-                out.append(multimodal.encode_png_gray(9, 9, px))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].to_numpy(), "content": out}
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        _make, schema="doc_id long, content binary"
-    )
-
-
 def q278_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     decoded = multimodal.decode_image(
-        _synth_png9(docs), mode="real", thumb=9
+        _synth_png(docs, 9), mode="real", thumb=9
     )
     h = multimodal.dhash64(F.col("pixels"), grid=9)
     return decoded.select(
@@ -14571,34 +14147,21 @@ IMG_PLANT_N = 500
 
 
 def _synth_png9_groups(docs: DataFrame) -> DataFrame:
-    def _make(batches):
-        import pandas as pd
+    def _png(did):
+        g, v = did % 29, did % 3
+        # per-group multiplicative step: wrap phase AND stride differ per
+        # group, so cross-group hashes diverge by ~32 bits (no incidental
+        # band collisions at scale)
+        px = bytearray(((g + 1) * k * 41 + g * 17) % 256 for k in range(81))
+        if v == 1:
+            k = 9 * (g % 8) + 4
+            px[k] = (px[k] + 128) % 256
+        elif v == 2:
+            k = 9 * ((g + 3) % 8) + 2
+            px[k] = (px[k] + 64) % 256
+        return multimodal.encode_png_gray(9, 9, bytes(px))
 
-        for pdf in batches:
-            out = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                g, v = did % 29, did % 3
-                # per-group multiplicative step: wrap phase AND stride
-                # differ per group, so cross-group hashes diverge by
-                # ~32 bits (no incidental band collisions at scale)
-                px = bytearray(
-                    ((g + 1) * k * 41 + g * 17) % 256 for k in range(81)
-                )
-                if v == 1:
-                    k = 9 * (g % 8) + 4
-                    px[k] = (px[k] + 128) % 256
-                elif v == 2:
-                    k = 9 * ((g + 3) % 8) + 2
-                    px[k] = (px[k] + 64) % 256
-                out.append(multimodal.encode_png_gray(9, 9, bytes(px)))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].to_numpy(), "content": out}
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        _make, schema="doc_id long, content binary"
-    )
+    return _doc_blobs(docs, _png)
 
 
 def q279_image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -14792,77 +14355,62 @@ FROM documents
 def _synth_declared_charset_warc(docs: DataFrame) -> DataFrame:
     from occupation_wage_etl_spark.sources import warc as warcmod
 
-    def _make(batches):
-        import pandas as pd
+    def _warc(did):
+        m = did % 10
+        if m == 0:
+            raw = f"doc {did} plain".encode("utf-8")
+            ct = "text/html; charset=utf-8"
+        elif m == 1:
+            raw = f"文書 {did} 日本語テスト".encode("shift_jis")
+            ct = "text/html; charset=Shift_JIS"
+        elif m == 2:
+            raw = f"文書 {did} 日本語テスト".encode("shift_jis")
+            ct = "text/plain"
+        elif m == 3:
+            raw = f"doc {did} café “quote”".encode("cp1252")
+            ct = 'text/html; charset="iso-8859-1"'
+        elif m == 4:
+            raw = f"doc {did} café €".encode("cp1252")
+            ct = "text/html; charset=utf-8"  # lying label
+        elif m == 5:
+            raw = (
+                '<html><head><meta charset="windows-1251">'
+                f"</head><body><p>документ {did}</p>"
+                "</body></html>"
+            ).encode("cp1251")
+            ct = "text/html"
+        elif m == 6:
+            raw = f"文档 {did} 中文内容".encode("gbk")
+            ct = "text/html; charset=GB2312"
+        elif m == 7:
+            raw = f"문서 {did} 한국어".encode("euc_kr")
+            ct = "text/html; charset=EUC-KR"
+        elif m == 8:
+            # the classic lying crawl label: UTF-8 bytes served as
+            # iso-8859-1 — content-disproof must win
+            raw = f"doc {did} café “q”".encode("utf-8")
+            ct = "text/html; charset=iso-8859-1"
+        else:
+            # vacuous utf-16 label over ASCII bytes — no NUL pattern
+            # corroborates, so the ladder falls through
+            raw = f"doc {did} utf16 lie".encode("utf-8")
+            ct = "text/html; charset=utf-16"
+        return warcmod.encode_warc_fixture(
+            [
+                {
+                    "type": "response",
+                    "uri": f"http://cs.example/{did}",
+                    "status": 200,
+                    "http_content_type": ct,
+                    "payload": raw,
+                    "content_encoding": "gzip" if did % 2 == 1 else None,
+                }
+            ],
+            gzip_records=(did % 4 == 2),
+            warcinfo=False,
+        )
 
-        for batch in batches:
-            out = []
-            for did in batch["doc_id"]:
-                did = int(did)
-                m = did % 10
-                if m == 0:
-                    raw = f"doc {did} plain".encode("utf-8")
-                    ct = "text/html; charset=utf-8"
-                elif m == 1:
-                    raw = f"文書 {did} 日本語テスト".encode("shift_jis")
-                    ct = "text/html; charset=Shift_JIS"
-                elif m == 2:
-                    raw = f"文書 {did} 日本語テスト".encode("shift_jis")
-                    ct = "text/plain"
-                elif m == 3:
-                    raw = f"doc {did} café “quote”".encode("cp1252")
-                    ct = 'text/html; charset="iso-8859-1"'
-                elif m == 4:
-                    raw = f"doc {did} café €".encode("cp1252")
-                    ct = "text/html; charset=utf-8"  # lying label
-                elif m == 5:
-                    raw = (
-                        '<html><head><meta charset="windows-1251">'
-                        f"</head><body><p>документ {did}</p>"
-                        "</body></html>"
-                    ).encode("cp1251")
-                    ct = "text/html"
-                elif m == 6:
-                    raw = f"文档 {did} 中文内容".encode("gbk")
-                    ct = "text/html; charset=GB2312"
-                elif m == 7:
-                    raw = f"문서 {did} 한국어".encode("euc_kr")
-                    ct = "text/html; charset=EUC-KR"
-                elif m == 8:
-                    # the classic lying crawl label: UTF-8 bytes served
-                    # as iso-8859-1 — content-disproof must win
-                    raw = f"doc {did} café “q”".encode("utf-8")
-                    ct = "text/html; charset=iso-8859-1"
-                else:
-                    # vacuous utf-16 label over ASCII bytes — no NUL
-                    # pattern corroborates, so the ladder falls through
-                    raw = f"doc {did} utf16 lie".encode("utf-8")
-                    ct = "text/html; charset=utf-16"
-                out.append(
-                    warcmod.encode_warc_fixture(
-                        [
-                            {
-                                "type": "response",
-                                "uri": f"http://cs.example/{did}",
-                                "status": 200,
-                                "http_content_type": ct,
-                                "payload": raw,
-                                "content_encoding": (
-                                    "gzip" if did % 2 == 1 else None
-                                ),
-                            }
-                        ],
-                        gzip_records=(did % 4 == 2),
-                        warcinfo=False,
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].to_numpy(), "content": out}
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        _make, schema="doc_id long, content binary"
-    )
+    return _doc_blobs(docs, _warc)
 
 
 def q282_charset_declared(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -15451,55 +14999,40 @@ FROM fin
 def _synth_revisit_warc(docs: DataFrame) -> DataFrame:
     from occupation_wage_etl_spark.sources import warc as warcmod
 
-    def _make(batches):
-        import pandas as pd
-
-        for batch in batches:
-            out = []
-            for did in batch["doc_id"]:
-                did = int(did)
-                g = did % 19
-                digest = f"sha1:G{g}DIGESTVALUE"
-                recs = []
-                if did % 3 == 0:
-                    recs.append(
-                        {
-                            "type": "response",
-                            "uri": f"http://o.example/{did}",
-                            "status": 200,
-                            "payload": f"content g{g}".encode(),
-                            "payload_digest": digest,
-                        }
-                    )
-                recs.append(
-                    {
-                        "type": "revisit",
-                        "uri": f"http://r.example/{did}",
-                        "payload_digest": digest,
-                        "warc_headers": {
-                            "WARC-Refers-To": "<urn:uuid:prior>",
-                            "WARC-Profile": (
-                                "http://netpreserve.org/warc/1.1/"
-                                "revisit/identical-payload-digest"
-                            ),
-                        },
-                        "body": b"",
-                    }
-                )
-                out.append(
-                    warcmod.encode_warc_fixture(
-                        recs,
-                        gzip_records=(did % 2 == 0),
-                        warcinfo=False,
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].to_numpy(), "content": out}
+    def _warc(did):
+        g = did % 19
+        digest = f"sha1:G{g}DIGESTVALUE"
+        recs = []
+        if did % 3 == 0:
+            recs.append(
+                {
+                    "type": "response",
+                    "uri": f"http://o.example/{did}",
+                    "status": 200,
+                    "payload": f"content g{g}".encode(),
+                    "payload_digest": digest,
+                }
             )
+        recs.append(
+            {
+                "type": "revisit",
+                "uri": f"http://r.example/{did}",
+                "payload_digest": digest,
+                "warc_headers": {
+                    "WARC-Refers-To": "<urn:uuid:prior>",
+                    "WARC-Profile": (
+                        "http://netpreserve.org/warc/1.1/"
+                        "revisit/identical-payload-digest"
+                    ),
+                },
+                "body": b"",
+            }
+        )
+        return warcmod.encode_warc_fixture(
+            recs, gzip_records=(did % 2 == 0), warcinfo=False
+        )
 
-    return docs.select("doc_id").mapInPandas(
-        _make, schema="doc_id long, content binary"
-    )
+    return _doc_blobs(docs, _warc)
 
 
 def q288_revisit_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -15541,42 +15074,28 @@ FROM documents d JOIN orig o ON o.g = d.doc_id % 19
 def _synth_redirect_warc(docs: DataFrame) -> DataFrame:
     from occupation_wage_etl_spark.sources import warc as warcmod
 
-    def _make(batches):
-        import pandas as pd
+    def _warc(did):
+        host = f"c{(did - did % 4) % 7}"
+        if did % 4 != 0:
+            spec = {
+                "type": "response",
+                "uri": f"http://{host}.example/p/{did}",
+                "status": 301,
+                "location": f"/p/{did - 1}",
+                "payload": b"",
+            }
+        else:
+            spec = {
+                "type": "response",
+                "uri": f"http://{host}.example/p/{did}",
+                "status": 200,
+                "payload": b"final",
+            }
+        return warcmod.encode_warc_fixture(
+            [spec], gzip_records=(did % 2 == 1), warcinfo=False
+        )
 
-        for batch in batches:
-            out = []
-            for did in batch["doc_id"]:
-                did = int(did)
-                host = f"c{(did - did % 4) % 7}"
-                if did % 4 != 0:
-                    spec = {
-                        "type": "response",
-                        "uri": f"http://{host}.example/p/{did}",
-                        "status": 301,
-                        "location": f"/p/{did - 1}",
-                        "payload": b"",
-                    }
-                else:
-                    spec = {
-                        "type": "response",
-                        "uri": f"http://{host}.example/p/{did}",
-                        "status": 200,
-                        "payload": b"final",
-                    }
-                out.append(
-                    warcmod.encode_warc_fixture(
-                        [spec], gzip_records=(did % 2 == 1),
-                        warcinfo=False,
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].to_numpy(), "content": out}
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        _make, schema="doc_id long, content binary"
-    )
+    return _doc_blobs(docs, _warc)
 
 
 def q289_redirect_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -15619,54 +15138,38 @@ FROM t
 def _synth_digest_warc(docs: DataFrame) -> DataFrame:
     from occupation_wage_etl_spark.sources import warc as warcmod
 
-    def _make(batches):
-        import pandas as pd
-
-        for batch in batches:
-            out = []
-            for did in batch["doc_id"]:
-                did = int(did)
-                recs = [
-                    {
-                        "type": "response",
-                        "uri": f"http://d.example/{did}/0",
-                        "payload": f"body {did} zero".encode(),
-                        "payload_digest": True,
-                        "content_encoding": "gzip",
-                    },
-                    {
-                        "type": "response",
-                        "uri": f"http://d.example/{did}/1",
-                        "payload": f"body {did} one".encode(),
-                        "payload_digest": (
-                            True
-                            if (did + 1) % 2 == 0
-                            else "sha1:" + "A" * 32
-                        ),
-                    },
-                ]
-                if did % 5 == 0:
-                    recs.append(
-                        {
-                            "type": "response",
-                            "uri": f"http://d.example/{did}/2",
-                            "payload": b"legacy",
-                            "payload_digest": "md5:ffffffffffffffff",
-                        }
-                    )
-                out.append(
-                    warcmod.encode_warc_fixture(
-                        recs, gzip_records=(did % 3 == 0),
-                        warcinfo=False,
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].to_numpy(), "content": out}
+    def _warc(did):
+        recs = [
+            {
+                "type": "response",
+                "uri": f"http://d.example/{did}/0",
+                "payload": f"body {did} zero".encode(),
+                "payload_digest": True,
+                "content_encoding": "gzip",
+            },
+            {
+                "type": "response",
+                "uri": f"http://d.example/{did}/1",
+                "payload": f"body {did} one".encode(),
+                "payload_digest": (
+                    True if (did + 1) % 2 == 0 else "sha1:" + "A" * 32
+                ),
+            },
+        ]
+        if did % 5 == 0:
+            recs.append(
+                {
+                    "type": "response",
+                    "uri": f"http://d.example/{did}/2",
+                    "payload": b"legacy",
+                    "payload_digest": "md5:ffffffffffffffff",
+                }
             )
+        return warcmod.encode_warc_fixture(
+            recs, gzip_records=(did % 3 == 0), warcinfo=False
+        )
 
-    return docs.select("doc_id").mapInPandas(
-        _make, schema="doc_id long, content binary"
-    )
+    return _doc_blobs(docs, _warc)
 
 
 def q290_digest_check(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -16250,50 +15753,32 @@ FROM documents
 def _synth_pdf_encodings(docs: DataFrame) -> DataFrame:
     from occupation_wage_etl_spark.sources import pdf as pdfmod
 
-    def _make(batches):
-        import pandas as pd
-
-        for pdf_batch in batches:
-            out = []
-            for did in pdf_batch["doc_id"]:
-                did = int(did)
-                m = did % 3
-                lines = [f"doc {did} café price"]
-                if m == 0:
-                    lines.append(f"win — “q” €{did % 9}")
-                    out.append(
-                        pdfmod.encode_pdf_fixture(
-                            [lines], simple_encoding="WinAnsiEncoding"
-                        )
-                    )
-                elif m == 1:
-                    lines.append(f"mac — “q” €{did % 9}")
-                    out.append(
-                        pdfmod.encode_pdf_fixture(
-                            [lines], simple_encoding="MacRomanEncoding"
-                        )
-                    )
-                else:
-                    lines.append("diff é€ł –")
-                    out.append(
-                        pdfmod.encode_pdf_fixture(
-                            [lines],
-                            simple_encoding="WinAnsiEncoding",
-                            differences={
-                                200: "Euro",
-                                201: "eacute",
-                                202: "endash",
-                                203: "uni0142",
-                            },
-                        )
-                    )
-            yield pd.DataFrame(
-                {"doc_id": pdf_batch["doc_id"].to_numpy(), "content": out}
+    def _pdf(did):
+        m = did % 3
+        lines = [f"doc {did} café price"]
+        if m == 0:
+            lines.append(f"win — “q” €{did % 9}")
+            return pdfmod.encode_pdf_fixture(
+                [lines], simple_encoding="WinAnsiEncoding"
             )
+        if m == 1:
+            lines.append(f"mac — “q” €{did % 9}")
+            return pdfmod.encode_pdf_fixture(
+                [lines], simple_encoding="MacRomanEncoding"
+            )
+        lines.append("diff é€ł –")
+        return pdfmod.encode_pdf_fixture(
+            [lines],
+            simple_encoding="WinAnsiEncoding",
+            differences={
+                200: "Euro",
+                201: "eacute",
+                202: "endash",
+                203: "uni0142",
+            },
+        )
 
-    return docs.select("doc_id").mapInPandas(
-        _make, schema="doc_id long, content binary"
-    )
+    return _doc_blobs(docs, _pdf)
 
 
 def q298_pdf_font_encodings(
@@ -16602,32 +16087,18 @@ FROM e
 def _synth_pdf_encrypted(docs: DataFrame) -> DataFrame:
     from occupation_wage_etl_spark.sources import pdf as pdfmod
 
-    def _make(batches):
-        import pandas as pd
+    def _pdf(did):
+        pages = [
+            [f"doc {did} secret line {k}" for k in range(2)],
+            [f"doc {did} page two"],
+        ]
+        return pdfmod.encode_pdf_fixture(
+            pages,
+            compress_page=lambda p: did % 2 == 1,
+            encrypt=[None, "rc4-40", "rc4-128", "aes-128"][did % 4],
+        )
 
-        for pdf_batch in batches:
-            out = []
-            for did in pdf_batch["doc_id"]:
-                did = int(did)
-                mode = [None, "rc4-40", "rc4-128", "aes-128"][did % 4]
-                pages = [
-                    [f"doc {did} secret line {k}" for k in range(2)],
-                    [f"doc {did} page two"],
-                ]
-                out.append(
-                    pdfmod.encode_pdf_fixture(
-                        pages,
-                        compress_page=lambda p, d=did: d % 2 == 1,
-                        encrypt=mode,
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf_batch["doc_id"].to_numpy(), "content": out}
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        _make, schema="doc_id long, content binary"
-    )
+    return _doc_blobs(docs, _pdf)
 
 
 def q303_pdf_encrypted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -16827,61 +16298,40 @@ def _synth_cache_warc(
 ) -> DataFrame:
     from occupation_wage_etl_spark.sources import warc as warcmod
 
-    def _make(batches):
-        import pandas as pd
+    lm = "Mon, 01 Jan 2024 13:10:45 GMT"
 
-        lm = "Mon, 01 Jan 2024 13:10:45 GMT"
-        for batch in batches:
-            out = []
-            for did in batch["doc_id"]:
-                did = int(did)
-                m = did % 5
-                host = (
-                    f"h{m}{did % 3}.example" if multi_host
-                    else "rc.example"
-                )
-                if m == 0:
-                    hdrs = {
-                        "ETag": f'"e{did}"',
-                        "Cache-Control": "max-age=7200",
-                    }
-                elif m == 1:
-                    hdrs = {
-                        "Cache-Control": "no-cache",
-                        "Last-Modified": lm,
-                    }
-                elif m == 2:
-                    hdrs = {"Last-Modified": lm}
-                elif m == 3:
-                    hdrs = {}
-                else:
-                    hdrs = {
-                        "ETag": f'W/"w{did}"',
-                        "Cache-Control": "public, max-age=99999999",
-                    }
-                out.append(
-                    warcmod.encode_warc_fixture(
-                        [
-                            {
-                                "type": "response",
-                                "uri": f"http://{host}/{did}",
-                                "status": 200,
-                                "date": "2024-01-02T03:04:05Z",
-                                "payload": f"body {did}".encode(),
-                                "http_headers": hdrs,
-                            }
-                        ],
-                        gzip_records=(did % 2 == 1),
-                        warcinfo=False,
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].to_numpy(), "content": out}
-            )
+    def _warc(did):
+        m = did % 5
+        host = f"h{m}{did % 3}.example" if multi_host else "rc.example"
+        if m == 0:
+            hdrs = {"ETag": f'"e{did}"', "Cache-Control": "max-age=7200"}
+        elif m == 1:
+            hdrs = {"Cache-Control": "no-cache", "Last-Modified": lm}
+        elif m == 2:
+            hdrs = {"Last-Modified": lm}
+        elif m == 3:
+            hdrs = {}
+        else:
+            hdrs = {
+                "ETag": f'W/"w{did}"',
+                "Cache-Control": "public, max-age=99999999",
+            }
+        return warcmod.encode_warc_fixture(
+            [
+                {
+                    "type": "response",
+                    "uri": f"http://{host}/{did}",
+                    "status": 200,
+                    "date": "2024-01-02T03:04:05Z",
+                    "payload": f"body {did}".encode(),
+                    "http_headers": hdrs,
+                }
+            ],
+            gzip_records=(did % 2 == 1),
+            warcinfo=False,
+        )
 
-    return docs.select("doc_id").mapInPandas(
-        _make, schema="doc_id long, content binary"
-    )
+    return _doc_blobs(docs, _warc)
 
 
 def q305_recrawl_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -17112,52 +16562,29 @@ FROM eff
 def _synth_wat(docs: DataFrame) -> DataFrame:
     from occupation_wage_etl_spark.sources import wat as watmod
 
-    def _make(batches):
-        import pandas as pd
+    def _wat(did):
+        links = [
+            {
+                "path": "A@/href",
+                "url": f"http://l{k}.example/p{did}",
+                "text": f"a{k}-{did}",
+            }
+            for k in range(did % 4 + 1)
+        ]
+        metas = [{"name": "viewport", "content": "width=device-width"}]
+        if did % 7 != 0:
+            metas.append({"name": "description", "content": f"D{did}"})
+        entry = {
+            "uri": f"http://wat.example/{did}",
+            "status": 200 if did % 2 == 0 else 404,
+            "metas": metas,
+            "links": links,
+        }
+        if did % 5 != 0:
+            entry["title"] = f"T{did}"
+        return watmod.encode_wat_fixture([entry], gzip_records=(did % 2 == 1))
 
-        for batch in batches:
-            out = []
-            for did in batch["doc_id"]:
-                did = int(did)
-                n = did % 4 + 1
-                links = [
-                    {
-                        "path": "A@/href",
-                        "url": f"http://l{k}.example/p{did}",
-                        "text": f"a{k}-{did}",
-                    }
-                    for k in range(n)
-                ]
-                metas = [
-                    {
-                        "name": "viewport",
-                        "content": "width=device-width",
-                    }
-                ]
-                if did % 7 != 0:
-                    metas.append(
-                        {"name": "description", "content": f"D{did}"}
-                    )
-                entry = {
-                    "uri": f"http://wat.example/{did}",
-                    "status": 200 if did % 2 == 0 else 404,
-                    "metas": metas,
-                    "links": links,
-                }
-                if did % 5 != 0:
-                    entry["title"] = f"T{did}"
-                out.append(
-                    watmod.encode_wat_fixture(
-                        [entry], gzip_records=(did % 2 == 1)
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].to_numpy(), "content": out}
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        _make, schema="doc_id long, content binary"
-    )
+    return _doc_blobs(docs, _wat)
 
 
 def q308_wat_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:

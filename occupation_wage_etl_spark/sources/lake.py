@@ -18,7 +18,7 @@ import datetime as _dt
 from collections.abc import Callable, Iterator
 from contextlib import contextmanager
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 PARTITION_COL = "snapshot_date"
@@ -295,106 +295,6 @@ def compact_partition(
     return int(n_files)
 
 
-def zorder_key(cols: list[Column], bits: int = 16) -> Column:
-    """Morton (Z-order) interleave of ``len(cols)`` numeric columns into
-    one sortable long.
-
-    Each column is rank-normalized by the CALLER (pass values already
-    scaled to [0, 2^bits)); this expression just interleaves the bit
-    patterns: bit j of column i lands at position ``j * n_cols + i``.
-    Pure codegen bit arithmetic — no UDF, no shuffle of its own.
-    """
-    n = len(cols)
-    key = F.lit(0).cast("long")
-    for i, c in enumerate(cols):
-        v = c.cast("long")
-        for j in range(bits):
-            key = key.bitwiseOR(
-                F.shiftleft(
-                    F.shiftright(v, j).bitwiseAND(F.lit(1)), j * n + i
-                )
-            )
-    return key
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    zorder_cols: list[str],
-    n_files: int,
-    bits: int = 16,
-) -> None:
-    """Write ``df`` as ``n_files`` parquet files range-clustered on the
-    Z-order (Morton) curve over ``zorder_cols`` — multi-column data
-    skipping without Hive partitioning.
-
-    Why it works: parquet stores per-file and per-row-group min/max for
-    every column.  Sorting the write by an interleaved-bit curve makes
-    files cover small HYPER-RECTANGLES of the key space, so a scan
-    filtered on ANY prefix-subset of the clustered columns prunes most
-    files on footer stats alone — the same mechanism as Delta/Iceberg
-    OPTIMIZE ZORDER BY, built from repartitionByRange + sortWithinPartitions.
-
-    Columns are min/max-scaled to ``bits``-bit integers with a single
-    tiny stats aggregate (one extra job over the input, scan-only).  At
-    100 TB swap the exact min/max for stored table stats; the plan shape
-    is unchanged.  NULLs sort to curve position 0.
-    """
-    stats = df.agg(
-        *[F.min(F.col(c).cast("double")).alias(f"mn_{c}") for c in zorder_cols],
-        *[F.max(F.col(c).cast("double")).alias(f"mx_{c}") for c in zorder_cols],
-    ).collect()[0]
-    scale = (1 << bits) - 1
-    scaled = []
-    for c in zorder_cols:
-        mn, mx = stats[f"mn_{c}"], stats[f"mx_{c}"]
-        rng = (mx - mn) if (mx is not None and mn is not None and mx > mn) else 1.0
-        scaled.append(
-            F.coalesce(
-                F.floor(
-                    (F.col(c).cast("double") - F.lit(mn)) / F.lit(rng) * scale
-                ).cast("long"),
-                F.lit(0),
-            )
-        )
-    keyed = df.withColumn("_zkey", zorder_key(scaled, bits))
-    (
-        keyed.repartitionByRange(n_files, "_zkey")
-        .sortWithinPartitions("_zkey")
-        .drop("_zkey")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def write_with_bloom(
-    df: DataFrame,
-    path: str,
-    bloom_cols: list[str],
-    n_files: int | None = None,
-    fpp: float = 0.01,
-    ndv: int | None = None,
-) -> None:
-    """Write parquet with native bloom filters on ``bloom_cols`` —
-    point-lookup file/row-group skipping for high-cardinality keys that
-    min/max stats can't prune (hashes, ids scattered across the range).
-
-    Parquet bloom filters live in the file footer; Spark's vectorized
-    reader consults them for equality predicates automatically, so a
-    ``WHERE key = x`` scan skips every row group whose filter rules the
-    value out — no index service, no extra files, works on any parquet
-    client.  Complements Z-ordering (range predicates) the way a hash
-    index complements a btree.
-    """
-    w = df.repartition(n_files).write if n_files else df.write
-    for c in bloom_cols:
-        w = w.option(f"parquet.bloom.filter.enabled#{c}", "true")
-        w = w.option(f"parquet.bloom.filter.fpp#{c}", str(fpp))
-        if ndv is not None:
-            w = w.option(f"parquet.bloom.filter.expected.ndv#{c}", str(ndv))
-    w.mode("overwrite").parquet(path)
-
-
 def compaction_plan(
     sizes: DataFrame,
     part_col: str,
@@ -435,44 +335,3 @@ def compaction_plan(
         F.min(part_col).alias("first_part"),
         F.max(part_col).alias("last_part"),
     )
-
-
-def write_snapshot_orc(
-    df: DataFrame,
-    root: str,
-    dataset: str,
-    snapshot_date: str | None = None,
-) -> str:
-    """ORC variant of :func:`write_snapshot` — same hive-partitioned,
-    overwrite-by-date contract, ORC file format (zlib default).
-
-    ORC is the interchange format for Hive/Presto-era warehouses; a
-    user migrating from the reference whose downstream reads ORC flips
-    one call.  Predicate pushdown and column pruning work exactly as
-    for parquet (Spark's OrcScan reports PushedFilters the same way);
-    bloom filters per column are available via
-    ``option("orc.bloom.filter.columns", ...)``.
-    """
-    date = snapshot_date or today()
-    path = f"{root}/{dataset}"
-    (
-        df.withColumn(PARTITION_COL, F.lit(date))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(PARTITION_COL)
-        .orc(path)
-    )
-    return f"{path}/{PARTITION_COL}={date}"
-
-
-def read_snapshot_orc(
-    spark: SparkSession,
-    root: str,
-    dataset: str,
-    snapshot_date: str | None = None,
-) -> DataFrame:
-    """ORC variant of :func:`read_snapshot` (partition-pruned reads)."""
-    df = spark.read.orc(f"{root}/{dataset}")
-    if snapshot_date is not None:
-        df = df.filter(F.col(PARTITION_COL) == snapshot_date)
-    return df

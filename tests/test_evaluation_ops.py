@@ -101,6 +101,21 @@ def test_evaluation_plans_have_no_data_sized_global_sort(spark):
         spark.conf.unset("spark.graft.distCumWindowMaxRows")
 
 
+
+def test_small_scan_resolver_sees_grown_lake_path(spark, tmp_path):
+    # a long-lived session must re-resolve when the files behind a path
+    # grow past the cliff: the analyzed plan of the re-read path hashes
+    # the same, so no decision may be remembered across builds
+    path = str(tmp_path / "grow")
+    spark.range(10).write.parquet(path)
+    spark.conf.set("spark.graft.distCumWindowMaxRows", "100")
+    try:
+        assert evaluation._resolve_small_scan(spark.read.parquet(path))
+        spark.range(10, 1000).write.mode("append").parquet(path)
+        assert not evaluation._resolve_small_scan(spark.read.parquet(path))
+    finally:
+        spark.conf.unset("spark.graft.distCumWindowMaxRows")
+
 # -------------------------------------------------------------- calibration
 
 def test_calibration_bins_shape_and_rates(spark):

@@ -329,44 +329,18 @@ def test_containment_pairs_lossless_vs_naive(spark):
             assert (c >= 0.5) == ((x, y) in out), (x, y, c)
 
 
-def test_containment_count_path_equals_probe_path(spark, sf_tiny):
-    """The r12 count-based verify and the asymmetric-prefix probe tier
-    must emit identical directional pairs with bit-identical
-    containment doubles (both are exact integer-ratio divisions)."""
-    docs = spark.read.parquet(f"{sf_tiny}/documents.parquet")
-    for t in (0.5, 0.6, 0.9):
-        count_path = sorted(
-            (r.id_a, r.id_b, r.containment)
-            for r in dedup.containment_pairs(
-                docs, shingle_n=3, threshold=t
-            ).collect()
-        )
-        probe_path = sorted(
-            (r.id_a, r.id_b, r.containment)
-            for r in dedup.containment_pairs(
-                docs, shingle_n=3, threshold=t, prefix_probe=True
-            ).collect()
-        )
-        assert count_path == probe_path
-        assert len(count_path) > 0 or t == 0.9
-
-
 def test_containment_probe_bound_exact_at_t09(spark):
-    # IEEE regression guard: at t=0.9 with |grams(a)|=10, (1-t)*10 is
-    # 0.9999999999999998 and a bare floor() yields probe length 1 — but
-    # losslessness needs 2 (one gram may be absent from b).  Construct
-    # the adversarial case: a's single missing gram is also its RAREST
-    # (df=1 — every shared gram also occurs in b, df≥2), so a 1-gram
-    # probe would examine exactly the missing gram and drop the pair.
+    # IEEE guard at the threshold itself: a has 10 distinct 3-grams and
+    # b holds 9 of them, so a's containment is exactly 9/10, which must
+    # compare >= 0.9 and keep the pair.
     words = "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10 w11 w12".split()
     a = " ".join(words)              # 12 tokens → 10 distinct 3-grams
     b = " ".join(words[:11]) + " zz yy xx"  # grams g1..g9, not g10
     docs = _docs(spark, [(1, a), (2, b)])
-    for probe in (False, True):  # count path AND the probe tier
-        out = {
-            (r.id_a, r.id_b): r.containment
-            for r in dedup.containment_pairs(
-                docs, shingle_n=3, threshold=0.9, prefix_probe=probe
-            ).collect()
-        }
-        assert out[(1, 2)] == 0.9, f"prefix_probe={probe}"
+    out = {
+        (r.id_a, r.id_b): r.containment
+        for r in dedup.containment_pairs(
+            docs, shingle_n=3, threshold=0.9
+        ).collect()
+    }
+    assert out[(1, 2)] == 0.9

@@ -1,14 +1,12 @@
 """Tests for the theta-sketch overlap (operators/sketch.py — q185),
-seasonal decomposition (timeseries.seasonal_decompose — q186), the
-Poissonized bootstrap CI (stats.bootstrap_mean_ci — q187), and the
-ORC snapshot source/sink (sources/lake.py)."""
+seasonal decomposition (timeseries.seasonal_decompose — q186) and the
+Poissonized bootstrap CI (stats.bootstrap_mean_ci — q187)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from occupation_wage_etl_spark.operators import sketch, stats, timeseries
-from occupation_wage_etl_spark.sources import lake
 
 
 # ------------------------------------------------------ theta sketch
@@ -162,31 +160,6 @@ def test_poisson_cutoffs_are_a_cdf(spark):
     assert list(cuts) == sorted(cuts)
     # P(w <= 6) must be ~0.9999 of the hash domain
     assert cuts[-1] / 2**60 > 0.9999
-
-
-# --------------------------------------------------------------- ORC
-
-def test_orc_snapshot_roundtrip_and_partition_prune(spark, tmp_path):
-    root = str(tmp_path / "lake")
-    df = spark.createDataFrame(
-        [(1, "a"), (2, "b")], "id long, s string"
-    )
-    p1 = lake.write_snapshot_orc(df, root, "ds", "2024-01-01")
-    lake.write_snapshot_orc(
-        df.withColumn("s", F.upper("s")), root, "ds", "2024-01-02"
-    )
-    assert "snapshot_date=2024-01-01" in p1
-    one = lake.read_snapshot_orc(spark, root, "ds", "2024-01-01")
-    assert one.count() == 2
-    assert {r["s"] for r in one.collect()} == {"a", "b"}
-    both = lake.read_snapshot_orc(spark, root, "ds")
-    assert both.count() == 4
-    # overwrite-by-date idempotency: rewriting a date never duplicates
-    lake.write_snapshot_orc(df, root, "ds", "2024-01-01")
-    assert lake.read_snapshot_orc(spark, root, "ds").count() == 4
-    # partition pruning reaches the scan
-    plan = one._jdf.queryExecution().executedPlan().toString()
-    assert "snapshot_date" in plan
 
 
 # ------------------------------------------------- quantile sketch (q216)

@@ -457,83 +457,6 @@ def test_delete_by_key_evaluates_keys_once(spark, tmp_path):
     ]
 
 
-class TestZOrderWrite:
-    def test_files_cover_hyperrectangles_and_skip(self, spark, tmp_path):
-        """A Z-ordered layout must let a 2-D range predicate prune most
-        files on footer min/max stats, where a shuffled layout cannot."""
-        import pyarrow.parquet as pq
-
-        from occupation_wage_etl_spark.sources import lake
-
-        n = 20_000
-        df = spark.range(n).select(
-            (F.col("id") * 2654435761 % 1000).alias("x"),
-            (F.col("id") * 40503 % 1000).alias("y"),
-            F.col("id").alias("payload"),
-        )
-        zpath = str(tmp_path / "z")
-        lake.write_zordered(df, zpath, ["x", "y"], n_files=16)
-
-        def overlap_count(path):
-            """#files whose (x, y) min/max box intersects x,y ∈ [0, 99]."""
-            hits = 0
-            import glob
-            files = sorted(glob.glob(f"{path}/*.parquet"))
-            for f in files:
-                md = pq.ParquetFile(f).metadata
-                cols = {md.schema.column(i).name: i for i in range(md.num_columns)}
-                rg = md.row_group(0)
-                xs = rg.column(cols["x"]).statistics
-                ys = rg.column(cols["y"]).statistics
-                if xs.min <= 99 and ys.min <= 99:
-                    hits += 1
-            return hits, len(files)
-
-        z_hits, z_files = overlap_count(zpath)
-        assert z_files == 16
-        # a 10% x 10% box covers ~1% of the curve; allow generous slack
-        assert z_hits <= z_files // 2, (z_hits, z_files)
-
-        # round-trip completeness: no rows lost or duplicated
-        back = spark.read.parquet(zpath)
-        assert back.count() == n
-        assert back.agg(F.sum("payload")).first()[0] == n * (n - 1) // 2
-
-
-class TestBloomFilterWrite:
-    def test_bloom_present_and_lookup_correct(self, spark, tmp_path):
-        import pyarrow.parquet as pq
-
-        from occupation_wage_etl_spark.sources import lake
-
-        df = spark.range(50_000).select(
-            F.col("id").alias("k"),
-            F.md5(F.col("id").cast("string").cast("binary")).alias("payload"),
-        )
-        path = str(tmp_path / "bloomed")
-        lake.write_with_bloom(df, path, ["k"], n_files=4, ndv=50_000)
-
-        import glob
-        import os
-
-        files = sorted(glob.glob(f"{path}/*.parquet"))
-        assert len(files) == 4
-        # this pyarrow/duckdb pair can't introspect bloom offsets, so
-        # assert presence via footprint: the same data written without
-        # blooms must be materially smaller (ndv=50k @ 1% fpp ≈ 60 KiB
-        # of filter bits per file).
-        plain = str(tmp_path / "plain")
-        df.repartition(4).write.mode("overwrite").parquet(plain)
-        bloomed_bytes = sum(os.path.getsize(f) for f in files)
-        plain_bytes = sum(
-            os.path.getsize(f) for f in glob.glob(f"{plain}/*.parquet")
-        )
-        assert bloomed_bytes > plain_bytes + 40_000, (bloomed_bytes, plain_bytes)
-
-        got = spark.read.parquet(path).filter(F.col("k") == 12345).collect()
-        assert len(got) == 1 and got[0].k == 12345
-
-
 def test_jdbc_round_trip_live_when_available(spark):
     """Live JDBC parity (reference load_data.py:203-213) — the one
     reference edge the sandbox can't exercise (no Postgres, no JDBC

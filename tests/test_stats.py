@@ -324,26 +324,19 @@ def test_few_groups_auto_picks_expected_branch(spark):
 
 
 def test_resolver_rows_estimate_and_memo(spark):
-    from occupation_wage_etl_spark.operators.stats import (
-        _FG_MEMO,
-        _resolve_few_groups,
-    )
+    from occupation_wage_etl_spark.operators.stats import _resolve_few_groups
 
     rows = spark.createDataFrame(
         [(i % 3, float(i)) for i in range(200)], "g int, v double"
     )
     hist = rows.groupBy("g", "v").count()
-    _FG_MEMO.clear()
     # small input: both estimate forms resolve False (hist rows < 8M)
     assert _resolve_few_groups(hist, "g", None) is False
     assert (
         _resolve_few_groups(hist, "g", None, rows=rows, value_col="v")
         is False
     )
-    # resolutions were memoized (hist-keyed and rows-keyed entries)
-    assert len(_FG_MEMO) == 2
-    # a lowered min-rows conf flips the decision AND bypasses the old
-    # memo entries (conf values are part of the key)
+    # a lowered min-rows conf flips the decision
     spark.conf.set("spark.graft.fewGroupsMinHistRows", "10")
     try:
         assert _resolve_few_groups(hist, "g", None) is True
@@ -351,13 +344,32 @@ def test_resolver_rows_estimate_and_memo(spark):
             _resolve_few_groups(hist, "g", None, rows=rows, value_col="v")
             is True
         )
-        assert len(_FG_MEMO) == 4
     finally:
         spark.conf.unset("spark.graft.fewGroupsMinHistRows")
-    # explicit override costs nothing and ignores the memo
+    # explicit override costs nothing
     assert _resolve_few_groups(hist, "g", True) is True
     assert _resolve_few_groups(hist, "g", False) is False
 
+
+
+def test_few_groups_resolver_sees_grown_lake_path(spark, tmp_path):
+    # same growth rule as the prefix scans' resolver: a histogram read
+    # again from a path that grew past fewGroupsMinHistRows re-resolves
+    from occupation_wage_etl_spark.operators.stats import _resolve_few_groups
+
+    path = str(tmp_path / "hist")
+    spark.range(10).selectExpr("id % 3 AS g", "id AS v").write.parquet(path)
+    spark.conf.set("spark.graft.fewGroupsMinHistRows", "100")
+    try:
+        hist = spark.read.parquet(path)
+        assert _resolve_few_groups(hist, "g", None) is False
+        spark.range(10, 1000).selectExpr("id % 3 AS g", "id AS v").write.mode(
+            "append"
+        ).parquet(path)
+        hist = spark.read.parquet(path)
+        assert _resolve_few_groups(hist, "g", None) is True
+    finally:
+        spark.conf.unset("spark.graft.fewGroupsMinHistRows")
 
 def test_auto_weighted_median_matches_both_explicit_paths(spark):
     dfd = spark.createDataFrame(
