@@ -89,11 +89,12 @@ def main() -> None:
     # ops, explode+wide-agg) on a 50-doc sample, so the dedup queries
     # measure steady-state throughput rather than first-use compilation
     from occupation_wage_etl_spark.operators import dedup
+    from occupation_wage_etl_spark.operators._cache import scope
 
     sample = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(50)
-    force(dedup.minhash_lsh_pairs(sample, jaccard_threshold=0.99))
-    force(dedup.simhash_pairs(sample, max_hamming=0))
-    # (the warmup's persists are dropped by the first run_query below)
+    with scope():
+        force(dedup.minhash_lsh_pairs(sample, jaccard_threshold=0.99))
+        force(dedup.simhash_pairs(sample, max_hamming=0))
 
     runs = list(SPARK_QUERIES) + sorted(EXTRA_BENCH)
 

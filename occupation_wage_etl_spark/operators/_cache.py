@@ -1,107 +1,107 @@
-"""Tracked operator-internal caching.
+"""Query-scoped lifetime of the blocks operators hold.
 
-Several operators persist an intermediate (shingle tables, IVF cell
-assignments, graph edge lists) because the SAME frame feeds two or more
-downstream branches of the returned plan.  The persist must outlive the
-function (the caller's action is what populates and reads it), so the
-operator can't unpersist it itself — and a long-running session that
-executes hundreds of such plans (the bench loop, a notebook, a
-multi-query job) would otherwise accumulate dead cached blocks that
-evict each other or spill.
+``cached(df)`` persists an intermediate the returned plan reads from
+two or more branches (shingle tables, IVF cell assignments, graph edge
+lists); ``checkpoint(df)`` local-checkpoints a frame to truncate its
+lineage (each round of an iterative operator, a lake rewrite's input).
+The caller's action reads both, so the operator cannot release them;
+the unit of work that runs the action does, by opening a scope:
 
-``cached(df)`` persists AND registers the frame; the registry holds a
-STRONG reference — a weakref would be dead by the time any harness
-releases (operator-local wrappers are GC'd when the operator returns,
-while the persisted RDD lives on in the JVM), which is exactly the
-silent leak this module exists to prevent.  Driver-side DataFrame
-wrappers are a few hundred bytes each, so holding them costs nothing.
+    with scope():
+        result = some_operator(df)
+        result.write.parquet(...)      # the action that reads the blocks
 
-Contract for library callers (composing operators OUTSIDE bench.py /
-tools/oracle_check.py, which both release per query):
+Every block registered inside the ``with`` is released on exit, even on
+error, and nothing else is.  Scopes nest, and the current one lives in
+a ``ContextVar``, so each thread has its own: two queries sharing a
+session never release each other's blocks.  ``tools/harness.run_query``
+opens one per query.  Blocks registered outside any scope stay until
+:func:`release_cached` / :func:`release_checkpoints` drain them.
 
-- wrap each unit of work in :func:`cached_scope` —
-
-      with cached_scope():
-          result = some_operator(df)
-          result.write.parquet(...)      # the action that uses the cache
-
-  every frame persisted inside the block is unpersisted on exit, even
-  on error; or
-- call :func:`release_cached` yourself after each terminal action.
-
-Without one of the two, persisted blocks accumulate for the lifetime of
-the session (Spark evicts under memory pressure, but MEMORY_AND_DISK
-blocks then churn the disk store).
+References are STRONG: an operator's local wrappers are garbage once it
+returns while its blocks live on in the JVM, so a weakref would be dead
+by release time — the silent leak this module exists to prevent.
 """
 
 from __future__ import annotations
 
 from contextlib import contextmanager
+from contextvars import ContextVar
 
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
-_TRACKED: list[DataFrame] = []
+
+class _Blocks:
+    def __init__(self) -> None:
+        self.cached: list[DataFrame] = []
+        self.checkpoints: list[DataFrame] = []
+
+
+_UNSCOPED = _Blocks()
+_SCOPE: ContextVar[_Blocks] = ContextVar("operator_blocks", default=_UNSCOPED)
 
 
 def cached(
     df: DataFrame,
     level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
 ) -> DataFrame:
-    """Persist ``df`` and register it for bulk release.
+    """Persist ``df`` and register it with the current scope.
 
     Returns the same DataFrame (persist is in-place on the plan)."""
     df.persist(level)
-    _TRACKED.append(df)
+    _SCOPE.get().cached.append(df)
     return df
 
 
-def release_cached() -> int:
-    """Unpersist every tracked frame; returns the count released.
+def checkpoint(df: DataFrame) -> DataFrame:
+    """``df.localCheckpoint()`` (eager), registered with the current
+    scope.  Local checkpoints trade executor fault recovery for speed;
+    a multi-node deployment swaps in reliable ``checkpoint()`` here."""
+    cp = df.localCheckpoint()
+    _SCOPE.get().checkpoints.append(cp)
+    return cp
 
-    Safe to call at any point: unpersisting a frame that a NOT-YET-RUN
-    plan references only costs recomputation, never correctness."""
+
+def _unpersist_checkpoint(cp: DataFrame) -> None:
+    # a checkpointed frame's plan is the LogicalRDD over its blocks
+    cp._jdf.queryExecution().logical().rdd().unpersist(False)  # noqa: SLF001
+
+
+def _drain(frames: list[DataFrame], release) -> int:
     n = 0
-    for df in _TRACKED:
+    for df in frames:
         try:
-            df.unpersist()
+            release(df)
             n += 1
         except Exception:  # session already stopped
             pass
-    _TRACKED.clear()
+    frames.clear()
     return n
 
 
 @contextmanager
-def cached_scope():
-    """Release every frame persisted INSIDE the block on exit — the
-    library-caller lifecycle (see module docstring).  Frames tracked
-    before entry are left alone, so scopes nest."""
-    mark = len(_TRACKED)
+def scope():
+    """Release, on exit, every block registered inside the ``with``."""
+    blocks = _Blocks()
+    token = _SCOPE.set(blocks)
     try:
         yield
     finally:
-        tail, _TRACKED[mark:] = _TRACKED[mark:], []
-        for df in tail:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
+        _SCOPE.reset(token)
+        _drain(blocks.cached, DataFrame.unpersist)
+        _drain(blocks.checkpoints, _unpersist_checkpoint)
+
+
+def release_cached() -> int:
+    """Unpersist every frame ``cached`` outside any scope; returns the
+    count.  Safe at any point: a NOT-YET-RUN plan that references a
+    released frame only recomputes it."""
+    return _drain(_UNSCOPED.cached, DataFrame.unpersist)
+
 
 def release_checkpoints(spark) -> int:
-    """Unpersist ALL persistent RDDs left in the session — the
-    ``localCheckpoint`` blocks written by the iterative operators
-    (connected_components, bfs_hops, k_core, label_propagation), which
-    :func:`release_cached` cannot see (they are RDD-level, not tracked
-    SQL caches) and the OPERATOR cannot release (its output's lineage
-    is truncated onto them, so dropping the blocks while the result is
-    live would make the frame unrecomputable).
-
-    HARNESS-LOOP ONLY: call between queries, when no operator output is
-    still to be consumed — bench.py and tools/oracle_check.py do this
-    per query.  Returns the number of RDDs unpersisted."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    n = int(jmap.size())
-    for rdd in jmap.values():
-        rdd.unpersist()
-    return n
+    """Release every local checkpoint taken outside any scope; returns
+    the count.  ``spark`` is unused.  Only once no output of those
+    operators is still to be read: its lineage ends at these blocks."""
+    return _drain(_UNSCOPED.checkpoints, _unpersist_checkpoint)

@@ -12,15 +12,14 @@ driver-coordinated loop of pure DataFrame joins:
 Each iteration is one shuffle (join edges->labels + groupBy-min); the
 loop converges in O(component diameter) rounds — near-dup clusters
 are shallow (most are 2-5 docs), so 3-6 rounds in practice.  Each
-round eagerly ``localCheckpoint``s its labels, truncating lineage so
-Catalyst never re-plans the accumulated loop (on a multi-node cluster
-swap in reliable ``checkpoint()`` — localCheckpoint trades executor
-fault-recovery for speed).  Round 0 is seeded with min(id, min
-neighbor) (one aggregation, no join), and every later round combines
-the edge relaxation with a pointer jump (comp ← comp(comp)), the
-shortcutting idea from [Kiveris et al., "Connected Components in
-MapReduce and Beyond", SoCC'14] — remaining diameter halves per
-round, so convergence is O(log d) driver round-trips instead of O(d).
+round eagerly checkpoints its labels (``_cache.checkpoint``),
+truncating lineage so Catalyst never re-plans the accumulated loop.
+Round 0 is seeded with min(id, min neighbor) (one aggregation, no
+join), and every later round combines the edge relaxation with a
+pointer jump (comp ← comp(comp)), the shortcutting idea from [Kiveris
+et al., "Connected Components in MapReduce and Beyond", SoCC'14] —
+remaining diameter halves per round, so convergence is O(log d) driver
+round-trips instead of O(d).
 
 Reference analogue: none; training-data extension surface.
 """
@@ -29,7 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from occupation_wage_etl_spark.operators._cache import cached
+from occupation_wage_etl_spark.operators._cache import cached, checkpoint
 
 
 def connected_components(
@@ -45,7 +44,9 @@ def connected_components(
     # its input twice, and edge lists typically arrive as expensive
     # pipelines (LSH candidate joins) that must not be recomputed per
     # branch — or per iteration below.
-    mat = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).localCheckpoint()
+    mat = edges.select(
+        F.col(src).alias("u"), F.col(dst).alias("v")
+    ).transform(checkpoint)
     sym = (
         mat.union(mat.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .transform(cached)
@@ -60,7 +61,7 @@ def connected_components(
             F.col("u").alias("id"),
             F.least(F.col("u"), F.col("nmin")).alias("comp"),
         )
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     for _ in range(max_iter):
         neighbor_min = (
@@ -90,7 +91,7 @@ def connected_components(
                 ).alias("comp"),
                 F.col("comp").alias("prev"),
             )
-            .localCheckpoint()  # eager: truncates lineage
+            .transform(checkpoint)  # eager: truncates lineage
         )
         changed = (
             new_labels.filter(F.col("comp") != F.col("prev")).limit(1).count()
@@ -196,22 +197,20 @@ def k_core(
     and drops every node below k TOGETHER (the classic simultaneous
     peel — order-independent, so the result is deterministic and
     engine-portable).  Each round is one hash aggregate + two semi-joins
-    keyed by node id, ``localCheckpoint``-ed to truncate lineage; the
-    loop exits as soon as a round drops nobody.  Rounds needed = peel
-    depth of the graph (shallow for near-dup graphs; bounded by
-    ``max_rounds`` as a safety stop — at 100 TB swap the localCheckpoint
-    for reliable ``checkpoint()``, same note as
-    :func:`connected_components`).
+    keyed by node id, checkpointed to truncate lineage; the loop exits
+    as soon as a round drops nobody.  Rounds needed = peel depth of the
+    graph (shallow for near-dup graphs; bounded by ``max_rounds`` as a
+    safety stop).
 
     Returns (node, core_degree): nodes of the k-core with their degree
     INSIDE the core (≥ k by construction).
     """
     mat = edges.select(
         F.col(src).alias("u"), F.col(dst).alias("v")
-    ).localCheckpoint()
+    ).transform(checkpoint)
     sym = mat.union(
         mat.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint()
+    ).transform(checkpoint)
 
     alive = sym
     deg = alive.groupBy("u").agg(F.count(F.lit(1)).alias("core_degree"))
@@ -227,7 +226,7 @@ def k_core(
         alive = (
             alive.join(keep, "u", "left_semi")
             .join(keep.select(F.col("u").alias("v")), "v", "left_semi")
-            .localCheckpoint()
+            .transform(checkpoint)
         )
         deg = alive.groupBy("u").agg(F.count(F.lit(1)).alias("core_degree"))
     if not converged and deg.filter(F.col("core_degree") < k).limit(1).count():
@@ -425,8 +424,7 @@ def label_propagation(
     of partitioning and engine-portable (an unrolled SQL oracle
     replaying the same rounds gets bit-identical labels), unlike the
     classic async LPA.  Each round is one edge->label join + one
-    count/argmax aggregate, ``localCheckpoint``-ed to truncate lineage
-    (swap for reliable ``checkpoint()`` on a real cluster).
+    count/argmax aggregate, checkpointed to truncate lineage.
 
     ``nodes``: (node_col, seed_col) with seed_col NULL for unseeded.
     Returns (node, label, seeded) for all nodes labeled after
@@ -437,7 +435,7 @@ def label_propagation(
         .unionAll(
             edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
         )
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     seeds = (
         nodes.select(
@@ -445,7 +443,7 @@ def label_propagation(
             F.col(seed_col).alias("label"),
         )
         .filter(F.col("label").isNotNull())
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     labels = seeds.withColumn("seeded", F.lit(True))
     for _ in range(rounds):
@@ -475,7 +473,7 @@ def label_propagation(
                 best.join(seeds.select("node"), "node", "left_anti")
                 .withColumn("seeded", F.lit(False))
             )
-            .localCheckpoint()
+            .transform(checkpoint)
         )
     return labels
 
@@ -494,9 +492,8 @@ def bfs_hops(
     in a near-dup graph.
 
     Each level is one join (frontier -> neighbors) + one anti-join
-    (drop already-visited) + a distinct, ``localCheckpoint``-ed so the
-    loop never re-plans accumulated lineage (swap for reliable
-    ``checkpoint()`` on a real cluster).  Level-synchronous expansion
+    (drop already-visited) + a distinct, checkpointed so the loop
+    never re-plans accumulated lineage.  Level-synchronous expansion
     makes the result independent of partition order — hop counts are
     the true shortest distances, engine-portable for an unrolled
     oracle.  The loop exits early when a frontier empties.
@@ -508,13 +505,13 @@ def bfs_hops(
         .unionAll(
             edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
         )
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     visited = (
         seeds.select(F.col(seed_col).alias("node"))
         .distinct()
         .withColumn("hops", F.lit(0))
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     frontier = visited.select("node")
     for h in range(1, max_hops + 1):
@@ -523,13 +520,13 @@ def bfs_hops(
             .select(F.col("v").alias("node"))
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
-            .localCheckpoint()
+            .transform(checkpoint)
         )
         if nxt.limit(1).count() == 0:
             break
         visited = visited.unionByName(
             nxt.withColumn("hops", F.lit(h))
-        ).localCheckpoint()
+        ).transform(checkpoint)
         frontier = nxt
     return visited
 
@@ -611,7 +608,7 @@ def personalized_pagerank(
 
     Deep runs (personalization is often iterated further than global
     PageRank to wash out the bipartite-path oscillation of early
-    rounds) truncate lineage with a ``localCheckpoint`` every 8
+    rounds) truncate lineage with a checkpoint every 8
     rounds — without it Catalyst's analysis of the accumulated join
     tree blows up past ~15 unrolled rounds; at the default 3 rounds
     the checkpoint never fires and the plan stays one lazy DAG.
@@ -670,7 +667,7 @@ def personalized_pagerank(
             )
         )
         if (i + 1) % 8 == 0 and (i + 1) < iters:
-            ranks = ranks.localCheckpoint()
+            ranks = checkpoint(ranks)
     return ranks.select(
         F.col("u").alias("node"),
         F.col("rank").alias("rank_scaled"),

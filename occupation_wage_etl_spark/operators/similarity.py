@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from occupation_wage_etl_spark.functions import similarity as S
+from occupation_wage_etl_spark.operators._cache import checkpoint
 
 
 def _as_double_array(values: Sequence[float]) -> F.Column:
@@ -902,7 +903,7 @@ def mmr_rerank(
         pool_df.join(pv, pool_df[id_col] == pv["__pid"])
         .select(F.col(id_col).alias("id"), F.col("cosine").alias("qcos"), "__pv")
         .coalesce(1)
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     pc = (
         pool_v.alias("a")

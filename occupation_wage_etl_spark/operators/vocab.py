@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from occupation_wage_etl_spark.operators._cache import checkpoint
+
 
 def build_vocab(
     df: DataFrame,
@@ -142,7 +144,7 @@ def bpe_merges(
 
     The argmax is a 1-row driver collect per round — a learned model
     parameter, same policy as IVF centroids.  The symbol table is
-    localCheckpoint-ed per round so the R-deep fold lineage never
+    checkpointed per round so the R-deep fold lineage never
     re-plans.  Shuffles per round: ONE hash aggregate on (left, right)
     symbol pairs; everything else is projection.
 
@@ -181,7 +183,7 @@ def _bpe_learn(
             ).alias("syms"),
             "freq",
         )
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     merges = []
     for r in range(1, rounds + 1):
@@ -236,7 +238,7 @@ def _bpe_learn(
                 """
             ).alias("syms"),
             "freq",
-        ).localCheckpoint()
+        ).transform(checkpoint)
     return merges, words
 
 

@@ -369,12 +369,14 @@ def encode_docx_fixture(
         )
         + "</Relationships>"
     )
-    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
-        zf.writestr("[Content_Types].xml", ct)
-        zf.writestr("_rels/.rels", _RELS)
-        zf.writestr("word/document.xml", document)
-        if rel_entries:
-            zf.writestr("word/_rels/document.xml.rels", doc_rels)
-        for name, xml_text in extra_parts:
-            zf.writestr(name, xml_text)
+    parts = [("[Content_Types].xml", ct), ("_rels/.rels", _RELS),
+             ("word/document.xml", document)]
+    if rel_entries:
+        parts.append(("word/_rels/document.xml.rels", doc_rels))
+    with zipfile.ZipFile(buf, "w") as zf:
+        for name, xml_text in parts + extra_parts:
+            # ZIP's epoch, not the wall clock writestr(name, ...) stamps:
+            # the same input always gives the same bytes
+            info = zipfile.ZipInfo(name, date_time=(1980, 1, 1, 0, 0, 0))
+            zf.writestr(info, xml_text, zipfile.ZIP_DEFLATED)
     return buf.getvalue()

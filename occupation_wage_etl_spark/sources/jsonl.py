@@ -66,14 +66,13 @@ def read_documents(
     Clean rows have the corrupt column dropped; quarantine rows are
     (raw_line,) for reject counting / inspection / a dead-letter sink.
 
-    The parsed frame is persisted through the tracked registry
-    (``operators/_cache.py``) — Spark refuses a query whose pruned
-    read schema is ONLY the corrupt column
-    (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN; the
+    The parsed frame is persisted with ``operators/_cache.cached`` —
+    Spark refuses a query whose pruned read schema is ONLY the corrupt
+    column (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN; the
     documented workaround is caching the parsed frame), and the cache
-    also makes clean + quarantine one parse instead of two.  Release
-    with ``release_cached()`` / ``cached_scope()`` after the sink
-    action, like any operator-internal persist.
+    also makes clean + quarantine one parse instead of two.  Call it
+    and run the sink actions inside one ``_cache.scope()``, which
+    releases the persist on exit, like any operator-internal block.
     """
     from occupation_wage_etl_spark.operators._cache import cached
 

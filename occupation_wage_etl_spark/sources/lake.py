@@ -15,11 +15,11 @@ Here the date is a real hive partition column (``snapshot_date``), so
 from __future__ import annotations
 
 import datetime as _dt
-from collections.abc import Callable, Iterator
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from occupation_wage_etl_spark.operators._cache import checkpoint, scope
 
 PARTITION_COL = "snapshot_date"
 
@@ -100,25 +100,6 @@ def write_bucketed(
     writer.saveAsTable(table)
 
 
-@contextmanager
-def _checkpoints() -> Iterator[Callable[[DataFrame], DataFrame]]:
-    """Yield ``checkpoint(df)`` = ``df.localCheckpoint()``; every block
-    checkpointed inside the ``with`` is unpersisted on exit, even on
-    error.  For rewrites whose checkpoints are consumed before they
-    return (their callers get counts, not frames)."""
-    held: list[DataFrame] = []
-
-    def checkpoint(df: DataFrame) -> DataFrame:
-        held.append(df.localCheckpoint())
-        return held[-1]
-
-    try:
-        yield checkpoint
-    finally:
-        for cp in held:
-            cp._jdf.queryExecution().logical().rdd().unpersist(False)  # noqa: SLF001
-
-
 def delete_by_key(
     spark: SparkSession,
     root: str,
@@ -149,7 +130,7 @@ def delete_by_key(
     the plan shape of steps 1-2 is identical.)
     """
     path = f"{root}/{dataset}"
-    with _checkpoints() as checkpoint:
+    with scope():
         keys = checkpoint(keys_df.select(F.col(key_col)).distinct())
         df = spark.read.parquet(path)
         hit_parts = [
@@ -211,7 +192,7 @@ def merge_upsert(
     path = f"{root}/{dataset}"
     date = insert_snapshot or today()
     lake = spark.read.parquet(path)
-    with _checkpoints() as checkpoint:
+    with scope():
         # distinct keys only (latest-wins within a batch is the caller's
         # contract, enforced here defensively).
         updates = checkpoint(updates_df.dropDuplicates([key_col]))
@@ -285,7 +266,7 @@ def compact_partition(
     # the checkpoint materializes the partition BEFORE the overwrite —
     # Spark refuses (or corrupts) a lazy read-then-overwrite of the same
     # path.  On a cluster, write-to-temp + rename is the durable variant.
-    with _checkpoints() as checkpoint:
+    with scope():
         compacted = checkpoint(
             read_snapshot(spark, root, dataset, snapshot_date)
             .drop(PARTITION_COL)

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 
 from occupation_wage_etl_spark.operators import dedup, graph
+from occupation_wage_etl_spark.operators._cache import release_checkpoints
 
 
 @pytest.fixture(autouse=True)
@@ -17,8 +18,7 @@ def _unpersist_checkpoints(spark):
     them after each test so later tests' persisted-RDD accounting
     (test_cache_lifecycle) starts from zero."""
     yield
-    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-        rdd.unpersist()
+    release_checkpoints(spark)
 
 
 def test_bfs_hops_path_graph(spark):

@@ -6,17 +6,9 @@ filter or an ObjStm layout can silently drop out of a fixture and every
 query still matches DuckDB.  These hashes pin each fixture frame's
 (doc_id, content) bytes at sf0.001, so any change to what a fixture
 emits — not only to what it decodes to — fails here.
-
-The docx fixtures are ZIP archives whose local headers carry the wall
-clock time ``zipfile`` wrote them at, so for those the pin covers every
-member's name, compression method and stored bytes in archive order
-instead of the raw archive.
 """
 
 from __future__ import annotations
-
-import io
-import zipfile
 
 import pytest
 
@@ -105,7 +97,7 @@ FIXTURES = {
     ),
     "docx": (
         lambda d: Q._synth_docx(d),
-        "3507a717b75611d6eef063407f57572f97a3bb4523c46d5a994b4e94df1b8346",
+        "f633be926e945c3e7ab7d1c10c5f8340d3b774288f702e1f11ad49ea0fa3a8e4",
     ),
     "audio": (
         lambda d: Q._synth_audio(d),
@@ -129,7 +121,7 @@ FIXTURES = {
     ),
     "docx_parts": (
         lambda d: Q._synth_docx_parts(d),
-        "bf5df447b6c3e2bebd9ead027711b1d2a00eb42abe1aaf567dca67d8219c807b",
+        "44ef3e4c33c02c6155fc6195f323831e9004e16426ba3965dc27b0cf9cac3685",
     ),
     "web_archives": (
         lambda d: Q._synth_web_archives(d),
@@ -182,18 +174,6 @@ FIXTURES = {
 }
 
 
-ZIP_FIXTURES = {"docx", "docx_parts"}
-
-
-def _zip_members(blob: bytes) -> bytes:
-    zf = zipfile.ZipFile(io.BytesIO(blob))
-    return repr([
-        (i.filename, i.compress_type, i.CRC, i.compress_size,
-         zf.read(i.filename))
-        for i in zf.infolist()
-    ]).encode()
-
-
 @pytest.fixture(scope="module")
 def docs(spark, sf_tiny):
     return Q._t(spark, sf_tiny, "documents")
@@ -206,6 +186,4 @@ def test_fixture_bytes_pinned(docs, name):
     rows, cols = collect(frame)
     assert cols == ["doc_id", "content"]
     assert len(rows) == docs.count()
-    if name in ZIP_FIXTURES:
-        rows = [(did, _zip_members(blob)) for did, blob in rows]
     assert value_hash(rows, cols) == expected

@@ -7,13 +7,14 @@ import json
 import os
 import subprocess
 import sys
+import threading
 
 import pytest
 
 from occupation_wage_etl_spark.operators import _cache
 from occupation_wage_etl_spark.operators._cache import cached
 from tools import harness
-from tools.harness import force, run_query
+from tools.harness import collect, force, run_query, value_hash
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -24,10 +25,9 @@ def _n_persisted(spark) -> int:
 
 @pytest.fixture
 def clean(spark):
-    """Start from a session holding no persisted blocks."""
+    """Drain the unscoped registry; the session's block count after."""
     _cache.release_cached()
     _cache.release_checkpoints(spark)
-    spark.catalog.clearCache()
     return _n_persisted(spark)
 
 
@@ -38,7 +38,6 @@ def test_run_query_releases_persists_and_checkpoints(spark, sf_tiny, clean, acti
     # every round while it builds, before any action runs
     _, build_s, exec_s = run_query(spark, "q39_dup_clusters", sf_tiny, action)
     assert build_s > 0 and exec_s >= 0
-    assert _cache._TRACKED == []
     assert _n_persisted(spark) == clean
 
 
@@ -47,7 +46,7 @@ def _persist_both(spark, sf_dir):
     checkpoint behind."""
     df = cached(spark.range(10).toDF("v"))
     df.count()
-    spark.range(10).localCheckpoint()
+    _cache.checkpoint(spark.range(10))
     return df
 
 
@@ -69,7 +68,42 @@ def test_release_runs_when_query_raises(spark, clean, monkeypatch, builder, acti
     monkeypatch.setitem(harness.BUILDERS, "boom", builder)
     with pytest.raises(RuntimeError, match="boom"):
         run_query(spark, "boom", "unused", action)
-    assert _cache._TRACKED == []
+    assert _n_persisted(spark) == clean
+    # the query's scope took both blocks: none reached the unscoped registry
+    assert _cache.release_cached() == 0
+    assert _cache.release_checkpoints(spark) == 0
+
+
+def test_two_queries_on_two_threads_release_only_their_own(spark, sf_tiny, clean):
+    """One session, two threads: q39 builds (its edge list and every
+    label round checkpointed), then waits while q01 runs start to end on
+    the other thread.  q01's release must leave q39's blocks alone, so
+    q39's collect still reads them and matches a run on its own."""
+    alone, _, _ = run_query(spark, "q39_dup_clusters", sf_tiny, collect)
+    built, other_done = threading.Event(), threading.Event()
+    other = {}
+
+    def collect_after_other(df):
+        built.set()
+        other_done.wait()
+        return collect(df)
+
+    def run_other():
+        built.wait()
+        try:
+            other["q01"] = run_query(spark, "q01_pricing_summary", sf_tiny, collect)
+        finally:
+            other_done.set()
+
+    thread = threading.Thread(target=run_other)
+    thread.start()
+    try:
+        shared, _, _ = run_query(spark, "q39_dup_clusters", sf_tiny, collect_after_other)
+    finally:
+        built.set()
+        thread.join()
+    assert value_hash(*shared) == value_hash(*alone)
+    assert other["q01"][0][0]  # q01 returned rows
     assert _n_persisted(spark) == clean
 
 

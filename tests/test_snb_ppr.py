@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 
 from occupation_wage_etl_spark.operators import fuzzy_join, graph
+from occupation_wage_etl_spark.operators._cache import release_checkpoints
 
 
 @pytest.fixture(autouse=True)
@@ -15,8 +16,7 @@ def _unpersist_checkpoints(spark):
     drop the leftover blocks so later tests' persisted-RDD accounting
     (test_cache_lifecycle) starts from zero in any execution order."""
     yield
-    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-        rdd.unpersist()
+    release_checkpoints(spark)
 
 
 def test_sorted_neighborhood_window_pairs(spark):

@@ -19,10 +19,7 @@ import os
 import time
 from contextlib import redirect_stdout
 
-from occupation_wage_etl_spark.operators._cache import (
-    release_cached,
-    release_checkpoints,
-)
+from occupation_wage_etl_spark.operators._cache import scope
 from occupation_wage_etl_spark.queries import SPARK_QUERIES
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -119,21 +116,19 @@ def run_query(spark, name: str, sf_dir: str, action=force):
 
     Returns ``(action_result, build_s, exec_s)``: ``build_s`` is the
     builder call (Python plan construction plus the eager jobs operators
-    run while they build), ``exec_s`` is the action.  The release runs
-    even when the builder or the action raises: tracked operator
-    persists, the iterative operators' local checkpoints, and the SQL
-    cache."""
+    run while they build), ``exec_s`` is the action.  The query runs in
+    its own ``_cache.scope()``, so its persists and local checkpoints
+    are released even when the builder or the action raises, and no
+    other query's are."""
     spark.sparkContext.setJobDescription(name)
     try:
-        t0 = time.perf_counter()
-        df = BUILDERS[name](spark, sf_dir)
-        t1 = time.perf_counter()
-        result = action(df)
-        t2 = time.perf_counter()
+        with scope():
+            t0 = time.perf_counter()
+            df = BUILDERS[name](spark, sf_dir)
+            t1 = time.perf_counter()
+            result = action(df)
+            t2 = time.perf_counter()
     finally:
-        release_cached()
-        release_checkpoints(spark)
-        spark.catalog.clearCache()
         spark.sparkContext.setJobDescription(None)
     return result, t1 - t0, t2 - t1
 
