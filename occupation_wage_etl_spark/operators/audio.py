@@ -12,9 +12,9 @@ headers alone.  Frame PAYLOAD decode (Huffman spectral data) needs a
 codec and stays out of scope, exactly like H.264 slice data in the
 video tier.
 
-Scale shape: one Arrow-batched ``mapInPandas`` over the binary column,
+Scale shape: one Arrow-batched ``flat_map`` over the binary column,
 zero shuffles; a 100 TB audio lake partitions by asset like every
-other multimodal operator (see ``multimodal._spread`` note).
+other multimodal operator.
 
 Reference parity: the reference pipeline (occupation-wage ETL) has no
 media tier; this extends the engine's training-data catalog.
@@ -23,10 +23,10 @@ media tier; this extends the engine's training-data catalog.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from occupation_wage_etl_spark.operators._rows import flat_map
 
 # MPEG1 Layer III bitrate table (kbps, index 1..14; 0 = free, 15 = bad)
 _MP3_BITRATES = (
@@ -172,7 +172,7 @@ def audio_frame_stats(
     count, sample rate, channels, samples/frame, duration (ms, floor),
     total/min/max frame bytes, and ``is_cbr`` (every frame at the same
     coded size — for MP3 the same bitrate index, for ADTS the same
-    aac_frame_length).  Scan-side ``mapInPandas``, zero shuffles."""
+    aac_frame_length).  Scan-side ``flat_map``, zero shuffles."""
     schema = (
         f"{id_col} long, container string, n_frames long, "
         "sample_rate int, channels int, samples_per_frame int, "
@@ -180,38 +180,27 @@ def audio_frame_stats(
         "min_frame_bytes int, max_frame_bytes int, is_cbr boolean"
     )
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            id_col, "container", "n_frames", "sample_rate", "channels",
-            "samples_per_frame", "duration_ms", "total_frame_bytes",
-            "min_frame_bytes", "max_frame_bytes", "is_cbr",
-        ]
-        for pdf in batches:
-            rows = []
-            for rid, payload in zip(pdf[id_col], pdf[bin_col]):
-                raw = bytes(payload or b"")
-                kind = sniff_audio_container(raw)
-                if kind is None:
-                    raise ValueError("corrupt audio: unknown container")
-                meta = parse_mp3(raw) if kind == "mp3" else parse_adts(raw)
-                fb = meta["frame_bytes"]
-                spf = meta["samples_per_frame"]
-                if kind == "mp3":
-                    cbr = len(set(meta["bitrates"])) == 1
-                else:
-                    cbr = len(set(fb)) == 1
-                rows.append(
-                    (
-                        int(rid), kind, meta["n_frames"],
-                        meta["sample_rate"], meta["channels"], spf,
-                        meta["n_frames"] * spf * 1000
-                        // meta["sample_rate"],
-                        sum(fb), min(fb), max(fb), cbr,
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
 
-    return df.select(id_col, bin_col).mapInPandas(_stats, schema=schema)
+    def _stats(rid, payload):
+        raw = payload or b""
+        kind = sniff_audio_container(raw)
+        if kind is None:
+            raise ValueError("corrupt audio: unknown container")
+        meta = parse_mp3(raw) if kind == "mp3" else parse_adts(raw)
+        fb = meta["frame_bytes"]
+        spf = meta["samples_per_frame"]
+        if kind == "mp3":
+            cbr = len(set(meta["bitrates"])) == 1
+        else:
+            cbr = len(set(fb)) == 1
+        return [(
+            rid, kind, meta["n_frames"], meta["sample_rate"],
+            meta["channels"], spf,
+            meta["n_frames"] * spf * 1000 // meta["sample_rate"],
+            sum(fb), min(fb), max(fb), cbr,
+        )]
+
+    return flat_map(df, [id_col, bin_col], schema, _stats)
 
 
 # ------------------------------------------------------ fixture encoders
@@ -327,7 +316,7 @@ def flac_streaminfo(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """One row per FLAC asset with STREAMINFO facts + duration (ms,
-    floor).  Scan-side ``mapInPandas``, zero shuffles."""
+    floor).  Scan-side ``flat_map``, zero shuffles."""
     schema = (
         f"{id_col} long, sample_rate int, channels int, "
         "bits_per_sample int, total_samples long, duration_ms long, "
@@ -335,30 +324,19 @@ def flac_streaminfo(
         "max_frame_size int, n_metadata_blocks int, md5_hex string"
     )
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            id_col, "sample_rate", "channels", "bits_per_sample",
-            "total_samples", "duration_ms", "min_block_size",
-            "max_block_size", "min_frame_size", "max_frame_size",
-            "n_metadata_blocks", "md5_hex",
-        ]
-        for pdf in batches:
-            rows = []
-            for rid, payload in zip(pdf[id_col], pdf[bin_col]):
-                m = parse_flac_streaminfo(bytes(payload or b""))
-                rows.append(
-                    (
-                        int(rid), m["sample_rate"], m["channels"],
-                        m["bits_per_sample"], m["total_samples"],
-                        m["total_samples"] * 1000 // m["sample_rate"],
-                        m["min_block_size"], m["max_block_size"],
-                        m["min_frame_size"], m["max_frame_size"],
-                        m["n_metadata_blocks"], m["md5_hex"],
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
 
-    return df.select(id_col, bin_col).mapInPandas(_stats, schema=schema)
+    def _stats(rid, payload):
+        m = parse_flac_streaminfo(payload or b"")
+        return [(
+            rid, m["sample_rate"], m["channels"], m["bits_per_sample"],
+            m["total_samples"],
+            m["total_samples"] * 1000 // m["sample_rate"],
+            m["min_block_size"], m["max_block_size"],
+            m["min_frame_size"], m["max_frame_size"],
+            m["n_metadata_blocks"], m["md5_hex"],
+        )]
+
+    return flat_map(df, [id_col, bin_col], schema, _stats)
 
 
 def encode_flac_fixture(
@@ -450,28 +428,22 @@ def id3_tags(
 ) -> DataFrame:
     """One row per asset: (id, title, artist, album, track, n_frames)
     from the ID3v2.3 tag (TIT2/TPE1/TALB/TRCK text frames; NULL when a
-    frame is absent).  Scan-side ``mapInPandas``, zero shuffles."""
+    frame is absent).  Scan-side ``flat_map``, zero shuffles."""
     schema = (
         f"{id_col} long, title string, artist string, album string, "
         "track string, n_frames int"
     )
 
-    def _tags(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [id_col, "title", "artist", "album", "track", "n_frames"]
-        for pdf in batches:
-            rows = []
-            for rid, payload in zip(pdf[id_col], pdf[bin_col]):
-                m = parse_id3v2_frames(bytes(payload or b""))
-                f = m["frames"]
-                rows.append(
-                    (
-                        int(rid), f.get("TIT2"), f.get("TPE1"),
-                        f.get("TALB"), f.get("TRCK"), m["n_frames"],
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
 
-    return df.select(id_col, bin_col).mapInPandas(_tags, schema=schema)
+    def _tags(rid, payload):
+        m = parse_id3v2_frames(payload or b"")
+        f = m["frames"]
+        return [(
+            rid, f.get("TIT2"), f.get("TPE1"), f.get("TALB"),
+            f.get("TRCK"), m["n_frames"],
+        )]
+
+    return flat_map(df, [id_col, bin_col], schema, _tags)
 
 
 def encode_id3v2_fixture(frames: dict[str, str], padding: int = 0) -> bytes:

@@ -58,7 +58,7 @@ because this sits in the scan-side hot path of every payload.
 Reference analogue: none (the reference reads one UTF-8 page);
 LLM-training-data extension surface (SURVEY.md §2 extensions).
 
-Scale shape: scan-side ``mapInPandas`` over the binary column, zero
+Scale shape: scan-side ``flat_map`` over the binary column, zero
 shuffles — same layout as the PDF/WARC/multimodal tiers.
 """
 
@@ -66,10 +66,10 @@ from __future__ import annotations
 
 import codecs
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from occupation_wage_etl_spark.operators._rows import flat_map
 
 _BOMS: tuple[tuple[bytes, str], ...] = (
     (codecs.BOM_UTF8, "utf-8"),
@@ -340,36 +340,16 @@ def sniff_transcode(
         + ("source string, " if declared_src else "")
         + "had_bom boolean, n_bytes long, n_chars int, text string"
     )
-    cols = [id_col, "encoding"] + (["source"] if declared_src else []) + [
-        "had_bom", "n_bytes", "n_chars", "text",
-    ]
     sel = [id_col, bin_col] + ([declared_col] if declared_src else [])
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            decl_vals = (
-                batch[declared_col] if declared_src
-                else [None] * len(batch)
-            )
-            for rid, payload, decl in zip(
-                batch[id_col], batch[bin_col], decl_vals
-            ):
-                raw = bytes(payload or b"")
-                label = (
-                    charset_from_content_type(decl)
-                    if decl is not None and not pd.isna(decl)
-                    else None
-                )
-                text, enc, had_bom, source = transcode_ex(raw, label)
-                row = [int(rid), enc]
-                if declared_src:
-                    row.append(source)
-                row += [had_bom, len(raw), len(text), text]
-                rows.append(tuple(row))
-            yield pd.DataFrame(rows, columns=cols)
+    def _run(rid, payload, decl=None):
+        raw = payload or b""
+        label = charset_from_content_type(decl) if decl is not None else None
+        text, enc, had_bom, source = transcode_ex(raw, label)
+        head = (rid, enc, source) if declared_src else (rid, enc)
+        return [head + (had_bom, len(raw), len(text), text)]
 
-    return df.select(*sel).mapInPandas(_run, schema=schema)
+    return flat_map(df, sel, schema, _run)
 
 
 def nfc_normalize_table(
@@ -384,7 +364,7 @@ def nfc_normalize_table(
     equivalent documents.
 
     No JVM builtin exists for Unicode normalization in Spark SQL, so
-    this is an Arrow-batched Python pass (``unicodedata.normalize`` —
+    this is a ``flat_map`` row function (``unicodedata.normalize`` —
     stdlib, deterministic, the same table DuckDB's nfc_normalize
     implements); it belongs at the bytes→text edge next to
     :func:`sniff_transcode`, ONCE per document, not in any hot
@@ -396,15 +376,10 @@ def nfc_normalize_table(
         f"{id_col} long, n_chars_before int, n_chars_after int, "
         "changed boolean, text string"
     )
-    cols = [id_col, "n_chars_before", "n_chars_after", "changed", "text"]
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for rid, t in zip(batch[id_col], batch[text_col]):
-                s = str(t or "")
-                n = unicodedata.normalize("NFC", s)
-                rows.append((int(rid), len(s), len(n), n != s, n))
-            yield pd.DataFrame(rows, columns=cols)
+    def _run(rid, t):
+        s = str(t or "")
+        n = unicodedata.normalize("NFC", s)
+        return [(rid, len(s), len(n), n != s, n)]
 
-    return df.select(id_col, text_col).mapInPandas(_run, schema=schema)
+    return flat_map(df, [id_col, text_col], schema, _run)

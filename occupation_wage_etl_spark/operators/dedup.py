@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from occupation_wage_etl_spark.operators._cache import cached
+from occupation_wage_etl_spark.operators._rows import flat_map
 
 from occupation_wage_etl_spark.functions import similarity as S
 from occupation_wage_etl_spark.functions import text as T
@@ -1015,52 +1016,39 @@ def planted_near_dup_recall_audit(
     )
     tgts = [float(t) for t in targets]
 
-    def _plant(batches):
+    def _plant(i, v):
         import hashlib as _hl
 
-        import pandas as _pd
+        x = [float(t) for t in v]
+        c = tgts[i % len(tgts)]
+        s = math.sqrt(1.0 - c * c)
+        nx = 0.0
+        for t in x:
+            nx += t * t
+        nx = math.sqrt(nx)
+        u = [t / nx for t in x]
+        w = [
+            int(_hl.md5(f"{plant_seed}:{i}:{j}".encode()).hexdigest()[:8], 16)
+            / 4294967295.0
+            * 2.0
+            - 1.0
+            for j in range(len(x))
+        ]
+        proj = 0.0
+        for wj, uj in zip(w, u):
+            proj += wj * uj
+        wp = [wj - proj * uj for wj, uj in zip(w, u)]
+        nw = 0.0
+        for t in wp:
+            nw += t * t
+        nw = math.sqrt(nw)
+        return [
+            (plant_base + i, [c * uj + s * (wj / nw) for uj, wj in zip(u, wp)])
+        ]
 
-        for pdf in batches:
-            out_ids, out_vecs = [], []
-            for i, v in zip(pdf["id"], pdf["vec"]):
-                i = int(i)
-                x = [float(t) for t in v]
-                c = tgts[i % len(tgts)]
-                s = math.sqrt(1.0 - c * c)
-                nx = 0.0
-                for t in x:
-                    nx += t * t
-                nx = math.sqrt(nx)
-                u = [t / nx for t in x]
-                w = [
-                    int(
-                        _hl.md5(
-                            f"{plant_seed}:{i}:{j}".encode()
-                        ).hexdigest()[:8],
-                        16,
-                    )
-                    / 4294967295.0
-                    * 2.0
-                    - 1.0
-                    for j in range(len(x))
-                ]
-                proj = 0.0
-                for wj, uj in zip(w, u):
-                    proj += wj * uj
-                wp = [wj - proj * uj for wj, uj in zip(w, u)]
-                nw = 0.0
-                for t in wp:
-                    nw += t * t
-                nw = math.sqrt(nw)
-                out_ids.append(plant_base + i)
-                out_vecs.append(
-                    [c * uj + s * (wj / nw) for uj, wj in zip(u, wp)]
-                )
-            yield _pd.DataFrame({"id": out_ids, "vec": out_vecs})
-
-    planted = (
-        base.filter(F.col("id") < plant_n)
-        .mapInPandas(_plant, schema="id long, vec array<double>")
+    planted = flat_map(
+        base.filter(F.col("id") < plant_n), ["id", "vec"],
+        "id long, vec array<double>", _plant,
     )
     union = base.unionByName(planted)
     cand = _hyperplane_candidates(

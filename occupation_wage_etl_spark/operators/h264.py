@@ -24,7 +24,7 @@ PNG codecs in ``multimodal.py``:
   NALs, the exact inverse of the decoder (q217's fixture pattern).
 - :func:`decode_avc_keyframes` — the Spark operator: MP4 payloads →
   real container demux (``operators/video.py``) → per-sync-sample
-  slice decode → per-frame pixel stats.  Scan-side ``mapInPandas``,
+  slice decode → per-frame pixel stats.  Scan-side ``flat_map``,
   zero shuffles, fan-out bounded by ``max_frames``.
 
 Documented scope bounds (each raises an explicit ``ValueError``):
@@ -50,7 +50,7 @@ training-data surface (SURVEY.md north-star extensions), building on
 the round-7 MP4 demux and round-8 SPS tiers.
 
 Scale posture: decode is a narrow per-row transform over payload
-bytes already local to the scan — the plan is scan → mapInPandas with
+bytes already local to the scan — the plan is scan → flat_map with
 zero exchanges; at 100 TB the decoded planes never enter a shuffle
 (stats out, or bounded thumbnails via ``return_pixels``).
 """
@@ -58,12 +58,13 @@ zero exchanges; at 100 TB the decoded planes never enter a shuffle
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
+from occupation_wage_etl_spark.operators._rows import flat_map
 from occupation_wage_etl_spark.operators.video import (
+    _BitReader,
+    _BitWriter,
     _ep_insert,
     _ep_strip,
     encode_sps,
@@ -291,119 +292,6 @@ _RUN_TREE = {
     zl: _make_tree((c, run) for run, c in enumerate(codes))
     for zl, codes in _RUN.items()
 }
-
-
-# --------------------------------------------------------------------------
-# bit I/O (MSB first, over EP-stripped RBSP)
-# --------------------------------------------------------------------------
-
-
-class _BitReader:
-    def __init__(self, data: bytes) -> None:
-        self.d, self.pos = data, 0
-
-    def u(self, n: int) -> int:
-        v = 0
-        d, pos = self.d, self.pos
-        for _ in range(n):
-            byte = pos >> 3
-            if byte >= len(d):
-                raise ValueError("corrupt H.264: bitstream overrun")
-            v = (v << 1) | ((d[byte] >> (7 - (pos & 7))) & 1)
-            pos += 1
-        self.pos = pos
-        return v
-
-    def ue(self) -> int:
-        z = 0
-        while self.u(1) == 0:
-            z += 1
-            if z > 31:
-                raise ValueError("corrupt H.264: Exp-Golomb run")
-        return (1 << z) - 1 + (self.u(z) if z else 0)
-
-    def se(self) -> int:
-        k = self.ue()
-        return (k + 1) // 2 if k & 1 else -(k // 2)
-
-    def vlc(self, tree: dict, what: str):
-        node = tree
-        for _ in range(32):
-            nxt = node.get(str(self.u(1)))
-            if nxt is None:
-                raise ValueError(f"corrupt H.264: invalid {what} code")
-            if isinstance(nxt, tuple):
-                return nxt[1]
-            node = nxt
-        raise ValueError(f"corrupt H.264: runaway {what} code")
-
-    def align(self) -> None:
-        while self.pos & 7:
-            if self.u(1):
-                raise ValueError(
-                    "corrupt H.264: nonzero pcm_alignment_zero_bit"
-                )
-
-    def bytes_(self, n: int) -> bytes:
-        if self.pos & 7:
-            raise ValueError("corrupt H.264: unaligned byte read")
-        start = self.pos >> 3
-        if start + n > len(self.d):
-            raise ValueError("corrupt H.264: PCM sample overrun")
-        self.pos += 8 * n
-        return self.d[start : start + n]
-
-    def more_rbsp_data(self) -> bool:
-        """True iff bits remain before the rbsp_stop_one_bit."""
-        i = len(self.d) - 1
-        while i >= 0 and self.d[i] == 0:
-            i -= 1
-        if i < 0:
-            return False
-        last = self.d[i]
-        stop = i * 8 + (7 - ((last & -last).bit_length() - 1))
-        return self.pos < stop
-
-
-class _BitWriter:
-    def __init__(self) -> None:
-        self.bits: list[int] = []
-
-    def u(self, value: int, n: int) -> None:
-        for i in range(n - 1, -1, -1):
-            self.bits.append((value >> i) & 1)
-
-    def ue(self, value: int) -> None:
-        z = (value + 1).bit_length() - 1
-        if z:
-            self.u(0, z)
-        self.u(value + 1, z + 1)
-
-    def se(self, value: int) -> None:
-        self.ue(2 * value - 1 if value > 0 else -2 * value)
-
-    def code(self, bitstring: str) -> None:
-        self.bits.extend(1 if c == "1" else 0 for c in bitstring)
-
-    def align_zero(self) -> None:
-        while len(self.bits) % 8:
-            self.bits.append(0)
-
-    def raw_bytes(self, b: bytes) -> None:
-        for byte in b:
-            self.u(byte, 8)
-
-    def rbsp(self) -> bytes:
-        bits = self.bits + [1]
-        while len(bits) % 8:
-            bits.append(0)
-        out = bytearray()
-        for i in range(0, len(bits), 8):
-            v = 0
-            for bit in bits[i : i + 8]:
-                v = (v << 1) | bit
-            out.append(v)
-        return bytes(out)
 
 
 # --------------------------------------------------------------------------
@@ -1819,7 +1707,7 @@ def decode_avc_keyframes(
     width, height, n_mb, n_pcm, n_slices, y_sum, y_min, y_max, cb_sum,
     cr_sum).
 
-    Scan-side ``mapInPandas``, zero shuffles; fan-out bounded by
+    Scan-side ``flat_map``, zero shuffles; fan-out bounded by
     ``max_frames`` per track (the 100 TB cap, as in
     ``mp4_keyframe_slices``)."""
     schema = (
@@ -1827,27 +1715,16 @@ def decode_avc_keyframes(
         "height int, n_mb int, n_pcm int, n_slices int, y_sum long, "
         "y_min int, y_max int, cb_sum long, cr_sum long"
     )
-    cols = [
-        id_col, "track_id", "sample_idx", "width", "height", "n_mb",
-        "n_pcm", "n_slices", "y_sum", "y_min", "y_max", "cb_sum",
-        "cr_sum",
-    ]
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rid, payload in zip(pdf[id_col], pdf[bin_col]):
-                raw = bytes(payload or b"")
-                for tr, sps, snum, dec in _iter_decoded_keyframes(
-                    raw, every_nth, max_frames
-                ):
-                    rows.append(
-                        (int(rid), tr["track_id"], snum)
-                        + _crop_stats(dec, sps)
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def _decode(rid, payload):
+        return [
+            (rid, tr["track_id"], snum) + _crop_stats(dec, sps)
+            for tr, sps, snum, dec in _iter_decoded_keyframes(
+                payload or b"", every_nth, max_frames
+            )
+        ]
 
-    return df.select(id_col, bin_col).mapInPandas(_decode, schema=schema)
+    return flat_map(df, [id_col, bin_col], schema, _decode)
 
 
 def _iter_decoded_keyframes(raw: bytes, every_nth: int, max_frames: int):
@@ -1895,7 +1772,7 @@ def keyframe_luma_thumbs(
     pixels array<int>).  This is the bridge from the codec tier into
     the dedup/similarity tiers — downstream exact-dup grouping, SimHash
     or embedding stages consume ``pixels`` like any other raster
-    (q256 groups exact duplicates on it).  Scan-side ``mapInPandas``;
+    (q256 groups exact duplicates on it).  Scan-side ``flat_map``;
     the thumbnails (thumb² ints) are the only thing that can enter a
     shuffle, never the decoded planes."""
     from occupation_wage_etl_spark.operators.multimodal import (
@@ -1906,115 +1783,18 @@ def keyframe_luma_thumbs(
         f"{id_col} long, track_id long, sample_idx long, "
         "width int, height int, pixels array<int>"
     )
-    cols = [id_col, "track_id", "sample_idx", "width", "height", "pixels"]
 
-    def _thumbs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rid, payload in zip(pdf[id_col], pdf[bin_col]):
-                raw = bytes(payload or b"")
-                for tr, sps, snum, dec in _iter_decoded_keyframes(
-                    raw, every_nth, max_frames
-                ):
-                    cl = sps.get("crop_left_px", 0)
-                    ct = sps.get("crop_top_px", 0)
-                    w, h = sps["coded_width"], sps["coded_height"]
-                    flat = bytes(
-                        b
-                        for row in dec["y"][ct : ct + h]
-                        for b in row[cl : cl + w]
-                    )
-                    px = _nearest_resample(flat, w, h, thumb, thumb)
-                    rows.append(
-                        (int(rid), tr["track_id"], snum, w, h, list(px))
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def _thumbs(rid, payload):
+        for tr, sps, snum, dec in _iter_decoded_keyframes(
+            payload or b"", every_nth, max_frames
+        ):
+            cl = sps.get("crop_left_px", 0)
+            ct = sps.get("crop_top_px", 0)
+            w, h = sps["coded_width"], sps["coded_height"]
+            flat = bytes(
+                b for row in dec["y"][ct : ct + h] for b in row[cl : cl + w]
+            )
+            px = _nearest_resample(flat, w, h, thumb, thumb)
+            yield (rid, tr["track_id"], snum, w, h, list(px))
 
-    return df.select(id_col, bin_col).mapInPandas(_thumbs, schema=schema)
-
-# ----------------------------------------------------- Annex B streams
-
-
-def split_annexb(stream: bytes) -> list[bytes]:
-    """Split an Annex B byte stream (H.264 Annex B: NAL units delimited
-    by 00 00 01 / 00 00 00 01 start codes) into NAL units — the framing
-    of raw .h264 elementary streams and MPEG-TS payloads, as opposed to
-    the length-prefixed avcC framing inside MP4."""
-    nals: list[bytes] = []
-    i = 0
-    n = len(stream)
-    # find the first start code
-    while i < n:
-        if stream[i : i + 3] == b"\x00\x00\x01":
-            i += 3
-            break
-        if stream[i : i + 4] == b"\x00\x00\x00\x01":
-            i += 4
-            break
-        i += 1
-    else:
-        raise ValueError("corrupt H.264: no Annex B start code")
-    start = i
-    while i < n:
-        if stream[i : i + 3] == b"\x00\x00\x01":
-            nal = stream[start:i].rstrip(b"\x00")
-            if nal:
-                nals.append(nal)
-            i += 3
-            start = i
-        else:
-            i += 1
-    tail = stream[start:].rstrip(b"\x00")
-    if tail:
-        nals.append(tail)
-    return nals
-
-
-def decode_annexb_keyframe(stream: bytes) -> dict:
-    """Decode the IDR picture of a raw Annex B elementary stream: the
-    SPS and PPS are taken from the stream itself (in-band parameter
-    sets), all coded-slice NALs form the picture.  Returns the
-    :func:`decode_idr_picture` dict plus the decoded ``sps``."""
-    from occupation_wage_etl_spark.operators.video import decode_sps
-
-    sps = pps = None
-    vcl: list[bytes] = []
-    for nal in split_annexb(stream):
-        t = nal[0] & 0x1F
-        if t == 7 and sps is None:
-            sps = decode_sps(nal)
-        elif t == 8 and pps is None:
-            pps = decode_pps(nal)
-        elif t in (1, 5):
-            vcl.append(nal)
-    if sps is None or pps is None:
-        raise ValueError("corrupt H.264: Annex B stream lacks SPS/PPS")
-    if not vcl:
-        raise ValueError("corrupt H.264: Annex B stream has no slices")
-    out = decode_idr_picture(sps, pps, vcl)
-    out["sps"] = sps
-    return out
-
-
-def encode_annexb_fixture(
-    width_mbs: int,
-    height_mbs: int,
-    mbs: list[dict],
-    qp: int = 28,
-    slices: list[int] | None = None,
-) -> bytes:
-    """Annex B twin of :func:`encode_idr_access_unit`: AUD-free
-    SPS + PPS + slice NALs with 4-byte start codes."""
-    sample, sps_nal, pps_nal = encode_idr_access_unit(
-        width_mbs, height_mbs, mbs, qp=qp, slices=slices
-    )
-    out = bytearray()
-    out += b"\x00\x00\x00\x01" + sps_nal
-    out += b"\x00\x00\x00\x01" + pps_nal
-    pos = 0
-    while pos + 4 <= len(sample):
-        ln = int.from_bytes(sample[pos : pos + 4], "big")
-        pos += 4
-        out += b"\x00\x00\x00\x01" + sample[pos : pos + ln]
-        pos += ln
-    return bytes(out)
+    return flat_map(df, [id_col, bin_col], schema, _thumbs)

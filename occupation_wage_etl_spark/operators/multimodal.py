@@ -1,9 +1,9 @@
 """Multimodal (image/audio/video) columns as opaque binary + typed metadata.
 
 Design for 100 TB: media bytes live in a ``binary`` column (or object-store
-URIs resolved at scan time); all per-asset work is Arrow-batched
-``mapInPandas`` so each Python worker touches a whole record batch at a
-time and the JVM⇄Python boundary is columnar.  The ops here are:
+URIs resolved at scan time); all per-asset work is a row function run by
+``operators/_rows.flat_map`` (Arrow-batched, so the JVM⇄Python boundary
+is columnar).  The ops here are:
 
 - ``sniff_metadata``   — REAL: container/codec detection + dimensions from
   magic bytes (PNG IHDR, JPEG SOF scan, GIF header, RIFF/WAV fmt chunk,
@@ -11,7 +11,7 @@ time and the JVM⇄Python boundary is columnar.  The ops here are:
   the latter four delegate to ``operators/video.py`` / ``operators/
   audio.py``) in pure Python — no media libraries, fully deterministic;
   corrupt headers degrade to mime-only, never raise.
-- ``decode_image`` (``mode="real"``) — REAL decode for PNG (zlib
+- ``decode_image`` — REAL decode for PNG (zlib
   inflate + scanline unfilter, 8-bit gray/RGB/±alpha), BMP (24/32-bit
   uncompressed), and baseline-DCT JPEG (SOF0/SOF1 Huffman: marker
   parse, canonical-Huffman entropy decode, dequantize, exact int64
@@ -20,28 +20,22 @@ time and the JVM⇄Python boundary is columnar.  The ops here are:
   thumb.  Progressive JPEG (SOF2, T.81 Annex G — DC/AC successive
   approximation, spectral selection, EOB runs, restarts) is decoded by
   the same path, gray and interleaved color; 4:2:0 YCbCr → fixed-point
-  RGB reconstruction is also real.  ``mode="strict"`` raises for any
-  undecodable payload, ``mode="fake"`` keeps the md5-keystream fake for
-  plumbing tests.
+  RGB reconstruction is also real.  Undecodable payloads raise.
 - ``decode_audio_stats`` — REAL WAV/PCM16 decode (stdlib ``struct``):
   per-asset sample stats without materializing waveforms into the plan.
-- ``resize_image`` / ``sample_frames`` — resize has the same real path
-  as decode; ``sample_frames(mode="mp4")`` does REAL ISO-BMFF container
-  demux (``operators/video.py``: stsc/stco/stsz offset math, stss
-  keyframe slices) and returns per-sample payload slices.  Since round
-  8, ``operators/h264.py`` REALLY decodes the pixels of IDR INTRA
-  keyframes (CAVLC entropy, I_PCM + Intra_16x16, §8.5 integer
-  transforms, all §8.3.3/8.3.4 prediction modes) — the remaining
-  stub is narrowed to inter (P/B) frames, CABAC streams and I_NxN
-  spatial prediction (no ffmpeg); ``fake`` exercises the fan-out
-  plumbing.
+- Video frames: ``operators/video.mp4_keyframe_slices`` does REAL
+  ISO-BMFF container demux (stsc/stco/stsz offset math, stss keyframe
+  slices).  Since round 8, ``operators/h264.py`` REALLY decodes the
+  pixels of IDR INTRA keyframes (CAVLC entropy, I_PCM + Intra_16x16,
+  §8.5 integer transforms, all §8.3.3/8.3.4 prediction modes) — the
+  remaining stub is narrowed to inter (P/B) frames, CABAC streams and
+  I_NxN spatial prediction (no ffmpeg).
 - ``extract_features`` — content-derived features, library-free.
 
-Partitioning: media rows are wildly skewed by payload size, so every
-operator optionally rebalances with ``repartition(n)`` BEFORE the Python
-stage (one 4 GB video must not pin a core while 10 kB thumbnails queue).
-At scale, prefer writing assets bucketed by size-band so AQE sees even
-input splits.
+Partitioning: media rows are wildly skewed by payload size; repartition
+the INPUT before calling an operator when one huge asset would pin a
+core, or write assets bucketed by size-band so AQE sees even input
+splits.
 """
 
 from __future__ import annotations
@@ -49,11 +43,11 @@ from __future__ import annotations
 import hashlib
 import struct
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from occupation_wage_etl_spark.operators._rows import flat_map
 
 # ---------------------------------------------------------------------------
 # pure-Python magic-byte sniffing (REAL, deterministic, no codec libs)
@@ -63,6 +57,7 @@ PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 JPEG_MAGIC = b"\xff\xd8\xff"
 GIF_MAGICS = (b"GIF87a", b"GIF89a")
 RIFF_MAGIC = b"RIFF"
+_INT32_MAX = 2**31 - 1  # METADATA_SCHEMA's int columns
 
 METADATA_SCHEMA = (
     "mime string, n_bytes long, width int, height int, "
@@ -91,9 +86,13 @@ def sniff_bytes(b: bytes | None) -> dict:
     try:
         if b.startswith(PNG_MAGIC):
             out["mime"] = "image/png"
-            # IHDR must be the first chunk: length@8, type@12, data@16
+            # IHDR must be the first chunk: length@8, type@12, data@16;
+            # dims above 2^31-1 are invalid PNG (and overflow the int
+            # columns): a corrupt header, so mime-only
             if len(b) >= 24 and b[12:16] == b"IHDR":
-                out["width"], out["height"] = struct.unpack(">II", b[16:24])
+                w, h = struct.unpack(">II", b[16:24])
+                if max(w, h) <= _INT32_MAX:
+                    out["width"], out["height"] = w, h
         elif b.startswith(JPEG_MAGIC):
             out["mime"] = "image/jpeg"
             # scan markers for a start-of-frame (SOF0/1/2) segment
@@ -120,7 +119,8 @@ def sniff_bytes(b: bytes | None) -> dict:
                 cid, csize = b[i : i + 4], struct.unpack("<I", b[i + 4 : i + 8])[0]
                 if cid == b"fmt " and i + 24 <= len(b):
                     out["channels"] = struct.unpack("<H", b[i + 10 : i + 12])[0]
-                    out["sample_rate"] = struct.unpack("<I", b[i + 12 : i + 16])[0]
+                    rate = struct.unpack("<I", b[i + 12 : i + 16])[0]
+                    out["sample_rate"] = rate if rate <= _INT32_MAX else None
                     byte_rate = struct.unpack("<I", b[i + 16 : i + 20])[0]
                 elif cid == b"data":
                     data_size = csize
@@ -189,31 +189,18 @@ def sniff_bytes(b: bytes | None) -> dict:
     return out
 
 
-def _maybe_rebalance(df: DataFrame, partitions: int | None) -> DataFrame:
-    return df.repartition(partitions) if partitions else df
-
-
 def sniff_metadata(
     df: DataFrame,
     bin_col: str = "content",
     id_col: str = "doc_id",
-    partitions: int | None = None,
 ) -> DataFrame:
     """(id, mime, n_bytes, width, height, sample_rate, channels,
-    duration_ms) per asset — Arrow-batched mapInPandas over the binary
-    column, header-only parsing (never decodes payloads)."""
-    out_schema = f"{id_col} long, {METADATA_SCHEMA}"
-
-    def _sniff(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [sniff_bytes(b) for b in pdf[bin_col]]
-            res = pd.DataFrame(metas)
-            res.insert(0, id_col, pdf[id_col].to_numpy())
-            yield res
-
-    return (
-        _maybe_rebalance(df.select(id_col, bin_col), partitions)
-        .mapInPandas(_sniff, schema=out_schema)
+    duration_ms) per asset — ``flat_map`` over the binary column,
+    header-only parsing (never decodes payloads)."""
+    # sniff_bytes' keys are METADATA_SCHEMA's columns, in order
+    return flat_map(
+        df, [id_col, bin_col], f"{id_col} long, {METADATA_SCHEMA}",
+        lambda rid, b: [(rid, *sniff_bytes(b).values())],
     )
 
 
@@ -384,7 +371,7 @@ def decode_image_bytes(b: bytes) -> tuple[int, int, bytes]:
 
 
 # ---------------------------------------------------------------------------
-# decode / resize / frame-sample / feature-extract operators
+# decode / feature-extract operators
 # ---------------------------------------------------------------------------
 
 _STUB_MSG = (
@@ -392,84 +379,38 @@ _STUB_MSG = (
     "baseline+progressive-JPEG images, WAV/PCM16 audio, H.264 IDR "
     "intra keyframes — I_PCM/Intra_16x16/Intra_4x4 CAVLC — via "
     "operators/h264.decode_avc_keyframes); INTER (P/B) video frames "
-    "and CABAC streams require an ffmpeg-class codec — pass "
-    "mode='fake' for the deterministic test fake, mode='mp4' on "
-    "sample_frames for the real ISO-BMFF container demux "
-    "(operators/video.py), or swap the per-batch body for a "
-    "codec-library decoder"
+    "and CABAC streams require an ffmpeg-class codec — use "
+    "operators/video.mp4_keyframe_slices for the real ISO-BMFF "
+    "container demux, or swap the row function for a codec-library "
+    "decoder"
 )
-
-
-def _fake_pixels(b: bytes, n: int) -> list[int]:
-    """Deterministic fake 'decoded pixels': md5-keystream over the payload.
-    Clearly NOT real decoding — exists so downstream plumbing is testable."""
-    out: list[int] = []
-    seed = b or b""
-    counter = 0
-    while len(out) < n:
-        out.extend(hashlib.md5(seed + counter.to_bytes(4, "big")).digest())
-        counter += 1
-    return out[:n]
 
 
 def decode_image(
     df: DataFrame,
     bin_col: str = "content",
     id_col: str = "doc_id",
-    mode: str = "real",
     thumb: int = 8,
-    partitions: int | None = None,
 ) -> DataFrame:
     """(id, width, height, pixels array<int>) — decode to a ``thumb``²
     grayscale raster (width/height report the SOURCE dimensions).
 
-    ``mode='real'``: stdlib PNG/BMP decode + nearest-neighbor resample;
-    undecodable payloads (JPEG, video, garbage) raise — curate/filter by
-    ``sniff_metadata`` mime first.  ``mode='fake'``: md5-keystream pixels
-    for plumbing tests.  ``mode='strict'`` is a legacy alias that always
-    raises (kept so callers can assert the no-codec-library posture)."""
-    if mode not in ("real", "strict", "fake"):
-        raise ValueError("mode must be 'real', 'strict' or 'fake'")
-    out_schema = f"{id_col} long, width int, height int, pixels array<int>"
-    n_px = thumb * thumb
+    Stdlib PNG/BMP/JPEG decode + nearest-neighbor resample; undecodable
+    payloads (video, garbage) raise — curate/filter by
+    ``sniff_metadata`` mime first."""
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if mode == "strict":
-                raise NotImplementedError(_STUB_MSG)
-            if mode == "fake":
-                yield pd.DataFrame(
-                    {
-                        id_col: pdf[id_col].to_numpy(),
-                        "width": thumb,
-                        "height": thumb,
-                        "pixels": [_fake_pixels(b, n_px) for b in pdf[bin_col]],
-                    }
-                )
-                continue
-            widths, heights, pixels = [], [], []
-            for b in pdf[bin_col]:
-                w, h, gray = decode_image_bytes(bytes(b or b""))
-                widths.append(w)
-                heights.append(h)
-                px = (
-                    gray
-                    if (w, h) == (thumb, thumb)
-                    else _nearest_resample(gray, w, h, thumb, thumb)
-                )
-                pixels.append(list(px))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "width": widths,
-                    "height": heights,
-                    "pixels": pixels,
-                }
-            )
+    def _decode(rid, b):
+        w, h, gray = decode_image_bytes(b or b"")
+        px = (
+            gray
+            if (w, h) == (thumb, thumb)
+            else _nearest_resample(gray, w, h, thumb, thumb)
+        )
+        return [(rid, w, h, list(px))]
 
-    return (
-        _maybe_rebalance(df.select(id_col, bin_col), partitions)
-        .mapInPandas(_decode, schema=out_schema)
+    return flat_map(
+        df, [id_col, bin_col],
+        f"{id_col} long, width int, height int, pixels array<int>", _decode,
     )
 
 
@@ -477,171 +418,42 @@ def decode_audio_stats(
     df: DataFrame,
     bin_col: str = "content",
     id_col: str = "doc_id",
-    partitions: int | None = None,
 ) -> DataFrame:
     """(id, sample_rate, n_samples, peak, mean_abs) per WAV/PCM16 asset —
     REAL stdlib decode.  Emits stats, not waveforms: at 100 TB the
     decoded audio should never enter the shuffle unless a downstream op
-    needs samples (then the same batch body yields array<short> chunks).
+    needs samples (then the same row function yields array<short> chunks).
     Non-WAV payloads raise (curate by mime first)."""
-    out_schema = (
+    schema = (
         f"{id_col} long, sample_rate int, n_samples long, "
         "peak int, mean_abs double"
     )
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, rates, counts, peaks, means = [], [], [], [], []
-            for rid, b in zip(pdf[id_col], pdf[bin_col]):
-                b = bytes(b or b"")
-                if not (
-                    b.startswith(RIFF_MAGIC) and len(b) >= 12 and b[8:12] == b"WAVE"
-                ):
-                    raise ValueError(_STUB_MSG)
-                i, rate, bits, data = 12, None, None, None
-                while i + 8 <= len(b):
-                    cid, csize = b[i : i + 4], struct.unpack("<I", b[i + 4 : i + 8])[0]
-                    if cid == b"fmt " and i + 24 <= len(b):
-                        rate = struct.unpack("<I", b[i + 12 : i + 16])[0]
-                        bits = struct.unpack("<H", b[i + 22 : i + 24])[0]
-                    elif cid == b"data":
-                        data = b[i + 8 : i + 8 + csize]
-                    i += 8 + csize + (csize & 1)
-                if rate is None or data is None or bits != 16:
-                    raise ValueError(_STUB_MSG)
-                n = len(data) // 2
-                samples = struct.unpack(f"<{n}h", data[: n * 2])
-                ids.append(rid)
-                rates.append(rate)
-                counts.append(n)
-                peaks.append(max((abs(s) for s in samples), default=0))
-                means.append(
-                    sum(abs(s) for s in samples) / n if n else 0.0
-                )
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "sample_rate": rates,
-                    "n_samples": counts,
-                    "peak": peaks,
-                    "mean_abs": means,
-                }
-            )
+    def _stats(rid, b):
+        b = b or b""
+        if not (
+            b.startswith(RIFF_MAGIC) and len(b) >= 12 and b[8:12] == b"WAVE"
+        ):
+            raise ValueError(_STUB_MSG)
+        i, rate, bits, data = 12, None, None, None
+        while i + 8 <= len(b):
+            cid, csize = b[i : i + 4], struct.unpack("<I", b[i + 4 : i + 8])[0]
+            if cid == b"fmt " and i + 24 <= len(b):
+                rate = struct.unpack("<I", b[i + 12 : i + 16])[0]
+                bits = struct.unpack("<H", b[i + 22 : i + 24])[0]
+            elif cid == b"data":
+                data = b[i + 8 : i + 8 + csize]
+            i += 8 + csize + (csize & 1)
+        if rate is None or data is None or bits != 16:
+            raise ValueError(_STUB_MSG)
+        n = len(data) // 2
+        samples = struct.unpack(f"<{n}h", data[: n * 2])
+        return [(
+            rid, rate, n, max((abs(s) for s in samples), default=0),
+            sum(abs(s) for s in samples) / n if n else 0.0,
+        )]
 
-    return (
-        _maybe_rebalance(df.select(id_col, bin_col), partitions)
-        .mapInPandas(_stats, schema=out_schema)
-    )
-
-
-def resize_image(
-    df: DataFrame,
-    target_w: int,
-    target_h: int,
-    bin_col: str = "content",
-    id_col: str = "doc_id",
-    mode: str = "real",
-    partitions: int | None = None,
-) -> DataFrame:
-    """(id, width, height, content binary) — resized grayscale payload,
-    re-encoded as PNG.  ``mode='real'``: stdlib PNG/BMP decode →
-    nearest-neighbor resample → ``encode_png_gray``; 'fake' emits an
-    md5-keystream payload of target_w*target_h bytes; 'strict' raises."""
-    if mode not in ("real", "strict", "fake"):
-        raise ValueError("mode must be 'real', 'strict' or 'fake'")
-    out_schema = f"{id_col} long, width int, height int, content binary"
-    n = target_w * target_h
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if mode == "strict":
-                raise NotImplementedError(_STUB_MSG)
-            if mode == "fake":
-                yield pd.DataFrame(
-                    {
-                        id_col: pdf[id_col].to_numpy(),
-                        "width": target_w,
-                        "height": target_h,
-                        "content": [bytes(_fake_pixels(b, n)) for b in pdf[bin_col]],
-                    }
-                )
-                continue
-            out = []
-            for b in pdf[bin_col]:
-                w, h, gray = decode_image_bytes(bytes(b or b""))
-                resized = _nearest_resample(gray, w, h, target_w, target_h)
-                out.append(encode_png_gray(target_w, target_h, resized))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "width": target_w,
-                    "height": target_h,
-                    "content": out,
-                }
-            )
-
-    return (
-        _maybe_rebalance(df.select(id_col, bin_col), partitions)
-        .mapInPandas(_resize, schema=out_schema)
-    )
-
-
-def sample_frames(
-    df: DataFrame,
-    every_nth: int = 10,
-    max_frames: int = 4,
-    bin_col: str = "content",
-    id_col: str = "doc_id",
-    mode: str = "strict",
-    partitions: int | None = None,
-) -> DataFrame:
-    """One output row per sampled frame: (id, frame_idx, frame binary).
-    A fan-out mapInPandas (rows out > rows in) — the Spark-native shape
-    for frame extraction.
-
-    ``mode='mp4'`` (since round 7): REAL container demux for ISO-BMFF
-    payloads — ``frame_idx`` is the 1-based sync-sample number from the
-    ``stss`` table and ``frame`` is the actual ``mdat`` byte slice at
-    the stsc/stco/stsz-derived offset (:mod:`.video`); ``every_nth``
-    strides the keyframe list, ``max_frames`` caps the fan-out.  Codec
-    DECODE of the sliced frames remains the PERMANENT STUB (stdlib has
-    no H.264-class decoder — COVERAGE.md records the decision); 'fake'
-    emits md5-derived 16-byte frame payloads at indexes 0, n, 2n, … so
-    non-MP4 plumbing stays tested, and 'strict' raises."""
-    if mode == "mp4":
-        from occupation_wage_etl_spark.operators.video import (
-            mp4_keyframe_slices,
-        )
-
-        return mp4_keyframe_slices(
-            df, every_nth=every_nth, max_frames=max_frames,
-            bin_col=bin_col, id_col=id_col,
-        ).select(
-            id_col,
-            F.col("sample_idx").cast("int").alias("frame_idx"),
-            "frame",
-        )
-    out_schema = f"{id_col} long, frame_idx int, frame binary"
-
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if mode == "strict":
-                raise NotImplementedError(_STUB_MSG)
-            ids, idxs, frames = [], [], []
-            for rid, b in zip(pdf[id_col], pdf[bin_col]):
-                for j in range(max_frames):
-                    fi = j * every_nth
-                    ids.append(rid)
-                    idxs.append(fi)
-                    frames.append(
-                        hashlib.md5((b or b"") + fi.to_bytes(4, "big")).digest()
-                    )
-            yield pd.DataFrame({id_col: ids, "frame_idx": idxs, "frame": frames})
-
-    return (
-        _maybe_rebalance(df.select(id_col, bin_col), partitions)
-        .mapInPandas(_sample, schema=out_schema)
-    )
+    return flat_map(df, [id_col, bin_col], schema, _stats)
 
 
 def extract_features(
@@ -649,43 +461,35 @@ def extract_features(
     dim: int = 8,
     bin_col: str = "content",
     id_col: str = "doc_id",
-    partitions: int | None = None,
 ) -> DataFrame:
     """(id, feature array<double>) — content-derived feature vector.
 
     REAL plumbing + deterministic md5-derived features (each slot is a
     [0,1) double from 4 digest bytes); a real encoder drops into the same
-    batch body.  Unlike decode this has no library dependency, so no
-    strict/fake split.
+    row function.  It has no library dependency and never raises.
 
     Keystream block k = md5 of the ASCII string ``HEX(payload) + ":" + k``
     (not md5 of raw bytes: DuckDB's md5 only hashes VARCHAR, and the
     correctness oracle replays this as ``md5(hex(b) || ':k')`` — uppercase
     hex on both sides)."""
-    out_schema = f"{id_col} long, feature array<double>"
     n_blocks = (dim * 4 + 15) // 16
 
-    def _feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for b in pdf[bin_col]:
-                hx = (b or b"").hex().upper()
-                raw = b"".join(
-                    hashlib.md5(f"{hx}:{k}".encode()).digest()
-                    for k in range(n_blocks)
-                )
-                feats.append(
-                    [
-                        int.from_bytes(raw[i * 4 : i * 4 + 4], "big")
-                        / float(1 << 32)
-                        for i in range(dim)
-                    ]
-                )
-            yield pd.DataFrame({id_col: pdf[id_col].to_numpy(), "feature": feats})
+    def _feat(rid, b):
+        hx = (b or b"").hex().upper()
+        raw = b"".join(
+            hashlib.md5(f"{hx}:{k}".encode()).digest()
+            for k in range(n_blocks)
+        )
+        return [(
+            rid,
+            [
+                int.from_bytes(raw[i * 4 : i * 4 + 4], "big") / float(1 << 32)
+                for i in range(dim)
+            ],
+        )]
 
-    return (
-        _maybe_rebalance(df.select(id_col, bin_col), partitions)
-        .mapInPandas(_feat, schema=out_schema)
+    return flat_map(
+        df, [id_col, bin_col], f"{id_col} long, feature array<double>", _feat
     )
 
 
@@ -1567,12 +1371,11 @@ def jpeg_rgb_stats(
     df: DataFrame,
     bin_col: str = "content",
     id_col: str = "doc_id",
-    partitions: int | None = None,
 ) -> DataFrame:
     """Per-image RGB channel statistics off :func:`decode_jpeg_rgb`:
     (id, width, height, r_sum, g_sum, b_sum, r_min, r_max, g_min,
     g_max, b_min, b_max).  Channel reductions run vectorized in numpy
-    inside the Arrow batch — the raster never leaves the executor, so
+    inside the row function — the raster never leaves the executor, so
     the operator ships 11 longs per image regardless of resolution
     (the 100 TB shape: decode-and-reduce where the bytes live)."""
     schema = (
@@ -1582,36 +1385,18 @@ def jpeg_rgb_stats(
         "b_min long, b_max long"
     )
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _stats(rid, payload):
         import numpy as np
 
-        for pdf in batches:
-            rows = []
-            for rid, payload in zip(pdf[id_col], pdf[bin_col]):
-                w, h, rgb = decode_jpeg_rgb(bytes(payload or b""))
-                a = np.frombuffer(rgb, dtype=np.uint8).reshape(-1, 3)
-                a = a.astype(np.int64)
-                rows.append(
-                    (
-                        int(rid), w, h,
-                        *a.sum(axis=0).tolist(),
-                        a[:, 0].min(), a[:, 0].max(),
-                        a[:, 1].min(), a[:, 1].max(),
-                        a[:, 2].min(), a[:, 2].max(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "width", "height", "r_sum", "g_sum", "b_sum",
-                    "r_min", "r_max", "g_min", "g_max", "b_min", "b_max",
-                ],
-            )
+        w, h, rgb = decode_jpeg_rgb(payload or b"")
+        a = np.frombuffer(rgb, dtype=np.uint8).reshape(-1, 3)
+        lo, hi = a.min(axis=0).tolist(), a.max(axis=0).tolist()
+        return [(
+            rid, w, h, *a.sum(axis=0, dtype=np.int64).tolist(),
+            lo[0], hi[0], lo[1], hi[1], lo[2], hi[2],
+        )]
 
-    return (
-        _maybe_rebalance(df.select(id_col, bin_col), partitions)
-        .mapInPandas(_stats, schema=schema)
-    )
+    return flat_map(df, [id_col, bin_col], schema, _stats)
 
 
 # ------------------------------------- progressive JPEG fixture encoder

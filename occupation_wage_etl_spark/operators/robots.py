@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from occupation_wage_etl_spark.operators._rows import flat_map
+
 _RULE_FIELDS = ("allow", "disallow", "crawl-delay")
 
 
@@ -307,6 +309,26 @@ def crawl_budget(
     )
 
 
+def _sitemap_root(xml_text):
+    """Parsed root of a sitemap payload — a string, or bytes (gzip magic
+    decompressed first); None for a corrupt gzip or malformed XML, so
+    the document is skipped and never fails a task."""
+    import gzip
+    import xml.etree.ElementTree as ET
+
+    if isinstance(xml_text, bytes):
+        if xml_text[:2] == b"\x1f\x8b":
+            try:
+                xml_text = gzip.decompress(xml_text)
+            except (OSError, EOFError):
+                return None
+        xml_text = xml_text.decode("utf-8", "replace")
+    try:
+        return ET.fromstring(xml_text or "")
+    except ET.ParseError:
+        return None
+
+
 def sitemap_entries(
     df: DataFrame,
     xml_col: str = "sitemap_xml",
@@ -317,7 +339,7 @@ def sitemap_entries(
     loc/lastmod/changefreq/priority) and ``<sitemapindex>`` (nested
     sitemap pointers) — into (id, kind, ordinal, loc, lastmod,
     changefreq, priority) rows.  ``max_entries`` mirrors the protocol's
-    own 50k-URL cap.  Scan-side ``mapInPandas`` (stdlib etree), zero
+    own 50k-URL cap.  Scan-side ``flat_map`` (stdlib etree), zero
     shuffles — the discovery companion to :func:`robots_rules`'
     Sitemap lines.
 
@@ -325,67 +347,39 @@ def sitemap_entries(
     starting with the gzip magic are decompressed first — ``.xml.gz``
     is the norm at scale (the protocol's own 50 MB/50k limits push
     every large site to compressed sitemaps)."""
-    import gzip
-    import xml.etree.ElementTree as ET
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     ns = "{http://www.sitemaps.org/schemas/sitemap/0.9}"
     schema = (
         f"{id_col} long, kind string, ordinal int, loc string, "
         "lastmod string, changefreq string, priority double"
     )
-    cols = [
-        id_col, "kind", "ordinal", "loc", "lastmod", "changefreq",
-        "priority",
-    ]
 
     def _field(el, name):
         c = el.find(ns + name)
         return None if c is None or c.text is None else c.text.strip()
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for rid, xml_text in zip(batch[id_col], batch[xml_col]):
-                if isinstance(xml_text, (bytes, bytearray, memoryview)):
-                    raw = bytes(xml_text)
-                    if raw[:2] == b"\x1f\x8b":
-                        try:
-                            raw = gzip.decompress(raw)
-                        except (OSError, EOFError):
-                            continue  # corrupt gzip: skip, never fail
-                    xml_text = raw.decode("utf-8", "replace")
-                try:
-                    root = ET.fromstring(str(xml_text or ""))
-                except ET.ParseError:
-                    continue  # malformed sitemap: skip, never fail
-                kind = (
-                    "url"
-                    if root.tag == ns + "urlset"
-                    else "sitemap"
-                    if root.tag == ns + "sitemapindex"
-                    else None
-                )
-                if kind is None:
-                    continue
-                child = ns + ("url" if kind == "url" else "sitemap")
-                for k, el in enumerate(root.findall(child)):
-                    if k >= max_entries:
-                        break
-                    pr = _field(el, "priority")
-                    rows.append(
-                        (
-                            int(rid), kind, k, _field(el, "loc"),
-                            _field(el, "lastmod"),
-                            _field(el, "changefreq"),
-                            float(pr) if pr is not None else None,
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def _run(rid, xml_text):
+        root = _sitemap_root(xml_text)
+        if root is None:
+            return
+        kind = (
+            "url"
+            if root.tag == ns + "urlset"
+            else "sitemap"
+            if root.tag == ns + "sitemapindex"
+            else None
+        )
+        if kind is None:
+            return
+        child = ns + ("url" if kind == "url" else "sitemap")
+        for k, el in enumerate(root.findall(child)[:max_entries]):
+            pr = _field(el, "priority")
+            yield (
+                rid, kind, k, _field(el, "loc"), _field(el, "lastmod"),
+                _field(el, "changefreq"),
+                float(pr) if pr is not None else None,
+            )
 
-    return df.select(id_col, xml_col).mapInPandas(_run, schema=schema)
+    return flat_map(df, [id_col, xml_col], schema, _run)
 
 
 def sitemap_extension_entries(
@@ -403,14 +397,8 @@ def sitemap_extension_entries(
     publication_date).  Image rows leave the news columns NULL and
     vice versa — one long-form table, not two, so the downstream
     multimodal/caption joins stay single-source.  Same scan-side
-    ``mapInPandas`` + gzip handling as :func:`sitemap_entries`; zero
+    ``flat_map`` + gzip handling as :func:`sitemap_entries`; zero
     shuffles."""
-    import gzip
-    import xml.etree.ElementTree as ET
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     ns = "{http://www.sitemaps.org/schemas/sitemap/0.9}"
     img = "{http://www.google.com/schemas/sitemap-image/1.1}"
     news = "{http://www.google.com/schemas/sitemap-news/0.9}"
@@ -420,69 +408,37 @@ def sitemap_extension_entries(
         "caption string, publication_name string, "
         "publication_language string, publication_date string"
     )
-    cols = [
-        id_col, "ordinal", "page_loc", "ext_kind", "ext_ordinal",
-        "loc", "title", "caption", "publication_name",
-        "publication_language", "publication_date",
-    ]
 
     def _txt(el, tag):
         c = el.find(tag)
         return None if c is None or c.text is None else c.text.strip()
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for rid, xml_text in zip(batch[id_col], batch[xml_col]):
-                if isinstance(xml_text, (bytes, bytearray, memoryview)):
-                    raw = bytes(xml_text)
-                    if raw[:2] == b"\x1f\x8b":
-                        try:
-                            raw = gzip.decompress(raw)
-                        except (OSError, EOFError):
-                            continue
-                    xml_text = raw.decode("utf-8", "replace")
-                try:
-                    root = ET.fromstring(str(xml_text or ""))
-                except ET.ParseError:
-                    continue
-                if root.tag != ns + "urlset":
-                    continue
-                for k, el in enumerate(root.findall(ns + "url")):
-                    if k >= max_entries:
-                        break
-                    page_loc = _txt(el, ns + "loc")
-                    e = 0
-                    for im in el.findall(img + "image"):
-                        rows.append(
-                            (
-                                int(rid), k, page_loc, "image", e,
-                                _txt(im, img + "loc"),
-                                _txt(im, img + "title"),
-                                _txt(im, img + "caption"),
-                                None, None, None,
-                            )
-                        )
-                        e += 1
-                    for nw in el.findall(news + "news"):
-                        pub = nw.find(news + "publication")
-                        rows.append(
-                            (
-                                int(rid), k, page_loc, "news", e,
-                                None,
-                                _txt(nw, news + "title"),
-                                None,
-                                _txt(pub, news + "name")
-                                if pub is not None else None,
-                                _txt(pub, news + "language")
-                                if pub is not None else None,
-                                _txt(nw, news + "publication_date"),
-                            )
-                        )
-                        e += 1
-            yield pd.DataFrame(rows, columns=cols)
+    def _run(rid, xml_text):
+        root = _sitemap_root(xml_text)
+        if root is None or root.tag != ns + "urlset":
+            return
+        for k, el in enumerate(root.findall(ns + "url")[:max_entries]):
+            page_loc = _txt(el, ns + "loc")
+            e = 0
+            for im in el.findall(img + "image"):
+                yield (
+                    rid, k, page_loc, "image", e, _txt(im, img + "loc"),
+                    _txt(im, img + "title"), _txt(im, img + "caption"),
+                    None, None, None,
+                )
+                e += 1
+            for nw in el.findall(news + "news"):
+                pub = nw.find(news + "publication")
+                yield (
+                    rid, k, page_loc, "news", e, None,
+                    _txt(nw, news + "title"), None,
+                    _txt(pub, news + "name") if pub is not None else None,
+                    _txt(pub, news + "language") if pub is not None else None,
+                    _txt(nw, news + "publication_date"),
+                )
+                e += 1
 
-    return df.select(id_col, xml_col).mapInPandas(_run, schema=schema)
+    return flat_map(df, [id_col, xml_col], schema, _run)
 
 
 def sitemap_index_chase(

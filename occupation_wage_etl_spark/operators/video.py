@@ -13,15 +13,15 @@ is pure public spec (ISO/IEC 14496-12 box grammar) and pure stdlib:
   from the ``stsc`` (sample→chunk) + ``stco``/``co64`` (chunk offset) +
   ``stsz`` (sample size) tables — the real demux math, not a stub.
 - :func:`demux_mp4` is the Spark operator: one output row per TRACK,
-  scan-side ``mapInPandas`` (Arrow-batched, no shuffle — metadata
+  scan-side ``flat_map`` (Arrow-batched, no shuffle — metadata
   extraction stays where the bytes already are).
 - :func:`mp4_keyframe_slices` fans out one row per SYNC SAMPLE
   (``stss``; absent ⇒ every sample is sync, per spec) with its byte
-  offset, size, and the actual payload slice out of ``mdat`` — the
-  "sample_frames able to target real keyframe offsets" path.  Codec
-  DECODE of the sliced frames remains out of scope (stdlib has no
-  H.264/AAC decoder — COVERAGE.md records the decision); the container
-  layer itself is fully real.
+  offset, size, and the actual payload slice out of ``mdat`` — frame
+  sampling at real keyframe offsets.  Pixel decode of H.264 intra
+  keyframes lives in ``operators/h264.py``; inter frames and other
+  codecs stay out of scope (COVERAGE.md records the decision); the
+  container layer itself is fully real.
 - :func:`encode_mp4_fixture` synthesizes a structurally valid
   single-``mdat`` MP4 from chosen parameters — the deterministic
   fixture generator for the oracle-paired registry queries (q232/q233),
@@ -34,17 +34,17 @@ this module is part of the engine's training-data extension surface.
 
 Scale posture: payloads are opaque ``binary`` cells read once by the
 scan; both operators are narrow per-row transforms (fan-out bounded by
-keyframe count), so the plan shape is scan → mapInPandas with zero
+keyframe count), so the plan shape is scan → flat_map with zero
 exchanges — partitioning is whatever the source table already has.
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from occupation_wage_etl_spark.operators._rows import flat_map
 
 # Container boxes whose payload is a sequence of child boxes.
 _CONTAINERS = {
@@ -168,20 +168,24 @@ _HIGH_PROFILES = frozenset(
 )
 
 
-class _EgBitReader:
-    """MSB-first bit reader with Exp-Golomb (H.264 §9.1) over RBSP."""
+class _BitReader:
+    """MSB-first bit reader with Exp-Golomb (H.264 §9.1) over an
+    EP-stripped RBSP; ``kind`` names the structure in corruption
+    errors (``"SPS"`` for :func:`decode_sps`)."""
 
-    def __init__(self, data: bytes) -> None:
-        self.d, self.pos = data, 0
+    def __init__(self, data: bytes, kind: str = "H.264") -> None:
+        self.d, self.pos, self.kind = data, 0, kind
 
     def u(self, n: int) -> int:
         v = 0
+        d, pos = self.d, self.pos
         for _ in range(n):
-            byte = self.pos >> 3
-            if byte >= len(self.d):
-                raise ValueError("corrupt SPS: bit overrun")
-            v = (v << 1) | ((self.d[byte] >> (7 - (self.pos & 7))) & 1)
-            self.pos += 1
+            byte = pos >> 3
+            if byte >= len(d):
+                raise ValueError(f"corrupt {self.kind}: bitstream overrun")
+            v = (v << 1) | ((d[byte] >> (7 - (pos & 7))) & 1)
+            pos += 1
+        self.pos = pos
         return v
 
     def ue(self) -> int:
@@ -189,16 +193,54 @@ class _EgBitReader:
         while self.u(1) == 0:
             z += 1
             if z > 31:
-                raise ValueError("corrupt SPS: Exp-Golomb run")
+                raise ValueError(f"corrupt {self.kind}: Exp-Golomb run")
         return (1 << z) - 1 + (self.u(z) if z else 0)
 
     def se(self) -> int:
         k = self.ue()
         return (k + 1) // 2 if k & 1 else -(k // 2)
 
+    def vlc(self, tree: dict, what: str):
+        node = tree
+        for _ in range(32):
+            nxt = node.get(str(self.u(1)))
+            if nxt is None:
+                raise ValueError(f"corrupt H.264: invalid {what} code")
+            if isinstance(nxt, tuple):
+                return nxt[1]
+            node = nxt
+        raise ValueError(f"corrupt H.264: runaway {what} code")
 
-class _EgBitWriter:
-    """MSB-first bit writer with Exp-Golomb — the SPS fixture encoder."""
+    def align(self) -> None:
+        while self.pos & 7:
+            if self.u(1):
+                raise ValueError(
+                    "corrupt H.264: nonzero pcm_alignment_zero_bit"
+                )
+
+    def bytes_(self, n: int) -> bytes:
+        if self.pos & 7:
+            raise ValueError("corrupt H.264: unaligned byte read")
+        start = self.pos >> 3
+        if start + n > len(self.d):
+            raise ValueError("corrupt H.264: PCM sample overrun")
+        self.pos += 8 * n
+        return self.d[start : start + n]
+
+    def more_rbsp_data(self) -> bool:
+        """True iff bits remain before the rbsp_stop_one_bit."""
+        i = len(self.d) - 1
+        while i >= 0 and self.d[i] == 0:
+            i -= 1
+        if i < 0:
+            return False
+        last = self.d[i]
+        stop = i * 8 + (7 - ((last & -last).bit_length() - 1))
+        return self.pos < stop
+
+
+class _BitWriter:
+    """MSB-first bit writer with Exp-Golomb — the fixture encoders."""
 
     def __init__(self) -> None:
         self.bits: list[int] = []
@@ -216,14 +258,28 @@ class _EgBitWriter:
     def se(self, value: int) -> None:
         self.ue(2 * value - 1 if value > 0 else -2 * value)
 
+    def code(self, bitstring: str) -> None:
+        self.bits.extend(1 if c == "1" else 0 for c in bitstring)
+
+    def align_zero(self) -> None:
+        while len(self.bits) % 8:
+            self.bits.append(0)
+
+    def raw_bytes(self, b: bytes) -> None:
+        for byte in b:
+            self.u(byte, 8)
+
     def rbsp(self) -> bytes:
-        bits = self.bits + [1]  # rbsp_stop_one_bit
+        bits = self.bits + [1]
         while len(bits) % 8:
             bits.append(0)
-        return bytes(
-            int("".join(map(str, bits[i : i + 8])), 2)
-            for i in range(0, len(bits), 8)
-        )
+        out = bytearray()
+        for i in range(0, len(bits), 8):
+            v = 0
+            for bit in bits[i : i + 8]:
+                v = (v << 1) | bit
+            out.append(v)
+        return bytes(out)
 
 
 def _ep_strip(nal: bytes) -> bytes:
@@ -262,7 +318,7 @@ def decode_sps(nal: bytes) -> dict:
     H.264 but out of the metadata tier's scope (explicit error)."""
     if not nal or (nal[0] & 0x1F) != 7:
         raise ValueError("corrupt SPS: not an SPS NAL unit")
-    r = _EgBitReader(_ep_strip(nal[1:]))
+    r = _BitReader(_ep_strip(nal[1:]), "SPS")
     profile_idc = r.u(8)
     constraint_flags = r.u(8)
     level_idc = r.u(8)
@@ -404,7 +460,7 @@ def encode_sps(
     Annex E fields: ``sar`` (idc int, or (w, h) for Extended_SAR),
     ``video_full_range``/``colour_primaries``/``transfer``/``matrix``,
     and ``num_units_in_tick``/``time_scale``/``fixed_frame_rate``."""
-    w = _EgBitWriter()
+    w = _BitWriter()
     w.u(profile_idc, 8)
     w.u(constraint_flags, 8)
     w.u(level_idc, 8)
@@ -693,7 +749,7 @@ def demux_mp4(
     movie_duration, track_id, handler, codec, timescale, duration,
     n_samples, n_sync, total_sample_bytes, width, height).
 
-    Scan-side mapInPandas — no shuffle; the fan-out is bounded by the
+    Scan-side ``flat_map`` — no shuffle; the fan-out is bounded by the
     track count (two or three in practice)."""
     schema = (
         f"{id_col} long, major_brand string, movie_timescale long, "
@@ -702,41 +758,21 @@ def demux_mp4(
         "n_sync long, total_sample_bytes long, width long, height long"
     )
 
-    def _demux(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rid, payload in zip(pdf[id_col], pdf[bin_col]):
-                meta = parse_mp4(bytes(payload or b""))
-                for tr in meta["tracks"]:
-                    rows.append(
-                        (
-                            int(rid),
-                            meta["major_brand"],
-                            meta["timescale"],
-                            meta["duration"],
-                            tr["track_id"],
-                            tr["handler"],
-                            tr["codec"],
-                            tr["timescale"],
-                            tr["duration"],
-                            tr["n_samples"],
-                            len(tr["sync"]),
-                            sum(tr["sizes"]),
-                            tr["width"],
-                            tr["height"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "major_brand", "movie_timescale",
-                    "movie_duration", "track_id", "handler", "codec",
-                    "timescale", "duration", "n_samples", "n_sync",
-                    "total_sample_bytes", "width", "height",
-                ],
-            )
 
-    return df.select(id_col, bin_col).mapInPandas(_demux, schema=schema)
+    def _demux(rid, payload):
+        meta = parse_mp4(payload or b"")
+        return [
+            (
+                rid, meta["major_brand"], meta["timescale"],
+                meta["duration"], tr["track_id"], tr["handler"],
+                tr["codec"], tr["timescale"], tr["duration"],
+                tr["n_samples"], len(tr["sync"]), sum(tr["sizes"]),
+                tr["width"], tr["height"],
+            )
+            for tr in meta["tracks"]
+        ]
+
+    return flat_map(df, [id_col, bin_col], schema, _demux)
 
 
 def mp4_keyframe_slices(
@@ -760,49 +796,32 @@ def mp4_keyframe_slices(
         "byte_offset long, size long, frame binary"
     )
 
-    def _slices(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rid, payload in zip(pdf[id_col], pdf[bin_col]):
-                raw = bytes(payload or b"")
-                meta = parse_mp4(raw)
-                for tr in meta["tracks"]:
-                    if tr["handler"] != handler:
-                        continue
-                    picked = tr["sync"][::every_nth][:max_frames]
-                    n_samples = len(tr["sizes"])
-                    for snum in picked:
-                        if not 1 <= snum <= n_samples:
-                            raise ValueError(
-                                "corrupt MP4: stss sample number "
-                                f"{snum} > sample count {n_samples}"
-                            )
-                        off = tr["offsets"][snum - 1]
-                        size = tr["sizes"][snum - 1]
-                        if off + size > len(raw):
-                            raise ValueError(
-                                "corrupt MP4: sample extends past "
-                                f"end of file ({off}+{size} > {len(raw)})"
-                            )
-                        rows.append(
-                            (
-                                int(rid),
-                                tr["track_id"],
-                                snum,
-                                off,
-                                size,
-                                raw[off : off + size],
-                            )
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "track_id", "sample_idx", "byte_offset",
-                    "size", "frame",
-                ],
-            )
 
-    return df.select(id_col, bin_col).mapInPandas(_slices, schema=schema)
+    def _slices(rid, payload):
+        raw = payload or b""
+        for tr in parse_mp4(raw)["tracks"]:
+            if tr["handler"] != handler:
+                continue
+            n_samples = len(tr["sizes"])
+            for snum in tr["sync"][::every_nth][:max_frames]:
+                if not 1 <= snum <= n_samples:
+                    raise ValueError(
+                        "corrupt MP4: stss sample number "
+                        f"{snum} > sample count {n_samples}"
+                    )
+                off = tr["offsets"][snum - 1]
+                size = tr["sizes"][snum - 1]
+                if off + size > len(raw):
+                    raise ValueError(
+                        "corrupt MP4: sample extends past "
+                        f"end of file ({off}+{size} > {len(raw)})"
+                    )
+                yield (
+                    rid, tr["track_id"], snum, off, size,
+                    raw[off : off + size],
+                )
+
+    return flat_map(df, [id_col, bin_col], schema, _slices)
 
 
 def mp4_sps_params(
@@ -815,7 +834,7 @@ def mp4_sps_params(
     depth, coded width/height after cropping) next to the container's
     advisory sample-entry dims — geometry from the stream itself, not
     the box metadata (the two legitimately disagree when an encoder
-    writes display dims into tkhd/stsd).  Scan-side ``mapInPandas``,
+    writes display dims into tkhd/stsd).  Scan-side ``flat_map``,
     zero shuffles, same shape as :func:`demux_mp4`.
 
     Reference parity note: the reference pipeline has no media tier at
@@ -832,38 +851,24 @@ def mp4_sps_params(
         "pic_order_cnt_type int"
     )
 
-    def _sps(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            id_col, "track_id", "codec", "entry_width", "entry_height",
-            "profile_idc", "constraint_flags", "level_idc",
-            "chroma_format_idc", "bit_depth_luma", "coded_width",
-            "coded_height", "frame_mbs_only", "max_num_ref_frames",
-            "log2_max_frame_num", "pic_order_cnt_type",
-        ]
-        for pdf in batches:
-            rows = []
-            for rid, payload in zip(pdf[id_col], pdf[bin_col]):
-                meta = parse_mp4(bytes(payload or b""))
-                for tr in meta["tracks"]:
-                    sps = tr.get("sps")
-                    if sps is None:
-                        continue
-                    rows.append(
-                        (
-                            int(rid), tr["track_id"], tr["codec"],
-                            tr["entry_width"], tr["entry_height"],
-                            sps["profile_idc"], sps["constraint_flags"],
-                            sps["level_idc"], sps["chroma_format_idc"],
-                            sps["bit_depth_luma"], sps["coded_width"],
-                            sps["coded_height"], sps["frame_mbs_only"],
-                            sps["max_num_ref_frames"],
-                            sps["log2_max_frame_num"],
-                            sps["pic_order_cnt_type"],
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=cols)
 
-    return df.select(id_col, bin_col).mapInPandas(_sps, schema=schema)
+    def _sps(rid, payload):
+        for tr in parse_mp4(payload or b"")["tracks"]:
+            sps = tr.get("sps")
+            if sps is None:
+                continue
+            yield (
+                rid, tr["track_id"], tr["codec"],
+                tr["entry_width"], tr["entry_height"],
+                sps["profile_idc"], sps["constraint_flags"],
+                sps["level_idc"], sps["chroma_format_idc"],
+                sps["bit_depth_luma"], sps["coded_width"],
+                sps["coded_height"], sps["frame_mbs_only"],
+                sps["max_num_ref_frames"], sps["log2_max_frame_num"],
+                sps["pic_order_cnt_type"],
+            )
+
+    return flat_map(df, [id_col, bin_col], schema, _sps)
 
 
 def mp4_vui_params(
@@ -877,53 +882,32 @@ def mp4_vui_params(
     time_scale / 2*num_units_in_tick for frame-coded streams; floats
     never enter the plan).  NULL columns when the SPS carries no VUI
     or omits a group — absence is data, not an error.  Scan-side
-    ``mapInPandas``, zero shuffles (the q246 shape)."""
+    ``flat_map``, zero shuffles (the q246 shape)."""
     schema = (
         f"{id_col} long, track_id long, sar_width int, sar_height int, "
         "video_full_range int, colour_primaries int, "
         "fps_num long, fps_den long, fixed_frame_rate int"
     )
-    cols = [
-        id_col, "track_id", "sar_width", "sar_height",
-        "video_full_range", "colour_primaries", "fps_num", "fps_den",
-        "fixed_frame_rate",
-    ]
 
-    def _vui(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rid, payload in zip(pdf[id_col], pdf[bin_col]):
-                meta = parse_mp4(bytes(payload or b""))
-                for tr in meta["tracks"]:
-                    sps = tr.get("sps")
-                    if sps is None:
-                        continue
-                    ts = sps.get("time_scale")
-                    nuit = sps.get("num_units_in_tick")
-                    rows.append(
-                        (
-                            int(rid),
-                            tr["track_id"],
-                            sps.get("sar_width"),
-                            sps.get("sar_height"),
-                            sps.get("video_full_range"),
-                            sps.get("colour_primaries"),
-                            ts,
-                            2 * nuit if nuit is not None else None,
-                            sps.get("fixed_frame_rate"),
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=cols).astype(
-                {
-                    "sar_width": "Int32", "sar_height": "Int32",
-                    "video_full_range": "Int32",
-                    "colour_primaries": "Int32",
-                    "fps_num": "Int64", "fps_den": "Int64",
-                    "fixed_frame_rate": "Int32",
-                }
+    def _vui(rid, payload):
+        for tr in parse_mp4(payload or b"")["tracks"]:
+            sps = tr.get("sps")
+            if sps is None:
+                continue
+            nuit = sps.get("num_units_in_tick")
+            yield (
+                rid,
+                tr["track_id"],
+                sps.get("sar_width"),
+                sps.get("sar_height"),
+                sps.get("video_full_range"),
+                sps.get("colour_primaries"),
+                sps.get("time_scale"),
+                2 * nuit if nuit is not None else None,
+                sps.get("fixed_frame_rate"),
             )
 
-    return df.select(id_col, bin_col).mapInPandas(_vui, schema=schema)
+    return flat_map(df, [id_col, bin_col], schema, _vui)
 
 
 # ------------------------------------------------------ fixture encoder

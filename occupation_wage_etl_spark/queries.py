@@ -47,6 +47,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from occupation_wage_etl_spark.operators._cache import cached
+from occupation_wage_etl_spark.operators._rows import flat_map
 
 from occupation_wage_etl_spark.functions import cleaning
 from occupation_wage_etl_spark.sources import html_table
@@ -1102,7 +1103,7 @@ ORDER BY cosine DESC NULLS LAST, vec_id LIMIT {KNN_K}
 
 # ---------------------------------------------------------------------------
 # q25/q26 — multimodal columns: binary payload + typed metadata
-# (mapInPandas plumbing; the decode step is stubbed — see
+# (flat_map plumbing; the decode step is stubbed — see
 #  operators/multimodal.py docstring)
 # ---------------------------------------------------------------------------
 
@@ -1126,7 +1127,7 @@ def _payloads(docs: DataFrame) -> DataFrame:
 
 def q25_multimodal_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    meta = multimodal.sniff_metadata(_payloads(docs), partitions=None)
+    meta = multimodal.sniff_metadata(_payloads(docs))
     return meta.select("doc_id", "mime", "n_bytes")
 
 
@@ -2126,21 +2127,13 @@ FROM s
 def _doc_blobs(docs: DataFrame, make: Callable[[int], bytes]) -> DataFrame:
     """(doc_id, content binary): ``make(doc_id)`` for every document —
     the one shape of the per-document binary fixtures below, built on
-    the Python workers in Arrow batches.  Each fixture nests its
+    the Python workers by ``flat_map``.  Each fixture nests its
     ``make`` inside its builder so it is pickled by value; a
     module-level function would be pickled by reference and make every
     worker import this module."""
-
-    def _make(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids = pdf["doc_id"]
-            out = [make(int(did)) for did in ids]
-            yield pd.DataFrame({"doc_id": ids.to_numpy(), "content": out})
-
-    return docs.select("doc_id").mapInPandas(
-        _make, schema="doc_id long, content binary"
+    return flat_map(
+        docs, ["doc_id"], "doc_id long, content binary",
+        lambda did: [(did, make(did))],
     )
 
 
@@ -2169,7 +2162,7 @@ def _synth_png(docs: DataFrame, n: int) -> DataFrame:
 
 def q50_decode_image(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    decoded = multimodal.decode_image(_synth_png(docs, 8), mode="real", thumb=8)
+    decoded = multimodal.decode_image(_synth_png(docs, 8), thumb=8)
     px = F.col("pixels")
     return decoded.select(
         "doc_id",
@@ -11022,7 +11015,7 @@ def _synth_jpeg(
 
 def _jpeg_pixel_stats(jpegs: DataFrame) -> DataFrame:
     """q217/q240's per-doc stats of the decoded 8×8 raster."""
-    decoded = multimodal.decode_image(jpegs, mode="real", thumb=8)
+    decoded = multimodal.decode_image(jpegs, thumb=8)
     px = F.col("pixels")
     return decoded.select(
         "doc_id",
@@ -11565,7 +11558,7 @@ SELECT 5 AS window, 1 AS max_edit,
 # parse_tables_distributed): the S2 scale path demonstrated against a
 # multi-page corpus.  Each document synthesizes an HTML page holding
 # 1–2 tables (header row + 2–4 data rows of closed-form cell values);
-# the Arrow-batched mapInPandas parser explodes every <tr> where the
+# the Arrow-batched flat_map parser explodes every <tr> where the
 # bytes live — no driver-side parse.  The oracle regenerates the same
 # (url, table_idx, row_idx, cells) rows arithmetically, so a value
 # match proves the parser's table/row/cell walk (incl. the th-header
@@ -11576,34 +11569,23 @@ SELECT 5 AS window, 1 AS max_edit,
 def _synth_html_pages(docs: DataFrame) -> DataFrame:
     """(url, html): deterministic multi-table page per doc."""
 
-    def _make(batches):
-        import pandas as pd
+    def _make(did):
+        parts = ["<html><body>"]
+        for t in range(1 + did % 2):
+            parts.append(
+                "<table><tr><th>ColA</th><th>ColB</th><th>ColC</th></tr>"
+            )
+            for r in range(2 + (did + t) % 3):
+                cells = "".join(
+                    f"<td>v{did * 7 + t * 13 + r * 3 + c}</td>"
+                    for c in range(3)
+                )
+                parts.append(f"<tr>{cells}</tr>")
+            parts.append("</table>")
+        parts.append("</body></html>")
+        return [(f"http://fixture/{did}", "".join(parts))]
 
-        for pdf in batches:
-            urls, htmls = [], []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                parts = ["<html><body>"]
-                for t in range(1 + did % 2):
-                    parts.append(
-                        "<table><tr><th>ColA</th><th>ColB</th>"
-                        "<th>ColC</th></tr>"
-                    )
-                    for r in range(2 + (did + t) % 3):
-                        cells = "".join(
-                            f"<td>v{did * 7 + t * 13 + r * 3 + c}</td>"
-                            for c in range(3)
-                        )
-                        parts.append(f"<tr>{cells}</tr>")
-                    parts.append("</table>")
-                parts.append("</body></html>")
-                urls.append(f"http://fixture/{did}")
-                htmls.append("".join(parts))
-            yield pd.DataFrame({"url": urls, "html": htmls})
-
-    return docs.select("doc_id").mapInPandas(
-        _make, schema="url string, html string"
-    )
+    return flat_map(docs, ["doc_id"], "url string, html string", _make)
 
 
 def q238_html_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13047,31 +13029,19 @@ FROM t
 def _synth_wet_of_documents(docs: DataFrame) -> DataFrame:
     from occupation_wage_etl_spark.sources import warc as warcmod
 
-    def _make(batches):
-        import pandas as pd
+    def _make(did, text):
+        record = {
+            "type": "conversion",
+            "uri": f"http://c{did % 11}.example/{did}",
+            "text": str(text or ""),
+        }
+        blob = warcmod.encode_warc_fixture(
+            [record], gzip_records=(did % 2 == 0)
+        )
+        return [(did, blob)]
 
-        for batch in batches:
-            out = []
-            for did, text in zip(batch["doc_id"], batch["text"]):
-                did = int(did)
-                out.append(
-                    warcmod.encode_warc_fixture(
-                        [
-                            {
-                                "type": "conversion",
-                                "uri": f"http://c{did % 11}.example/{did}",
-                                "text": str(text or ""),
-                            }
-                        ],
-                        gzip_records=(did % 2 == 0),
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].to_numpy(), "content": out}
-            )
-
-    return docs.select("doc_id", "text").mapInPandas(
-        _make, schema="doc_id long, content binary"
+    return flat_map(
+        docs, ["doc_id", "text"], "doc_id long, content binary", _make
     )
 
 
@@ -13440,7 +13410,7 @@ FROM u
 # utf-8+BOM / latin-1 by doc_id%3, with a planted 'café' so latin-1
 # bytes differ) → HTML main-content extraction (sources/html_text.py —
 # group-shared main text under doc-unique chrome) → exact-dup collapse.
-# Four mapInPandas tiers chained scan-side with ONE final shuffle (the
+# Four flat_map tiers chained scan-side with ONE final shuffle (the
 # dedup groupBy); n_encodings per group proves byte-level diversity
 # collapsed to identical text.  This is the q34-class composition for
 # the crawl entry path.
@@ -14091,7 +14061,7 @@ SELECT * FROM urls UNION ALL SELECT * FROM idx
 def q278_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     decoded = multimodal.decode_image(
-        _synth_png(docs, 9), mode="real", thumb=9
+        _synth_png(docs, 9), thumb=9
     )
     h = multimodal.dhash64(F.col("pixels"), grid=9)
     return decoded.select(
@@ -14169,7 +14139,7 @@ def q279_image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") < IMG_PLANT_N
     )
     decoded = multimodal.decode_image(
-        _synth_png9_groups(docs), mode="real", thumb=9
+        _synth_png9_groups(docs), thumb=9
     )
     # Both sides of the band self-join consume the fingerprints; the
     # upstream here is the Arrow-batched PNG decode, which the uncached
@@ -14716,48 +14686,36 @@ FROM r
 def _synth_sitemap_corpus(docs: DataFrame) -> DataFrame:
     from occupation_wage_etl_spark.sources.warc import _gzip_member
 
-    def _make(batches):
-        import pandas as pd
+    ns = "http://www.sitemaps.org/schemas/sitemap/0.9"
 
-        ns = "http://www.sitemaps.org/schemas/sitemap/0.9"
-        for batch in batches:
-            urls, blobs = [], []
-            for did in batch["doc_id"]:
-                did = int(did)
-                urls.append(f"http://sm.example/s{did}.xml")
-                if did % 3 == 0:
-                    xml = (
-                        f'<sitemapindex xmlns="{ns}">'
-                        + "".join(
-                            f"<sitemap><loc>http://sm.example/s{c}.xml"
-                            "</loc></sitemap>"
-                            for c in (did + 1, did + 2)
-                        )
-                        + "</sitemapindex>"
-                    )
-                    blobs.append(xml.encode("utf-8"))
-                else:
-                    xml = (
-                        f'<urlset xmlns="{ns}">'
-                        + "".join(
-                            f"<url><loc>http://h{did % 5}.example/p{k}"
-                            f"</loc><priority>0.{(did + k) % 5 + 5}"
-                            "</priority></url>"
-                            for k in range(1 + did % 4)
-                        )
-                        + "</urlset>"
-                    )
-                    blobs.append(_gzip_member(xml.encode("utf-8")))
-            yield pd.DataFrame(
-                {
-                    "doc_id": batch["doc_id"].to_numpy(),
-                    "url": urls,
-                    "sitemap_xml": blobs,
-                }
+    def _make(did):
+        url = f"http://sm.example/s{did}.xml"
+        if did % 3 == 0:
+            xml = (
+                f'<sitemapindex xmlns="{ns}">'
+                + "".join(
+                    f"<sitemap><loc>http://sm.example/s{c}.xml"
+                    "</loc></sitemap>"
+                    for c in (did + 1, did + 2)
+                )
+                + "</sitemapindex>"
             )
+            return [(did, url, xml.encode("utf-8"))]
+        xml = (
+            f'<urlset xmlns="{ns}">'
+            + "".join(
+                f"<url><loc>http://h{did % 5}.example/p{k}"
+                f"</loc><priority>0.{(did + k) % 5 + 5}"
+                "</priority></url>"
+                for k in range(1 + did % 4)
+            )
+            + "</urlset>"
+        )
+        return [(did, url, _gzip_member(xml.encode("utf-8")))]
 
-    return docs.select("doc_id").mapInPandas(
-        _make, schema="doc_id long, url string, sitemap_xml binary"
+    return flat_map(
+        docs, ["doc_id"], "doc_id long, url string, sitemap_xml binary",
+        _make,
     )
 
 
@@ -15468,50 +15426,39 @@ def _synth_cdx_archives(docs: DataFrame) -> DataFrame:
     from occupation_wage_etl_spark.sources import cdx as cdxmod
     from occupation_wage_etl_spark.sources import warc as warcmod
 
-    def _make(batches):
-        import pandas as pd
-
-        for batch in batches:
-            rows = []
-            for did in batch["doc_id"]:
-                did = int(did)
-                g = did % 23
-                fname = f"arc{did}.warc.gz"
-                recs = [
-                    {
-                        "type": "response",
-                        "uri": f"http://h{g}.example/d{did}/r{k}",
-                        "status": 200,
-                        "payload": f"payload {did} r{k}".encode(),
-                        "payload_digest": f"sha1:D{did}R{k}",
-                    }
-                    for k in range(3)
-                ]
-                data, extents = warcmod.encode_warc_fixture_indexed(
-                    recs, gzip_records=True, warcinfo=False
-                )
-                lines = [
-                    cdxmod.format_cdxj_line(
-                        f"http://h{g}.example/d{did}/r{k}",
-                        "20240101000000",
-                        digest=f"sha1:D{did}R{k}",
-                        length=extents[k][1],
-                        offset=extents[k][0],
-                        filename=fname,
-                    )
-                    for k in range(3)
-                ]
-                rows.append((did, fname, data, lines))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "filename", "content", "lines"]
+    def _make(did):
+        g = did % 23
+        fname = f"arc{did}.warc.gz"
+        recs = [
+            {
+                "type": "response",
+                "uri": f"http://h{g}.example/d{did}/r{k}",
+                "status": 200,
+                "payload": f"payload {did} r{k}".encode(),
+                "payload_digest": f"sha1:D{did}R{k}",
+            }
+            for k in range(3)
+        ]
+        data, extents = warcmod.encode_warc_fixture_indexed(
+            recs, gzip_records=True, warcinfo=False
+        )
+        lines = [
+            cdxmod.format_cdxj_line(
+                f"http://h{g}.example/d{did}/r{k}",
+                "20240101000000",
+                digest=f"sha1:D{did}R{k}",
+                length=extents[k][1],
+                offset=extents[k][0],
+                filename=fname,
             )
+            for k in range(3)
+        ]
+        return [(did, fname, data, lines)]
 
-    return docs.select("doc_id").mapInPandas(
+    return flat_map(
+        docs, ["doc_id"],
+        "doc_id long, filename string, content binary, lines array<string>",
         _make,
-        schema=(
-            "doc_id long, filename string, content binary, "
-            "lines array<string>"
-        ),
     )
 
 
@@ -15746,7 +15693,7 @@ FROM documents
 # glyph names (é and ł ride the remapped codes; the AGL-subset and
 # uniXXXX rules both fire).  extract_pdf_text must return
 # byte-identical text for all three — the oracle states it
-# closed-form.  Decode stays scan-side mapInPandas, zero shuffles.
+# closed-form.  Decode stays scan-side flat_map, zero shuffles.
 # ---------------------------------------------------------------------------
 
 
@@ -15938,29 +15885,22 @@ def q301_cdx_latest_capture(
 
     docs = _t(spark, sf_dir, "documents")
 
-    def _make(batches):
-        import pandas as pd
+    ts = ["20240101000000", "20240215103000", "20241231235959"]
 
-        ts = ["20240101000000", "20240215103000", "20241231235959"]
-        for batch in batches:
-            rows = []
-            for did in batch["doc_id"]:
-                did = int(did)
-                url = f"http://c{did % 17}.example/page{did}"
-                lines = [
-                    cdxmod.format_cdxj_line(
-                        url, ts[k],
-                        digest=f"sha1:C{did}T{k}",
-                        length=100 + k, offset=1000 * k,
-                        filename=f"arc{did}.warc.gz",
-                    )
-                    for k in (2, 0, 1)  # out of order on purpose
-                ]
-                rows.append((did, lines))
-            yield pd.DataFrame(rows, columns=["doc_id", "lines"])
+    def _make(did):
+        url = f"http://c{did % 17}.example/page{did}"
+        return [(did, [
+            cdxmod.format_cdxj_line(
+                url, ts[k],
+                digest=f"sha1:C{did}T{k}",
+                length=100 + k, offset=1000 * k,
+                filename=f"arc{did}.warc.gz",
+            )
+            for k in (2, 0, 1)  # out of order on purpose
+        ])]
 
-    synth = docs.select("doc_id").mapInPandas(
-        _make, schema="doc_id long, lines array<string>"
+    synth = flat_map(
+        docs, ["doc_id"], "doc_id long, lines array<string>", _make
     )
     idx = cdxmod.cdx_records(
         synth.select(F.explode("lines").alias("line")), "line"
@@ -16392,40 +16332,33 @@ def q306_cdx_change_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
 
-    def _make(batches):
-        import pandas as pd
+    ts = [
+        "20240101000000", "20240111000000",
+        "20240121000000", "20240131000000",
+    ]
 
-        ts = [
-            "20240101000000", "20240111000000",
-            "20240121000000", "20240131000000",
-        ]
-        for batch in batches:
-            rows = []
-            for did in batch["doc_id"]:
-                did = int(did)
-                m = did % 3
-                if m == 0:
-                    digs = [f"sha1:S{did}"] * 4
-                elif m == 1:
-                    digs = [
-                        f"sha1:A{did}", f"sha1:A{did}",
-                        f"sha1:B{did}", f"sha1:C{did}",
-                    ]
-                else:
-                    digs = [f"sha1:K{did}T{k}" for k in range(4)]
-                url = f"http://cr{did % 29}.example/pg{did}"
-                lines = [
-                    cdxmod.format_cdxj_line(
-                        url, ts[k], digest=digs[k],
-                        length=10, offset=0, filename=f"a{did}",
-                    )
-                    for k in (3, 0, 2, 1)  # out of order on purpose
-                ]
-                rows.append((did, lines))
-            yield pd.DataFrame(rows, columns=["doc_id", "lines"])
+    def _make(did):
+        m = did % 3
+        if m == 0:
+            digs = [f"sha1:S{did}"] * 4
+        elif m == 1:
+            digs = [
+                f"sha1:A{did}", f"sha1:A{did}",
+                f"sha1:B{did}", f"sha1:C{did}",
+            ]
+        else:
+            digs = [f"sha1:K{did}T{k}" for k in range(4)]
+        url = f"http://cr{did % 29}.example/pg{did}"
+        return [(did, [
+            cdxmod.format_cdxj_line(
+                url, ts[k], digest=digs[k],
+                length=10, offset=0, filename=f"a{did}",
+            )
+            for k in (3, 0, 2, 1)  # out of order on purpose
+        ])]
 
-    synth = docs.select("doc_id").mapInPandas(
-        _make, schema="doc_id long, lines array<string>"
+    synth = flat_map(
+        docs, ["doc_id"], "doc_id long, lines array<string>", _make
     )
     idx = cdxmod.cdx_records(
         synth.select(F.explode("lines").alias("line")), "line"

@@ -10,8 +10,11 @@ same plan shape survives a 1000-executor cluster at 100 TB:
 - session timezone pinned to UTC so event-time semantics are portable
   (and comparable against the DuckDB oracle, whose timestamps are
   UTC-naive),
-- Arrow enabled for the few Pandas-UDF operators (multimodal decode,
-  as-of join) — everything else stays JVM-side in whole-stage codegen.
+- Arrow enabled for pandas conversions; per-row Python (the payload
+  parsers of the source and media tiers) runs through one Arrow bridge,
+  ``operators/_rows.flat_map``, and only the vectorized numpy kernels
+  of ``operators/similarity.py`` use ``mapInPandas`` — everything else
+  stays JVM-side in whole-stage codegen.
 """
 
 from __future__ import annotations

@@ -29,7 +29,7 @@ re-expresses that contract Spark-first:
   ``filename`` (equi-join, broadcastable when the archive catalog is
   small), then an offset-addressed SINGLE-record parse per row
   (``parse_warc`` on ``content[offset : offset+length]``) in
-  scan-side ``mapInPandas`` — the Spark analogue of the ranged GET:
+  scan-side ``flat_map`` — the Spark analogue of the ranged GET:
   work scales with matched index rows, never with archive bytes.
 - :func:`format_cdxj_line` — the fixture-side encoder (pure Python),
   paired with ``warc.encode_warc_fixture_indexed`` which yields the
@@ -53,6 +53,7 @@ from occupation_wage_etl_spark.functions.url import (
     url_path,
     url_query,
 )
+from occupation_wage_etl_spark.operators._rows import flat_map
 
 _CDX_JSON_SCHEMA = T.StructType(
     [
@@ -137,26 +138,6 @@ def cdx_records(
         F.col("_j.length").alias("length"),
         F.col("_j.offset").alias("offset"),
         F.col("_j.filename").alias("filename"),
-    )
-
-
-def write_cdx_sorted(
-    cdx: DataFrame, path: str, n_files: int = 64
-) -> None:
-    """Write the index range-clustered on ``(surt_key,
-    cdx_timestamp)`` — the cc-index storage contract re-expressed as a
-    parquet layout: ``repartitionByRange`` puts each SURT range in one
-    file, ``sortWithinPartitions`` orders rows inside it, so parquet
-    footer min/max stats make a host/prefix lookup read ONE file range
-    instead of the whole index (the on-disk equivalent of the sorted
-    CDX file a ranged HTTP reader seeks into).  Read back with
-    ``spark.read.parquet(path)`` and :func:`cdx_prefix_lookup` — the
-    StartsWith predicate prunes on the same stats."""
-    (
-        cdx.repartitionByRange(n_files, "surt_key", "cdx_timestamp")
-        .sortWithinPartitions("surt_key", "cdx_timestamp")
-        .write.mode("overwrite")
-        .parquet(path)
     )
 
 
@@ -265,7 +246,7 @@ def cdx_build(
     [Content-Type first token], status, digest, length, offset,
     filename).  Output schema matches :func:`cdx_records`, so a built
     index drives :func:`cdx_prefix_lookup` / :func:`cdx_fetch`
-    unchanged.  Scan-side ``mapInPandas``, zero shuffles; sort by
+    unchanged.  Scan-side ``flat_map``, zero shuffles; sort by
     (surt_key, cdx_timestamp) downstream when writing a range-readable
     layout."""
     from occupation_wage_etl_spark.sources.warc import parse_warc
@@ -275,54 +256,32 @@ def cdx_build(
         "mime string, status int, digest string, length long, "
         "offset long, filename string"
     )
-    cols = [
-        "surt_key", "cdx_timestamp", "url", "mime", "status",
-        "digest", "length", "offset", "filename",
-    ]
 
-    def _build(batches):
-        import pandas as pd
+    def _build(fname, payload):
+        data = payload or b""
+        for off, ln in _record_extents(data, max_records):
+            recs = parse_warc(data[off : off + ln], max_records=1)
+            if not recs or recs[0]["warc_type"] != "response":
+                continue
+            rec = recs[0]
+            uri = rec["target_uri"] or ""
+            ts = "".join(
+                c for c in (rec["warc_date"] or "") if c.isdigit()
+            )[:14]
+            mime = (rec["http_content_type"] or "").split(";")[0].strip()
+            yield (
+                surt_key_py(uri) if uri else None,
+                ts or None,
+                uri or None,
+                mime or None,
+                rec["http_status"],
+                rec["payload_digest"],
+                ln,
+                off,
+                fname,
+            )
 
-        for batch in batches:
-            rows = []
-            for fname, payload in zip(
-                batch[filename_col], batch[bin_col]
-            ):
-                data = bytes(payload or b"")
-                for off, ln in _record_extents(data, max_records):
-                    recs = parse_warc(
-                        data[off : off + ln], max_records=1
-                    )
-                    if not recs:
-                        continue
-                    rec = recs[0]
-                    if rec["warc_type"] != "response":
-                        continue
-                    uri = rec["target_uri"] or ""
-                    ts = "".join(
-                        c for c in (rec["warc_date"] or "") if c.isdigit()
-                    )[:14]
-                    mime = (rec["http_content_type"] or "").split(";")[
-                        0
-                    ].strip() or None
-                    rows.append(
-                        (
-                            surt_key_py(uri) if uri else None,
-                            ts or None,
-                            uri or None,
-                            mime,
-                            rec["http_status"],
-                            rec["payload_digest"],
-                            ln,
-                            off,
-                            fname,
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return archives.select(filename_col, bin_col).mapInPandas(
-        _build, schema=schema
-    )
+    return flat_map(archives, [filename_col, bin_col], schema, _build)
 
 
 def cdx_change_rate(cdx: DataFrame) -> DataFrame:
@@ -395,7 +354,7 @@ def cdx_fetch(
     ONCE no matter how many records are fetched from it; the per-row
     form would duplicate multi-GiB blobs once per matched row.  Then
     each wanted ``content[offset : offset+length]`` parses as ONE WARC
-    record (scan-side ``mapInPandas``).  Output: the index key columns
+    record (scan-side ``flat_map``).  Output: the index key columns
     plus the fetched record's type/URI/status/digest and payload text
     (UTF-8, replace).  Work is O(matched index rows) — never a
     full-archive scan; set ``broadcast_archives`` when the archive
@@ -426,42 +385,24 @@ def cdx_fetch(
         "filename string, rec_type string, rec_uri string, "
         "rec_status int, rec_digest string, payload_text string"
     )
-    cols = [
-        "surt_key", "cdx_timestamp", "url", "status", "digest",
-        "offset", "length", "filename", "rec_type", "rec_uri",
-        "rec_status", "rec_digest", "payload_text",
-    ]
 
-    def _fetch(batches):
-        import pandas as pd
+    def _fetch(fname, wants, payload):
+        data = payload or b""
+        for w in wants:
+            off = w["offset"] or 0
+            ln = w["length"] or 0
+            recs = parse_warc(data[off : off + ln], max_records=1)
+            rec = recs[0] if recs else None
+            yield (
+                w["surt_key"], w["cdx_timestamp"], w["url"], w["status"],
+                w["digest"], off, ln, fname,
+                rec["warc_type"] if rec else None,
+                rec["target_uri"] if rec else None,
+                rec["http_status"] if rec else None,
+                rec["payload_digest"] if rec else None,
+                rec["payload"].decode("utf-8", "replace") if rec else None,
+            )
 
-        for batch in batches:
-            rows = []
-            for fname, wants, payload in zip(
-                batch["__fname"], batch["__wants"], batch["__arc_bytes"]
-            ):
-                data = bytes(payload or b"")
-                for w in wants:
-                    off = int(w["offset"] or 0)
-                    ln = int(w["length"] or 0)
-                    recs = parse_warc(data[off : off + ln], max_records=1)
-                    rec = recs[0] if recs else None
-                    status = w["status"]
-                    rows.append(
-                        (
-                            w["surt_key"], w["cdx_timestamp"], w["url"],
-                            None if status is None or pd.isna(status)
-                            else int(status),
-                            w["digest"], off, ln, fname,
-                            rec["warc_type"] if rec else None,
-                            rec["target_uri"] if rec else None,
-                            rec["http_status"] if rec else None,
-                            rec["payload_digest"] if rec else None,
-                            rec["payload"].decode("utf-8", "replace")
-                            if rec
-                            else None,
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return joined.mapInPandas(_fetch, schema=schema)
+    return flat_map(
+        joined, ["__fname", "__wants", "__arc_bytes"], schema, _fetch
+    )

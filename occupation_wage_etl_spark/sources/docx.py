@@ -12,7 +12,7 @@ WordprocessingML); the text lives in ``<w:p>`` paragraphs of
   runs — extraction must reassemble), tabs/breaks mapped, table-cell
   paragraphs included naturally (``w:tbl`` nests ``w:p``).
 - :func:`docx_text` — the Spark operator: one row per PARAGRAPH,
-  scan-side ``mapInPandas``, zero shuffles (the q257 shape).
+  scan-side ``flat_map``, zero shuffles (the q257 shape).
 - :func:`encode_docx_fixture` — a valid minimal .docx writer
   ([Content_Types].xml, package rels, document.xml), the oracle
   fixture generator: planted paragraphs round-trip through the real
@@ -41,10 +41,10 @@ import io
 import re
 import xml.etree.ElementTree as ET
 import zipfile
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from occupation_wage_etl_spark.operators._rows import flat_map
 
 _W = "{http://schemas.openxmlformats.org/wordprocessingml/2006/main}"
 
@@ -146,23 +146,17 @@ def docx_text(
     max_paragraphs: int = 4096,
 ) -> DataFrame:
     """(id, para [1-based], n_chars, text) per paragraph — scan-side
-    ``mapInPandas``, zero shuffles; fan-out bounded by
+    ``flat_map``, zero shuffles; fan-out bounded by
     ``max_paragraphs``."""
     schema = f"{id_col} long, para int, n_chars int, text string"
-    cols = [id_col, "para", "n_chars", "text"]
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for rid, payload in zip(batch[id_col], batch[bin_col]):
-                texts = extract_docx_text(
-                    bytes(payload or b""), max_paragraphs=max_paragraphs
-                )
-                for k, t in enumerate(texts, start=1):
-                    rows.append((int(rid), k, len(t), t))
-            yield pd.DataFrame(rows, columns=cols)
+    def _extract(rid, payload):
+        texts = extract_docx_text(
+            payload or b"", max_paragraphs=max_paragraphs
+        )
+        return [(rid, k, len(t), t) for k, t in enumerate(texts, start=1)]
 
-    return df.select(id_col, bin_col).mapInPandas(_extract, schema=schema)
+    return flat_map(df, [id_col, bin_col], schema, _extract)
 
 
 def docx_parts_text(
@@ -173,24 +167,22 @@ def docx_parts_text(
 ) -> DataFrame:
     """(id, part, part_idx, para, n_chars, text) across the whole
     package — body, headers, footers, footnotes, endnotes — scan-side
-    ``mapInPandas``, zero shuffles (the q257 shape)."""
+    ``flat_map``, zero shuffles (the q257 shape)."""
     schema = (
         f"{id_col} long, part string, part_idx int, para int, "
         "n_chars int, text string"
     )
-    cols = [id_col, "part", "part_idx", "para", "n_chars", "text"]
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for rid, payload in zip(batch[id_col], batch[bin_col]):
-                for kind, ordinal, k, t in extract_docx_parts(
-                    bytes(payload or b""), max_paragraphs=max_paragraphs
-                ):
-                    rows.append((int(rid), kind, ordinal, k, len(t), t))
-            yield pd.DataFrame(rows, columns=cols)
+    def _extract(rid, payload):
+        parts = extract_docx_parts(
+            payload or b"", max_paragraphs=max_paragraphs
+        )
+        return [
+            (rid, kind, ordinal, k, len(t), t)
+            for kind, ordinal, k, t in parts
+        ]
 
-    return df.select(id_col, bin_col).mapInPandas(_extract, schema=schema)
+    return flat_map(df, [id_col, bin_col], schema, _extract)
 
 
 # ------------------------------------------------------ fixture writer

@@ -15,7 +15,7 @@ One long-form output table for both (``feed_kind`` discriminates), so
 the downstream URL-canonicalization/dedup tiers consume feed links
 with the same code path as sitemap locs and page hrefs.
 
-Scale shape: scan-side ``mapInPandas`` over the XML column, zero
+Scale shape: scan-side ``flat_map`` over the XML column, zero
 shuffles, fan-out bounded by ``max_entries`` — the q277 sitemap
 pattern.  Malformed XML skips the document (null-on-error posture),
 never failing a task.  Gzip payloads (``.xml.gz`` feeds) decompress
@@ -29,10 +29,10 @@ from __future__ import annotations
 
 import gzip
 import xml.etree.ElementTree as ET
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from occupation_wage_etl_spark.operators._rows import flat_map
 
 _ATOM = "{http://www.w3.org/2005/Atom}"
 
@@ -114,37 +114,24 @@ def feed_entries(
         "ordinal int, title string, link string, entry_id string, "
         "published string, summary string"
     )
-    cols = [
-        id_col, "feed_kind", "feed_title", "ordinal", "title",
-        "link", "entry_id", "published", "summary",
-    ]
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for rid, xml_text in zip(batch[id_col], batch[xml_col]):
-                if isinstance(xml_text, (bytes, bytearray, memoryview)):
-                    raw = bytes(xml_text)
-                    if raw[:2] == b"\x1f\x8b":
-                        try:
-                            raw = gzip.decompress(raw)
-                        except (OSError, EOFError):
-                            continue
-                    xml_text = raw.decode("utf-8", "replace")
+    def _run(rid, xml_text):
+        if isinstance(xml_text, bytes):
+            if xml_text[:2] == b"\x1f\x8b":
                 try:
-                    entries = parse_feed(
-                        str(xml_text or ""), max_entries=max_entries
-                    )
-                except ET.ParseError:
-                    continue
-                for e in entries:
-                    rows.append(
-                        (
-                            int(rid), e["feed_kind"], e["feed_title"],
-                            e["ordinal"], e["title"], e["link"],
-                            e["entry_id"], e["published"], e["summary"],
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+                    xml_text = gzip.decompress(xml_text)
+                except (OSError, EOFError):
+                    return
+            xml_text = xml_text.decode("utf-8", "replace")
+        try:
+            entries = parse_feed(xml_text or "", max_entries=max_entries)
+        except ET.ParseError:
+            return
+        for e in entries:
+            yield (
+                rid, e["feed_kind"], e["feed_title"], e["ordinal"],
+                e["title"], e["link"], e["entry_id"], e["published"],
+                e["summary"],
+            )
 
-    return df.select(id_col, xml_col).mapInPandas(_run, schema=schema)
+    return flat_map(df, [id_col, xml_col], schema, _run)

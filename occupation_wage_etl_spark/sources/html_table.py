@@ -12,7 +12,7 @@ Two paths:
   (no bs4/Selenium dependency), for the reference's single-page case.
 - ``parse_tables_distributed(df)`` — the 100 TB path: a DataFrame of raw
   HTML pages (e.g. a Common-Crawl-shaped corpus) parsed per-row by an
-  Arrow-batched ``mapInPandas`` into exploded table rows.  Parsing is
+  Arrow-batched ``flat_map`` into exploded table rows.  Parsing is
   embarrassingly parallel; each task parses its own partition's pages.
 
 The fetch itself (Selenium) is NOT implemented here — inject any
@@ -21,11 +21,13 @@ The fetch itself (Selenium) is NOT implemented here — inject any
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 from html.parser import HTMLParser
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as STypes
+
+from occupation_wage_etl_spark.operators._rows import flat_map
 
 
 class _TableParser(HTMLParser):
@@ -115,35 +117,25 @@ def parse_tables_distributed(
 
     Input: DataFrame[url string, html string]; output one row per
     ``<tr>``: (url, table_idx, row_idx, cells array<string>).  Arrow-
-    batched ``mapInPandas`` — the parser runs where the data lives; no
+    batched ``flat_map`` — the parser runs where the data lives; no
     driver-side collection.
     """
-    import pandas as pd
 
-    out_schema = STypes.StructType(
-        [
-            STypes.StructField("url", STypes.StringType()),
-            STypes.StructField("table_idx", STypes.IntegerType()),
-            STypes.StructField("row_idx", STypes.IntegerType()),
-            STypes.StructField("cells", STypes.ArrayType(STypes.StringType())),
-        ]
+    def parse_page(url, html):
+        p = _TableParser()
+        try:
+            p.feed(html or "")
+        except Exception:
+            return
+        for ti, t in enumerate(p.tables):
+            for ri, cells in enumerate(t["rows"]):
+                yield (url, ti, ri, cells[:max_cols])
+
+    return flat_map(
+        pages, [url_col, html_col],
+        "url string, table_idx int, row_idx int, cells array<string>",
+        parse_page,
     )
-
-    def parse_batch(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            recs = []
-            for url, html in zip(pdf[url_col], pdf[html_col]):
-                p = _TableParser()
-                try:
-                    p.feed(html or "")
-                except Exception:
-                    continue
-                for ti, t in enumerate(p.tables):
-                    for ri, cells in enumerate(t["rows"]):
-                        recs.append((url, ti, ri, cells[:max_cols]))
-            yield pd.DataFrame(recs, columns=["url", "table_idx", "row_idx", "cells"])
-
-    return pages.mapInPandas(parse_batch, out_schema)
 
 
 def fetch_and_extract(

@@ -27,18 +27,18 @@ Reference parity note: the reference parses *tables* from one BLS page
 page→text operator.  This module is part of the LLM-training-data
 extension surface (SURVEY.md §2 extensions).
 
-Scale shape: embarrassingly parallel scan-side ``mapInPandas`` — one
+Scale shape: embarrassingly parallel scan-side ``flat_map`` — one
 task per file split, zero shuffles, same layout as pdf_text/wet_text.
 """
 
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 from html.parser import HTMLParser
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from occupation_wage_etl_spark.operators._rows import flat_map
 
 _SCHEME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.\-]*:")
 
@@ -149,21 +149,16 @@ def main_text_distributed(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """(id, n_blocks, n_chars, text) per page — scan-side
-    ``mapInPandas``, zero shuffles; output text feeds quality/lang-ID/
+    ``flat_map``, zero shuffles; output text feeds quality/lang-ID/
     dedup like any other document column."""
     schema = f"{id_col} long, n_blocks int, n_chars int, text string"
-    cols = [id_col, "n_blocks", "n_chars", "text"]
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for rid, page in zip(batch[id_col], batch[html_col]):
-                blocks = extract_main_blocks(str(page or ""))
-                text = "\n".join(t for _tag, t in blocks)
-                rows.append((int(rid), len(blocks), len(text), text))
-            yield pd.DataFrame(rows, columns=cols)
+    def _extract(rid, page):
+        blocks = extract_main_blocks(str(page or ""))
+        text = "\n".join(t for _tag, t in blocks)
+        return [(rid, len(blocks), len(text), text)]
 
-    return df.select(id_col, html_col).mapInPandas(_extract, schema=schema)
+    return flat_map(df, [id_col, html_col], schema, _extract)
 
 
 class _LinkParser(HTMLParser):
@@ -264,7 +259,7 @@ def links_distributed(
     url_col: str | None = None,
 ) -> DataFrame:
     """(id, link_idx, href, anchor_text) per in-content link — the
-    web-graph edge table, scan-side ``mapInPandas``, zero shuffles;
+    web-graph edge table, scan-side ``flat_map``, zero shuffles;
     join ``href`` through functions/url.py canonicalization for the
     dedup-keyed graph.
 
@@ -280,36 +275,19 @@ def links_distributed(
         + ("url string, " if with_url else "")
         + "anchor_text string"
     )
-    cols = [id_col, "link_idx", "href"] + (
-        ["url"] if with_url else []
-    ) + ["anchor_text"]
     sel = [id_col, html_col] + ([url_col] if with_url else [])
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            fetch_urls = (
-                batch[url_col] if with_url else [None] * len(batch)
-            )
-            for rid, page, furl in zip(
-                batch[id_col], batch[html_col], fetch_urls
-            ):
-                page = str(page or "")
-                base = None
-                if with_url:
-                    furl = None if furl is None or pd.isna(furl) else str(furl)
-                    base = document_base(
-                        furl, extract_canonical(page)["base_href"]
-                    )
-                for k, (href, text) in enumerate(extract_links(page)):
-                    row = [int(rid), k, href]
-                    if with_url:
-                        row.append(resolve_url(base, href))
-                    row.append(text)
-                    rows.append(tuple(row))
-            yield pd.DataFrame(rows, columns=cols)
+    def _extract(rid, page, furl=None):
+        page = str(page or "")
+        if with_url:
+            base = document_base(furl, extract_canonical(page)["base_href"])
+        for k, (href, text) in enumerate(extract_links(page)):
+            if with_url:
+                yield (rid, k, href, resolve_url(base, href), text)
+            else:
+                yield (rid, k, href, text)
 
-    return df.select(*sel).mapInPandas(_extract, schema=schema)
+    return flat_map(df, sel, schema, _extract)
 
 
 class _JsonLdParser(HTMLParser):
@@ -359,17 +337,14 @@ def jsonld_distributed(
     parse the ``json`` column with ``F.from_json`` (JVM, codegen) so
     the schema projection stays out of Python."""
     schema = f"{id_col} long, blob_idx int, json string"
-    cols = [id_col, "blob_idx", "json"]
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for rid, page in zip(batch[id_col], batch[html_col]):
-                for k, blob in enumerate(extract_jsonld(str(page or ""))):
-                    rows.append((int(rid), k, blob))
-            yield pd.DataFrame(rows, columns=cols)
+    def _extract(rid, page):
+        return [
+            (rid, k, blob)
+            for k, blob in enumerate(extract_jsonld(str(page or "")))
+        ]
 
-    return df.select(id_col, html_col).mapInPandas(_extract, schema=schema)
+    return flat_map(df, [id_col, html_col], schema, _extract)
 
 
 class _HeadMetaParser(HTMLParser):
@@ -449,7 +424,7 @@ def canonical_distributed(
     url_col: str | None = None,
 ) -> DataFrame:
     """(id, canonical, og_url, base_href) per page — scan-side
-    ``mapInPandas``; chain through functions/url.py canonicalization
+    ``flat_map``; chain through functions/url.py canonicalization
     for the final dedup key.
 
     With ``url_col`` (the fetch URL), ``canonical_abs``/``og_url_abs``
@@ -462,33 +437,20 @@ def canonical_distributed(
         "base_href string"
         + (", canonical_abs string, og_url_abs string" if with_url else "")
     )
-    cols = [id_col, "canonical", "og_url", "base_href"] + (
-        ["canonical_abs", "og_url_abs"] if with_url else []
-    )
     sel = [id_col, html_col] + ([url_col] if with_url else [])
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            fetch_urls = (
-                batch[url_col] if with_url else [None] * len(batch)
+    def _extract(rid, page, furl=None):
+        m = extract_canonical(str(page or ""))
+        row = (rid, m["canonical"], m["og_url"], m["base_href"])
+        if with_url:
+            base = document_base(furl, m["base_href"])
+            row += (
+                resolve_url(base, m["canonical"]),
+                resolve_url(base, m["og_url"]),
             )
-            for rid, page, furl in zip(
-                batch[id_col], batch[html_col], fetch_urls
-            ):
-                m = extract_canonical(str(page or ""))
-                row = [int(rid), m["canonical"], m["og_url"], m["base_href"]]
-                if with_url:
-                    furl = None if furl is None or pd.isna(furl) else str(furl)
-                    base = document_base(furl, m["base_href"])
-                    row += [
-                        resolve_url(base, m["canonical"]),
-                        resolve_url(base, m["og_url"]),
-                    ]
-                rows.append(tuple(row))
-            yield pd.DataFrame(rows, columns=cols)
+        return [row]
 
-    return df.select(*sel).mapInPandas(_extract, schema=schema)
+    return flat_map(df, sel, schema, _extract)
 
 
 def page_meta_distributed(
@@ -503,22 +465,12 @@ def page_meta_distributed(
         f"{id_col} long, title string, description string, "
         "canonical string, og_url string, base_href string"
     )
-    cols = [
-        id_col, "title", "description", "canonical", "og_url",
-        "base_href",
-    ]
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for rid, page in zip(batch[id_col], batch[html_col]):
-                m = extract_canonical(str(page or ""))
-                rows.append(
-                    (
-                        int(rid), m["title"], m["description"],
-                        m["canonical"], m["og_url"], m["base_href"],
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
+    def _extract(rid, page):
+        m = extract_canonical(str(page or ""))
+        return [(
+            rid, m["title"], m["description"], m["canonical"], m["og_url"],
+            m["base_href"],
+        )]
 
-    return df.select(id_col, html_col).mapInPandas(_extract, schema=schema)
+    return flat_map(df, [id_col, html_col], schema, _extract)

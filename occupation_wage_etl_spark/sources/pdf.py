@@ -18,7 +18,7 @@ public PDF spec (ISO 32000-1) and ``zlib``:
   line continuations, nested parens) and hex strings decode per
   §7.3.4.3 (odd final digit padded with 0).
 - :func:`pdf_text` — the Spark operator: one row per PAGE, scan-side
-  ``mapInPandas`` (Arrow-batched, zero shuffles) — the q238/q251
+  ``flat_map`` (Arrow-batched, zero shuffles) — the q238/q251
   shape: bytes are parsed where they already are, only extracted text
   enters the plan.
 - :func:`encode_pdf_fixture` — a VALID minimal PDF writer (catalog,
@@ -55,7 +55,7 @@ Reference analogue: none — the reference ETL ingests XLSX/HTML only
 surface next to ``sources/excel.py`` and ``sources/html_table.py``.
 
 Scale posture: per-row parse of an opaque binary column; the plan is
-scan → mapInPandas with zero exchanges, and page fan-out is bounded by
+scan → flat_map with zero exchanges, and page fan-out is bounded by
 ``max_pages``.
 """
 
@@ -63,10 +63,10 @@ from __future__ import annotations
 
 import re
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from occupation_wage_etl_spark.operators._rows import flat_map
 
 _OBJ_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b")
 
@@ -1227,25 +1227,17 @@ def pdf_text(
     max_pages: int = 64,
 ) -> DataFrame:
     """(id, page [1-based], n_chars, text) per page of each PDF
-    payload — scan-side ``mapInPandas``, zero shuffles; page fan-out
+    payload — scan-side ``flat_map``, zero shuffles; page fan-out
     bounded by ``max_pages`` (the 100 TB cap).  Downstream quality /
     lang-ID / dedup stages consume ``text`` like any other document
     column."""
     schema = f"{id_col} long, page int, n_chars int, text string"
-    cols = [id_col, "page", "n_chars", "text"]
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_batch in batches:
-            rows = []
-            for rid, payload in zip(pdf_batch[id_col], pdf_batch[bin_col]):
-                texts = extract_pdf_text(
-                    bytes(payload or b""), max_pages=max_pages
-                )
-                for p, t in enumerate(texts, start=1):
-                    rows.append((int(rid), p, len(t), t))
-            yield pd.DataFrame(rows, columns=cols)
+    def _extract(rid, payload):
+        texts = extract_pdf_text(payload or b"", max_pages=max_pages)
+        return [(rid, p, len(t), t) for p, t in enumerate(texts, start=1)]
 
-    return df.select(id_col, bin_col).mapInPandas(_extract, schema=schema)
+    return flat_map(df, [id_col, bin_col], schema, _extract)
 
 
 # ------------------------------------------------------ fixture writer

@@ -7,7 +7,7 @@ Layout contract (the Common Crawl convention): an archive is a
 concatenation of records; when gzip-compressed, EACH record is its own
 gzip member, so a 1 GiB .warc.gz splits at member boundaries without
 parsing — here the whole archive arrives as one binary cell and is
-walked record-by-record inside a scan-side ``mapInPandas`` (zero
+walked record-by-record inside a scan-side ``flat_map`` (zero
 shuffles; the 100 TB layout is many archive files scanned in parallel,
 one task per file split, exactly like the PDF/DOCX/MP4 tiers).
 
@@ -32,8 +32,9 @@ from __future__ import annotations
 import zlib
 from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from occupation_wage_etl_spark.operators._rows import flat_map
 
 _CRLF = b"\r\n"
 
@@ -374,7 +375,7 @@ def warc_records(
     """One row per record of each archive payload: the catalog fields
     (incl. payload digest / refers-to, the revisit-dedup keys) plus
     HTTP status/content-type/Location and payload size for response
-    records.  Scan-side ``mapInPandas``, zero shuffles."""
+    records.  Scan-side ``flat_map``, zero shuffles."""
     schema = (
         f"{id_col} long, rec_idx int, warc_type string, "
         "target_uri string, warc_date string, content_type string, "
@@ -385,40 +386,23 @@ def warc_records(
         "http_cache_control string, http_expires string, "
         "payload_len long"
     )
-    cols = [
-        id_col, "rec_idx", "warc_type", "target_uri", "warc_date",
-        "content_type", "content_length", "payload_digest",
-        "refers_to", "http_status", "http_content_type",
-        "http_location", "http_etag", "http_last_modified",
-        "http_cache_control", "http_expires", "payload_len",
-    ]
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for rid, payload in zip(batch[id_col], batch[bin_col]):
-                recs = parse_warc(
-                    bytes(payload or b""), max_records=max_records
-                )
-                for k, rec in enumerate(recs):
-                    rows.append(
-                        (
-                            int(rid), k, rec["warc_type"],
-                            rec["target_uri"], rec["warc_date"],
-                            rec["content_type"], rec["content_length"],
-                            rec["payload_digest"], rec["refers_to"],
-                            rec["http_status"], rec["http_content_type"],
-                            rec["http_location"],
-                            rec.get("http_etag"),
-                            rec.get("http_last_modified"),
-                            rec.get("http_cache_control"),
-                            rec.get("http_expires"),
-                            len(rec["payload"]),
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def _extract(rid, payload):
+        for k, rec in enumerate(
+            parse_warc(payload or b"", max_records=max_records)
+        ):
+            yield (
+                rid, k, rec["warc_type"], rec["target_uri"],
+                rec["warc_date"], rec["content_type"],
+                rec["content_length"], rec["payload_digest"],
+                rec["refers_to"], rec["http_status"],
+                rec["http_content_type"], rec["http_location"],
+                rec.get("http_etag"), rec.get("http_last_modified"),
+                rec.get("http_cache_control"), rec.get("http_expires"),
+                len(rec["payload"]),
+            )
 
-    return df.select(id_col, bin_col).mapInPandas(_extract, schema=schema)
+    return flat_map(df, [id_col, bin_col], schema, _extract)
 
 
 def warc_payloads(
@@ -436,33 +420,17 @@ def warc_payloads(
         f"{id_col} long, rec_idx int, target_uri string, "
         "http_status int, http_content_type string, payload binary"
     )
-    cols = [
-        id_col, "rec_idx", "target_uri", "http_status",
-        "http_content_type", "payload",
-    ]
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for rid, payload in zip(batch[id_col], batch[bin_col]):
-                recs = parse_warc(
-                    bytes(payload or b""), max_records=max_records
-                )
-                k = 0
-                for rec in recs:
-                    if rec["warc_type"] not in warc_types:
-                        continue
-                    rows.append(
-                        (
-                            int(rid), k, rec["target_uri"],
-                            rec["http_status"],
-                            rec["http_content_type"], rec["payload"],
-                        )
-                    )
-                    k += 1
-            yield pd.DataFrame(rows, columns=cols)
+    def _extract(rid, payload):
+        recs = parse_warc(payload or b"", max_records=max_records)
+        matching = (r for r in recs if r["warc_type"] in warc_types)
+        for k, rec in enumerate(matching):
+            yield (
+                rid, k, rec["target_uri"], rec["http_status"],
+                rec["http_content_type"], rec["payload"],
+            )
 
-    return df.select(id_col, bin_col).mapInPandas(_extract, schema=schema)
+    return flat_map(df, [id_col, bin_col], schema, _extract)
 
 
 def wet_text(
@@ -478,25 +446,15 @@ def wet_text(
         f"{id_col} long, rec_idx int, target_uri string, "
         "n_chars int, text string"
     )
-    cols = [id_col, "rec_idx", "target_uri", "n_chars", "text"]
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for rid, payload in zip(batch[id_col], batch[bin_col]):
-                recs = extract_wet_text(
-                    bytes(payload or b""), max_records=max_records
-                )
-                for k, rec in enumerate(recs):
-                    rows.append(
-                        (
-                            int(rid), k, rec["target_uri"],
-                            len(rec["text"]), rec["text"],
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def _extract(rid, payload):
+        recs = extract_wet_text(payload or b"", max_records=max_records)
+        return [
+            (rid, k, rec["target_uri"], len(rec["text"]), rec["text"])
+            for k, rec in enumerate(recs)
+        ]
 
-    return df.select(id_col, bin_col).mapInPandas(_extract, schema=schema)
+    return flat_map(df, [id_col, bin_col], schema, _extract)
 
 
 # ------------------------------------------------------ fixture writer
@@ -675,7 +633,7 @@ def warc_redirects(
     a Location header — the crawl-graph redirect edge table.  The raw
     Location is routinely a RELATIVE reference (RFC 9110 §10.2.2
     allows it), so ``location_abs`` resolves it RFC 3986-style against
-    the record's own WARC-Target-URI.  Scan-side ``mapInPandas``, zero
+    the record's own WARC-Target-URI.  Scan-side ``flat_map``, zero
     shuffles; chase chains with :func:`redirect_final_url`."""
     from occupation_wage_etl_spark.sources.html_text import resolve_url
 
@@ -683,39 +641,24 @@ def warc_redirects(
         f"{id_col} long, rec_idx int, from_uri string, "
         "http_status int, location string, location_abs string"
     )
-    cols = [
-        id_col, "rec_idx", "from_uri", "http_status", "location",
-        "location_abs",
-    ]
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for rid, payload in zip(batch[id_col], batch[bin_col]):
-                recs = parse_warc(
-                    bytes(payload or b""), max_records=max_records
-                )
-                k = 0
-                for rec in recs:
-                    status = rec["http_status"]
-                    loc = rec["http_location"]
-                    if (
-                        rec["warc_type"] != "response"
-                        or status is None
-                        or not 300 <= status < 400
-                        or loc is None
-                    ):
-                        continue
-                    rows.append(
-                        (
-                            int(rid), k, rec["target_uri"], status, loc,
-                            resolve_url(rec["target_uri"], loc),
-                        )
-                    )
-                    k += 1
-            yield pd.DataFrame(rows, columns=cols)
+    def _extract(rid, payload):
+        recs = parse_warc(payload or b"", max_records=max_records)
+        redirects = (
+            r for r in recs
+            if r["warc_type"] == "response"
+            and r["http_status"] is not None
+            and 300 <= r["http_status"] < 400
+            and r["http_location"] is not None
+        )
+        for k, rec in enumerate(redirects):
+            loc = rec["http_location"]
+            yield (
+                rid, k, rec["target_uri"], rec["http_status"], loc,
+                resolve_url(rec["target_uri"], loc),
+            )
 
-    return df.select(id_col, bin_col).mapInPandas(_extract, schema=schema)
+    return flat_map(df, [id_col, bin_col], schema, _extract)
 
 
 def redirect_final_url(
@@ -800,33 +743,20 @@ def warc_digest_check(
         f"{id_col} long, rec_idx int, target_uri string, "
         "digest_algo string, digest_ok boolean"
     )
-    cols = [id_col, "rec_idx", "target_uri", "digest_algo", "digest_ok"]
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for rid, payload in zip(batch[id_col], batch[bin_col]):
-                recs = parse_warc(
-                    bytes(payload or b""), max_records=max_records
-                )
-                k = 0
-                for rec in recs:
-                    declared = rec["payload_digest"]
-                    if declared is None:
-                        continue
-                    algo = declared.split(":", 1)[0].lower()
-                    ok = (
-                        payload_digest_sha1(rec["payload"]) == declared
-                        if algo == "sha1"
-                        else None
-                    )
-                    rows.append(
-                        (int(rid), k, rec["target_uri"], algo, ok)
-                    )
-                    k += 1
-            yield pd.DataFrame(rows, columns=cols)
+    def _extract(rid, payload):
+        recs = parse_warc(payload or b"", max_records=max_records)
+        declared = (r for r in recs if r["payload_digest"] is not None)
+        for k, rec in enumerate(declared):
+            algo = rec["payload_digest"].split(":", 1)[0].lower()
+            ok = (
+                payload_digest_sha1(rec["payload"]) == rec["payload_digest"]
+                if algo == "sha1"
+                else None
+            )
+            yield (rid, k, rec["target_uri"], algo, ok)
 
-    return df.select(id_col, bin_col).mapInPandas(_extract, schema=schema)
+    return flat_map(df, [id_col, bin_col], schema, _extract)
 
 
 def recrawl_schedule(

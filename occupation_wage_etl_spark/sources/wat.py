@@ -18,7 +18,7 @@ public WAT envelope layout (iipc/webarchive-commons
 ``ExtractingResourceExtractorMapper``; Common Crawl "Web Archive
 Transformation" format docs).
 
-Plan shape: ``wat_payloads`` is scan-side ``mapInPandas`` (zero
+Plan shape: ``wat_payloads`` is scan-side ``flat_map`` (zero
 shuffles, the WARC walk); ``wat_metadata`` / ``wat_outlinks`` are
 pure Column projections over ``from_json`` — JVM-side, codegen,
 malformed envelopes degrade to NULL fields (the same null-on-error
@@ -28,12 +28,12 @@ contract as the cleaning grammar), never a failed task.
 from __future__ import annotations
 
 import json
-from typing import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from occupation_wage_etl_spark.operators._rows import flat_map
 from occupation_wage_etl_spark.sources import warc as _warc
 
 
@@ -154,46 +154,33 @@ def wat_payloads(
 ) -> DataFrame:
     """One row per WAT metadata record: (id, rec_idx, target_uri,
     warc_date, envelope) with ``envelope`` the raw JSON text.  The
-    WARC walk is the scan-side ``mapInPandas`` from
+    WARC walk is the scan-side ``flat_map`` from
     :mod:`sources.warc` (plain and member-per-record gzip archives);
     non-metadata / non-JSON records (a WAT's own warcinfo header) are
     skipped here so the JSON tier only ever sees envelopes."""
-    import pandas as pd
-
     schema = (
         f"{id_col} long, rec_idx int, target_uri string, "
         "warc_date string, envelope string"
     )
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for rid, blob in zip(batch[id_col], batch[bin_col]):
-                recs = _warc.parse_warc(bytes(blob), max_records=max_records)
-                for idx, rec in enumerate(recs):
-                    if rec["warc_type"] != "metadata":
-                        continue
-                    ctype = (rec["content_type"] or "").lower()
-                    if not ctype.startswith("application/json"):
-                        continue
-                    rows.append(
-                        (
-                            rid,
-                            idx,
-                            rec["target_uri"],
-                            rec["warc_date"],
-                            rec["payload"].decode("utf-8", "replace"),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "rec_idx", "target_uri", "warc_date",
-                    "envelope",
-                ],
+
+    def _extract(rid, blob):
+        recs = _warc.parse_warc(blob, max_records=max_records)
+        for idx, rec in enumerate(recs):
+            if rec["warc_type"] != "metadata":
+                continue
+            ctype = (rec["content_type"] or "").lower()
+            if not ctype.startswith("application/json"):
+                continue
+            yield (
+                rid,
+                idx,
+                rec["target_uri"],
+                rec["warc_date"],
+                rec["payload"].decode("utf-8", "replace"),
             )
 
-    return df.select(id_col, bin_col).mapInPandas(_extract, schema=schema)
+    return flat_map(df, [id_col, bin_col], schema, _extract)
 
 
 def wat_metadata(payloads: DataFrame, id_col: str = "doc_id") -> DataFrame:

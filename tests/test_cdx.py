@@ -172,32 +172,6 @@ def test_cdx_build_and_roundtrip(spark):
     }
 
 
-def test_write_cdx_sorted_pushdown(spark, tmp_path):
-    """The sorted layout round-trips and the prefix lookup reaches the
-    parquet scan as a pushed StartsWith filter."""
-    lines = [
-        C.format_cdxj_line(
-            f"http://h{g}.example/p{k}", f"2024010{k+1}000000",
-            digest=f"sha1:{g}{k}", length=10, offset=k * 10,
-            filename=f"f{g}",
-        )
-        for g in range(8)
-        for k in range(4)
-    ]
-    idx = C.cdx_records(
-        spark.createDataFrame([(l,) for l in lines], "line string")
-    )
-    path = str(tmp_path / "cdx")
-    C.write_cdx_sorted(idx, path, n_files=4)
-    back = spark.read.parquet(path)
-    hits = C.cdx_prefix_lookup(back, "example,h3)")
-    assert hits.count() == 4
-    plan = hits._jdf.queryExecution().executedPlan().toString()
-    assert "StartsWith(surt_key" in plan, plan[:500]
-    # full round trip: every row survives the layout
-    assert back.count() == 32
-
-
 def test_cdx_change_rate(spark):
     lines = []
     ts = ["20240101000000", "20240111000000", "20240121000000"]

@@ -711,47 +711,13 @@ def test_multislice_qp_restart():
     assert dec["y"][16][0] == 131  # slice 1 back at qp 28 on 128 base
 
 
-# ------------------------------------------------------------- Annex B
-
-
-def test_annexb_roundtrip_and_multislice():
-    mbs = [{"mode": 2, "luma_dc": {0: 7}}, {"mode": 1, "luma_dc": {0: 2}}]
-    dec = h264.decode_annexb_keyframe(
-        h264.encode_annexb_fixture(2, 1, mbs, qp=30)
-    )
-    assert dec["y"][0][0] == 137 and dec["n_mb"] == 2
-    assert dec["sps"]["coded_width"] == 32
-    # multi-slice elementary stream: slice restart at MB1
-    mbs2 = [{"mode": 2, "luma_dc": {0: 7}}, {"mode": 2, "luma_dc": {0: 2}}]
-    dec2 = h264.decode_annexb_keyframe(
-        h264.encode_annexb_fixture(2, 1, mbs2, qp=30, slices=[1, 1])
-    )
-    assert dec2["n_slices"] == 2
-    assert dec2["y"][0][16] == 131  # 128 + (2*80+32 >> 6), not H-chained
-
-
-def test_annexb_split_short_and_long_start_codes():
-    nals = h264.split_annexb(
-        b"\x00\x00\x00\x01\x67\xaa\x00\x00\x01\x68\xbb\x00\x00\x01\x65\xcc"
-    )
-    assert [n[0] for n in nals] == [0x67, 0x68, 0x65]
-    with pytest.raises(ValueError, match="start code"):
-        h264.split_annexb(b"\xff\xfe no start code here")
-
-
-def test_annexb_missing_parameter_sets_raises():
-    mbs = [{"mode": 2}]
-    es = h264.encode_annexb_fixture(1, 1, mbs, qp=28)
-    # drop the SPS NAL (first start code + 7 bytes... rebuild without it)
-    nals = h264.split_annexb(es)
-    no_sps = b"".join(b"\x00\x00\x00\x01" + n for n in nals if (n[0] & 0x1F) != 7)
-    with pytest.raises(ValueError, match="SPS"):
-        h264.decode_annexb_keyframe(no_sps)
-
-
 def test_sniff_detects_h264_and_pdf():
     from occupation_wage_etl_spark.operators.multimodal import sniff_bytes
 
-    es = h264.encode_annexb_fixture(1, 1, [{"mode": 2}], qp=28)
+    # Annex B framing: 4-byte start code before each NAL unit
+    _, sps_nal, pps_nal = h264.encode_idr_access_unit(
+        1, 1, [{"mode": 2}], qp=28
+    )
+    es = b"".join(b"\x00\x00\x00\x01" + n for n in (sps_nal, pps_nal))
     assert sniff_bytes(es)["mime"] == "video/h264"
     assert sniff_bytes(b"%PDF-1.7 ...")["mime"] == "application/pdf"

@@ -143,7 +143,7 @@ def test_jpeg_progressive_matches_baseline_all_scan_types():
     base = mm.encode_jpeg_gray_coeffs(48, 8, blocks)
     prog = mm.encode_jpeg_progressive_gray_coeffs(48, 8, blocks)
     assert mm.decode_jpeg_gray(prog) == mm.decode_jpeg_gray(base)
-    # and through the operator dispatch (decode_image mode='real')
+    # and through the operator's dispatch (decode_image_bytes)
     assert mm.decode_image_bytes(prog) == mm.decode_image_bytes(base)
 
 
@@ -190,7 +190,7 @@ def test_jpeg_sniff_and_decode_image_operator(spark):
         v["mime"] == "image/jpeg" and v["width"] == 8 and v["height"] == 8
         for v in sniffed.values()
     )
-    decoded = {r["doc_id"]: r for r in mm.decode_image(df, mode="real").collect()}
+    decoded = {r["doc_id"]: r for r in mm.decode_image(df).collect()}
     for did in range(6):
         blk = [0] * 64
         blk[0] = (did % 201) - 100

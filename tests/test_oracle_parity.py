@@ -13,7 +13,7 @@ import duckdb
 import pytest
 
 from occupation_wage_etl_spark.queries import ORACLE_SQL, SPARK_QUERIES
-from tools.harness import register_views
+from tools.harness import collect, register_views, run_query
 
 
 @pytest.fixture(scope="module")
@@ -37,9 +37,8 @@ def _canon(rows, columns):
 
 @pytest.mark.parametrize("name", sorted(ORACLE_SQL))
 def test_query_matches_oracle(name, spark, sf_tiny, oracle):
-    sdf = SPARK_QUERIES[name](spark, sf_tiny)
-    srows = [tuple(r) for r in sdf.collect()]
-    scols = sdf.columns
+    # run_query releases the query's persists and checkpoints
+    (srows, scols), _, _ = run_query(spark, name, sf_tiny, collect)
 
     cur = oracle.execute(ORACLE_SQL[name])
     ocols = [d[0] for d in cur.description]

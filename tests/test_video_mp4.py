@@ -1,8 +1,7 @@
 """ISO-BMFF container demux (operators/video.py): fixture-encoder ↔
 parser roundtrips, the generalized stsc/stco sample-offset walk,
 version-1 / largesize / co64 box forms, corruption contracts, and the
-Spark operators (demux_mp4, mp4_keyframe_slices, sample_frames mp4
-mode)."""
+Spark operators (demux_mp4, mp4_keyframe_slices)."""
 
 from __future__ import annotations
 
@@ -10,7 +9,6 @@ import struct
 
 import pytest
 
-from occupation_wage_etl_spark.operators import multimodal as mm
 from occupation_wage_etl_spark.operators import video as V
 
 
@@ -227,11 +225,6 @@ def test_keyframe_slices_and_sample_frames_mp4(spark):
     assert sorted(r["sample_idx"] for r in two) == [1, 4]
     one = V.mp4_keyframe_slices(df, max_frames=1).collect()
     assert [r["sample_idx"] for r in one] == [1]
-    # sample_frames mode='mp4' rides the same real demux path
-    sf = mm.sample_frames(df, every_nth=1, max_frames=2, mode="mp4")
-    got = sf.orderBy("frame_idx").collect()
-    assert [r["frame_idx"] for r in got] == [1, 3]
-    assert bytes(got[1]["frame"]) == payloads[2]
 
 
 # ----------------------------------------------------- SPS (round 8)

@@ -191,7 +191,10 @@ def audit_one(name: str, plan: str, simple: str) -> dict:
         "reused_exchanges": len(re.findall(r"\(\d+\) ReusedExchange\b", plan)),
         "codegen": len({int(m) for m in re.findall(r"\*\((\d+)\)", simple)}),
         "arrow_python": len(
-            re.findall(r"ArrowEvalPython|FlatMapGroupsInPandas|MapInPandas", plan)
+            re.findall(
+                r"ArrowEvalPython|FlatMapGroupsInPandas|MapInPandas|MapInArrow",
+                plan,
+            )
         ),
         "slow_python": len(re.findall(r"BatchEvalPython", plan)),
         "full_width_scans": [
