@@ -14,8 +14,10 @@ through `tools.harness.run_query`, forced end-to-end with the noop sink
 `tools.harness.SAMPLES` (3) timed samples, recorded as their minimum with
 that sample's build/exec split.  A tiny warmup query absorbs JVM/codegen
 JIT so per-query numbers reflect steady-state throughput.  `cpus` is the
-session's `defaultParallelism`; the file record adds `nproc` and the load
-average taken before the timed pass.
+session's `defaultParallelism`; the file record adds `nproc`, the load
+average taken before the timed pass and, per entry, `codegen_compiles`:
+the Janino compiles over its timed samples (`tools.harness.
+codegen_compiles`), 0 unless the entry's plan embeds a per-call name.
 
 Lake ingest phase (timed separately, reported in the JSON): the driver's
 source tables are single-row-group parquet files, and a parquet row
@@ -41,7 +43,14 @@ import sys
 
 from occupation_wage_etl_spark.queries import SPARK_QUERIES
 from occupation_wage_etl_spark.session import get_spark
-from tools.harness import EXTRA_BENCH, SAMPLES, force, ingest_lake, run_query
+from tools.harness import (
+    EXTRA_BENCH,
+    SAMPLES,
+    codegen_compiles,
+    force,
+    ingest_lake,
+    run_query,
+)
 
 TIMING = f"min_of_{SAMPLES}"
 
@@ -172,8 +181,11 @@ def main() -> None:
     build: dict[str, float] = {}
     execute: dict[str, float] = {}
     spreads: dict[str, float] = {}  # max/min across this run's samples
+    compiles: dict[str, int] = {}  # Janino compiles over the timed samples
     for name in runs:
+        c0 = codegen_compiles(spark)
         samples = [run_query(spark, name, sf_dir)[1:] for _ in range(SAMPLES)]
+        compiles[name] = codegen_compiles(spark) - c0
         walls = [sum(s) for s in samples]
         build_s, exec_s = min(samples, key=sum)
         timings[name] = round(min(walls), 3)
@@ -214,6 +226,7 @@ def main() -> None:
         "timing": TIMING,
         "build_s": build,
         "exec_s": execute,
+        "codegen_compiles": compiles,
         "cpus": cpus,
         "nproc": len(os.sched_getaffinity(0)),
         "loadavg": loadavg,

@@ -26,7 +26,7 @@ Reference analogue: none; training-data extension surface.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from occupation_wage_etl_spark.operators._cache import cached, checkpoint
 
@@ -76,10 +76,10 @@ def connected_components(
         jump = labels.select(
             F.col("id").alias("pid"), F.col("comp").alias("pcomp")
         )
-        # carry the previous label through the checkpoint so convergence
-        # detection is a filter over the checkpointed rows (no extra join
-        # or recompute) — one materializing job + one cheap scan per round
-        new_labels = (
+        # the convergence count rides the checkpoint job (one job per
+        # round, no probe plan whose generated code varies per call)
+        changed = Observation()
+        labels = (
             labels.join(neighbor_min, labels.id == neighbor_min.u, "left")
             .join(jump, labels.comp == jump.pid, "left")
             .select(
@@ -91,13 +91,14 @@ def connected_components(
                 ).alias("comp"),
                 F.col("comp").alias("prev"),
             )
+            .observe(
+                changed,
+                F.count_if(F.col("comp") != F.col("prev")).alias("n"),
+            )
             .transform(checkpoint)  # eager: truncates lineage
+            .select("id", "comp")
         )
-        changed = (
-            new_labels.filter(F.col("comp") != F.col("prev")).limit(1).count()
-        )
-        labels = new_labels.select("id", "comp")
-        if changed == 0:
+        if changed.get["n"] == 0:
             break
     sym.unpersist()
     return labels.select(F.col("id"), F.col("comp").alias("component"))
@@ -515,14 +516,16 @@ def bfs_hops(
     )
     frontier = visited.select("node")
     for h in range(1, max_hops + 1):
+        found = Observation()
         nxt = (
             sym.join(frontier.select(F.col("node").alias("u")), "u")
             .select(F.col("v").alias("node"))
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
+            .observe(found, F.count(F.lit(1)).alias("n"))
             .transform(checkpoint)
         )
-        if nxt.limit(1).count() == 0:
+        if found.get["n"] == 0:
             break
         visited = visited.unionByName(
             nxt.withColumn("hops", F.lit(h))

@@ -24,6 +24,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from html.parser import HTMLParser
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as STypes
 
@@ -100,11 +101,16 @@ def extract_table(
     if not rows:
         raise ValueError("table has no data rows")
     ncols = len(target["headers"])
-    norm = [tuple((r + [""] * ncols)[:ncols]) for r in rows]
+    norm = [(r + [""] * ncols)[:ncols] for r in rows]
     schema = STypes.StructType(
         [STypes.StructField(h, STypes.StringType()) for h in target["headers"]]
     )
-    return spark.createDataFrame(norm, schema)
+    # one Arrow hand-off: the plan is a LocalRelation, so no action on
+    # the raw table starts Python workers to re-pickle its rows
+    columns = [pa.array(col, pa.string()) for col in zip(*norm)]
+    return spark.createDataFrame(
+        pa.Table.from_arrays(columns, names=target["headers"]), schema
+    )
 
 
 def parse_tables_distributed(

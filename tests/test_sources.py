@@ -48,6 +48,22 @@ def test_extract_table_errors(spark):
         )
 
 
+def test_extract_table_is_a_local_relation(spark):
+    """The raw table crosses into the JVM once, as Arrow: its plan is a
+    LocalRelation, not a Python RDD that re-pickles the rows on every
+    action.  Duplicate headers and short rows keep their shape."""
+    html = (
+        "<table><tr><th>Occupation (SOC code)</th><th>x</th><th>x</th></tr>"
+        "<tr><td>a</td><td>1</td><td>2</td></tr><tr><td>b</td></tr>"
+        "<tr><td>footer</td></tr></table>"
+    )
+    df = html_table.extract_table(spark, html, drop_footer_rows=1)
+    plan = df._jdf.queryExecution().analyzed()  # noqa: SLF001
+    assert plan.getClass().getSimpleName() == "LocalRelation"
+    assert df.columns == ["Occupation (SOC code)", "x", "x"]
+    assert [tuple(r) for r in df.collect()] == [("a", "1", "2"), ("b", "", "")]
+
+
 def test_parse_tables_distributed(spark):
     pages = spark.createDataFrame(
         [("u1", OEWS_HTML), ("u2", "<p>no tables here</p>"), ("u3", None)],

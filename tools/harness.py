@@ -110,6 +110,15 @@ EXTRA_BENCH = {
 BUILDERS = {**SPARK_QUERIES, **EXTRA_BENCH}
 
 
+def codegen_compiles(spark) -> int:
+    """Janino compiles so far in this JVM, from Spark's ``CodegenMetrics``.
+    A warm pass whose delta is not 0 generated code it had generated
+    before: the class cache is too small, or a plan embeds a per-call
+    name."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics  # noqa: SLF001
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def run_query(spark, name: str, sf_dir: str, action=force):
     """Build query ``name`` on ``sf_dir``, apply ``action`` to the
     DataFrame and release everything the query persisted.
