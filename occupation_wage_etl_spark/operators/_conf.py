@@ -19,7 +19,10 @@ def shuffle_partitions(spark) -> int:
         return int(spark.sparkContext.defaultParallelism)
 
 
-def broadcast_row_bound(spark, default: int = 4_000_000) -> int:
+_BROADCAST_ROW_BOUND = 4_000_000
+
+
+def broadcast_row_bound(spark) -> int:
     """Row-count bound under which a COUNTED small side may be
     broadcast-hinted (``spark.graft.broadcastRowBound``, settable per
     session).
@@ -34,4 +37,4 @@ def broadcast_row_bound(spark, default: int = 4_000_000) -> int:
     try:
         return int(spark.conf.get("spark.graft.broadcastRowBound"))
     except Exception:
-        return default
+        return _BROADCAST_ROW_BOUND

@@ -266,14 +266,6 @@ def detect_charset_ex(
     return "latin-1", False, "latin-1"
 
 
-def detect_charset(
-    data: bytes, declared: str | None = None
-) -> tuple[str, bool]:
-    """(encoding, had_bom) for a byte payload, by the module ladder."""
-    enc, had_bom, _ = detect_charset_ex(data, declared)
-    return enc, had_bom
-
-
 # HTML5 windows-1252: the 0x80-0x9F block (undefined slots keep their
 # Latin-1/C1 identity, so the translate map only lists defined ones)
 _CP1252_MAP = {

@@ -215,31 +215,27 @@ def k_core(
 
     alive = sym
     deg = alive.groupBy("u").agg(F.count(F.lit(1)).alias("core_degree"))
-    converged = False
-    for _ in range(max_rounds):
-        keep = deg.filter(F.col("core_degree") >= k).select("u")
-        dropped = (
-            deg.filter(F.col("core_degree") < k).limit(1).count()
-        )
-        if dropped == 0:
-            converged = True
+    for peels in range(max_rounds + 1):
+        if not deg.filter(F.col("core_degree") < k).limit(1).count():
             break
+        if peels == max_rounds:
+            # A silent return here would be a SUPERSET of the k-core
+            # (nodes whose degree only drops below k in later peels) —
+            # and any fixed-unroll oracle replaying the same rounds would
+            # quietly agree with the wrong answer.  Fail loudly instead;
+            # peel depth > max_rounds means the graph needs a bigger
+            # budget.
+            raise RuntimeError(
+                f"k_core did not converge within max_rounds={max_rounds}; "
+                "raise max_rounds (peel depth exceeds the round budget)"
+            )
+        keep = deg.filter(F.col("core_degree") >= k).select("u")
         alive = (
             alive.join(keep, "u", "left_semi")
             .join(keep.select(F.col("u").alias("v")), "v", "left_semi")
             .transform(checkpoint)
         )
         deg = alive.groupBy("u").agg(F.count(F.lit(1)).alias("core_degree"))
-    if not converged and deg.filter(F.col("core_degree") < k).limit(1).count():
-        # A silent return here would be a SUPERSET of the k-core (nodes
-        # whose degree only drops below k in later peels) — and any
-        # fixed-unroll oracle replaying the same rounds would quietly
-        # agree with the wrong answer.  Fail loudly instead; peel depth
-        # > max_rounds means the graph needs a bigger budget.
-        raise RuntimeError(
-            f"k_core did not converge within max_rounds={max_rounds}; "
-            "raise max_rounds (peel depth exceeds the round budget)"
-        )
     return deg.filter(F.col("core_degree") >= k).select(
         F.col("u").alias("node"), "core_degree"
     )

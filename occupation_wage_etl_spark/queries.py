@@ -37,11 +37,20 @@ Cross-engine determinism rules (validated in tests/test_oracle_parity.py):
   trained/learned parameters changes only a broadcast literal table.
 - Ordered/limited queries always carry a unique tiebreaker key.
 
+Naming rule: a query is a module-level builder ``qNN_name(spark, sf_dir)``
+plus one module constant ``QNN_SQL`` (same NN, zero padding included)
+holding its oracle.  ``SPARK_QUERIES`` and ``ORACLE_SQL`` are derived
+from these names at the end of the module, ordered by NN — there is no
+list to edit, a builder without its ``QNN_SQL`` fails the import, and
+no helper may be named ``qNN_*``.  An oracle that reuses another's SQL
+interpolates that query's constant rather than re-running its builder.
+
 Reference-parity queries (q01–q11) cite SURVEY.md §2 operator ids.
 """
 
 from __future__ import annotations
 
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -595,6 +604,9 @@ SELECT id_a, id_b, jaccard FROM verified WHERE jaccard >= {JACCARD_T}
 """
 
 
+Q13_SQL = _minhash_oracle_sql()
+
+
 # ---------------------------------------------------------------------------
 # q14 — exact n-gram Jaccard near-dup pairs (blocked self-join)
 # ---------------------------------------------------------------------------
@@ -778,6 +790,9 @@ SELECT doc_id,
        END AS pred_lang
 FROM b
 """
+
+
+Q18_SQL = _lang_id_oracle_sql()
 
 
 # ---------------------------------------------------------------------------
@@ -1181,6 +1196,9 @@ SELECT doc_id, {cols} FROM h
 """
 
 
+Q26_SQL = _features_oracle_sql()
+
+
 # ---------------------------------------------------------------------------
 # q27 — as-of (point-in-time) join: latest click value as of each purchase
 # (operators/asof_join.py — union-merge plan, one shuffle+sort)
@@ -1444,7 +1462,7 @@ def q34_curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _curate_oracle_sql() -> str:
     quality_cte = Q17_SQL.strip()
-    lang_cte = _lang_id_oracle_sql().strip()
+    lang_cte = Q18_SQL.strip()
     return f"""
 WITH q AS ({quality_cte}),
 l AS ({lang_cte}),
@@ -1463,6 +1481,9 @@ keep_ids AS (
 SELECT k.doc_id, k.source, k.quality, k.pred_lang
 FROM kept k JOIN keep_ids USING (doc_id)
 """
+
+
+Q34_SQL = _curate_oracle_sql()
 
 
 # ---------------------------------------------------------------------------
@@ -1638,10 +1659,9 @@ def q39_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _dup_clusters_oracle_sql() -> str:
-    return f"""
+Q39_SQL = f"""
 WITH RECURSIVE edges AS (
-  SELECT id_a, id_b FROM ({_minhash_oracle_sql()}) mh
+  SELECT id_a, id_b FROM ({Q13_SQL}) mh
 ), sym AS (
   SELECT id_a AS u, id_b AS v FROM edges
   UNION ALL
@@ -1885,6 +1905,9 @@ GROUP BY band
 """
 
 
+Q44_SQL = _price_band_oracle_sql()
+
+
 # ---------------------------------------------------------------------------
 # q45 — pivot (long → wide conditional aggregation): order revenue by
 # priority, one column per order status.  Pivot values are passed
@@ -1923,6 +1946,9 @@ SELECT o_orderpriority,
 FROM orders
 GROUP BY o_orderpriority
 """
+
+
+Q45_SQL = _pivot_oracle_sql()
 
 
 # ---------------------------------------------------------------------------
@@ -1971,6 +1997,9 @@ GROUP BY measure
 """
 
 
+Q46_SQL = _melt_oracle_sql()
+
+
 # ---------------------------------------------------------------------------
 # q47 — single-pass table profile (operators/profile.py): per-column
 # non-null/null/distinct/min/max over the lineitem measures + keys, one
@@ -2002,6 +2031,9 @@ def _profile_oracle_sql() -> str:
         for c in PROFILE_COLUMNS
     )
     return f"  {arms}"
+
+
+Q47_SQL = _profile_oracle_sql()
 
 
 # ---------------------------------------------------------------------------
@@ -2824,7 +2856,7 @@ def q64_training_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q64_oracle_sql() -> str:
-    curated_sql = _curate_oracle_sql().strip()
+    curated_sql = Q34_SQL.strip()
     return f"""
 WITH RECURSIVE curated AS ({curated_sql}),
 survivors AS (
@@ -2876,6 +2908,9 @@ SELECT source, bin_id,
        CAST(max(bin_fill) AS BIGINT) / {float(PACK_BUDGET)} AS utilization
 FROM p GROUP BY source, bin_id
 """
+
+
+Q64_SQL = _q64_oracle_sql()
 
 
 # ---------------------------------------------------------------------------
@@ -2959,10 +2994,9 @@ def q66_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return decontaminate.contrastive_pairs(docs, pairs, n_negatives=_NEG_K)
 
 
-def _contrastive_oracle_sql() -> str:
-    return f"""
+Q66_SQL = f"""
 WITH mh AS (
-  SELECT id_a, id_b FROM ({_minhash_oracle_sql()}) m
+  SELECT id_a, id_b FROM ({Q13_SQL}) m
 ), anchors AS (
   SELECT id_a AS anchor, id_b AS positive FROM mh
 ), n_tbl AS (
@@ -4102,6 +4136,9 @@ FROM e
 """
 
 
+Q90_SQL = _entropy_oracle_sql()
+
+
 # ---------------------------------------------------------------------------
 # q91 — quantile bucketize APPLY (operators/stats.py:apply_buckets):
 # fit q74's equi-depth boundaries, then assign every lineitem its
@@ -4205,6 +4242,9 @@ WITH n0 AS (
 SELECT u AS node, CAST(rank AS BIGINT) AS rank_scaled FROM r{PR_ITERS}
 """
     return head + "".join(iters) + tail
+
+
+Q92_SQL = _pagerank_oracle_sql()
 
 
 # ---------------------------------------------------------------------------
@@ -4323,6 +4363,9 @@ FROM a
 """
 
 
+Q95_SQL = _benford_oracle_sql()
+
+
 # ---------------------------------------------------------------------------
 # q96 — reciprocal-rank fusion (operators/retrieval.py:rrf_fuse):
 # hybrid retrieval combining the BM25 top-100 (lexical) with the
@@ -4408,6 +4451,9 @@ FROM f
 ORDER BY rrf DESC, doc_id
 LIMIT {RRF_K}
 """
+
+
+Q96_SQL = _rrf_oracle_sql()
 
 
 # ---------------------------------------------------------------------------
@@ -4705,6 +4751,9 @@ QUALIFY row_number() OVER (PARTITION BY new_id
 """
 
 
+Q101_SQL = _incdedup_oracle_sql()
+
+
 # ---------------------------------------------------------------------------
 # q102 — session first-touch attribution (operators/timeseries.py:
 # session_attribution): which entry event led to each purchase, and
@@ -4836,8 +4885,7 @@ def q105_score_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stats.grouped_percent_rank(scored, "source", "quality", "doc_id")
 
 
-def _calibration_oracle_sql() -> str:
-    return f"""
+Q105_SQL = f"""
 WITH q AS ({Q17_SQL})
 SELECT q.doc_id, d.source, q.quality,
        percent_rank() OVER (PARTITION BY d.source ORDER BY q.quality)
@@ -4983,9 +5031,8 @@ def q109_cluster_reps(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _cluster_reps_oracle_sql() -> str:
-    return f"""
-WITH cc AS ({_dup_clusters_oracle_sql()}),
+Q109_SQL = f"""
+WITH cc AS ({Q39_SQL}),
 q AS ({Q17_SQL}),
 m AS (
   SELECT cc.cluster_id, q.doc_id, q.quality
@@ -5217,9 +5264,8 @@ def q115_leak_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _leak_split_oracle_sql() -> str:
-    return f"""
-WITH cc AS ({_dup_clusters_oracle_sql()}),
+Q115_SQL = f"""
+WITH cc AS ({Q39_SQL}),
 k AS (
   SELECT d.doc_id,
          coalesce(cc.cluster_id, d.doc_id) AS cluster_key
@@ -5655,9 +5701,8 @@ def q124_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _dedup_eval_oracle_sql() -> str:
-    return f"""
-WITH pred0 AS ({_minhash_oracle_sql()}),
+Q124_SQL = f"""
+WITH pred0 AS ({Q13_SQL}),
 docs_l AS (SELECT doc_id AS id, lang FROM documents),
 pred AS (
   SELECT p.id_a, p.id_b
@@ -6709,7 +6754,7 @@ Q144_SQL = _bpe_sql()
 def _bpe_encode_sql() -> str:
     # q163: the same unrolled learn pipeline, finished by the token
     # histogram of the final symbol table instead of the merge list
-    full = _bpe_sql()
+    full = Q144_SQL
     # the merge-list finals start at the only "\nSELECT " (the UNION ALL
     # branches are "\nUNION ALL SELECT")
     head_and_stages = full[: full.rindex("\nSELECT ")]
@@ -8152,8 +8197,7 @@ def q174_mrr_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return evaluation.mrr_recall_at_k(ranked, "rank", "rel", NDCG_K, total_rel)
 
 
-def _mrr_sql() -> str:
-    return f"""
+Q174_SQL = f"""
 WITH q AS (
   SELECT embedding::DOUBLE[] AS qv, label AS qlabel FROM embeddings
   WHERE vec_id = {KNN_QUERY_ID}
@@ -8191,9 +8235,6 @@ SELECT first_rel_rank,
             ELSE 0.0 END AS recall_at_k
 FROM agg, tot
 """
-
-
-Q174_SQL = _mrr_sql()
 
 FLEISS_LEN_T = 500
 
@@ -11635,8 +11676,7 @@ def q239_token_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text_analysis.token_f1_pairs(docs, pairs, "text", "doc_id")
 
 
-def _token_f1_oracle_sql() -> str:
-    return f"""
+Q239_SQL = f"""
 WITH {_edge_cte()}, tok AS (
   SELECT id, unnest(string_split(s, ' ')) AS tok FROM n
   WHERE s IS NOT NULL
@@ -11663,9 +11703,6 @@ LEFT JOIN ov ON ov.a = e.a AND ov.b = e.b
 """
 
 
-Q239_SQL = _token_f1_oracle_sql()
-
-
 # ---------------------------------------------------------------------------
 # q240 — PROGRESSIVE JPEG decode (operators/multimodal.py:
 # _decode_jpeg_progressive / encode_jpeg_progressive_gray_coeffs):
@@ -11687,7 +11724,7 @@ def q240_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q240_SQL = _jpeg_oracle_sql()  # identical closed form to q217 — by design
+Q240_SQL = Q217_SQL  # identical closed form to q217 — by design
 
 
 # ---------------------------------------------------------------------------
@@ -11711,7 +11748,7 @@ def q241_jpeg_progressive_rgb(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q241_SQL = _jpeg_rgb_oracle_sql()  # q234's closed form — by design
+Q241_SQL = Q234_SQL  # q234's closed form — by design
 
 
 # ---------------------------------------------------------------------------
@@ -13067,7 +13104,7 @@ def q262_wet_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _wet_curate_oracle_sql() -> str:
     quality_cte = Q17_SQL.strip()
-    lang_cte = _lang_id_oracle_sql().strip()
+    lang_cte = Q18_SQL.strip()
     return f"""
 WITH q AS ({quality_cte}),
 l AS ({lang_cte}),
@@ -13086,6 +13123,9 @@ keep_ids AS (
 SELECT k.doc_id, k.quality, k.pred_lang
 FROM kept k JOIN keep_ids USING (doc_id)
 """
+
+
+Q262_SQL = _wet_curate_oracle_sql()
 
 
 # ---------------------------------------------------------------------------
@@ -13324,6 +13364,9 @@ def q266_pdf_cid_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     return pdfmod.pdf_text(_synth_pdf_cid(docs))
+
+
+Q266_SQL = Q257_SQL
 
 
 # ---------------------------------------------------------------------------
@@ -16985,632 +17028,16 @@ FROM ranked
 """
 
 
-SPARK_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "q01_pricing_summary": q01_pricing_summary,
-    "q02_top_parts_by_avg_price": q02_top_parts_by_avg_price,
-    "q03_prefix_join": q03_prefix_join,
-    "q04_avg_by_prefix": q04_avg_by_prefix,
-    "q05_cleaning_grammar": q05_cleaning_grammar,
-    "q06_month_parse": q06_month_parse,
-    "q07_filter_projection": q07_filter_projection,
-    "q08_top3_orders_per_priority": q08_top3_orders_per_priority,
-    "q09_customers_without_orders": q09_customers_without_orders,
-    "q10_sessionize": q10_sessionize,
-    "q11_windowed_counts": q11_windowed_counts,
-    "q12_dedup_stats": q12_dedup_stats,
-    "q13_minhash_lsh_pairs": q13_minhash_lsh_pairs,
-    "q14_ngram_jaccard_pairs": q14_ngram_jaccard_pairs,
-    "q15_knn_cosine": q15_knn_cosine,
-    "q16_token_stats": q16_token_stats,
-    "q17_quality_scores": q17_quality_scores,
-    "q18_lang_id": q18_lang_id,
-    "q19_fingerprints": q19_fingerprints,
-    "q20_rolling_overlap": q20_rolling_overlap,
-    "q21_embedding_near_dup": q21_embedding_near_dup,
-    "q22_simhash_pairs": q22_simhash_pairs,
-    "q23_lsh_knn": q23_lsh_knn,
-    "q24_ivf_knn": q24_ivf_knn,
-    "q25_multimodal_sniff": q25_multimodal_sniff,
-    "q26_multimodal_features": q26_multimodal_features,
-    "q27_asof_join": q27_asof_join,
-    "q28_time_rollup": q28_time_rollup,
-    "q29_json_props": q29_json_props,
-    "q30_sql_view_cte": q30_sql_view_cte,
-    "q31_set_ops": q31_set_ops,
-    "q32_running_totals": q32_running_totals,
-    "q33_price_distribution": q33_price_distribution,
-    "q34_curate_corpus": q34_curate_corpus,
-    "q35_train_split": q35_train_split,
-    "q36_pii_redaction": q36_pii_redaction,
-    "q37_chunk_documents": q37_chunk_documents,
-    "q38_vocab": q38_vocab,
-    "q39_dup_clusters": q39_dup_clusters,
-    "q40_pack_sequences": q40_pack_sequences,
-    "q41_embedding_centroids": q41_embedding_centroids,
-    "q42_tfidf_top_tokens": q42_tfidf_top_tokens,
-    "q43_region_rollup": q43_region_rollup,
-    "q44_price_band_join": q44_price_band_join,
-    "q45_returns_pivot": q45_returns_pivot,
-    "q46_measure_melt": q46_measure_melt,
-    "q47_profile_lineitem": q47_profile_lineitem,
-    "q48_status_cube": q48_status_cube,
-    "q49_stat_aggregates": q49_stat_aggregates,
-    "q50_decode_image": q50_decode_image,
-    "q51_audio_stats": q51_audio_stats,
-    "q52_decontaminate": q52_decontaminate,
-    "q53_repetition_quality": q53_repetition_quality,
-    "q54_domain_caps": q54_domain_caps,
-    "q55_bm25_topk": q55_bm25_topk,
-    "q56_bigram_familiarity": q56_bigram_familiarity,
-    "q57_pq_adc_knn": q57_pq_adc_knn,
-    "q58_snapshot_diff": q58_snapshot_diff,
-    "q59_encode_corpus": q59_encode_corpus,
-    "q60_sample_to_budget": q60_sample_to_budget,
-    "q61_trailing_window": q61_trailing_window,
-    "q62_key_skew": q62_key_skew,
-    "q63_quality_classifier": q63_quality_classifier,
-    "q64_training_batches": q64_training_batches,
-    "q65_snapshot_drift": q65_snapshot_drift,
-    "q66_contrastive_pairs": q66_contrastive_pairs,
-    "q67_funnel": q67_funnel,
-    "q68_cohort_retention": q68_cohort_retention,
-    "q69_substring_dup_spans": q69_substring_dup_spans,
-    "q70_semantic_dedup": q70_semantic_dedup,
-    "q71_incremental_agg": q71_incremental_agg,
-    "q72_fuzzy_join": q72_fuzzy_join,
-    "q73_interval_overlap": q73_interval_overlap,
-    "q74_equi_depth_hist": q74_equi_depth_hist,
-    "q75_resample_ffill": q75_resample_ffill,
-    "q76_phrase_search": q76_phrase_search,
-    "q77_shipping_priority": q77_shipping_priority,
-    "q78_local_supplier_volume": q78_local_supplier_volume,
-    "q79_returned_items": q79_returned_items,
-    "q80_triangles": q80_triangles,
-    "q81_zscore_normalize": q81_zscore_normalize,
-    "q82_scd2_history": q82_scd2_history,
-    "q83_activity_streaks": q83_activity_streaks,
-    "q84_event_transitions": q84_event_transitions,
-    "q85_weighted_sample": q85_weighted_sample,
-    "q86_big_orders": q86_big_orders,
-    "q87_sole_return_supplier": q87_sole_return_supplier,
-    "q88_winsorize": q88_winsorize,
-    "q89_rolling_anomalies": q89_rolling_anomalies,
-    "q90_char_entropy": q90_char_entropy,
-    "q91_bucketize": q91_bucketize,
-    "q92_pagerank": q92_pagerank,
-    "q93_cooccurrence": q93_cooccurrence,
-    "q94_mad_outliers": q94_mad_outliers,
-    "q95_benford": q95_benford,
-    "q96_rrf_hybrid": q96_rrf_hybrid,
-    "q97_constraints": q97_constraints,
-    "q98_user_mode": q98_user_mode,
-    "q99_skyline": q99_skyline,
-    "q100_mutual_match": q100_mutual_match,
-    "q101_incremental_dedup": q101_incremental_dedup,
-    "q102_attribution": q102_attribution,
-    "q103_lang_bigrams": q103_lang_bigrams,
-    "q104_ewma": q104_ewma,
-    "q105_score_calibration": q105_score_calibration,
-    "q106_dup_ngram_coverage": q106_dup_ngram_coverage,
-    "q107_vocab_novelty": q107_vocab_novelty,
-    "q108_trend_ols": q108_trend_ols,
-    "q109_cluster_reps": q109_cluster_reps,
-    "q110_twa": q110_twa,
-    "q111_session_paths": q111_session_paths,
-    "q112_rfm": q112_rfm,
-    "q113_cusum": q113_cusum,
-    "q114_weighted_median": q114_weighted_median,
-    "q115_leak_safe_split": q115_leak_safe_split,
-    "q116_late_shipments": q116_late_shipments,
-    "q117_promo_revenue": q117_promo_revenue,
-    "q118_small_quantity_revenue": q118_small_quantity_revenue,
-    "q119_disjunctive_revenue": q119_disjunctive_revenue,
-    "q120_rich_inactive_customers": q120_rich_inactive_customers,
-    "q121_denoising_pairs": q121_denoising_pairs,
-    "q122_temperature_mix": q122_temperature_mix,
-    "q123_containment_pairs": q123_containment_pairs,
-    "q124_dedup_eval": q124_dedup_eval,
-    "q125_windowed_funnel": q125_windowed_funnel,
-    "q126_out_of_order": q126_out_of_order,
-    "q127_int8_quantize": q127_int8_quantize,
-    "q128_compaction_plan": q128_compaction_plan,
-    "q129_exists_late_orders": q129_exists_late_orders,
-    "q130_rollup": q130_rollup,
-    "q131_ab_test": q131_ab_test,
-    "q132_gini": q132_gini,
-    "q133_ri_audit": q133_ri_audit,
-    "q134_mutual_info": q134_mutual_info,
-    "q135_resample_lerp": q135_resample_lerp,
-    "q136_heavy_hitters": q136_heavy_hitters,
-    "q137_event_dedup": q137_event_dedup,
-    "q138_user_totals": q138_user_totals,
-    "q139_k_core": q139_k_core,
-    "q140_stratified_exact": q140_stratified_exact,
-    "q141_record_linkage": q141_record_linkage,
-    "q142_survival": q142_survival,
-    "q143_winnowing_pairs": q143_winnowing_pairs,
-    "q144_bpe_merges": q144_bpe_merges,
-    "q145_roc_auc": q145_roc_auc,
-    "q146_calibration": q146_calibration,
-    "q147_js_divergence": q147_js_divergence,
-    "q148_psi": q148_psi,
-    "q149_mmr_rerank": q149_mmr_rerank,
-    "q150_ndcg": q150_ndcg,
-    "q151_entity_resolution": q151_entity_resolution,
-    "q152_ngram_prefix_pairs": q152_ngram_prefix_pairs,
-    "q153_average_precision": q153_average_precision,
-    "q154_confusion": q154_confusion,
-    "q155_cohens_kappa": q155_cohens_kappa,
-    "q156_gini_tokens": q156_gini_tokens,
-    "q157_chao1": q157_chao1,
-    "q158_zipf_fit": q158_zipf_fit,
-    "q159_hll_distinct": q159_hll_distinct,
-    "q160_cms_heavy": q160_cms_heavy,
-    "q161_cross_entropy": q161_cross_entropy,
-    "q162_repetition": q162_repetition,
-    "q163_bpe_encode": q163_bpe_encode,
-    "q164_brier": q164_brier,
-    "q165_ece": q165_ece,
-    "q166_spearman": q166_spearman,
-    "q167_ks_test": q167_ks_test,
-    "q168_chi_square": q168_chi_square,
-    "q169_welch_t": q169_welch_t,
-    "q170_kruskal_wallis": q170_kruskal_wallis,
-    "q171_acf": q171_acf,
-    "q172_adamic_adar": q172_adamic_adar,
-    "q173_label_prop": q173_label_prop,
-    "q174_mrr_recall": q174_mrr_recall,
-    "q175_fleiss_kappa": q175_fleiss_kappa,
-    "q176_mcnemar": q176_mcnemar,
-    "q177_epoch_batches": q177_epoch_batches,
-    "q178_curriculum": q178_curriculum,
-    "q179_cov_matrix": q179_cov_matrix,
-    "q180_multi_ols": q180_multi_ols,
-    "q181_target_encode": q181_target_encode,
-    "q182_kfold_encode": q182_kfold_encode,
-    "q183_volume_shipping": q183_volume_shipping,
-    "q184_market_share": q184_market_share,
-    "q185_theta_overlap": q185_theta_overlap,
-    "q186_seasonal": q186_seasonal,
-    "q187_bootstrap_ci": q187_bootstrap_ci,
-    "q188_train_logreg": q188_train_logreg,
-    "q189_best_threshold": q189_best_threshold,
-    "q190_bfs_hops": q190_bfs_hops,
-    "q191_golden_records": q191_golden_records,
-    "q192_assoc_rules": q192_assoc_rules,
-    "q193_item_cf": q193_item_cf,
-    "q194_clustering_coeff": q194_clustering_coeff,
-    "q195_stump": q195_stump,
-    "q196_min_cost_supplier": q196_min_cost_supplier,
-    "q197_product_profit": q197_product_profit,
-    "q198_important_parts": q198_important_parts,
-    "q199_order_count_distribution": q199_order_count_distribution,
-    "q200_top_supplier": q200_top_supplier,
-    "q201_supplier_part_counts": q201_supplier_part_counts,
-    "q202_dominant_suppliers": q202_dominant_suppliers,
-    "q203_sorted_neighborhood": q203_sorted_neighborhood,
-    "q204_personalized_pagerank": q204_personalized_pagerank,
-    "q205_seasonal_even": q205_seasonal_even,
-    "q206_hits": q206_hits,
-    "q207_assortativity": q207_assortativity,
-    "q208_record_days": q208_record_days,
-    "q209_pmi": q209_pmi,
-    "q210_mixing_weights": q210_mixing_weights,
-    "q211_pca_top_component": q211_pca_top_component,
-    "q212_isotonic": q212_isotonic,
-    "q213_woe_iv": q213_woe_iv,
-    "q214_kmeans": q214_kmeans,
-    "q215_value_percentiles_fg": q215_value_percentiles_fg,
-    "q216_quantile_sketch": q216_quantile_sketch,
-    "q217_jpeg_decode": q217_jpeg_decode,
-    "q218_grouped_hll": q218_grouped_hll,
-    "q219_theil_sen": q219_theil_sen,
-    "q220_readability": q220_readability,
-    "q221_conformal": q221_conformal,
-    "q222_bh_fdr": q222_bh_fdr,
-    "q223_kneser_ney": q223_kneser_ney,
-    "q224_jaro_winkler": q224_jaro_winkler,
-    "q225_sequential_pairs": q225_sequential_pairs,
-    "q226_bcubed": q226_bcubed,
-    "q227_stratified_ate": q227_stratified_ate,
-    "q228_wasserstein": q228_wasserstein,
-    "q229_logo_ols": q229_logo_ols,
-    "q230_forecast_backtest": q230_forecast_backtest,
-    "q231_cross_correlation": q231_cross_correlation,
-    "q232_mp4_demux": q232_mp4_demux,
-    "q233_mp4_keyframes": q233_mp4_keyframes,
-    "q234_jpeg_rgb": q234_jpeg_rgb,
-    "q235_near_dup_recall": q235_near_dup_recall,
-    "q236_lsh_knn_recall": q236_lsh_knn_recall,
-    "q237_snb_recall": q237_snb_recall,
-    "q238_html_parse": q238_html_parse,
-    "q239_token_f1": q239_token_f1,
-    "q240_jpeg_progressive": q240_jpeg_progressive,
-    "q241_jpeg_progressive_rgb": q241_jpeg_progressive_rgb,
-    "q242_planted_near_dup_recall": q242_planted_near_dup_recall,
-    "q243_planted_near_dup_recall_mp": q243_planted_near_dup_recall_mp,
-    "q244_planted_snb_recall": q244_planted_snb_recall,
-    "q245_planted_minhash_recall": q245_planted_minhash_recall,
-    "q246_mp4_sps_params": q246_mp4_sps_params,
-    "q247_audio_frame_stats": q247_audio_frame_stats,
-    "q248_multipass_snb": q248_multipass_snb,
-    "q249_flac_streaminfo": q249_flac_streaminfo,
-    "q250_id3_tags": q250_id3_tags,
-    "q251_h264_idr_decode": q251_h264_idr_decode,
-    "q252_h264_pred_chain": q252_h264_pred_chain,
-    "q253_h264_i4x4": q253_h264_i4x4,
-    "q254_mp4_vui": q254_mp4_vui,
-    "q255_h264_multislice": q255_h264_multislice,
-    "q256_keyframe_dup_groups": q256_keyframe_dup_groups,
-    "q257_pdf_text": q257_pdf_text,
-    "q258_pdf_dup_pages": q258_pdf_dup_pages,
-    "q259_docx_text": q259_docx_text,
-    "q260_warc_records": q260_warc_records,
-    "q261_wet_text": q261_wet_text,
-    "q262_wet_curation": q262_wet_curation,
-    "q263_html_main_text": q263_html_main_text,
-    "q264_html_boilerplate_collapse": q264_html_boilerplate_collapse,
-    "q265_charset_sniff": q265_charset_sniff,
-    "q266_pdf_cid_text": q266_pdf_cid_text,
-    "q267_docx_parts": q267_docx_parts,
-    "q268_web_ingest_chain": q268_web_ingest_chain,
-    "q269_url_canonicalize": q269_url_canonicalize,
-    "q270_repeated_spans": q270_repeated_spans,
-    "q271_robots_rules": q271_robots_rules,
-    "q272_robots_allowed": q272_robots_allowed,
-    "q273_span_cut": q273_span_cut,
-    "q274_sentence_chunks": q274_sentence_chunks,
-    "q275_link_graph_edges": q275_link_graph_edges,
-    "q276_jsonld_metadata": q276_jsonld_metadata,
-    "q277_sitemap_entries": q277_sitemap_entries,
-    "q278_image_dhash": q278_image_dhash,
-    "q279_image_near_dup": q279_image_near_dup,
-    "q280_nfc_dedup": q280_nfc_dedup,
-    "q281_canonical_urls": q281_canonical_urls,
-    "q282_charset_declared": q282_charset_declared,
-    "q283_links_resolved": q283_links_resolved,
-    "q284_canonical_resolved": q284_canonical_resolved,
-    "q285_sitemap_gz_chase": q285_sitemap_gz_chase,
-    "q286_robots_wildcards": q286_robots_wildcards,
-    "q287_span_dedup_fixed_point": q287_span_dedup_fixed_point,
-    "q288_revisit_resolve": q288_revisit_resolve,
-    "q289_redirect_chains": q289_redirect_chains,
-    "q290_digest_check": q290_digest_check,
-    "q291_domain_rollup": q291_domain_rollup,
-    "q292_page_meta": q292_page_meta,
-    "q293_anchor_rollup": q293_anchor_rollup,
-    "q294_url_mixed_encoding_collapse": q294_url_mixed_encoding_collapse,
-    "q295_cdx_lookup_fetch": q295_cdx_lookup_fetch,
-    "q296_crawl_budget": q296_crawl_budget,
-    "q297_sitemap_extensions": q297_sitemap_extensions,
-    "q298_pdf_font_encodings": q298_pdf_font_encodings,
-    "q299_langid_audit": q299_langid_audit,
-    "q300_cdx_build_roundtrip": q300_cdx_build_roundtrip,
-    "q301_cdx_latest_capture": q301_cdx_latest_capture,
-    "q302_feed_entries": q302_feed_entries,
-    "q303_pdf_encrypted": q303_pdf_encrypted,
-    "q304_discovery_funnel": q304_discovery_funnel,
-    "q305_recrawl_schedule": q305_recrawl_schedule,
-    "q306_cdx_change_rate": q306_cdx_change_rate,
-    "q307_adaptive_recrawl": q307_adaptive_recrawl,
-    "q308_wat_catalog": q308_wat_catalog,
-    "q309_nb_quality_classifier": q309_nb_quality_classifier,
-    "q310_politeness_gate": q310_politeness_gate,
-    "q311_nb_train_apply": q311_nb_train_apply,
-    "q312_crawl_cycle": q312_crawl_cycle,
-}
-
+# The registry, derived by the naming rule in the module docstring.
+_QUERY_NAME = re.compile(r"q(\d+)_\w+")
+SPARK_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = dict(
+    sorted(
+        ((name, obj) for name, obj in globals().items()
+         if _QUERY_NAME.fullmatch(name)),
+        key=lambda item: int(_QUERY_NAME.fullmatch(item[0])[1]),
+    )
+)
 ORACLE_SQL: dict[str, str] = {
-    "q01_pricing_summary": Q01_SQL,
-    "q02_top_parts_by_avg_price": Q02_SQL,
-    "q03_prefix_join": Q03_SQL,
-    "q04_avg_by_prefix": Q04_SQL,
-    "q05_cleaning_grammar": Q05_SQL,
-    "q06_month_parse": Q06_SQL,
-    "q07_filter_projection": Q07_SQL,
-    "q08_top3_orders_per_priority": Q08_SQL,
-    "q09_customers_without_orders": Q09_SQL,
-    "q10_sessionize": Q10_SQL,
-    "q11_windowed_counts": Q11_SQL,
-    "q12_dedup_stats": Q12_SQL,
-    "q13_minhash_lsh_pairs": _minhash_oracle_sql(),
-    "q14_ngram_jaccard_pairs": Q14_SQL,
-    "q15_knn_cosine": Q15_SQL,
-    "q16_token_stats": Q16_SQL,
-    "q17_quality_scores": Q17_SQL,
-    "q18_lang_id": _lang_id_oracle_sql(),
-    "q19_fingerprints": Q19_SQL,
-    "q20_rolling_overlap": Q20_SQL,
-    "q21_embedding_near_dup": Q21_SQL,
-    "q22_simhash_pairs": Q22_SQL,
-    "q23_lsh_knn": Q23_SQL,
-    "q24_ivf_knn": Q24_SQL,
-    "q25_multimodal_sniff": Q25_SQL,
-    "q26_multimodal_features": _features_oracle_sql(),
-    "q27_asof_join": Q27_SQL,
-    "q28_time_rollup": Q28_SQL,
-    "q29_json_props": Q29_SQL,
-    "q30_sql_view_cte": Q30_SQL,
-    "q31_set_ops": Q31_SQL,
-    "q32_running_totals": Q32_SQL,
-    "q33_price_distribution": Q33_SQL,
-    "q34_curate_corpus": _curate_oracle_sql(),
-    "q35_train_split": Q35_SQL,
-    "q36_pii_redaction": Q36_SQL,
-    "q37_chunk_documents": Q37_SQL,
-    "q38_vocab": Q38_SQL,
-    "q39_dup_clusters": _dup_clusters_oracle_sql(),
-    "q40_pack_sequences": Q40_SQL,
-    "q41_embedding_centroids": Q41_SQL,
-    "q42_tfidf_top_tokens": Q42_SQL,
-    "q43_region_rollup": Q43_SQL,
-    "q44_price_band_join": _price_band_oracle_sql(),
-    "q45_returns_pivot": _pivot_oracle_sql(),
-    "q46_measure_melt": _melt_oracle_sql(),
-    "q47_profile_lineitem": _profile_oracle_sql(),
-    "q48_status_cube": Q48_SQL,
-    "q49_stat_aggregates": Q49_SQL,
-    "q50_decode_image": Q50_SQL,
-    "q51_audio_stats": Q51_SQL,
-    "q52_decontaminate": Q52_SQL,
-    "q53_repetition_quality": Q53_SQL,
-    "q54_domain_caps": Q54_SQL,
-    "q55_bm25_topk": Q55_SQL,
-    "q56_bigram_familiarity": Q56_SQL,
-    "q57_pq_adc_knn": Q57_SQL,
-    "q58_snapshot_diff": Q58_SQL,
-    "q59_encode_corpus": Q59_SQL,
-    "q60_sample_to_budget": Q60_SQL,
-    "q61_trailing_window": Q61_SQL,
-    "q62_key_skew": Q62_SQL,
-    "q63_quality_classifier": Q63_SQL,
-    "q64_training_batches": _q64_oracle_sql(),
-    "q65_snapshot_drift": Q65_SQL,
-    "q66_contrastive_pairs": _contrastive_oracle_sql(),
-    "q67_funnel": Q67_SQL,
-    "q68_cohort_retention": Q68_SQL,
-    "q69_substring_dup_spans": Q69_SQL,
-    "q70_semantic_dedup": Q70_SQL,
-    "q71_incremental_agg": Q71_SQL,
-    "q72_fuzzy_join": Q72_SQL,
-    "q73_interval_overlap": Q73_SQL,
-    "q74_equi_depth_hist": Q74_SQL,
-    "q75_resample_ffill": Q75_SQL,
-    "q76_phrase_search": Q76_SQL,
-    "q77_shipping_priority": Q77_SQL,
-    "q78_local_supplier_volume": Q78_SQL,
-    "q79_returned_items": Q79_SQL,
-    "q80_triangles": Q80_SQL,
-    "q81_zscore_normalize": Q81_SQL,
-    "q82_scd2_history": Q82_SQL,
-    "q83_activity_streaks": Q83_SQL,
-    "q84_event_transitions": Q84_SQL,
-    "q85_weighted_sample": Q85_SQL,
-    "q86_big_orders": Q86_SQL,
-    "q87_sole_return_supplier": Q87_SQL,
-    "q88_winsorize": Q88_SQL,
-    "q89_rolling_anomalies": Q89_SQL,
-    "q90_char_entropy": _entropy_oracle_sql(),
-    "q91_bucketize": Q91_SQL,
-    "q92_pagerank": _pagerank_oracle_sql(),
-    "q93_cooccurrence": Q93_SQL,
-    "q94_mad_outliers": Q94_SQL,
-    "q95_benford": _benford_oracle_sql(),
-    "q96_rrf_hybrid": _rrf_oracle_sql(),
-    "q97_constraints": Q97_SQL,
-    "q98_user_mode": Q98_SQL,
-    "q99_skyline": Q99_SQL,
-    "q100_mutual_match": Q100_SQL,
-    "q101_incremental_dedup": _incdedup_oracle_sql(),
-    "q102_attribution": Q102_SQL,
-    "q103_lang_bigrams": Q103_SQL,
-    "q104_ewma": Q104_SQL,
-    "q105_score_calibration": _calibration_oracle_sql(),
-    "q106_dup_ngram_coverage": Q106_SQL,
-    "q107_vocab_novelty": Q107_SQL,
-    "q108_trend_ols": Q108_SQL,
-    "q109_cluster_reps": _cluster_reps_oracle_sql(),
-    "q110_twa": Q110_SQL,
-    "q111_session_paths": Q111_SQL,
-    "q112_rfm": Q112_SQL,
-    "q113_cusum": Q113_SQL,
-    "q114_weighted_median": Q114_SQL,
-    "q115_leak_safe_split": _leak_split_oracle_sql(),
-    "q116_late_shipments": Q116_SQL,
-    "q117_promo_revenue": Q117_SQL,
-    "q118_small_quantity_revenue": Q118_SQL,
-    "q119_disjunctive_revenue": Q119_SQL,
-    "q120_rich_inactive_customers": Q120_SQL,
-    "q121_denoising_pairs": Q121_SQL,
-    "q122_temperature_mix": Q122_SQL,
-    "q123_containment_pairs": Q123_SQL,
-    "q124_dedup_eval": _dedup_eval_oracle_sql(),
-    "q125_windowed_funnel": Q125_SQL,
-    "q126_out_of_order": Q126_SQL,
-    "q127_int8_quantize": Q127_SQL,
-    "q128_compaction_plan": Q128_SQL,
-    "q129_exists_late_orders": Q129_SQL,
-    "q130_rollup": Q130_SQL,
-    "q131_ab_test": Q131_SQL,
-    "q132_gini": Q132_SQL,
-    "q133_ri_audit": Q133_SQL,
-    "q134_mutual_info": Q134_SQL,
-    "q135_resample_lerp": Q135_SQL,
-    "q136_heavy_hitters": Q136_SQL,
-    "q137_event_dedup": Q137_SQL,
-    "q138_user_totals": Q138_SQL,
-    "q139_k_core": Q139_SQL,
-    "q140_stratified_exact": Q140_SQL,
-    "q141_record_linkage": Q141_SQL,
-    "q142_survival": Q142_SQL,
-    "q143_winnowing_pairs": Q143_SQL,
-    "q144_bpe_merges": Q144_SQL,
-    "q145_roc_auc": Q145_SQL,
-    "q146_calibration": Q146_SQL,
-    "q147_js_divergence": Q147_SQL,
-    "q148_psi": Q148_SQL,
-    "q149_mmr_rerank": Q149_SQL,
-    "q150_ndcg": Q150_SQL,
-    "q151_entity_resolution": Q151_SQL,
-    "q152_ngram_prefix_pairs": Q152_SQL,
-    "q153_average_precision": Q153_SQL,
-    "q154_confusion": Q154_SQL,
-    "q155_cohens_kappa": Q155_SQL,
-    "q156_gini_tokens": Q156_SQL,
-    "q157_chao1": Q157_SQL,
-    "q158_zipf_fit": Q158_SQL,
-    "q159_hll_distinct": Q159_SQL,
-    "q160_cms_heavy": Q160_SQL,
-    "q161_cross_entropy": Q161_SQL,
-    "q162_repetition": Q162_SQL,
-    "q163_bpe_encode": Q163_SQL,
-    "q164_brier": Q164_SQL,
-    "q165_ece": Q165_SQL,
-    "q166_spearman": Q166_SQL,
-    "q167_ks_test": Q167_SQL,
-    "q168_chi_square": Q168_SQL,
-    "q169_welch_t": Q169_SQL,
-    "q170_kruskal_wallis": Q170_SQL,
-    "q171_acf": Q171_SQL,
-    "q172_adamic_adar": Q172_SQL,
-    "q173_label_prop": Q173_SQL,
-    "q174_mrr_recall": Q174_SQL,
-    "q175_fleiss_kappa": Q175_SQL,
-    "q176_mcnemar": Q176_SQL,
-    "q177_epoch_batches": Q177_SQL,
-    "q178_curriculum": Q178_SQL,
-    "q179_cov_matrix": Q179_SQL,
-    "q180_multi_ols": Q180_SQL,
-    "q181_target_encode": Q181_SQL,
-    "q182_kfold_encode": Q182_SQL,
-    "q183_volume_shipping": Q183_SQL,
-    "q184_market_share": Q184_SQL,
-    "q185_theta_overlap": Q185_SQL,
-    "q186_seasonal": Q186_SQL,
-    "q187_bootstrap_ci": Q187_SQL,
-    "q188_train_logreg": Q188_SQL,
-    "q189_best_threshold": Q189_SQL,
-    "q190_bfs_hops": Q190_SQL,
-    "q191_golden_records": Q191_SQL,
-    "q192_assoc_rules": Q192_SQL,
-    "q193_item_cf": Q193_SQL,
-    "q194_clustering_coeff": Q194_SQL,
-    "q195_stump": Q195_SQL,
-    "q196_min_cost_supplier": Q196_SQL,
-    "q197_product_profit": Q197_SQL,
-    "q198_important_parts": Q198_SQL,
-    "q199_order_count_distribution": Q199_SQL,
-    "q200_top_supplier": Q200_SQL,
-    "q201_supplier_part_counts": Q201_SQL,
-    "q202_dominant_suppliers": Q202_SQL,
-    "q203_sorted_neighborhood": Q203_SQL,
-    "q204_personalized_pagerank": Q204_SQL,
-    "q205_seasonal_even": Q205_SQL,
-    "q206_hits": Q206_SQL,
-    "q207_assortativity": Q207_SQL,
-    "q208_record_days": Q208_SQL,
-    "q209_pmi": Q209_SQL,
-    "q210_mixing_weights": Q210_SQL,
-    "q211_pca_top_component": Q211_SQL,
-    "q212_isotonic": Q212_SQL,
-    "q213_woe_iv": Q213_SQL,
-    "q214_kmeans": Q214_SQL,
-    "q215_value_percentiles_fg": Q215_SQL,
-    "q216_quantile_sketch": Q216_SQL,
-    "q217_jpeg_decode": Q217_SQL,
-    "q218_grouped_hll": Q218_SQL,
-    "q219_theil_sen": Q219_SQL,
-    "q220_readability": Q220_SQL,
-    "q221_conformal": Q221_SQL,
-    "q222_bh_fdr": Q222_SQL,
-    "q223_kneser_ney": Q223_SQL,
-    "q224_jaro_winkler": Q224_SQL,
-    "q225_sequential_pairs": Q225_SQL,
-    "q226_bcubed": Q226_SQL,
-    "q227_stratified_ate": Q227_SQL,
-    "q228_wasserstein": Q228_SQL,
-    "q229_logo_ols": Q229_SQL,
-    "q230_forecast_backtest": Q230_SQL,
-    "q231_cross_correlation": Q231_SQL,
-    "q232_mp4_demux": Q232_SQL,
-    "q233_mp4_keyframes": Q233_SQL,
-    "q234_jpeg_rgb": Q234_SQL,
-    "q235_near_dup_recall": Q235_SQL,
-    "q236_lsh_knn_recall": Q236_SQL,
-    "q237_snb_recall": Q237_SQL,
-    "q238_html_parse": Q238_SQL,
-    "q239_token_f1": Q239_SQL,
-    "q240_jpeg_progressive": Q240_SQL,
-    "q241_jpeg_progressive_rgb": Q241_SQL,
-    "q242_planted_near_dup_recall": Q242_SQL,
-    "q243_planted_near_dup_recall_mp": Q243_SQL,
-    "q244_planted_snb_recall": Q244_SQL,
-    "q245_planted_minhash_recall": Q245_SQL,
-    "q246_mp4_sps_params": Q246_SQL,
-    "q247_audio_frame_stats": Q247_SQL,
-    "q248_multipass_snb": Q248_SQL,
-    "q249_flac_streaminfo": Q249_SQL,
-    "q250_id3_tags": Q250_SQL,
-    "q251_h264_idr_decode": Q251_SQL,
-    "q252_h264_pred_chain": Q252_SQL,
-    "q253_h264_i4x4": Q253_SQL,
-    "q254_mp4_vui": Q254_SQL,
-    "q255_h264_multislice": Q255_SQL,
-    "q256_keyframe_dup_groups": Q256_SQL,
-    "q257_pdf_text": Q257_SQL,
-    "q258_pdf_dup_pages": Q258_SQL,
-    "q259_docx_text": Q259_SQL,
-    "q260_warc_records": Q260_SQL,
-    "q261_wet_text": Q261_SQL,
-    "q262_wet_curation": _wet_curate_oracle_sql(),
-    "q263_html_main_text": Q263_SQL,
-    "q264_html_boilerplate_collapse": Q264_SQL,
-    "q265_charset_sniff": Q265_SQL,
-    "q266_pdf_cid_text": Q257_SQL,
-    "q267_docx_parts": Q267_SQL,
-    "q268_web_ingest_chain": Q268_SQL,
-    "q269_url_canonicalize": Q269_SQL,
-    "q270_repeated_spans": Q270_SQL,
-    "q271_robots_rules": Q271_SQL,
-    "q272_robots_allowed": Q272_SQL,
-    "q273_span_cut": Q273_SQL,
-    "q274_sentence_chunks": Q274_SQL,
-    "q275_link_graph_edges": Q275_SQL,
-    "q276_jsonld_metadata": Q276_SQL,
-    "q277_sitemap_entries": Q277_SQL,
-    "q278_image_dhash": Q278_SQL,
-    "q279_image_near_dup": Q279_SQL,
-    "q280_nfc_dedup": Q280_SQL,
-    "q281_canonical_urls": Q281_SQL,
-    "q282_charset_declared": Q282_SQL,
-    "q283_links_resolved": Q283_SQL,
-    "q284_canonical_resolved": Q284_SQL,
-    "q285_sitemap_gz_chase": Q285_SQL,
-    "q286_robots_wildcards": Q286_SQL,
-    "q287_span_dedup_fixed_point": Q287_SQL,
-    "q288_revisit_resolve": Q288_SQL,
-    "q289_redirect_chains": Q289_SQL,
-    "q290_digest_check": Q290_SQL,
-    "q291_domain_rollup": Q291_SQL,
-    "q292_page_meta": Q292_SQL,
-    "q293_anchor_rollup": Q293_SQL,
-    "q294_url_mixed_encoding_collapse": Q294_SQL,
-    "q295_cdx_lookup_fetch": Q295_SQL,
-    "q296_crawl_budget": Q296_SQL,
-    "q297_sitemap_extensions": Q297_SQL,
-    "q298_pdf_font_encodings": Q298_SQL,
-    "q299_langid_audit": Q299_SQL,
-    "q300_cdx_build_roundtrip": Q300_SQL,
-    "q301_cdx_latest_capture": Q301_SQL,
-    "q302_feed_entries": Q302_SQL,
-    "q303_pdf_encrypted": Q303_SQL,
-    "q304_discovery_funnel": Q304_SQL,
-    "q305_recrawl_schedule": Q305_SQL,
-    "q306_cdx_change_rate": Q306_SQL,
-    "q307_adaptive_recrawl": Q307_SQL,
-    "q308_wat_catalog": Q308_SQL,
-    "q309_nb_quality_classifier": Q309_SQL,
-    "q310_politeness_gate": Q310_SQL,
-    "q311_nb_train_apply": Q311_SQL,
-    "q312_crawl_cycle": Q312_SQL,
+    name: globals()[f"Q{_QUERY_NAME.fullmatch(name)[1]}_SQL"]
+    for name in SPARK_QUERIES
 }

@@ -7,13 +7,11 @@ Workbooks are small config/dimension artifacts — if Excel ever became a
 big-data source the right move is converting to parquet at the edge, not
 parallelizing xlsx parsing.
 
-Two engines, tried in order:
-
-1. ``pandas.read_excel`` (openpyxl) when available — full xlsx surface.
-2. A self-contained stdlib parser (``zipfile`` + ``xml.etree``) for the
-   ECMA-376 subset that dimension workbooks actually use: one value per
-   cell, shared/inline strings, numbers, booleans.  This keeps S3 fully
-   exercisable (and tested end-to-end) in environments without openpyxl.
+One engine: a self-contained stdlib parser (``zipfile`` + ``xml.etree``)
+for the ECMA-376 subset that dimension workbooks actually use — one
+value per cell, shared/inline strings, numbers, booleans — whose rows
+go through ``pd.DataFrame`` so column types match the reference's
+``pd.read_excel`` load (int64, float64 with NULL, string, bool).
 """
 
 from __future__ import annotations
@@ -134,17 +132,9 @@ def from_pandas(spark: SparkSession, pdf) -> DataFrame:
 
 
 def read_excel(spark: SparkSession, path: str, sheet_name: int | str = 0) -> DataFrame:
-    """Read an Excel sheet into a DataFrame.
-
-    Uses pandas/openpyxl when installed; otherwise the stdlib subset
-    parser (sufficient for the reference's Skills.xlsx-style workbooks:
-    a header row + typed scalar cells).
-    """
+    """Read an Excel sheet into a DataFrame: a header row + typed scalar
+    cells (the reference's Skills.xlsx shape)."""
     import pandas as pd
 
-    try:
-        pdf = pd.read_excel(path, sheet_name=sheet_name, engine="openpyxl")
-    except ImportError:
-        header, rows = read_xlsx_stdlib(path, sheet_name)
-        pdf = pd.DataFrame(rows, columns=header)
-    return from_pandas(spark, pdf)
+    header, rows = read_xlsx_stdlib(path, sheet_name)
+    return from_pandas(spark, pd.DataFrame(rows, columns=header))

@@ -138,11 +138,6 @@ def extract_main_blocks(html: str) -> list[tuple[str, str]]:
     return out
 
 
-def extract_main_text(html: str) -> str:
-    """Boilerplate-stripped page text: surviving blocks joined by \\n."""
-    return "\n".join(t for _tag, t in extract_main_blocks(html))
-
-
 def main_text_distributed(
     df: DataFrame,
     html_col: str = "html",

@@ -19,7 +19,7 @@ def test_bom_ladder():
         (codecs.BOM_UTF32_BE + s.encode("utf-32-be"), "utf-32-be", True),
     ]
     for raw, enc, bom in cases:
-        assert charset.detect_charset(raw) == (enc, bom), enc
+        assert charset.detect_charset_ex(raw)[:2] == (enc, bom), enc
         text, got_enc, got_bom = charset.transcode(raw)
         assert (text, got_enc, got_bom) == (s, enc, bom), enc
 
@@ -27,37 +27,37 @@ def test_bom_ladder():
 def test_utf32le_bom_not_mistaken_for_utf16le():
     # FF FE 00 00: the UTF-32-LE BOM starts with the UTF-16-LE BOM
     raw = codecs.BOM_UTF32_LE + "A".encode("utf-32-le")
-    assert charset.detect_charset(raw) == ("utf-32-le", True)
+    assert charset.detect_charset_ex(raw)[:2] == ("utf-32-le", True)
 
 
 def test_strict_utf8_and_ascii():
-    assert charset.detect_charset(b"plain ascii") == ("utf-8", False)
+    assert charset.detect_charset_ex(b"plain ascii")[:2] == ("utf-8", False)
     raw = "héllo 世界".encode("utf-8")
-    assert charset.detect_charset(raw) == ("utf-8", False)
+    assert charset.detect_charset_ex(raw)[:2] == ("utf-8", False)
     assert charset.transcode(raw)[0] == "héllo 世界"
 
 
 def test_bomless_utf16_heuristic():
     le = "doc wide text".encode("utf-16-le")
     be = "doc wide text".encode("utf-16-be")
-    assert charset.detect_charset(le) == ("utf-16-le", False)
-    assert charset.detect_charset(be) == ("utf-16-be", False)
+    assert charset.detect_charset_ex(le)[:2] == ("utf-16-le", False)
+    assert charset.detect_charset_ex(be)[:2] == ("utf-16-be", False)
     assert charset.transcode(le)[0] == "doc wide text"
     assert charset.transcode(be)[0] == "doc wide text"
 
 
 def test_latin1_fallback():
     raw = "café à la carte".encode("latin-1")
-    assert charset.detect_charset(raw) == ("latin-1", False)
+    assert charset.detect_charset_ex(raw)[:2] == ("latin-1", False)
     assert charset.transcode(raw)[0] == "café à la carte"
     # arbitrary binary junk still lands somewhere deterministic
-    assert charset.detect_charset(b"\xff\x00\x01\x02\xfe\x00\x03\x04")[0] in (
+    assert charset.detect_charset_ex(b"\xff\x00\x01\x02\xfe\x00\x03\x04")[0] in (
         "latin-1", "utf-16-le", "utf-16-be",
     )
 
 
 def test_empty_payload():
-    assert charset.detect_charset(b"") == ("utf-8", False)
+    assert charset.detect_charset_ex(b"")[:2] == ("utf-8", False)
     assert charset.transcode(b"") == ("", "utf-8", False)
 
 
@@ -81,14 +81,14 @@ def test_spark_operator(spark):
 
 def test_windows_1252_rung():
     raw = "doc “smart” price €9 — naïve™".encode("cp1252")
-    assert charset.detect_charset(raw) == ("windows-1252", False)
+    assert charset.detect_charset_ex(raw)[:2] == ("windows-1252", False)
     text, enc, bom = charset.transcode(raw)
     assert text == "doc “smart” price €9 — naïve™"
     # the five undefined cp1252 slots keep Latin-1/C1 identity
     text2, enc2, _ = charset.transcode(b"x \x81 y \xe9")
     assert enc2 == "windows-1252" and text2 == "x \x81 y é"
     # high-byte latin-1 WITHOUT the 0x80-0x9F block stays latin-1
-    assert charset.detect_charset("café à".encode("latin-1")) == (
+    assert charset.detect_charset_ex("café à".encode("latin-1"))[:2] == (
         "latin-1", False,
     )
 

@@ -1,10 +1,14 @@
-"""Convergence of graph.connected_components and graph.bfs_hops.
+"""Convergence of graph.connected_components, graph.bfs_hops and
+graph.k_core.
 
-Each round's stop test is an ``Observation`` on the round's checkpoint:
-the count arrives with the checkpoint job.  These tests pin the result
-AND the number of rounds against a pure-Python replay of the same
-rounds, so a stop test that reads the wrong frame (or a stale count)
-shows up as an extra or a missing round even where the result agrees.
+Each connected_components / bfs_hops round's stop test is an
+``Observation`` on the round's checkpoint: the count arrives with the
+checkpoint job.  These tests pin the result AND the number of rounds
+against a pure-Python replay of the same rounds, so a stop test that
+reads the wrong frame (or a stale count) shows up as an extra or a
+missing round even where the result agrees.  k_core's round budget is
+pinned by its peel count: exactly enough rounds returns the core, one
+fewer raises.
 """
 
 from __future__ import annotations
@@ -125,3 +129,23 @@ def test_bfs_hops_levels(spark, checkpoints, seeds, max_hops, levels, expanded):
     # edges + seeds, then the next frontier every level and the grown
     # visited set every level that found new nodes
     assert checkpoints[0] == 2 + levels + expanded
+
+
+# a 7-node path has no 2-core; each peel drops both endpoints, so it
+# empties after exactly 3 peels (7 → 5 → 3 → 1 isolated node)
+PATH_PEELS = 3
+
+
+def test_k_core_budget_exactly_enough(spark, checkpoints):
+    df = spark.createDataFrame(CHAIN[:6], "id_a long, id_b long")
+    with scope():
+        assert graph.k_core(df, k=2, max_rounds=PATH_PEELS).count() == 0
+    # edge list + symmetric edges, then one checkpoint per peel
+    assert checkpoints[0] == 2 + PATH_PEELS
+
+
+def test_k_core_budget_one_short_raises(spark, checkpoints):
+    df = spark.createDataFrame(CHAIN[:6], "id_a long, id_b long")
+    with scope(), pytest.raises(RuntimeError, match="did not converge"):
+        graph.k_core(df, k=2, max_rounds=PATH_PEELS - 1)
+    assert checkpoints[0] == 2 + PATH_PEELS - 1

@@ -41,7 +41,7 @@ def test_main_blocks_strip_chrome_and_nav():
         ("blockquote", "Quoted wisdom across lines"),
         ("pre", "code block"),
     ]
-    text = html_text.extract_main_text(PAGE)
+    text = "\n".join(t for _, t in html_text.extract_main_blocks(PAGE))
     assert "Site Chrome" not in text
     assert "Home" not in text and "Related one" not in text
     assert "sponsored" not in text
@@ -79,12 +79,14 @@ def test_nested_skip_containers():
         "<p>real</p>"
         "<footer><nav><p>double</p></nav></footer>"
     )
-    assert html_text.extract_main_text(html) == "real"
+    blocks = html_text.extract_main_blocks(html)
+    assert "\n".join(t for _, t in blocks) == "real"
 
 
 def test_entities_and_whitespace():
     html = "<p>a &lt;tag&gt; &amp;\n\t  b</p>"
-    assert html_text.extract_main_text(html) == "a <tag> & b"
+    blocks = html_text.extract_main_blocks(html)
+    assert "\n".join(t for _, t in blocks) == "a <tag> & b"
 
 
 def test_spark_operator(spark):

@@ -8,10 +8,12 @@ deviation so bit-inexactness is caught before the driver sees it).
 from __future__ import annotations
 
 import math
+import re
 
 import duckdb
 import pytest
 
+from occupation_wage_etl_spark import queries
 from occupation_wage_etl_spark.queries import ORACLE_SQL, SPARK_QUERIES
 from tools.harness import collect, register_views, run_query
 
@@ -71,7 +73,19 @@ def test_query_matches_oracle(name, spark, sf_tiny, oracle):
 
 def test_every_registry_query_is_oracle_paired():
     """The registry's contract: every queries() entry carries an
-    oracle_sql() entry (the driver's strongest check).  If a future
-    query genuinely can't be SQL-expressed, add it to an explicit
-    allowlist here with a reason, don't silently drop the pairing."""
+    oracle_sql() entry (the driver's strongest check).  Both dicts are
+    derived from queries.py's names — builder ``qNN_name``, oracle
+    ``QNN_SQL`` — so a builder without its oracle already fails the
+    import.  This pins the rest: 312 builders in query-number order,
+    the same keys in the same order on both sides, no orphan oracle
+    constant, and every builder registered under its own name."""
     assert set(SPARK_QUERIES) == set(ORACLE_SQL)
+    assert list(ORACLE_SQL) == list(SPARK_QUERIES)
+    numbers = [re.fullmatch(r"q(\d+)_\w+", n)[1] for n in SPARK_QUERIES]
+    assert len(numbers) == 312
+    assert [int(n) for n in numbers] == sorted({int(n) for n in numbers})
+    oracles = {n for n in vars(queries) if re.fullmatch(r"Q\d+_SQL", n)}
+    assert oracles == {f"Q{n}_SQL" for n in numbers}
+    for name, builder in SPARK_QUERIES.items():
+        assert builder.__name__ == name
+        assert isinstance(ORACLE_SQL[name], str) and ORACLE_SQL[name].strip()

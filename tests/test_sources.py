@@ -91,10 +91,11 @@ def test_excel_from_pandas_null_normalization(spark):
     assert nulls == 1
 
 
-def _write_minimal_xlsx(path) -> None:
+def _write_minimal_xlsx(path, sheet: str | None = None) -> None:
     """Hand-built ECMA-376 workbook (zip of XML parts): header row + three
     data rows mixing shared strings, rich-text runs, inline strings,
-    ints, floats, booleans, and a skipped (sparse) cell."""
+    ints, floats, booleans, and a skipped (sparse) cell.  ``sheet``
+    replaces the worksheet XML (same shared strings)."""
     import zipfile
 
     content_types = (
@@ -136,7 +137,7 @@ def _write_minimal_xlsx(path) -> None:
         "<si><r><t>11-</t></r><r><t>1011</t></r></si>"  # rich-text runs
         "</sst>"
     )
-    sheet = (
+    sheet = sheet or (
         '<?xml version="1.0"?>'
         '<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>'
         '<row r="1">'
@@ -183,16 +184,38 @@ def test_read_xlsx_stdlib_types_and_sparsity(tmp_path):
 
 def test_read_excel_end_to_end(spark, tmp_path):
     """S3 end-to-end: xlsx file → Spark DataFrame (reference
-    ``load_data.py:282-286``), via openpyxl when installed, else the
-    stdlib engine — this test runs either way."""
+    ``load_data.py:282-286``).  Pins column types and values, the
+    contract the reference's ``pd.read_excel`` → ``createDataFrame``
+    load relies on: numbers in an all-integer column are bigint, a float
+    column keeps a blank cell as NULL (not NaN), booleans and strings
+    stay typed."""
     path = str(tmp_path / "skills.xlsx")
     _write_minimal_xlsx(path)
     df = excel.read_excel(spark, path)
-    rows = df.collect()
-    assert len(rows) == 3
-    got = {r[0]: (r[1], r[2]) for r in rows}
-    assert got["13-2011"] == (None, 3)
-    assert got["11-1011"][0] in ("Critical Thinking", "")
+    assert df.dtypes == [
+        ("soc_code", "string"), ("element", "string"),
+        ("score", "double"), ("soc_code", "boolean"),
+    ]
+    assert [tuple(r) for r in df.collect()] == [
+        ("11-1011", "Critical Thinking", 4.12, True),
+        ("13-2011", None, 3.0, None),
+        ("11-1011", "", 2.5, False),
+    ]
+
+    path = str(tmp_path / "numbers.xlsx")
+    _write_minimal_xlsx(path, sheet=(
+        '<?xml version="1.0"?>'
+        '<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>'
+        '<row r="1"><c r="A1" t="inlineStr"><is><t>n</t></is></c>'
+        '<c r="B1" t="inlineStr"><is><t>x</t></is></c></row>'
+        '<row r="2"><c r="A2"><v>1</v></c><c r="B2"><v>1.5</v></c></row>'
+        '<row r="3"><c r="A3"><v>2</v></c><c r="B3"/></row>'  # blank cell
+        '<row r="4"><c r="A4"><v>3</v></c><c r="B4"><v>2.25</v></c></row>'
+        "</sheetData></worksheet>"
+    ))
+    df = excel.read_excel(spark, path)
+    assert df.dtypes == [("n", "bigint"), ("x", "double")]
+    assert [tuple(r) for r in df.collect()] == [(1, 1.5), (2, None), (3, 2.25)]
 
 
 def test_lake_snapshot_idempotent_and_pruned(spark, tmp_path):
