@@ -407,9 +407,8 @@ def train_stump(
     minimizes G (ties: feature name, then threshold).
 
     Scale shape: per feature, one hash-aggregate to distinct values
-    (histogram-sized), then :func:`evaluation._dist_cum_before` for the
-    left-side cumulative (pos, count) — the distributed two-level
-    prefix sum, NO globally-ordered window — a broadcast 1-row totals
+    (histogram-sized), then :func:`~._scan.prefix_scan` for the
+    left-side cumulative (pos, count), a broadcast 1-row totals
     attach, and a TakeOrderedAndProject argmin over the unioned
     candidate set.  Numerator products are carried in DOUBLE (exact up
     to 2^53 rows; int64 would overflow at ~2M rows since G scales as
@@ -419,9 +418,7 @@ def train_stump(
     Returns one row: (feature, threshold, n_left, pos_left, n_right,
     pos_right, gini) with ``gini`` = G/N, the weighted mean impurity.
     """
-    from occupation_wage_etl_spark.operators.evaluation import (
-        _dist_cum_before,
-    )
+    from occupation_wage_etl_spark.operators._scan import prefix_scan
 
     y = F.col(label_col).cast("long")
     cands = None
@@ -431,13 +428,15 @@ def train_stump(
             .groupBy(F.col(fc).cast("double").alias("v"))
             .agg(F.sum(y).alias("p"), F.count(F.lit(1)).alias("c"))
         )
-        ranked, total = _dist_cum_before(
-            g, ["v"], F.col("c"), {"__cp": F.col("p")}
+        ranked, total = prefix_scan(
+            g,
+            ["v"],
+            {"__nl": ("sum", F.col("c")), "__pl": ("sum", F.col("p"))},
+            inclusive=True,
         )
-        nl = F.col("__cumb") + F.col("c")
-        pl = F.col("__cp") + F.col("p")
-        nr = F.col("__total") - nl
-        pr = F.col("__cp_total") - pl
+        nl, pl = F.col("__nl"), F.col("__pl")
+        nr = F.col("__nl_total") - nl
+        pr = F.col("__pl_total") - pl
         nnl = nl - pl
         nnr = nr - pr
         nld, pld, nnld = (x.cast("double") for x in (nl, pl, nnl))
@@ -455,7 +454,7 @@ def train_stump(
                 pl.cast("long").alias("pos_left"),
                 nr.cast("long").alias("n_right"),
                 pr.cast("long").alias("pos_right"),
-                (score / F.col("__total").cast("double")).alias("gini"),
+                (score / F.col("__nl_total").cast("double")).alias("gini"),
             )
         )
         cands = cand if cands is None else cands.unionByName(cand)

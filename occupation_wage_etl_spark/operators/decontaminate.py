@@ -181,24 +181,22 @@ def contrastive_pairs(
     deterministic).
 
     Scale notes: N and the md5 roll are engine-side (one 1-row count
-    broadcast, no driver collect); the corpus index is the two-level
-    distributed prefix count (:func:`~occupation_wage_etl_spark.
-    operators.evaluation._dist_cum_before` over ``[id_col]`` with
-    weight 1 — identical 0-based integers to a global ``row_number``,
-    with range-partitioned parallel sorts instead of one data-sized
-    single-partition window).  The nidx==idx lookup join is left to
+    broadcast, no driver collect); the corpus index is the prefix count
+    of :func:`~occupation_wage_etl_spark.operators._scan.prefix_scan`
+    over ``[id_col]`` with weight 1 (identical 0-based integers to a
+    global ``row_number``).  The nidx==idx lookup join is left to
     AQE (the index is corpus-sized — never force-broadcast it); the
     anti-join against known pairs carries only id pairs.
     """
-    from occupation_wage_etl_spark.operators.evaluation import (
-        _dist_cum_before,
-    )
+    from occupation_wage_etl_spark.operators._scan import prefix_scan
 
     anchors = pairs.select(
         F.col("id_a").alias("anchor"), F.col("id_b").alias("positive")
     )
     n_tbl = df.agg(F.count(F.lit(1)).alias("n"))
-    indexed, _ = _dist_cum_before(df.select(F.col(id_col)), [id_col], F.lit(1))
+    indexed, _ = prefix_scan(
+        df.select(F.col(id_col)), [id_col], {"__cumb": ("sum", F.lit(1))}
+    )
     idx = indexed.select(
         F.col(id_col), F.col("__cumb").cast("long").alias("idx")
     )

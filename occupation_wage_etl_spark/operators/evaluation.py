@@ -14,15 +14,7 @@ operators are exact and engine-portable:
   scores as DECIMAL (order-independent exact), mean label is an
   integer ratio.
 
-Both need a GLOBAL prefix sum over a totally-ordered column — the one
-primitive a naive window (``ORDER BY`` with no ``PARTITION BY``) turns
-into a single-partition sort of the whole input, the classic Spark
-scale cliff.  :func:`_dist_cum_before` computes the identical integers
-with the two-level distributed scan instead: range-partition on the
-order key, per-partition cumulative sums (parallel spillable sorts),
-and a partition-offset table of ≤ ``spark.sql.shuffle.partitions``
-rows — the ONLY globally-ordered window in either plan runs over that
-config-bounded table, never over data-sized input.
+Both rank through :func:`operators._scan.prefix_scan`.
 
 Reference analogue: none (the reference has no model evaluation);
 training-data extension surface.
@@ -30,213 +22,11 @@ training-data extension surface.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from occupation_wage_etl_spark.operators._cache import cached
-from occupation_wage_etl_spark.operators._conf import shuffle_partitions
-
-
-def _resolve_small_scan(df: DataFrame) -> bool:
-    """AUTO flip for the prefix scans: True when ``df`` is small enough
-    that ONE task can sort it (row count below
-    ``spark.graft.distCumWindowMaxRows``, default 8M — the same cliff
-    constant as stats' few-groups flip), in which case the plain global
-    window beats the two-level scan's extra materialization + sampling
-    + offset stitch (measured at sf0.1: the window form is ~2× faster
-    on histogram-sized input; the two-level form wins exactly when the
-    input stops fitting one task's sort).  Mirrors
-    ``stats._resolve_few_groups``: eager by design — resolving runs one
-    COUNT job at plan-construction time, on every construction.  Nothing
-    is remembered across builds: a lake path re-read after its files
-    grew analyzes to the same plan hash, so a remembered answer would
-    pin the one-task window onto data past the cliff.  Set the conf to
-    0 to force the two-level scan (plan audits of the 100 TB shape,
-    tests).
-    """
-    sp = df.sparkSession
-    try:
-        max_rows = int(sp.conf.get("spark.graft.distCumWindowMaxRows"))
-    except Exception:
-        max_rows = 8_000_000
-    if max_rows <= 0:
-        return False
-    n = df.agg(F.count(F.lit(1)).alias("__n")).first()["__n"]
-    return bool(n < max_rows)
-
-
-def _dist_cum_before(
-    df: DataFrame,
-    order_cols: list[str],
-    weight: F.Column,
-    extra_weights: dict[str, F.Column] | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Distributed exclusive prefix sum: append ``__cumb`` = sum of
-    ``weight`` over all rows STRICTLY BEFORE each row in ``order_cols``
-    order (which must be a total order — no duplicate keys).
-
-    Two-level scan, the textbook parallel prefix shape:
-
-    1. ``repartitionByRange`` on the order key → partition *i* holds a
-       contiguous key range below partition *i+1*'s.  The shuffled
-       frame is persisted (:func:`cached`) because range boundaries
-       come from SAMPLING — two independent evaluations could pick
-       different boundaries, so both consumers below must read the same
-       materialization for the offsets to line up.
-    2. within each partition, a window ordered by the key — parallel
-       per-partition external sorts, never a global one.
-    3. per-partition totals (≤ shuffle-partitions rows) get their own
-       exclusive prefix sum via an ordered window over ``__pid`` — the
-       only unpartitioned window, over a CONFIG-bounded row count —
-       and broadcast back as offsets.
-
-    Returns (rows + ``__cumb``, the 1-row grand-total frame) — the
-    total rides along so callers don't rescan the input for ``n``.
-
-    ``extra_weights`` maps output column name -> weight expression for
-    ADDITIONAL prefix sums computed in the same pass (same shuffle,
-    same windows, offsets table grows by one column each) — e.g. AUC
-    variants needing separate positive/negative cumulatives.  Their
-    grand totals ride on the total frame as ``<name>_total``.
-
-    Small-input flip (:func:`_resolve_small_scan`): when the input fits
-    one task's sort, steps 1-3 collapse to ONE global window over the
-    cached input — same exact integer sums in the same total order
-    (bit-identical), minus the range-sampling job, the per-partition
-    totals aggregate, and the offsets stitch.  At 100 TB the resolver
-    picks the two-level scan; at histogram scale it picks the window.
-    """
-    sp = df.sparkSession
-    n_parts = shuffle_partitions(sp)
-    ws = {"__cumb": weight, **(extra_weights or {})}
-    if _resolve_small_scan(df):
-        base = df
-        for name, expr in ws.items():
-            base = base.withColumn(f"__w{name}", expr)
-        # cached: the ranked rows and the grand-total frame both read it
-        # (the two-level path persists its shuffled frame for the same
-        # reason).
-        base = cached(base)
-        w_all = Window.orderBy(*[F.col(c) for c in order_cols]).rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        out = base
-        for name in ws:
-            out = out.withColumn(
-                name,
-                F.coalesce(F.sum(f"__w{name}").over(w_all), F.lit(0)),
-            )
-        out = out.drop(*[f"__w{name}" for name in ws])
-        total = base.agg(
-            F.sum("__w__cumb").alias("__total"),
-            *[
-                F.sum(f"__w{name}").alias(f"{name}_total")
-                for name in ws
-                if name != "__cumb"
-            ],
-        )
-        return out, total
-    parted = df.repartitionByRange(n_parts, *[F.col(c) for c in order_cols])
-    parted = parted.withColumn("__pid", F.spark_partition_id())
-    for name, expr in ws.items():
-        parted = parted.withColumn(f"__w{name}", expr)
-    parted = cached(parted)
-    totals = parted.groupBy("__pid").agg(
-        *[F.sum(f"__w{n}").alias(f"__pt{n}") for n in ws]
-    )
-    w_p = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.select(
-        "__pid",
-        *[
-            F.coalesce(F.sum(f"__pt{n}").over(w_p), F.lit(0)).alias(f"__off{n}")
-            for n in ws
-        ],
-    )
-    total = totals.agg(
-        F.sum("__pt__cumb").alias("__total"),
-        *[
-            F.sum(f"__pt{n}").alias(f"{n}_total")
-            for n in ws
-            if n != "__cumb"
-        ],
-    )
-    w_in = (
-        Window.partitionBy("__pid")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    out = parted
-    for n in ws:
-        out = out.withColumn(
-            f"__cin{n}", F.coalesce(F.sum(f"__w{n}").over(w_in), F.lit(0))
-        )
-    out = out.join(F.broadcast(offsets), "__pid")
-    for n in ws:
-        out = out.withColumn(n, F.col(f"__cin{n}") + F.col(f"__off{n}"))
-        out = out.drop(f"__w{n}", f"__cin{n}", f"__off{n}")
-    return out.drop("__pid"), total
-
-
-def _dist_max_before(
-    df: DataFrame,
-    order_cols: list[str],
-    value: F.Column,
-    out_col: str = "__maxb",
-) -> DataFrame:
-    """Distributed exclusive prefix MAX: append ``out_col`` = max of
-    ``value`` over all rows STRICTLY BEFORE each row in ``order_cols``
-    order (a total order), NULL when no row precedes — the running-max
-    sibling of :func:`_dist_cum_before`, same two-level scan (max is
-    associative, so partition offsets compose exactly like sums).
-
-    Used by skyline staircases and any "best so far" readout that a
-    naive ``max().over(Window.orderBy(...))`` would turn into a
-    single-partition sort of the whole input.
-
-    Small-input flip (:func:`_resolve_small_scan`): below the one-task
-    sort cliff the "naive" global window IS the right plan — one
-    exchange, no sampling job, no offset stitch — and max over an empty
-    preceding frame is NULL exactly like the two-level form's
-    greatest-of-NULLs.
-    """
-    if _resolve_small_scan(df):
-        w_all = Window.orderBy(*[F.col(c) for c in order_cols]).rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        # __wmaxb: distinctive name so plan audits can recognise the
-        # resolved-small shape (see tools/plan_audit.py)
-        return (
-            df.withColumn("__wmaxb", value)
-            .withColumn(out_col, F.max("__wmaxb").over(w_all))
-            .drop("__wmaxb")
-        )
-    sp = df.sparkSession
-    n_parts = shuffle_partitions(sp)
-    parted = (
-        df.repartitionByRange(n_parts, *[F.col(c) for c in order_cols])
-        .withColumn("__pid", F.spark_partition_id())
-        .withColumn("__v", value)
-    )
-    parted = cached(parted)
-    totals = parted.groupBy("__pid").agg(F.max("__v").alias("__pt"))
-    w_p = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.select(
-        "__pid", F.max("__pt").over(w_p).alias("__off")
-    )
-    w_in = (
-        Window.partitionBy("__pid")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return (
-        parted.withColumn("__cin", F.max("__v").over(w_in))
-        .join(F.broadcast(offsets), "__pid")
-        # greatest() skips NULLs: NULL only when neither a partition
-        # offset nor an in-partition predecessor exists — exactly the
-        # "no preceding row" semantics of the single-window form
-        .withColumn(out_col, F.greatest("__cin", "__off"))
-        .drop("__pid", "__v", "__cin", "__off")
-    )
+from occupation_wage_etl_spark.operators._scan import prefix_scan
 
 
 def roc_auc(
@@ -256,11 +46,9 @@ def roc_auc(
     — every term a BIGINT (halves cancel by carrying 2R), so the single
     closing division ``(2R - P(P+1)) / (2PN)`` is the only float op.
 
-    Scale shape: one hash aggregate to distinct scores, then the
-    distributed two-level prefix sum (:func:`_dist_cum_before`) for
-    each score's cumulative-before count — no globally-ordered window
-    over data-sized input, so raw double scores (distinct ≈ rows) cost
-    the same plan as coarse ones.  Returns one row (n_pos, n_neg, auc).
+    Scale shape: one hash aggregate to distinct scores, then
+    :func:`~._scan.prefix_scan` for each score's cumulative-before
+    count.  Returns one row (n_pos, n_neg, auc).
     """
     s, y = F.col(score_col), F.col(label_col).cast("long")
     g = (
@@ -271,7 +59,9 @@ def roc_auc(
             F.sum(F.lit(1) - y).alias("n"),
         )
     )
-    ranked, _ = _dist_cum_before(g, ["__s"], F.col("p") + F.col("n"))
+    ranked, _ = prefix_scan(
+        g, ["__s"], {"__cumb": ("sum", F.col("p") + F.col("n"))}
+    )
     agg = ranked.agg(
         F.sum("p").alias("P"),
         F.sum("n").alias("N"),
@@ -305,10 +95,8 @@ def calibration_bins(
     Binning is integer rank math — ``bin = (rank-1)*bins div total``
     over (score, id)-ordered ranks — so bins have deterministic
     membership and near-equal sizes with no IEEE boundary surprises.
-    The rank comes from the distributed two-level prefix count
-    (:func:`_dist_cum_before`; ``rank-1`` = rows strictly before under
-    the (score, id) total order), NOT from a global ``row_number``
-    window — every sort in the plan is per-range-partition.
+    The rank comes from :func:`~._scan.prefix_scan` (``rank-1`` = rows
+    strictly before under the (score, id) total order).
     ``mean_score`` sums the 6dp-rounded scores as DECIMAL(18,6)
     (6dp doubles are exactly representable → order-independent exact
     sum); ``pos_rate`` is an integer ratio.
@@ -319,11 +107,13 @@ def calibration_bins(
     base = df.filter(s.isNotNull() & y.isNotNull()).select(
         s.alias("__s"), y.alias("__y"), F.col(id_col).alias("__id")
     )
-    ranked, total = _dist_cum_before(base, ["__s", "__id"], F.lit(1))
+    ranked, total = prefix_scan(
+        base, ["__s", "__id"], {"__cumb": ("sum", F.lit(1))}
+    )
     binned = ranked.crossJoin(F.broadcast(total)).select(
         "__s",
         "__y",
-        F.expr(f"(__cumb * {bins}) div __total").alias("bin"),
+        F.expr(f"(__cumb * {bins}) div __cumb_total").alias("bin"),
     )
     return (
         binned.groupBy("bin")
@@ -382,13 +172,15 @@ def average_precision(
             F.sum(F.lit(1) - y).alias("n"),
         )
     )
-    ranked, total = _dist_cum_before(
-        g, ["__s"], F.col("p"), extra_weights={"__cumn": F.col("n")}
+    ranked, total = prefix_scan(
+        g,
+        ["__s"],
+        {"__cumb": ("sum", F.col("p")), "__cumn": ("sum", F.col("n"))},
     )
     # score >= threshold g  ⇔  NOT strictly-below g:
     #   TP_g = P - cumb_p(g),  FP_g = N - cumb_n(g)
     j = ranked.crossJoin(F.broadcast(total))
-    P = F.col("__total")          # total positives (weight was p)
+    P = F.col("__cumb_total")     # total positives (weight was p)
     N = F.col("__cumn_total")
     tp = (P - F.col("__cumb")).cast("decimal(38,0)")
     fp = (N - F.col("__cumn")).cast("decimal(38,0)")
@@ -608,7 +400,7 @@ def spearman_corr(
     (Σ2rx, Σ(2rx)², Σ2rx·2ry, …) is an exact DECIMAL(38,0); the halves
     cancel in the Pearson-of-ranks formula, leaving two sqrt and one
     division as the only float ops (fixed tree, string-route converts).
-    Ranks come from :func:`_dist_cum_before` over each variable's
+    Ranks come from :func:`~._scan.prefix_scan` over each variable's
     distinct-value histogram (no global window) and re-attach by value
     equi-join — the dimension-table shape.
 
@@ -623,7 +415,7 @@ def spearman_corr(
 
     def ranks(col: str, out: str) -> DataFrame:
         h = base.groupBy(col).agg(F.count(F.lit(1)).alias("cnt"))
-        ranked, _ = _dist_cum_before(h, [col], F.col("cnt"))
+        ranked, _ = prefix_scan(h, [col], {"__cumb": ("sum", F.col("cnt"))})
         return ranked.select(
             F.col(col).alias(f"{out}_key"),
             (F.lit(2) * F.col("__cumb") + F.col("cnt") + F.lit(1)).alias(out),
@@ -910,18 +702,17 @@ def best_threshold(
             F.sum(F.lit(1) - y).alias("n"),
         )
     )
-    ranked, total = _dist_cum_before(
+    ranked, total = prefix_scan(
         g,
         ["__s"],
-        F.col("p"),
-        extra_weights={"__cumb_n": F.col("n")},
+        {"__cumb": ("sum", F.col("p")), "__cumb_n": ("sum", F.col("n"))},
     )
-    # totals ride on the 1-row frame: P = __total, N = __cumb_n_total
+    # totals ride on the 1-row frame: P = __cumb_total, N = __cumb_n_total
     cand = ranked.crossJoin(F.broadcast(total)).select(
         "__s",
         # predict 1 iff score >= __s: below-threshold counts are the
         # exclusive prefix sums at __s
-        (F.col("__total") - F.col("__cumb")).alias("tp"),
+        (F.col("__cumb_total") - F.col("__cumb")).alias("tp"),
         (F.col("__cumb_n_total") - F.col("__cumb_n")).alias("fp"),
         F.col("__cumb_n").alias("tn"),
         F.col("__cumb").alias("fn"),
@@ -996,9 +787,11 @@ def isotonic_calibration(
     base = df.filter(s.isNotNull() & y.isNotNull()).select(
         s.alias("__s"), y.alias("__y"), F.col(id_col).alias("__id")
     )
-    ranked, total = _dist_cum_before(base, ["__s", "__id"], F.lit(1))
+    ranked, total = prefix_scan(
+        base, ["__s", "__id"], {"__cumb": ("sum", F.lit(1))}
+    )
     binned = ranked.crossJoin(F.broadcast(total)).select(
-        "__y", F.expr(f"(__cumb * {int(bins)}) div __total").alias("bin")
+        "__y", F.expr(f"(__cumb * {int(bins)}) div __cumb_total").alias("bin")
     )
     rows = sorted(
         (
@@ -1065,18 +858,15 @@ def split_conformal_interval(
     ``alpha_num/alpha_den`` so k is pure integer arithmetic, and qhat
     is an ORDER STATISTIC (no interpolation) picked off the same
     distributed residual histogram + cumulative scan every other rank
-    statistic uses (:func:`~occupation_wage_etl_spark.operators.stats
-    ._grouped_cum`, auto ``few_groups``) — the residual sort touches
-    distinct values only, never rows.  Coverage is an exact integer
+    statistic uses (:func:`~._scan.prefix_scan`, size-resolved from a
+    scan-side estimate) — the residual sort touches distinct values
+    only, never rows.  Coverage is an exact integer
     ratio.  Returns one row per group: (group, n_calib, n_test, qhat,
     coverage, target) with target = 1 − α.
     """
     from occupation_wage_etl_spark.operators._cache import cached
     from occupation_wage_etl_spark.operators.splits import hash_bucket
-    from occupation_wage_etl_spark.operators.stats import (
-        _grouped_cum,
-        _resolve_few_groups,
-    )
+    from occupation_wage_etl_spark.operators._scan import resolve_two_level
 
     g, v = F.col(group_col), F.col(value_col)
     rows = cached(
@@ -1111,9 +901,13 @@ def split_conformal_interval(
     # AUTO resolution estimates SCAN-SIDE over the cached residual rows
     # (no recompute of the histogram groupBy for the estimate job — the
     # round-6 shape re-aggregated `resid` once per resolve)
-    fg = _resolve_few_groups(hist, "__g", None, rows=calib_resid,
-                             value_col="__r")
-    cum = _grouped_cum(hist, "__g", "__r", "__cnt", fg)
+    two_level = resolve_two_level(
+        hist, ["__g"], rows=calib_resid, value_col="__r"
+    )
+    cum, _ = prefix_scan(
+        hist, ["__r"], {"cum": ("sum", F.col("__cnt"))}, by=["__g"],
+        inclusive=True, two_level=two_level,
+    )
     # k = ceil((n+1)(1-a)) = ((n+1)(den-num) + den-1) div den, capped at n
     k = F.least(
         F.expr(

@@ -244,7 +244,7 @@ def sorted_neighborhood_pairs(
     adjacently, e.g. typos in the first token).
 
     Scale shape: NO global sort.  Ranks come from the distributed
-    two-level prefix sum (``evaluation._dist_cum_before`` —
+    two-level prefix sum (``_scan.prefix_scan`` —
     range-repartition, per-partition window, config-sized offsets
     table), and the neighborhood expands as an equi-join of rank
     against rank+offset (offsets 1..window exploded on the probe
@@ -252,13 +252,10 @@ def sorted_neighborhood_pairs(
     duplication.  Emits (id_a, id_b, key_a, key_b, rank_gap) with the
     pair oriented by rank order; (key, id) must be a total order.
     """
-    from occupation_wage_etl_spark.operators.evaluation import (
-        _dist_cum_before,
-    )
+    from occupation_wage_etl_spark.operators._scan import prefix_scan
 
     base = df.select(F.col(key_col).alias("__k"), F.col(id_col).alias("__id"))
-    ranked, _ = _dist_cum_before(base, ["__k", "__id"], F.lit(1))
-    r = ranked.select("__k", "__id", F.col("__cumb").alias("rnk"))
+    r, _ = prefix_scan(base, ["__k", "__id"], {"rnk": ("sum", F.lit(1))})
     probe = r.select(
         F.col("__k").alias("key_a"),
         F.col("__id").alias("id_a"),

@@ -197,8 +197,9 @@ def k_core(
     Iterative peel: each round computes degrees over surviving edges
     and drops every node below k TOGETHER (the classic simultaneous
     peel — order-independent, so the result is deterministic and
-    engine-portable).  Each round is one hash aggregate + two semi-joins
-    keyed by node id, checkpointed to truncate lineage; the loop exits
+    engine-portable).  Each round is two semi-joins keyed by node id
+    and one hash aggregate, checkpointed to truncate lineage; the
+    checkpoint job also counts the nodes below k, and the loop exits
     as soon as a round drops nobody.  Rounds needed = peel depth of the
     graph (shallow for near-dup graphs; bounded by ``max_rounds`` as a
     safety stop).
@@ -206,17 +207,31 @@ def k_core(
     Returns (node, core_degree): nodes of the k-core with their degree
     INSIDE the core (≥ k by construction).
     """
-    mat = edges.select(
-        F.col(src).alias("u"), F.col(dst).alias("v")
-    ).transform(checkpoint)
-    sym = mat.union(
-        mat.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    # both orientations of every edge in one pass over ``edges``
+    sym = edges.select(
+        F.inline(
+            F.array(
+                F.struct(F.col(src).alias("u"), F.col(dst).alias("v")),
+                F.struct(F.col(dst).alias("u"), F.col(src).alias("v")),
+            )
+        )
     ).transform(checkpoint)
 
-    alive = sym
-    deg = alive.groupBy("u").agg(F.count(F.lit(1)).alias("core_degree"))
+    def degrees(alive: DataFrame) -> tuple[DataFrame, int]:
+        # the count of nodes below k rides the checkpoint job: no probe
+        # plan whose generated code varies per call
+        below = Observation()
+        deg = (
+            alive.groupBy("u")
+            .agg(F.count(F.lit(1)).alias("core_degree"))
+            .observe(below, F.count_if(F.col("core_degree") < k).alias("n"))
+            .transform(checkpoint)
+        )
+        return deg, below.get["n"]
+
+    deg, n_below = degrees(sym)
     for peels in range(max_rounds + 1):
-        if not deg.filter(F.col("core_degree") < k).limit(1).count():
+        if not n_below:
             break
         if peels == max_rounds:
             # A silent return here would be a SUPERSET of the k-core
@@ -229,13 +244,13 @@ def k_core(
                 f"k_core did not converge within max_rounds={max_rounds}; "
                 "raise max_rounds (peel depth exceeds the round budget)"
             )
+        # a dropped node never comes back, so the surviving edges are
+        # the symmetric edges between this round's keepers
         keep = deg.filter(F.col("core_degree") >= k).select("u")
-        alive = (
-            alive.join(keep, "u", "left_semi")
-            .join(keep.select(F.col("u").alias("v")), "v", "left_semi")
-            .transform(checkpoint)
+        alive = sym.join(keep, "u", "left_semi").join(
+            keep.select(F.col("u").alias("v")), "v", "left_semi"
         )
-        deg = alive.groupBy("u").agg(F.count(F.lit(1)).alias("core_degree"))
+        deg, n_below = degrees(alive)
     return deg.filter(F.col("core_degree") >= k).select(
         F.col("u").alias("node"), "core_degree"
     )

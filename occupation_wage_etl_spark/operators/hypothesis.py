@@ -7,9 +7,8 @@ computed EXACTLY and at scale.  Every operator here follows the repo's
 scale-shape policy:
 
 - all rank machinery runs over the per-distinct-value histogram with
-  the two-level distributed prefix sum (``_dist_cum_before`` from
-  :mod:`operators.evaluation`) — never a globally-ordered window over
-  data-sized input;
+  the distributed prefix scan (:func:`operators._scan.prefix_scan`) —
+  never a globally-ordered window over data-sized input;
 - sums that feed the statistic are kept in integer / DECIMAL
   arithmetic for order-independence, with one closing float division;
 - where a float fold is unavoidable (k-group terms, contingency
@@ -23,10 +22,10 @@ Reference analogue: none (the reference computes means only,
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from occupation_wage_etl_spark.operators.evaluation import _dist_cum_before
+from occupation_wage_etl_spark.operators._scan import prefix_scan
 
 
 def ks_two_sample(
@@ -57,19 +56,18 @@ def ks_two_sample(
             F.sum(F.when(g == group_b, 1).otherwise(0)).alias("cb"),
         )
     )
-    ranked, _ = _dist_cum_before(
+    # inclusive CDF numerators at each distinct value; Na/Nb are needed
+    # inside the row-wise max, so the scan's totals are broadcast back
+    # over the histogram (scalar attach).
+    ranked, totals = prefix_scan(
         h,
         ["__v"],
-        F.col("ca"),
-        extra_weights={"__cumb_b": F.col("cb")},
+        {"__fa": ("sum", F.col("ca")), "__fb": ("sum", F.col("cb"))},
+        inclusive=True,
     )
-    # inclusive CDF numerators at each distinct value; Na/Nb are needed
-    # inside the row-wise max, so compute totals first and broadcast
-    # them back over the histogram (scalar attach).
-    fa = F.col("__cumb") + F.col("ca")
-    fb = F.col("__cumb_b") + F.col("cb")
-    totals = ranked.agg(
-        F.sum("ca").alias("n_a"), F.sum("cb").alias("n_b")
+    fa, fb = F.col("__fa"), F.col("__fb")
+    totals = totals.select(
+        F.col("__fa_total").alias("n_a"), F.col("__fb_total").alias("n_b")
     )
     d_num = (
         ranked.crossJoin(F.broadcast(totals))
@@ -258,7 +256,7 @@ def kruskal_wallis(
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     per_v = h.groupBy("__v").agg(F.sum("cnt").alias("t"))
-    ranked_v, _ = _dist_cum_before(per_v, ["__v"], F.col("t"))
+    ranked_v, _ = prefix_scan(per_v, ["__v"], {"__cumb": ("sum", F.col("t"))})
     # r2 = doubled average rank of the tie block at this value
     r2 = (F.lit(2) * F.col("__cumb") + F.col("t") + F.lit(1)).alias("r2")
     ties = ranked_v.agg(
@@ -433,19 +431,18 @@ def bh_fdr(
 
     Ranks come off the distinct-p histogram (each distinct p takes its
     LARGEST order-statistic index — the most permissive rank of a tie
-    bucket, which is exactly the step-up rule's behavior) through
-    :func:`~occupation_wage_etl_spark.operators.stats._grouped_cum`
-    (auto ``few_groups`` — the input is one row per TEST, category-
-    sized, but nothing here assumes it fits anywhere).  The crossing
-    test ``p·m·den ≤ rank·num`` is pure integer×double comparison with
-    no division, so ties at the threshold resolve identically in any
-    engine.  α is the rational ``alpha_num/alpha_den``.
+    bucket, which is exactly the step-up rule's behavior) through the
+    global :func:`~._scan.prefix_scan`, resolved by size — the input is
+    one row per TEST, category-sized, but nothing here assumes it fits
+    anywhere.  The crossing test ``p·m·den ≤ rank·num`` is pure
+    integer×double comparison with no division, so ties at the
+    threshold resolve identically in any engine.  α is the rational
+    ``alpha_num/alpha_den``.
 
     Returns the input rows plus (bh_rank, rejected), ordered by
     (p, test).
     """
     from occupation_wage_etl_spark.operators._cache import cached
-    from occupation_wage_etl_spark.operators.stats import _grouped_cum
 
     rows = cached(
         df.select(
@@ -453,21 +450,17 @@ def bh_fdr(
             F.col(p_col).cast("double").alias("__p"),
         ).filter(F.col("__p").isNotNull())
     )
-    hist = rows.groupBy(F.lit(0).alias("__g"), F.col("__p")).agg(
-        F.count(F.lit(1)).alias("__cnt")
+    hist = rows.groupBy("__p").agg(F.count(F.lit(1)).alias("__cnt"))
+    cum, totals = prefix_scan(
+        hist, ["__p"], {"__rank": ("sum", F.col("__cnt"))}, inclusive=True
     )
-    # few_groups=True EXPLICITLY: one constant group is the
-    # definitional few-groups case — the AUTO heuristic would pick the
-    # window path on a small p-table and leave an unbounded
-    # single-partition exchange in the plan for a large one
-    cum = _grouped_cum(hist, "__g", "__p", "__cnt", True)
-    m = rows.agg(F.count(F.lit(1)).alias("__m"))
+    m = totals.select(F.col("__rank_total").alias("__m"))
     # crossing iff p <= rank*alpha/m  <=>  p*m*den <= rank*num
     crossed = (
         cum.crossJoin(F.broadcast(m))
         .select(
             "__p",
-            F.col("cum").alias("__rank"),
+            "__rank",
             (
                 F.col("__p") * F.col("__m").cast("double") * F.lit(
                     float(alpha_den)
@@ -511,12 +504,11 @@ def wasserstein_1d(
            = Σᵢ |cumAᵢ·n_b − cumBᵢ·n_a| · (xᵢ₊₁ − xᵢ) / (n_a·n_b)
 
     over SORTED DISTINCT values.  Shape: the distinct-value histogram
-    (one row-sized shuffle), both groups' inclusive cumulative counts
-    via the two-level distributed prefix sum, and the neighbor gap
-    xᵢ₊₁ − xᵢ via a RANGE-PARTITIONED lead (per-partition ``lead``
-    window + a broadcast stitch of each partition's first value onto
-    its predecessor — the ordered-neighbor sibling of the prefix-scan
-    primitives; no global single-partition sort anywhere).
+    (one row-sized shuffle) and ONE descending exclusive
+    :func:`~._scan.prefix_scan` over it.  Its MIN of the values above
+    xᵢ is the neighbor xᵢ₊₁ (values are distinct), and its sums of
+    the counts above xᵢ, sAᵢ = n_a − cumAᵢ and sBᵢ = n_b − cumBᵢ, give
+    the CDF term as |sBᵢ·n_a − sAᵢ·n_b| (the n_a·n_b terms cancel).
 
     Exactness: the CDF numerator is exact int64 (common-denominator
     form, the q167 trick; products stay below 2⁵³ for n ≲ 10⁶ per
@@ -524,12 +516,9 @@ def wasserstein_1d(
     sums as DECIMAL(38,12) (order-independent over the value-sized
     term table — the bcubed contract, NOT a float fold), and the
     closing division is one IEEE op.  The last distinct value's
-    missing lead contributes nothing (both CDFs are 1 there).
+    missing neighbor contributes nothing (both CDFs are 1 there).
     Returns one row: (n_a, n_b, wasserstein).
     """
-    from occupation_wage_etl_spark.operators._cache import cached
-    from occupation_wage_etl_spark.operators._conf import shuffle_partitions
-
     v, g = F.col(value_col), F.col(group_col)
     h = (
         df.filter(v.isNotNull() & g.isin(group_a, group_b))
@@ -539,40 +528,26 @@ def wasserstein_1d(
             F.sum(F.when(g == group_b, 1).otherwise(0)).alias("cb"),
         )
     )
-    ranked, _ = _dist_cum_before(
-        h, ["__v"], F.col("ca"), extra_weights={"__cumb_b": F.col("cb")}
+    above, totals = prefix_scan(
+        h,
+        [F.col("__v").desc()],
+        {
+            "__sa": ("sum", F.col("ca")),
+            "__sb": ("sum", F.col("cb")),
+            "__next": ("min", F.col("__v")),
+        },
     )
-    ranked = cached(ranked)
-    # range-partitioned global lead of __v (ordered-neighbor primitive)
-    n_parts = shuffle_partitions(df.sparkSession)
-    parted = cached(
-        ranked.repartitionByRange(n_parts, F.col("__v")).withColumn(
-            "__pid", F.spark_partition_id()
-        )
+    totals = totals.select(
+        F.col("__sa_total").alias("n_a"), F.col("__sb_total").alias("n_b")
     )
-    w_in = Window.partitionBy("__pid").orderBy("__v")
-    led = parted.withColumn("__lead", F.lead("__v").over(w_in))
-    firsts = parted.groupBy("__pid").agg(F.min("__v").alias("__pfirst"))
-    # next NON-EMPTY partition's first value: a lead over the
-    # n_parts-row firsts table (bounded, same class as __pid offsets)
-    w_p = Window.orderBy("__pid")
-    nxt = firsts.select(
-        "__pid", F.lead("__pfirst").over(w_p).alias("__nextfirst")
-    )
-    stitched = led.join(F.broadcast(nxt), "__pid", "left").withColumn(
-        "__gap",
-        F.coalesce(F.col("__lead"), F.col("__nextfirst")) - F.col("__v"),
-    )
-    totals = ranked.agg(F.sum("ca").alias("n_a"), F.sum("cb").alias("n_b"))
-    terms = stitched.crossJoin(F.broadcast(totals)).select(
+    terms = above.crossJoin(F.broadcast(totals)).select(
         "n_a",
         "n_b",
         F.round(
             F.abs(
-                (F.col("__cumb") + F.col("ca")) * F.col("n_b")
-                - (F.col("__cumb_b") + F.col("cb")) * F.col("n_a")
+                F.col("__sb") * F.col("n_a") - F.col("__sa") * F.col("n_b")
             ).cast("double")
-            * F.coalesce(F.col("__gap"), F.lit(0.0)),
+            * F.coalesce(F.col("__next") - F.col("__v"), F.lit(0.0)),
             12,
         )
         .cast("decimal(38,12)")

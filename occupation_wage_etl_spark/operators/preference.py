@@ -47,21 +47,23 @@ def skyline_2d(
     # NULLs FIRST on asc (a NULL minimize group's max would wrongly seed
     # the running max), while SQL engines sort them LAST.  Dropping NULL
     # criterion rows up front pins ONE semantics for every engine.
-    from occupation_wage_etl_spark.operators.evaluation import (
-        _dist_max_before,
-    )
+    from occupation_wage_etl_spark.operators._scan import prefix_scan
 
     df = df.filter(
         F.col(minimize_col).isNotNull() & F.col(maximize_col).isNotNull()
     )
     g = df.groupBy(minimize_col).agg(F.max(maximize_col).alias("__gmax"))
     # running max over the distinct-minimize axis via the two-level
-    # distributed prefix scan (evaluation._dist_max_before) — the axis
+    # distributed prefix scan (_scan.prefix_scan) — the axis
     # is value-cardinality-sized, so a plain Window.orderBy would pull
     # it through one task
+    marked, _ = prefix_scan(
+        g, [minimize_col], {"__prev": ("max", F.col("__gmax"))}
+    )
     stair = (
-        _dist_max_before(g, [minimize_col], F.col("__gmax"), "__prev")
-        .filter(F.col("__prev").isNull() | (F.col("__gmax") > F.col("__prev")))
+        marked.filter(
+            F.col("__prev").isNull() | (F.col("__gmax") > F.col("__prev"))
+        )
         .select(
             F.col(minimize_col).alias("__smin"),
             F.col("__gmax").alias("__smax"),

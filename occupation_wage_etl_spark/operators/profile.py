@@ -343,14 +343,12 @@ def gini_token_frequencies(
     with n = #types, T = total tokens — every term an exact integer
     (DECIMAL(38,0) products; x·cnt·cumb reaches ~1e30 at corpus scale),
     one closing IEEE division.  The rank prefix ``cumb`` comes from the
-    distributed two-level scan (``evaluation._dist_cum_before``), so no
+    distributed prefix scan (``_scan.prefix_scan``), so no
     global-order window anywhere.  Returns one row
     (n_types, n_tokens, gini).
     """
     from occupation_wage_etl_spark.functions import text as T
-    from occupation_wage_etl_spark.operators.evaluation import (
-        _dist_cum_before,
-    )
+    from occupation_wage_etl_spark.operators._scan import prefix_scan
 
     types = (
         df.select(F.explode(T.tokens(F.col(text_col))).alias("__t"))
@@ -361,7 +359,7 @@ def gini_token_frequencies(
     fhist = types.groupBy(F.col("__f").alias("x")).agg(
         F.count(F.lit(1)).alias("cnt")
     )
-    ranked, _ = _dist_cum_before(fhist, ["x"], F.col("cnt"))
+    ranked, _ = prefix_scan(fhist, ["x"], {"__cumb": ("sum", F.col("cnt"))})
     d = lambda c: c.cast("decimal(38,0)")
     agg = ranked.agg(
         F.sum("cnt").alias("n_types"),

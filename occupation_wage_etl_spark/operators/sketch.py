@@ -290,14 +290,8 @@ def quantile_sketch(
     side, so the error the sketch actually commits on THIS corpus is a
     first-class, oracle-checked result.
     """
-    from occupation_wage_etl_spark.operators.stats import (
-        grouped_exact_percentiles,
-    )
-
-    from pyspark.sql import Window
-
     from occupation_wage_etl_spark.operators._cache import cached
-    from occupation_wage_etl_spark.operators._conf import shuffle_partitions
+    from occupation_wage_etl_spark.operators._scan import prefix_scan
 
     m = 1 << level_bits
     rows = df.filter(value_col.isNotNull()).select(
@@ -314,71 +308,22 @@ def quantile_sketch(
     # sampling pass), two prefix-sum window chains — to produce
     # rank tables over what is ONE value histogram.  Everything below
     # (both cumulative sums, both bracket lookups, the audit counts)
-    # reads one range-partitioned materialization.  Results are
+    # reads one cached cumulative table.  Results are
     # row-identical: the est tier's histogram is exactly the
     # cnt_kept > 0 slice, and a cnt_kept = 0 row can never satisfy
     # ``cum ≥ r AND cum − cnt < r``, so it self-excludes from the
     # kept-tier bracketing.
-    n_parts = shuffle_partitions(df.sparkSession)
     hist = rows.groupBy("__v").agg(
         F.count(F.lit(1)).alias("__ca"),
         F.sum("__keep").alias("__ck"),
     )
-    from occupation_wage_etl_spark.operators.evaluation import (
-        _resolve_small_scan,
+    cum, _ = prefix_scan(
+        hist,
+        ["__v"],
+        {"__cuma": ("sum", F.col("__ca")), "__cumk": ("sum", F.col("__ck"))},
+        inclusive=True,
     )
-
-    if _resolve_small_scan(hist):
-        # histogram fits one task's sort: single global window carries
-        # both running sums — same integers as the two-level scan below
-        # (bit-identical), minus the range-sampling job + offset stitch
-        # (the r12 _dist_cum_before flip, applied to this hand-rolled
-        # dual-cum table).  __w__cumb aliases keep the plan-audit
-        # resolved-small marker.
-        w_all = Window.orderBy("__v").rowsBetween(
-            Window.unboundedPreceding, 0
-        )
-        cum = cached(
-            hist.withColumn("__w__cumb", F.col("__ca"))
-            .withColumn("__cuma", F.sum("__w__cumb").over(w_all))
-            .withColumn("__cumk", F.sum("__ck").over(w_all))
-            .select("__v", "__ca", "__ck", "__cuma", "__cumk")
-        )
-    else:
-        parted = cached(
-            hist.repartitionByRange(n_parts, F.col("__v"))
-            .withColumn("__pid", F.spark_partition_id())
-        )
-        totals = parted.groupBy("__pid").agg(
-            F.sum("__ca").alias("__ta"), F.sum("__ck").alias("__tk")
-        )
-        # single-group prefix over the ~n_parts-row totals table: the
-        # bounded `__pid offsets` shape the plan audit whitelists
-        w_off = Window.orderBy("__pid").rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        offsets = totals.select(
-            "__pid",
-            F.coalesce(F.sum("__ta").over(w_off), F.lit(0)).alias("__offa"),
-            F.coalesce(F.sum("__tk").over(w_off), F.lit(0)).alias("__offk"),
-        )
-        w_in = (
-            Window.partitionBy("__pid")
-            .orderBy("__v")
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        cum = cached(
-            parted.withColumn("__cina", F.sum("__ca").over(w_in))
-            .withColumn("__cink", F.sum("__ck").over(w_in))
-            .join(F.broadcast(offsets), "__pid")
-            .select(
-                "__v",
-                "__ca",
-                "__ck",
-                (F.col("__cina") + F.col("__offa")).alias("__cuma"),
-                (F.col("__cink") + F.col("__offk")).alias("__cumk"),
-            )
-        )
+    cum = cached(cum)
     # coalesce: SUM over an empty histogram is NULL, but the previous
     # COUNT-based shape (and the oracle's count(*)) return 0 on an empty
     # events table — keep that contract.

@@ -367,10 +367,9 @@ def epoch_shuffle_batches(
     every epoch is a DIFFERENT but fully reproducible permutation) and
     cut into consecutive batches of ``batch_size``.
 
-    The global rank under (hash_key, id) comes from the two-level
-    distributed prefix count (:func:`~.evaluation._dist_cum_before`) —
-    range-partitioned parallel sorts, never a single global one — so
-    the shuffle order is identical on any cluster layout or engine
+    The global rank under (hash_key, id) comes from
+    :func:`~._scan.prefix_scan`, so the shuffle order is identical on
+    any cluster layout or engine
     (``randomSplit``/``rand()`` are partitioning-dependent; this is
     not).
 
@@ -379,15 +378,15 @@ def epoch_shuffle_batches(
     aggregate; the checksum (sum of ids) lets two runs verify they
     built identical batches without comparing row-by-row.
     """
-    from occupation_wage_etl_spark.operators.evaluation import (
-        _dist_cum_before,
-    )
+    from occupation_wage_etl_spark.operators._scan import prefix_scan
 
     keyed = df.select(
         F.col(id_col).alias("__id"),
         _portable_hash_key(F.col(id_col), f"#e{epoch}").alias("__k"),
     )
-    ranked, _ = _dist_cum_before(keyed, ["__k", "__id"], F.lit(1))
+    ranked, _ = prefix_scan(
+        keyed, ["__k", "__id"], {"__cumb": ("sum", F.lit(1))}
+    )
     return (
         ranked.select(
             # integer `div`, not double division: the double quotient
@@ -429,27 +428,26 @@ def curriculum_interleave(
     Returns the first ``head`` rows of the schedule:
     (schedule_pos, id, bucket) ordered by schedule_pos.
     """
-    from occupation_wage_etl_spark.operators.evaluation import (
-        _dist_cum_before,
-    )
+    from occupation_wage_etl_spark.operators._scan import prefix_scan
 
     keyed = df.select(
         F.col(id_col).alias("__id"),
         F.col(difficulty_col).alias("__d"),
         _portable_hash_key(F.col(id_col), "#cur").alias("__k"),
     )
-    ranked, total = _dist_cum_before(keyed, ["__d", "__id"], F.lit(1))
+    ranked, total = prefix_scan(
+        keyed, ["__d", "__id"], {"__cumb": ("sum", F.lit(1))}
+    )
     binned = ranked.crossJoin(F.broadcast(total)).select(
         "__id",
         "__k",
-        F.expr(f"(__cumb * {n_buckets}) div __total").alias("bucket"),
+        F.expr(f"(__cumb * {n_buckets}) div __cumb_total").alias("bucket"),
     )
-    pos_ranked, _ = _dist_cum_before(
-        binned.select("__id", "__k", "bucket"),
+    pos_ranked, _ = prefix_scan(
+        binned,
         ["__k", "__id"],
-        F.lit(0),
-        extra_weights={
-            f"__p{b}": (F.col("bucket") == b).cast("long")
+        {
+            f"__p{b}": ("sum", (F.col("bucket") == b).cast("long"))
             for b in range(n_buckets)
         },
     )

@@ -11,8 +11,8 @@ semantics) as a fully distributed plan:
    with map-side partial aggregation; per-task state is bounded by
    the hash-aggregate's spillable map.
 2. cumulative ranks — running ``sum(cnt)`` over distinct values per
-   group: the per-group task sorts only (value, count) pairs with a
-   spillable external sort, never the raw rows.
+   group (:func:`~._scan.prefix_scan`): sorts only (value, count)
+   pairs, never the raw rows.
 3. rank positions — a tiny (groups x percentiles) table of the two
    bracketing ranks per percentile; broadcast-joined back (no extra
    shuffle) and interpolated with the same weighted formula
@@ -31,158 +31,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from occupation_wage_etl_spark.operators._cache import cached
-from occupation_wage_etl_spark.operators._conf import shuffle_partitions
-
-
-def _resolve_few_groups(
-    hist: DataFrame,
-    group_col: str,
-    few_groups: bool | None,
-    rows: DataFrame | None = None,
-    value_col: str | None = None,
-) -> bool:
-    """Resolve the AUTO (``None``) setting of the ``few_groups`` flag —
-    the 100 TB flip no caller should have to know about.
-
-    Explicit True/False is an override and costs nothing.  **AUTO is
-    eager by design (public API contract)**: resolving ``None`` runs
-    ONE small Spark job at plan-CONSTRUCTION time, because the flag
-    selects between two different plan SHAPES — an operator builder
-    called with ``few_groups=None`` is therefore not fully lazy.
-    Tooling that only builds plans (explain/audit) passes an explicit
-    value to stay job-free.  The estimate job is one of two forms:
-
-    - ``rows`` given (the caller's pre-aggregation row frame, already
-      null/validity-filtered): a SCAN-SIDE sketch —
-      ``approx_count_distinct(group)`` plus, when ``value_col`` is
-      given, ``approx_count_distinct(group, value)`` as the histogram
-      row-count estimate.  HLL++ partial state only: no shuffle, no
-      histogram materialization, and crucially no forced CACHE of the
-      histogram — callers whose fastest resolved-False plan is the
-      UNCACHED fused one (grouped_weighted_median's decimal histogram)
-      keep it.
-    - otherwise: ``count + approx_count_distinct(group)`` over ``hist``
-      itself.  Callers that cache the histogram anyway (it feeds ≥ 2
-      downstream passes) get the estimate FUSED with the cache
-      materialization those passes need — the extra cost is one HLL
-      pass over already-cached histogram rows.
-
-    Every AUTO call runs its estimate job; nothing is remembered across
-    builds, because a histogram re-read from a lake path whose files
-    grew analyzes to the same plan hash as before the growth.
-
-    The flip itself requires BOTH cliffs:
-
-    - estimated groups < shuffle partitions (a per-group window's
-      parallelism equals #groups, idling the rest of the cluster), AND
-    - histogram rows ≥ ``spark.graft.fewGroupsMinHistRows`` (default
-      8M) — below that, a single task sorts each group's distinct
-      values in seconds and the two-level scan's extra
-      materialization + broadcast stitch COSTS more than it saves
-      (measured: grouped_mad at sf0.1, 594k-row histogram / 3 groups:
-      window 3.0 s vs two-level 6.9 s; the q94-floor cliff the flip
-      exists for appears when per-group distinct counts reach the
-      hundreds of millions).
-
-    The ±5% HLL error cannot affect correctness (both paths are
-    bit-identical — q215's registry proof), only which
-    identical-result plan runs near the boundary.
-    """
-    if few_groups is not None:
-        return bool(few_groups)
-    src = rows if rows is not None else hist
-    sp = src.sparkSession
-    try:
-        min_rows = int(sp.conf.get("spark.graft.fewGroupsMinHistRows"))
-    except Exception:
-        min_rows = 8_000_000
-    n_parts = shuffle_partitions(sp)
-    if rows is not None:
-        n_est = (
-            F.approx_count_distinct(F.struct(group_col, value_col))
-            if value_col is not None
-            else F.count(F.lit(1))
-        )
-        est = rows.agg(
-            n_est.alias("__n"),
-            F.approx_count_distinct(group_col).alias("__g"),
-        ).first()
-    else:
-        est = hist.agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.approx_count_distinct(group_col).alias("__g"),
-        ).first()
-    return bool(est["__g"] < n_parts and est["__n"] >= min_rows)
-
-
-def _grouped_cum(
-    hist: DataFrame,
-    group_col: str,
-    value_col: str,
-    cnt_col: str,
-    few_groups: bool | None,
-    out_col: str = "cum",
-) -> DataFrame:
-    """Per-group INCLUSIVE cumulative sum of ``cnt_col`` over distinct
-    ``value_col`` order — the shared rank primitive under every order
-    statistic in this module.
-
-    Two shapes, chosen by the caller's knowledge of group cardinality:
-
-    - ``few_groups=False`` (safe default): one window partitioned by
-      group.  Parallelism = #groups — fine whenever groups ≥ cores.
-    - ``few_groups=True``: the grouped two-level distributed scan for
-      the #groups ≪ cores cliff (a 3-group corpus sorts in 3 tasks
-      otherwise, no matter the cluster size — measured 4.1 s for one
-      percentile pass over a 594k-row histogram at sf0.1).  Range-
-      partition on (group, value) → per-(partition, group) cumulative
-      sums run as ~shuffle-partitions parallel sorts; per-cell totals
-      (≈ #groups + n_parts rows, broadcast-safe BECAUSE groups are
-      few — that is what the flag asserts) get per-group exclusive
-      prefix offsets and broadcast back.  The shuffled frame is
-      persisted: range boundaries come from sampling, so both
-      consumers must read one materialization (same note as
-      ``evaluation._dist_cum_before``).
-
-    ``few_groups=None`` (the public callers' default) auto-derives the
-    flag — see :func:`_resolve_few_groups`.
-
-    Integer/decimal sums either way — bit-identical results.
-    """
-    few_groups = _resolve_few_groups(hist, group_col, few_groups)
-    if not few_groups:
-        w = Window.partitionBy(group_col).orderBy(value_col)
-        return hist.withColumn(out_col, F.sum(cnt_col).over(w))
-    sp = hist.sparkSession
-    n_parts = shuffle_partitions(sp)
-    parted = cached(
-        hist.repartitionByRange(n_parts, F.col(group_col), F.col(value_col))
-        .withColumn("__pid", F.spark_partition_id())
-    )
-    totals = parted.groupBy("__pid", group_col).agg(
-        F.sum(cnt_col).alias("__pt")
-    )
-    w_off = (
-        Window.partitionBy(group_col)
-        .orderBy("__pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = totals.select(
-        "__pid",
-        group_col,
-        F.coalesce(F.sum("__pt").over(w_off), F.lit(0)).alias("__off"),
-    )
-    w_in = (
-        Window.partitionBy("__pid", group_col)
-        .orderBy(value_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return (
-        parted.withColumn("__cin", F.sum(cnt_col).over(w_in))
-        .join(F.broadcast(offsets), ["__pid", group_col])
-        .withColumn(out_col, F.col("__cin") + F.col("__off"))
-        .drop("__pid", "__cin", "__off")
-    )
+from occupation_wage_etl_spark.operators._scan import (
+    prefix_scan,
+    resolve_two_level,
+)
 
 
 def grouped_exact_percentiles(
@@ -197,7 +49,8 @@ def grouped_exact_percentiles(
     ``percentiles`` maps output column name -> p in [0, 1].  Returns one
     row per group with the named percentile columns.  NULL values are
     excluded (matching SQL aggregate semantics).  Pass
-    ``few_groups=True`` when #groups ≪ cores (see :func:`_grouped_cum`).
+    ``few_groups=True`` when #groups ≪ cores (see
+    :func:`percentiles_from_histogram`).
     """
     v = F.col(value_col)
     rows = df.filter(v.isNotNull()).select(group_col, value_col)
@@ -229,23 +82,26 @@ def percentiles_from_histogram(
     row-sized table again.  Ranks treat ``cnt`` as row multiplicity, so
     results are identical to running the row form on the expanded data.
 
-    ``few_groups=True`` routes the cumulative rank through the grouped
-    two-level distributed scan (:func:`_grouped_cum`) — use it whenever
-    #groups ≪ cores, where the plain per-group window collapses to
-    #groups tasks.  (An earlier round rejected a two-level rewrite on
-    the grounds that "the histogram shuffle dominates" — re-profiled at
-    sf0.1 on a 99%-distinct value column with 3 groups, the per-group
-    window pass took 4.1 s vs 2.5 s for the histogram itself, so the
-    cliff is real exactly when the flag says it is.)
+    ``few_groups`` is the rank scan's ``two_level``
+    (:func:`~._scan.prefix_scan`; ``None`` resolves by size): True
+    whenever #groups ≪ cores, where the plain per-group window
+    collapses to #groups tasks.  (An earlier round rejected a two-level
+    rewrite on the grounds that "the histogram shuffle dominates" —
+    re-profiled at sf0.1 on a 99%-distinct value column with 3 groups,
+    the per-group window pass took 4.1 s vs 2.5 s for the histogram
+    itself, so the cliff is real exactly when the flag says it is.)
     """
-    cum = _grouped_cum(hist, group_col, value_col, "cnt", few_groups)
+    cum, totals = prefix_scan(
+        hist, [value_col], {"cum": ("sum", F.col("cnt"))}, by=[group_col],
+        inclusive=True, two_level=few_groups,
+    )
 
-    n = F.col("n")
+    n = F.col("cum_total")
 
     def pos(p: float):  # 0-based fractional position of percentile p
         return (n - 1) * F.lit(p)
 
-    wanted = cum.groupBy(group_col).agg(F.sum("cnt").alias("n")).select(
+    wanted = totals.select(
         group_col,
         F.explode(
             F.array(
@@ -346,14 +202,17 @@ def equi_depth_histogram(
         .groupBy(group_col, value_col)
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    cum = _grouped_cum(hist, group_col, value_col, "cnt", few_groups)
-    totals = cum.groupBy(group_col).agg(F.sum("cnt").alias("n"))
+    cum, totals = prefix_scan(
+        hist, [value_col], {"cum": ("sum", F.col("cnt"))}, by=[group_col],
+        inclusive=True, two_level=few_groups,
+    )
     # boundary k (1..B-1) = min value with cum >= ceil(k*N/B)
     ranks = totals.select(
         group_col,
         F.explode(
             F.array(*[
-                F.ceil(F.col("n") * F.lit(k) / F.lit(buckets)).alias("r")
+                F.ceil(F.col("cum_total") * F.lit(k) / F.lit(buckets))
+                .alias("r")
                 for k in range(1, buckets)
             ])
         ).alias("r"),
@@ -545,7 +404,8 @@ def grouped_mad(
     # round-6 code ran per pass (the q94 ×1.29 drag) disappears.  The
     # estimate aggregates the cached histogram, fusing with the cache
     # materialization the median pass needs anyway.
-    few_groups = _resolve_few_groups(hist, group_col, few_groups)
+    if few_groups is None:
+        few_groups = resolve_two_level(hist, [group_col])
     med = percentiles_from_histogram(
         hist, group_col, value_col, {"__med": 0.5}, few_groups=few_groups
     )
@@ -622,8 +482,8 @@ def grouped_percent_rank(
 
     Since round 5 the rank comes off the distinct-value HISTOGRAM
     (rank − 1 = cumulative count of strictly-smaller values via
-    :func:`_grouped_cum`, joined back on (group, value)) instead of a
-    ``percent_rank`` window over the row-sized table: the window sorts
+    :func:`~._scan.prefix_scan`, joined back on (group, value)) instead
+    of a ``percent_rank`` window over the row-sized table: the window sorts
     every raw row inside each group's task, the histogram form sorts
     only distinct values — and ``few_groups=True`` routes even that
     through the grouped two-level scan when #groups ≪ cores.  NULL
@@ -640,15 +500,15 @@ def grouped_percent_rank(
             F.count(F.lit(1)).alias("__cnt")
         )
     )
-    cum = _grouped_cum(
-        hist, group_col, value_col, "__cnt", few_groups=few_groups
+    cum, totals = prefix_scan(
+        hist, [value_col], {"__before": ("sum", F.col("__cnt"))},
+        by=[group_col], two_level=few_groups,
     )
-    totals = hist.groupBy(group_col).agg(F.sum("__cnt").alias("__ng"))
     ranked = cum.join(totals, group_col).select(
         group_col,
         value_col,
-        (F.col("cum") - F.col("__cnt")).alias("__before"),
-        "__ng",
+        "__before",
+        F.col("__before_total").alias("__ng"),
     )
     return rows.join(ranked, [group_col, value_col]).select(
         F.col(id_col),
@@ -753,7 +613,7 @@ def grouped_weighted_median(
     w = F.col(weight_col).cast("decimal(18,2)")
     rows = df.filter(v.isNotNull() & w.isNotNull() & (w > 0))
     hist = rows.groupBy(group_col, value_col).agg(F.sum(w).alias("__cw"))
-    # resolve AUTO here (not inside _grouped_cum): the totals-join
+    # resolve AUTO here (not inside prefix_scan): the totals-join
     # shape below must branch on the SAME resolved value.  The estimate
     # runs SCAN-SIDE over `rows` (no histogram shuffle, no forced
     # cache), so AUTO-resolved-False keeps the fastest measured plan —
@@ -761,14 +621,15 @@ def grouped_weighted_median(
     # decimal histogram costs more than recomputing it inside both
     # codegen pipelines (sf0.1: uncached 1.0 s vs cached 1.9 s; the
     # round-6 cache-before-resolve policy charged exactly that ×2).
-    few_groups = _resolve_few_groups(
-        hist, group_col, few_groups, rows=rows, value_col=value_col
+    if few_groups is None:
+        few_groups = resolve_two_level(
+            hist, [group_col], rows=rows, value_col=value_col
+        )
+    cum0, tot = prefix_scan(
+        hist, [value_col], {"__cum": ("sum", F.col("__cw"))},
+        by=[group_col], inclusive=True, two_level=few_groups,
     )
-    if few_groups:
-        hist = cached(hist)  # feeds the cum scan AND the totals agg
-    cum0 = _grouped_cum(hist, group_col, value_col, "__cw", few_groups,
-                        out_col="__cum")
-    tot = hist.groupBy(group_col).agg(F.sum("__cw").alias("__tot"))
+    tot = tot.withColumnRenamed("__cum_total", "__tot")
     cum = cum0.join(F.broadcast(tot), group_col) if few_groups else (
         cum0.withColumn(
             "__tot",

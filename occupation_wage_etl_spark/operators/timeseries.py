@@ -533,21 +533,16 @@ def rfm_segments(
     the remainder) is the ANSI ``ntile`` behavior, reproduced as exact
     integer bucket math over exact global ranks.
 
-    Plan: one filtered hash aggregate per user, then three DISTRIBUTED
-    global ranks over the AGGREGATED table via the two-level prefix
-    count (:func:`~occupation_wage_etl_spark.operators.evaluation.
-    _dist_cum_before`: range-partition on the sort key → parallel
-    per-partition sorts → a config-bounded offsets table) — never an
-    unpartitioned ``ntile`` window pushing every user through one
-    task.  Bucket assignment is then pure arithmetic on the rank:
+    Plan: one filtered hash aggregate per user, then three global
+    ranks over the AGGREGATED table via
+    :func:`~occupation_wage_etl_spark.operators._scan.prefix_scan`,
+    not an ``ntile`` window.  Bucket assignment is then pure arithmetic on the rank:
     with ``N`` users, ``q = N div b``, ``r = N mod b``, the first
     ``r`` buckets hold ``q+1`` rows — exactly ANSI ntile, no window.
 
     Returns (user, last_us, freq, monetary, r, f, m, segment).
     """
-    from occupation_wage_etl_spark.operators.evaluation import (
-        _dist_cum_before,
-    )
+    from occupation_wage_etl_spark.operators._scan import prefix_scan
 
     per_user = (
         events.filter(F.col(type_col) == conversion_type)
@@ -561,17 +556,15 @@ def rfm_segments(
         .withColumn("__negf", -F.col("freq"))
         .withColumn("__negm", -F.col("__m"))
     )
-    ranked, total = _dist_cum_before(per_user, ["__negr", user_col], F.lit(1))
-    ranked = ranked.withColumnRenamed("__cumb", "__rkr")
-    ranked, _ = _dist_cum_before(ranked, ["__negf", user_col], F.lit(1))
-    ranked = ranked.withColumnRenamed("__cumb", "__rkf")
-    ranked, _ = _dist_cum_before(ranked, ["__negm", user_col], F.lit(1))
-    ranked = ranked.withColumnRenamed("__cumb", "__rkm")
+    one = ("sum", F.lit(1))
+    ranked, total = prefix_scan(per_user, ["__negr", user_col], {"__rkr": one})
+    ranked, _ = prefix_scan(ranked, ["__negf", user_col], {"__rkf": one})
+    ranked, _ = prefix_scan(ranked, ["__negm", user_col], {"__rkm": one})
 
     scored = (
         ranked.crossJoin(
             F.broadcast(
-                total.select(F.col("__total").cast("long").alias("__N"))
+                total.select(F.col("__rkr_total").cast("long").alias("__N"))
             )
         )
         .withColumn("__q", F.expr(f"__N div {int(buckets)}"))
@@ -761,14 +754,14 @@ def kaplan_meier(
     # (exact regardless of order) over the distinct-duration table, run
     # on the two-level distributed scan — the duration axis can approach
     # subject cardinality, so no single-task window.
-    from occupation_wage_etl_spark.operators.evaluation import (
-        _dist_cum_before,
-    )
+    from occupation_wage_etl_spark.operators._scan import prefix_scan
 
-    ranked, total = _dist_cum_before(tbl, ["t"], F.col("leave"))
+    ranked, total = prefix_scan(
+        tbl, ["t"], {"__cumb": ("sum", F.col("leave"))}
+    )
     risk = (
         ranked.crossJoin(
-            F.broadcast(total.select(F.col("__total").alias("__n")))
+            F.broadcast(total.select(F.col("__cumb_total").alias("__n")))
         )
         .select(
             "t",
@@ -1036,20 +1029,19 @@ def record_highs(
     classic "new all-time high" readout, also the streak primitive
     under drawdown/recovery analyses).
 
-    The running maximum is the two-level distributed prefix MAX
-    (:func:`~occupation_wage_etl_spark.operators.evaluation.
-    _dist_max_before`) — range-partitioned parallel scans, never one
-    data-sized single-partition window.  ``key_col`` must be a total
-    order (one row per key — aggregate first).
+    The running maximum is the prefix MAX of
+    :func:`~occupation_wage_etl_spark.operators._scan.prefix_scan`.
+    ``key_col`` must be a total order (one row per key — aggregate
+    first).
 
     Returns (key, value, prev_max) for record rows; the first key
     always qualifies (prev_max NULL).
     """
-    from occupation_wage_etl_spark.operators.evaluation import (
-        _dist_max_before,
-    )
+    from occupation_wage_etl_spark.operators._scan import prefix_scan
 
-    marked = _dist_max_before(df, [key_col], F.col(value_col), "__prev")
+    marked, _ = prefix_scan(
+        df, [key_col], {"__prev": ("max", F.col(value_col))}
+    )
     return marked.filter(
         F.col("__prev").isNull() | (F.col(value_col) > F.col("__prev"))
     ).select(

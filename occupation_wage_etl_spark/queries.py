@@ -10284,7 +10284,7 @@ Q214_SQL = _kmeans_oracle_sql()
 
 # ---------------------------------------------------------------------------
 # q215 — grouped exact percentiles on the FEW-GROUPS distributed scan
-# (operators/stats.py:_grouped_cum few_groups=True): the q94/q33 shape
+# (operators/_scan.py:prefix_scan two_level=True): the q94/q33 shape
 # with #groups ≪ cores routed through the grouped two-level prefix
 # scan — the 100 TB flip (BENCH_SCALE.md "q94 floor"), registry-proven
 # bit-identical against the same oracle a per-group window would get.

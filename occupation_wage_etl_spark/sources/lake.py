@@ -290,20 +290,18 @@ def compaction_plan(
 
     Greedy prefix-sum bucketing: group(p) = cumulative_bytes_before(p)
     div target over partitions sorted by key.  The cumulative sum runs
-    on the two-level distributed prefix scan
-    (:func:`~occupation_wage_etl_spark.operators.evaluation.
-    _dist_cum_before`) — the size table is one row per partition, which
-    at lake scale is itself a large axis, so no single-task window.
+    on the distributed prefix scan
+    (:func:`~occupation_wage_etl_spark.operators._scan.prefix_scan`) —
+    the size table is one row per partition, which at lake scale is
+    itself a large axis, so no single-task window.
     Exact integer arithmetic (integer ``div``, never a double quotient).
 
     Returns (file_group, n_parts, group_bytes, first_part, last_part).
     """
-    from occupation_wage_etl_spark.operators.evaluation import (
-        _dist_cum_before,
-    )
+    from occupation_wage_etl_spark.operators._scan import prefix_scan
 
-    summed, _ = _dist_cum_before(
-        sizes, [part_col], F.col(size_col).cast("long")
+    summed, _ = prefix_scan(
+        sizes, [part_col], {"__cumb": ("sum", F.col(size_col).cast("long"))}
     )
     assigned = summed.select(
         F.col(part_col),

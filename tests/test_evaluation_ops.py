@@ -9,6 +9,10 @@ import math
 from pyspark.sql import functions as F
 
 from occupation_wage_etl_spark.operators import evaluation, profile, similarity
+from occupation_wage_etl_spark.operators._scan import (
+    prefix_scan,
+    resolve_two_level,
+)
 
 
 # --------------------------------------------------------------------- AUC
@@ -76,9 +80,9 @@ def test_evaluation_plans_have_no_data_sized_global_sort(spark):
     # plan must sit directly above the __pid partition-totals aggregate
     # (<= shuffle-partitions rows, config-bounded) — never above
     # data-sized input.  At test/bench scale the resolver legitimately
-    # picks the single-window form instead (r12 optimization; see
-    # test_dist_cum_before_small_flip_matches_two_level for the
-    # bit-equality proof).
+    # picks the single-window form instead (see
+    # test_dist_cum_before_small_flip_matches_two_level and test_scan.py
+    # for the bit-equality proof).
     df = spark.range(1000).select(
         F.col("id").alias("doc_id"),
         (F.col("id").cast("double") / 3.0).alias("s"),
@@ -110,9 +114,9 @@ def test_small_scan_resolver_sees_grown_lake_path(spark, tmp_path):
     spark.range(10).write.parquet(path)
     spark.conf.set("spark.graft.distCumWindowMaxRows", "100")
     try:
-        assert evaluation._resolve_small_scan(spark.read.parquet(path))
+        assert not resolve_two_level(spark.read.parquet(path))
         spark.range(10, 1000).write.mode("append").parquet(path)
-        assert not evaluation._resolve_small_scan(spark.read.parquet(path))
+        assert resolve_two_level(spark.read.parquet(path))
     finally:
         spark.conf.unset("spark.graft.distCumWindowMaxRows")
 
@@ -268,13 +272,14 @@ def test_isotonic_already_monotone_is_identity(spark):
 
 # ------------------------------------------------- distributed prefix max
 
+
+def _running_max(df):
+    return prefix_scan(df, ["k"], {"__maxb": ("max", F.col("v"))})[0]
+
+
 def test_dist_max_before_matches_global_window(spark):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
-
-    from occupation_wage_etl_spark.operators.evaluation import (
-        _dist_max_before,
-    )
 
     df = spark.range(800).select(
         F.col("id").alias("k"),
@@ -282,10 +287,7 @@ def test_dist_max_before_matches_global_window(spark):
         .cast("long")
         .alias("v"),
     ).repartition(9)
-    got = sorted(
-        (r["k"], r["__maxb"])
-        for r in _dist_max_before(df, ["k"], F.col("v")).collect()
-    )
+    got = sorted((r["k"], r["__maxb"]) for r in _running_max(df).collect())
     w = Window.orderBy("k").rowsBetween(Window.unboundedPreceding, -1)
     want = sorted(
         (r["k"], r["m"])
@@ -300,10 +302,6 @@ def test_dist_cum_before_small_flip_matches_two_level(spark):
     scan must produce bit-identical cumulatives, extra-weight
     cumulatives, and grand totals (the flip selects between two
     equivalent plans — r12 optimization)."""
-    from occupation_wage_etl_spark.operators.evaluation import (
-        _dist_cum_before,
-    )
-
     df = spark.range(700).select(
         F.col("id").alias("k"),
         (F.abs(F.hash(F.col("id").cast("string"))) % 13).alias("w"),
@@ -311,14 +309,16 @@ def test_dist_cum_before_small_flip_matches_two_level(spark):
     ).repartition(7)
 
     def run():
-        ranked, total = _dist_cum_before(
-            df, ["k"], F.col("w"), extra_weights={"__cum2": F.col("w2")}
+        ranked, total = prefix_scan(
+            df,
+            ["k"],
+            {"__cumb": ("sum", F.col("w")), "__cum2": ("sum", F.col("w2"))},
         )
         rows = sorted(
             (r["k"], r["__cumb"], r["__cum2"]) for r in ranked.collect()
         )
         t = total.collect()[0]
-        return rows, (t["__total"], t["__cum2_total"])
+        return rows, (t["__cumb_total"], t["__cum2_total"])
 
     small_rows, small_total = run()  # default conf -> window form
     spark.conf.set("spark.graft.distCumWindowMaxRows", "0")
@@ -331,10 +331,6 @@ def test_dist_cum_before_small_flip_matches_two_level(spark):
 
 
 def test_dist_max_before_small_flip_matches_two_level(spark):
-    from occupation_wage_etl_spark.operators.evaluation import (
-        _dist_max_before,
-    )
-
     df = spark.range(500).select(
         F.col("id").alias("k"),
         (F.abs(F.hash(F.col("id").cast("string"))) % 97 - 48)
@@ -344,8 +340,7 @@ def test_dist_max_before_small_flip_matches_two_level(spark):
 
     def run():
         return sorted(
-            (r["k"], r["__maxb"])
-            for r in _dist_max_before(df, ["k"], F.col("v")).collect()
+            (r["k"], r["__maxb"]) for r in _running_max(df).collect()
         )
 
     small = run()
@@ -361,14 +356,9 @@ def test_dist_max_before_small_flip_matches_two_level(spark):
 def test_dist_max_before_null_values_skipped(spark):
     from pyspark.sql import functions as F
 
-    from occupation_wage_etl_spark.operators.evaluation import (
-        _dist_max_before,
-    )
-
     df = spark.createDataFrame(
         [(1, None), (2, 5.0), (3, None), (4, 3.0)], "k long, v double"
     )
-    out = {r["k"]: r["__maxb"] for r in
-           _dist_max_before(df, ["k"], F.col("v")).collect()}
+    out = {r["k"]: r["__maxb"] for r in _running_max(df).collect()}
     # nulls never contribute; max "before" skips them like the window form
     assert out == {1: None, 2: None, 3: 5.0, 4: 5.0}

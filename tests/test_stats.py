@@ -310,12 +310,12 @@ def test_few_groups_auto_picks_expected_branch(spark):
             df, "g", "v", {"m": 0.5}
         )._jdf.queryExecution().analyzed().toString()
 
-    spark.conf.set("spark.graft.fewGroupsMinHistRows", "10")
+    spark.conf.set("spark.graft.distCumWindowMaxRows", "10")
     try:
         assert "__pid" in plan(few)       # few groups + big-enough hist
         assert "__pid" not in plan(many)  # many groups -> window
     finally:
-        spark.conf.unset("spark.graft.fewGroupsMinHistRows")
+        spark.conf.unset("spark.graft.distCumWindowMaxRows")
     # default 8M bound: the tiny histogram stays on the window path
     assert "__pid" not in plan(few)
 
@@ -324,52 +324,64 @@ def test_few_groups_auto_picks_expected_branch(spark):
 
 
 def test_resolver_rows_estimate_and_memo(spark):
-    from occupation_wage_etl_spark.operators.stats import _resolve_few_groups
+    from occupation_wage_etl_spark.operators._scan import (
+        prefix_scan,
+        resolve_two_level,
+    )
 
     rows = spark.createDataFrame(
         [(i % 3, float(i)) for i in range(200)], "g int, v double"
     )
     hist = rows.groupBy("g", "v").count()
     # small input: both estimate forms resolve False (hist rows < 8M)
-    assert _resolve_few_groups(hist, "g", None) is False
-    assert (
-        _resolve_few_groups(hist, "g", None, rows=rows, value_col="v")
-        is False
-    )
+    assert resolve_two_level(hist, ["g"]) is False
+    assert resolve_two_level(hist, ["g"], rows=rows, value_col="v") is False
     # a lowered min-rows conf flips the decision
-    spark.conf.set("spark.graft.fewGroupsMinHistRows", "10")
+    spark.conf.set("spark.graft.distCumWindowMaxRows", "10")
     try:
-        assert _resolve_few_groups(hist, "g", None) is True
-        assert (
-            _resolve_few_groups(hist, "g", None, rows=rows, value_col="v")
-            is True
-        )
+        assert resolve_two_level(hist, ["g"]) is True
+        assert resolve_two_level(hist, ["g"], rows=rows, value_col="v") is True
     finally:
-        spark.conf.unset("spark.graft.fewGroupsMinHistRows")
-    # explicit override costs nothing
-    assert _resolve_few_groups(hist, "g", True) is True
-    assert _resolve_few_groups(hist, "g", False) is False
+        spark.conf.unset("spark.graft.distCumWindowMaxRows")
+
+    # explicit override costs nothing: the scan builds with no job
+    def form(two_level):
+        tracker = spark.sparkContext.statusTracker()
+        spark.sparkContext.setJobGroup("scan-override", "scan-override")
+        try:
+            cum, _ = prefix_scan(
+                hist, ["v"], {"c": ("sum", F.col("count"))}, by=["g"],
+                two_level=two_level,
+            )
+        finally:
+            spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+            spark.sparkContext.setLocalProperty("spark.job.description", None)
+        assert tracker.getJobIdsForGroup("scan-override") == []
+        return "__pid" in cum._jdf.queryExecution().analyzed().toString()
+
+    assert form(True) is True
+    assert form(False) is False
 
 
 
 def test_few_groups_resolver_sees_grown_lake_path(spark, tmp_path):
-    # same growth rule as the prefix scans' resolver: a histogram read
-    # again from a path that grew past fewGroupsMinHistRows re-resolves
-    from occupation_wage_etl_spark.operators.stats import _resolve_few_groups
+    # same growth rule for a grouped scan: a histogram read again from a
+    # path that grew past distCumWindowMaxRows re-resolves
+    from occupation_wage_etl_spark.operators._scan import resolve_two_level
 
     path = str(tmp_path / "hist")
     spark.range(10).selectExpr("id % 3 AS g", "id AS v").write.parquet(path)
-    spark.conf.set("spark.graft.fewGroupsMinHistRows", "100")
+    spark.conf.set("spark.graft.distCumWindowMaxRows", "100")
     try:
         hist = spark.read.parquet(path)
-        assert _resolve_few_groups(hist, "g", None) is False
+        assert resolve_two_level(hist, ["g"]) is False
         spark.range(10, 1000).selectExpr("id % 3 AS g", "id AS v").write.mode(
             "append"
         ).parquet(path)
         hist = spark.read.parquet(path)
-        assert _resolve_few_groups(hist, "g", None) is True
+        assert resolve_two_level(hist, ["g"]) is True
     finally:
-        spark.conf.unset("spark.graft.fewGroupsMinHistRows")
+        spark.conf.unset("spark.graft.distCumWindowMaxRows")
 
 def test_auto_weighted_median_matches_both_explicit_paths(spark):
     dfd = spark.createDataFrame(

@@ -60,18 +60,17 @@ def _global_exchange_audit(plan: str) -> tuple[int, int, list[str]]:
     - ``scalar-agg``: the direct child is a partial aggregate with zero
       grouping keys — one row per upstream partition;
     - ``pid-offsets``: the subtree aggregates on ``__pid`` — the
-      per-partition totals table of the two-level distributed prefix
-      scans, bounded by spark.sql.shuffle.partitions;
+      per-partition totals table of ``operators/_scan.py``'s two-level
+      prefix scan, bounded by spark.sql.shuffle.partitions;
     - ``local-literal``: the subtree reads only driver-side literals
       (LocalTableScan), no parquet / RDD scan;
-    - ``resolved-small``: the exchange feeds a Window over the prefix
-      scans' ``__w…`` weight columns — the SMALL-INPUT form of
-      ``evaluation._dist_cum_before`` / ``_dist_max_before``, chosen by
-      an eager row-count estimate (< spark.graft.distCumWindowMaxRows)
-      at plan-construction time; at scale the resolver flips the same
-      call site back to the two-level ``__pid``-offsets shape, so this
-      single-partition window is bounded BY MEASUREMENT, not by
-      structure.
+    - ``resolved-small``: the exchange feeds a Window over the
+      ``__scan<i>`` columns of ``_scan.prefix_scan`` — its window form,
+      chosen by an eager row-count estimate (<
+      spark.graft.distCumWindowMaxRows) at plan-construction time; at
+      scale ``_scan.resolve_two_level`` flips the same call site to the
+      two-level ``__pid``-offsets shape, so this single-partition
+      window is bounded BY MEASUREMENT, not by structure.
     """
     bounded, flagged, notes = 0, 0, []
     # each tree section (main plan + any subqueries) is parsed alone so
@@ -106,7 +105,7 @@ def _global_exchange_audit(plan: str) -> tuple[int, int, list[str]]:
                 sub.append((id2, n2))
             sub_names = " ".join(n for _, n in sub)
             # ancestor chain (nearest-first): a Window directly above
-            # summing the prefix scans' __w… weight columns marks the
+            # over the prefix scan's __scan<i> columns marks the
             # resolved-small shape
             anc: list[tuple[int, str]] = []
             d_cur = depth
@@ -120,7 +119,7 @@ def _global_exchange_audit(plan: str) -> tuple[int, int, list[str]]:
             if any(
                 n2 == "Window"
                 and re.search(
-                    r"__w__cumb|__wmaxb", details.get(id2, "") or ""
+                    r"__scan\d", details.get(id2, "") or ""
                 )
                 for id2, n2 in anc
             ):
