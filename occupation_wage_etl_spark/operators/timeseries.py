@@ -536,9 +536,10 @@ def rfm_segments(
     Plan: one filtered hash aggregate per user, then three global
     ranks over the AGGREGATED table via
     :func:`~occupation_wage_etl_spark.operators._scan.prefix_scan`,
-    not an ``ntile`` window.  Bucket assignment is then pure arithmetic on the rank:
-    with ``N`` users, ``q = N div b``, ``r = N mod b``, the first
-    ``r`` buckets hold ``q+1`` rows — exactly ANSI ntile, no window.
+    not an ``ntile`` window.  Bucket assignment is then pure
+    arithmetic on the rank: with ``N`` users, ``q = N div b``,
+    ``r = N mod b``, the first ``r`` buckets hold ``q+1`` rows —
+    exactly ANSI ntile, no window.
 
     Returns (user, last_us, freq, monetary, r, f, m, segment).
     """
